@@ -3,7 +3,9 @@ and latency statistics."""
 
 from __future__ import annotations
 
+import concurrent.futures
 import hashlib
+import multiprocessing
 import os
 import platform
 import shutil
@@ -11,7 +13,7 @@ import subprocess
 import sys
 import time
 
-from probes import Tracer
+from probes import PeakRss, Tracer
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "dbm_nca_ph_etl_spark"
@@ -45,11 +47,31 @@ def tail_quantile(min_samples: int) -> float:
     return 1.0 - 10.0 / min_samples if min_samples >= 20 else 1.0
 
 
-def latency_metrics(latencies: list[float], tail_q: float) -> dict[str, float]:
+def work_units(seconds: float, nominal_s: float) -> int:
+    """Whole units of work (passes, rounds) for a ``seconds`` window, at
+    ``nominal_s`` per unit on the reference machine. The amount of work
+    depends only on ``seconds``, never on how fast this run goes."""
+    return max(1, round(seconds / nominal_s))
+
+
+def in_child(fn, *args):
+    """``fn(*args)`` run in a fresh Python process, which has ended when
+    this returns: input generation and oracle runs leave no memory in
+    the process whose memory is measured."""
+    ctx = multiprocessing.get_context("spawn")
+    with concurrent.futures.ProcessPoolExecutor(1, mp_context=ctx) as pool:
+        return pool.submit(fn, *args).result()
+
+
+def latency_metrics(latencies: list[float], cpu: list[float], tail_q: float) -> dict[str, float]:
+    """Wall-clock metrics of the ops' ``latencies`` and CPU-time metrics
+    of the CPU seconds the process tree spent in each op."""
     return {
         "ops_per_s": len(latencies) / sum(latencies),
         "op_p50_s": percentile(latencies, 0.5),
         "op_tail_s": percentile(latencies, tail_q),
+        "cpu_s_per_op": sum(cpu) / len(cpu),
+        "op_cpu_p50_s": percentile(cpu, 0.5),
     }
 
 
@@ -84,13 +106,16 @@ def git_commit() -> str | None:
 
 class Bench:
     """One benchmark run: its work directory under ``perfbench/.work``,
-    its tracer and its Spark session."""
+    its tracer, its Spark session and the memory sampler, which runs
+    from the session's start until the workload stops it before its
+    result checks."""
 
     def __init__(self, workload: str, seed: int, seconds: float, trace: bool) -> None:
         self.workload = workload
         self.seed = seed
         self.seconds = seconds
         self.tracer = Tracer(trace)
+        self.rss = PeakRss()
         self.work = os.path.join(ROOT, "perfbench", ".work", f"{workload}-{os.getpid()}")
         shutil.rmtree(self.work, ignore_errors=True)
         os.makedirs(os.path.join(self.work, "tmp"))
@@ -119,6 +144,7 @@ class Bench:
 
         from dbm_nca_ph_etl_spark.session import get_spark
 
+        self.rss.start()
         with self.tracer.span("session.start"):
             self.spark = get_spark(
                 app_name=f"perfbench-{self.workload}",
@@ -148,6 +174,7 @@ class Bench:
     def close(self) -> None:
         """Stop Spark and wait for the JVM (and with it the Python
         workers) to exit, then remove the work directory."""
+        self.rss.stop()
         if self.spark is not None:
             self.spark.stop()
         if self._gateway is not None:

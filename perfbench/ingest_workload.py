@@ -7,13 +7,16 @@ PDF has landed and runs the paper's pipeline end to end:
 inbox -> ``streaming.nca_stream.run_nca_pipeline``.
 
 The store starts with seeded history. Deliveries come in rounds of a
-fixed mix: new releases of skewed size (one small, one large), a
-replay of bytes already loaded (sync skips it) and an update with a
-drifted ``/ModDate`` (sync cascades the delete and the release is
-loaded again). The seed draws the history, the PDFs' contents and
-which releases are replayed and updated. The warm-up is one update
-and one replay. After the timed rounds the whole store is read back and
-compared with the generator's rows; dead-lettered rows are failures.
+fixed mix: a new, large release, a small update with a drifted
+``/ModDate`` (sync cascades the delete and the release is loaded again)
+and a replay of bytes already loaded (sync skips it). The seed draws the history, the PDFs' contents and which
+releases are updated and replayed. The warm-up is one update. A child
+process writes the history and every PDF before the session starts.
+After the timed rounds the whole store is read back and compared with
+the generator's rows; dead-lettered rows are failures.
+
+The mix and sizes are not taken from a profile of real releases; see
+``perfbench/METRICS.md``.
 """
 
 from __future__ import annotations
@@ -25,7 +28,8 @@ from collections import defaultdict
 
 import nca_data
 import pyarrow.parquet as pq
-from harness import Bench, elapsed, latency_metrics, tail_quantile
+from harness import Bench, elapsed, in_child, latency_metrics, tail_quantile, work_units
+from probes import tree_cpu_s
 
 RELEASE_DDL = (
     "id string, page_count int, file_meta_created_at string, "
@@ -33,12 +37,56 @@ RELEASE_DDL = (
 )
 FILES_DDL = "release_id string, path string, page_count int"
 
-#: One round: (kind, pages), in this order. A delivery takes 1-8 s on
-#: four cores, so one round fills a run's window. The order is fixed
-#: because the first timed deliveries still run faster with each repeat
-#: (JIT); a seeded order would move that drift between kinds.
-ROUND = [("new", 1), ("new", 8), ("replay", 0), ("update", 2)]
+#: One round: (kind, pages), in this order. The order is fixed because
+#: the first timed deliveries still run faster with each repeat (JIT);
+#: a seeded order would move that drift between kinds.
+ROUND = [("new", 10), ("update", 2), ("replay", 0)]
+#: Seconds one ROUND spends in ops on four cores: a run of ``--seconds``
+#: delivers ``work_units(seconds, ROUND_S)`` rounds.
+ROUND_S = 20.0
 TINY_ROUND = [("new", 1), ("replay", 0), ("update", 1)]
+#: An update runs every step a delivery can take; the replay's steps
+#: are a prefix of them.
+WARM_UP = [("update", 1)]
+
+#: The per-layer metrics this workload measures.
+LAYERS = (
+    "sources.pdf_info_s", "sources.extract_s", "sources.pages", "sources.raw_rows",
+    "nca.sync_s", "nca.updates",
+    "streaming.pipeline_s", "streaming.add_batch_s", "streaming.planning_s",
+    "streaming.wal_commit_s",
+    "sinks.bytes_written", "sinks.files_written", "sinks.write_amp",
+)
+
+
+def prepare(work: str, n_history: int, seed: int, kinds: list[tuple[str, int]]) -> dict:
+    """Writes the store's history and one landed PDF per delivery in
+    ``kinds``. Returns the deliveries ``(kind, path, release id, pages,
+    row bytes)`` and, per release id, the sorted records and
+    allocations the store must hold after all of them."""
+    rng = random.Random(seed)
+    history = nca_data.history(n_history, seed)
+    nca_data.write_store(os.path.join(work, "store"), history)
+    current = {r.rid: r for r in history}
+    deliveries = []
+    for i, (kind, pages) in enumerate(kinds):
+        if kind == "new":
+            rel = nca_data.make_release(len(current), 0, pages, seed)
+        else:
+            old = current[rng.choice(sorted(current))]
+            rel = old if kind == "replay" else nca_data.make_release(
+                int(old.rid[1:]), old.version + 1, pages, seed
+            )
+        path = os.path.join(work, "landing", str(i), f"{rel.rid}.pdf")
+        os.makedirs(os.path.dirname(path))
+        with open(path, "wb") as fh:
+            fh.write(rel.pdf())
+        current[rel.rid] = rel
+        deliveries.append((kind, path, rel.rid, rel.page_count, rel.row_bytes()))
+    expected = {
+        rid: (sorted(r.records), sorted(r.allocations)) for rid, r in current.items()
+    }
+    return {"deliveries": deliveries, "expected": expected}
 
 
 def _parquet_files(base: str) -> dict[str, int]:
@@ -92,7 +140,7 @@ class _Progress:
         self._spark.streams.removeListener(self._listener)
 
 
-def run(bench: Bench, n_history: int, plan: list[tuple[str, int]]) -> dict:
+def run(bench: Bench, n_history: int, plan: list[tuple[str, int]], round_s: float) -> dict:
     from dbm_nca_ph_etl_spark.nca.cleaner import promote_header
     from dbm_nca_ph_etl_spark.nca.sync import sync_releases
     from dbm_nca_ph_etl_spark.sinks.merge import NCAStore
@@ -104,35 +152,14 @@ def run(bench: Bench, n_history: int, plan: list[tuple[str, int]]) -> dict:
     )
     from dbm_nca_ph_etl_spark.streaming.nca_stream import run_nca_pipeline
 
-    seed = bench.seed
-    rng = random.Random(seed)
     tracer = bench.tracer
-    history = nca_data.history(n_history, seed)
-    current = {r.rid: r for r in history}
+    # A traced run alternates untraced and traced rounds, as many of each.
+    n_rounds = work_units(bench.seconds, round_s) * (2 if tracer.enabled else 1)
+    inputs = in_child(prepare, bench.work, n_history, bench.seed, WARM_UP + plan * n_rounds)
+    warm_up, timed = inputs["deliveries"][: len(WARM_UP)], inputs["deliveries"][len(WARM_UP) :]
     store_dir, inbox = bench.path("store"), bench.path("inbox")
-    nca_data.write_store(store_dir, history)
-    n_delivered = 0
 
-    def make(kind: str, pages: int) -> nca_data.Release:
-        if kind == "new":
-            return nca_data.make_release(len(current), 0, pages, seed)
-        old = current[rng.choice(sorted(current))]
-        if kind == "replay":
-            return old
-        idx = int(old.rid[1:])
-        return nca_data.make_release(idx, old.version + 1, pages, seed)
-
-    def land(rel: nca_data.Release) -> str:
-        nonlocal n_delivered
-        n_delivered += 1
-        path = bench.path("landing", str(n_delivered), f"{rel.rid}.pdf")
-        os.makedirs(os.path.dirname(path))
-        with open(path, "wb") as fh:
-            fh.write(rel.pdf())
-        current[rel.rid] = rel
-        return path
-
-    t_setup = time.perf_counter()
+    t_setup, c_setup = time.perf_counter(), tree_cpu_s()
     spark = bench.start_spark()
     store = NCAStore(spark, store_dir)
     parser = get_parser("minipdf")
@@ -169,89 +196,87 @@ def run(bench: Bench, n_history: int, plan: list[tuple[str, int]]) -> dict:
         return action
 
     tracer.recording = False
-    for kind, pages in [("update", 1), ("replay", 0)]:
-        deliver(land(make(kind, pages)))
-    setup_s = elapsed(t_setup)
+    for _kind, path, *_ in warm_up:
+        deliver(path)
+    setup_s, setup_cpu_s = elapsed(t_setup), tree_cpu_s() - c_setup
 
     lat = {False: [], True: []}
+    cpu = {False: [], True: []}
     untraced_pages = 0
     raised, touched, ops = [], {}, []
     layer: dict[str, float] = defaultdict(float)
     row_bytes = 0
     traced_ops: set[int] = set()
-    attempted, measured, n_round = 0, 0.0, 0
-    min_rounds = 2 if tracer.enabled else 1
-    while n_round < min_rounds or measured < bench.seconds:
+    for attempted, (kind, path, rid, pages, n_bytes) in enumerate(timed, 1):
+        n_round = (attempted - 1) // len(plan)
         traced = tracer.recording = tracer.enabled and n_round % 2 == 1
-        if traced:
+        if traced and (attempted - 1) % len(plan) == 0:
             progress = _Progress(spark)
             n_runs = 0  # streaming queries started in this round
-        for kind, n_pages in plan:
-            rel = make(kind, n_pages)
-            path = land(rel)
-            attempted += 1
-            touched[rel.rid] = attempted
-            if traced:
-                tracer.op_id = attempted
-                traced_ops.add(attempted)
-                store_before = _parquet_files(store_dir)
-                inbox_before = _parquet_files(inbox)
-            t0 = time.perf_counter()
-            try:
-                with tracer.span("op"):
-                    action = deliver(path)
-            except Exception as exc:  # a failed delivery is counted, not fatal
-                action = "raised"
-                raised.append((attempted, f"{type(exc).__name__}: {exc}"[:300]))
-            dt = elapsed(t0)
-            lat[traced].append(dt)
-            ops.append((kind, rel.page_count, action, round(dt, 3)))
-            measured += dt
-            if not traced:
-                untraced_pages += rel.page_count
-            else:
-                if action in ("insert", "update"):
-                    n_runs += 1
-                    progress.wait_terminated(n_runs)
-                    row_bytes += rel.row_bytes()
-                new = {
-                    p: s for p, s in _parquet_files(store_dir).items()
-                    if store_before.get(p) != s
-                }
-                layer["sinks.bytes_written"] += sum(new.values())
-                layer["sinks.files_written"] += len(new)
-                layer["sources.pages"] += rel.page_count
-                layer["nca.updates"] += action == "update"
-                layer["sources.raw_rows"] += sum(
-                    pq.read_metadata(p).num_rows
-                    for p in _parquet_files(inbox) if p not in inbox_before
-                )
+        touched[rid] = attempted
         if traced:
-            progress.remove()
-            for name, total in progress.totals.items():
-                layer[f"streaming.{name}_s"] += total
-        n_round += 1
+            tracer.op_id = attempted
+            traced_ops.add(attempted)
+            store_before = _parquet_files(store_dir)
+            inbox_before = _parquet_files(inbox)
+        c0 = tree_cpu_s()
+        t0 = time.perf_counter()
+        try:
+            with tracer.span("op"):
+                action = deliver(path)
+        except Exception as exc:  # a failed delivery is counted, not fatal
+            action = "raised"
+            raised.append((attempted, f"{type(exc).__name__}: {exc}"[:300]))
+        dt = elapsed(t0)
+        cpu[traced].append(tree_cpu_s() - c0)
+        lat[traced].append(dt)
+        ops.append((kind, pages, action, round(dt, 3)))
+        if not traced:
+            untraced_pages += pages
+        else:
+            if action in ("insert", "update"):
+                n_runs += 1
+                progress.wait_terminated(n_runs)
+                row_bytes += n_bytes
+            new = {
+                p: s for p, s in _parquet_files(store_dir).items()
+                if store_before.get(p) != s
+            }
+            layer["sinks.bytes_written"] += sum(new.values())
+            layer["sinks.files_written"] += len(new)
+            layer["sources.pages"] += pages
+            layer["nca.updates"] += action == "update"
+            layer["sources.raw_rows"] += sum(
+                pq.read_metadata(p).num_rows
+                for p in _parquet_files(inbox) if p not in inbox_before
+            )
+            if attempted % len(plan) == 0:
+                progress.remove()
+                for name, total in progress.totals.items():
+                    layer[f"streaming.{name}_s"] += total
+    bench.rss.stop()
 
-    wrong = _check_store(store_dir, current)
+    wrong = _check_store(store_dir, inputs["expected"])
     failed_ops = {op for op, _ in raised} | {
         op for rid, op in touched.items() if rid in wrong
     }
     untouched_wrong = [rid for rid in wrong if rid not in touched]
-    failed = min(attempted, len(failed_ops) + len(untouched_wrong))
+    failed = min(len(timed), len(failed_ops) + len(untouched_wrong))
 
-    tail_q = tail_quantile(len(plan))
+    tail_q = tail_quantile(len(lat[False]))
     result = {
-        "attempted": attempted,
+        "attempted": len(timed),
         "failed": failed,
         "setup_s": setup_s,
-        "e2e": latency_metrics(lat[False], tail_q),
+        "setup_cpu_s": setup_cpu_s,
+        "e2e": latency_metrics(lat[False], cpu[False], tail_q),
         "info": {
-            "rounds": n_round,
+            "rounds": n_rounds,
             "samples": len(lat[False]),
             "tail_quantile": tail_q,
             "pages_per_s": untraced_pages / sum(lat[False]),
             "history_releases": n_history,
-            "store_records": sum(len(r.records) for r in current.values()),
+            "store_records": sum(len(rec) for rec, _ in inputs["expected"].values()),
             "wrong_releases": sorted(wrong)[:20],
             "raised": raised[:5],
             "ops": ops,
@@ -261,22 +286,18 @@ def run(bench: Bench, n_history: int, plan: list[tuple[str, int]]) -> dict:
         n = len(traced_ops)
         self_t = tracer.self_times(traced_ops)
         for span in ("sources.pdf_info", "sources.extract", "nca.sync", "streaming.pipeline"):
-            layer[f"{span}_s"] = self_t.get(span, 0.0)
+            layer[f"{span}_s"] = self_t[span]
         layers = {k: v / n for k, v in layer.items()}
-        layers["sinks.write_amp"] = layer["sinks.bytes_written"] / max(row_bytes, 1)
+        layers["sinks.write_amp"] = layer["sinks.bytes_written"] / row_bytes
         result["layers"] = layers
         result["self_s"] = {k: v / n for k, v in self_t.items()}
-        result["traced_e2e"] = latency_metrics(lat[True], tail_q)
+        result["traced_e2e"] = latency_metrics(lat[True], cpu[True], tail_q)
     return result
 
 
-def _check_store(store_dir: str, current: dict) -> set[str]:
+def _check_store(store_dir: str, expected: dict[str, tuple[list, list]]) -> set[str]:
     """Release ids whose records or allocations in the store differ
     from the generator's rows, or that have dead-lettered rows."""
-    want_rec, want_alloc = {}, {}
-    for rel in current.values():
-        want_rec[rel.rid] = sorted(rel.records)
-        want_alloc[rel.rid] = sorted(rel.allocations)
     got_rec, got_alloc = {}, {}
     for table, schema, got in (
         ("record", nca_data.RECORD_TYPE, got_rec),
@@ -286,9 +307,10 @@ def _check_store(store_dir: str, current: dict) -> set[str]:
         for row in zip(*(rows.column(c).to_pylist() for c in schema.names)):
             got.setdefault(row[-1], []).append(row)
     wrong = {
-        rid for rid in set(want_rec) | set(got_rec)
-        if sorted(got_rec.get(rid, [])) != want_rec.get(rid)
-        or sorted(got_alloc.get(rid, [])) != want_alloc.get(rid)
+        rid for rid in set(expected) | set(got_rec)
+        if rid not in expected
+        or sorted(got_rec.get(rid, [])) != expected[rid][0]
+        or sorted(got_alloc.get(rid, [])) != expected[rid][1]
     }
     dlq = os.path.join(store_dir, "dlq")
     if os.path.isdir(dlq):

@@ -139,11 +139,9 @@ def plan_stats(df) -> dict[str, float]:
     return dict(out)
 
 
-def _tree_pss_kb(root: int) -> dict[int, int]:
-    """Proportional set size per process of ``root`` and all its
-    descendants, from /proc (the JVM is a child of this process, the
-    Python workers are children of the JVM). Proportional, so pages the
-    forked Python workers share are counted once."""
+def _tree(root: int) -> list[int]:
+    """``root`` and all its descendants, from /proc: the JVM is a child
+    of this process, the Python workers are children of the JVM."""
     children: dict[int, list[int]] = defaultdict(list)
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
@@ -155,10 +153,38 @@ def _tree_pss_kb(root: int) -> dict[int, int]:
             continue
         ppid = int(stat[stat.rindex(b")") + 2 :].split()[1])
         children[ppid].append(int(entry))
-    out, todo = {}, [root]
+    out, todo = [], [root]
     while todo:
         pid = todo.pop()
+        out.append(pid)
         todo.extend(children.get(pid, ()))
+    return out
+
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process and its descendants:
+    user plus system time, including that of reaped children. Time the
+    hypervisor gives to other guests (steal) is not in it."""
+    ticks = 0
+    for pid in _tree(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat", "rb") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        ticks += sum(int(x) for x in stat[stat.rindex(b")") + 2 :].split()[11:15])
+    return ticks / _TICK
+
+
+def _tree_pss_kb(root: int) -> dict[int, int]:
+    """Proportional set size per process of ``root`` and all its
+    descendants. Proportional, so pages the forked Python workers share
+    are counted once."""
+    out = {}
+    for pid in _tree(root):
         try:
             with open(f"/proc/{pid}/smaps_rollup", "rb") as fh:
                 for line in fh:
@@ -171,9 +197,10 @@ def _tree_pss_kb(root: int) -> dict[int, int]:
 
 
 class PeakRss:
-    """Samples the process tree's memory on a thread. ``peak_mb`` is
-    the largest total seen; ``breakdown`` splits that sample into the
-    Python process, its largest child (the JVM) and everything else."""
+    """Samples the process tree's memory on a thread between ``start``
+    and ``stop``. ``peak_mb`` is the largest total seen; ``breakdown``
+    splits that sample into the Python process, its largest child (the
+    JVM) and everything else."""
 
     def __init__(self, interval: float = 0.25) -> None:
         self._interval = interval
@@ -189,13 +216,14 @@ class PeakRss:
                 self._peak = sample
             self._stop.wait(self._interval)
 
-    def __enter__(self) -> PeakRss:
+    def start(self) -> None:
         self._thread.start()
-        return self
 
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        self._thread.join(timeout=10)
+    def stop(self) -> None:
+        """Ends sampling; a no-op when sampling is not running."""
+        if self._thread.is_alive():
+            self._stop.set()
+            self._thread.join(timeout=10)
 
     @property
     def peak_mb(self) -> float:

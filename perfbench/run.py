@@ -24,24 +24,36 @@ import time
 import ingest_workload
 import query_workload
 from harness import PACKAGE, ROOT, Bench, cpu_times
-from probes import PeakRss
+
+WORKLOADS = {"catalog_queries": query_workload, "nca_ingest": ingest_workload}
 
 #: --size tiny is the smoke test's configuration.
 SIZES = {
-    "full": {"sf": 0.01, "warm_passes": 2, "min_passes": 3, "history": 300,
+    "full": {"sf": 0.01, "warm_passes": 2, "history": 300,
              "round": ingest_workload.ROUND},
-    "tiny": {"sf": 0.001, "warm_passes": 1, "min_passes": 1, "history": 5,
+    "tiny": {"sf": 0.001, "warm_passes": 1, "history": 5,
              "round": ingest_workload.TINY_ROUND},
 }
+
+#: Per-layer metrics that every workload reports.
+COMMON_LAYERS = ("session.start_s", "overhead.ops_per_s", "overhead.op_p50_s",
+                 "overhead.op_tail_s", "overhead.cpu_s_per_op")
+#: Op metrics reported in the stamp line, without a bound: on a shared
+#: host the wall-clock ones move with the CPU time the host takes away,
+#: and a median of a run's few, unlike ops jumps between them, by more
+#: than a bound can allow (see METRICS.md).
+UNBOUNDED = ("ops_per_s", "op_p50_s", "op_tail_s", "op_cpu_p50_s")
 
 
 def run_workload(bench: Bench, size: dict) -> dict:
     if bench.workload == "catalog_queries":
         return query_workload.run(
             bench, query_workload.QUERY_SET, size["sf"], size["warm_passes"],
-            size["min_passes"],
+            query_workload.PASS_S,
         )
-    return ingest_workload.run(bench, size["history"], size["round"])
+    return ingest_workload.run(
+        bench, size["history"], size["round"], ingest_workload.ROUND_S
+    )
 
 
 def main() -> int:
@@ -65,16 +77,19 @@ def main() -> int:
     t_start = time.perf_counter()
     steal0, total0 = cpu_times()
     try:
-        with PeakRss() as rss:
-            result = run_workload(bench, SIZES[args.size])
-            stamp = bench.stamp()
+        result = run_workload(bench, SIZES[args.size])
+        stamp = bench.stamp()
     finally:
         bench.close()
 
     steal1, total1 = cpu_times()
-    e2e = dict(result["e2e"], setup_s=result["setup_s"], peak_rss_mb=rss.peak_mb)
+    e2e = dict(result["e2e"], setup_s=result["setup_s"], peak_rss_mb=bench.rss.peak_mb)
     if args.trace:
-        layers = dict(result["layers"])
+        # Layers the workload does not exercise read 0; a layer it
+        # measures but did not report fails the run below.
+        measured = set(WORKLOADS[args.workload].LAYERS) | set(COMMON_LAYERS)
+        layers = {m["name"]: 0.0 for m in spec["per_layer"] if m["name"] not in measured}
+        layers.update(result["layers"])
         layers["session.start_s"] = bench.tracer.self_times({None})["session.start"]
         for name, value in result["traced_e2e"].items():
             layers[f"overhead.{name}"] = value - e2e[name]
@@ -88,7 +103,7 @@ def main() -> int:
     else:
         wanted, values = spec["end_to_end"], e2e
     metrics = {
-        m["name"]: {"value": float(values.get(m["name"], 0.0)), "unit": m["unit"]}
+        m["name"]: {"value": float(values[m["name"]]), "unit": m["unit"]}
         for m in wanted
     }
 
@@ -99,7 +114,9 @@ def main() -> int:
         size=args.size,
         trace=args.trace,
         failed_ratio=failed / attempted,
-        peak_memory=rss.breakdown,
+        peak_memory=bench.rss.breakdown,
+        unbounded={name: e2e[name] for name in UNBOUNDED},
+        setup_cpu_s=result["setup_cpu_s"],
         cpu_steal_share=(steal1 - steal0) / max(total1 - total0, 1),
         wall_s=time.perf_counter() - t_start,
         **result["info"],
