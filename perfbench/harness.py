@@ -3,12 +3,14 @@ and latency statistics."""
 
 from __future__ import annotations
 
-import concurrent.futures
+import contextlib
+import ctypes
 import hashlib
-import multiprocessing
 import os
+import pickle
 import platform
 import shutil
+import signal
 import subprocess
 import sys
 import time
@@ -54,13 +56,80 @@ def work_units(seconds: float, nominal_s: float) -> int:
     return max(1, round(seconds / nominal_s))
 
 
-def in_child(fn, *args):
+def in_child(tmp_dir: str, fn, *args):
     """``fn(*args)`` run in a fresh Python process, which has ended when
     this returns: input generation and oracle runs leave no memory in
-    the process whose memory is measured."""
-    ctx = multiprocessing.get_context("spawn")
-    with concurrent.futures.ProcessPoolExecutor(1, mp_context=ctx) as pool:
-        return pool.submit(fn, *args).result()
+    the process whose memory is measured. The call and its result pass
+    through pickle files in ``tmp_dir``; the child's output goes to
+    stderr."""
+    call = os.path.join(tmp_dir, f"call-{fn.__name__}.pkl")
+    with open(call, "wb") as fh:
+        pickle.dump((fn, args), fh)
+    subprocess.run([sys.executable, os.path.abspath(__file__), call], stdout=sys.stderr, check=True)
+    with open(call + ".out", "rb") as fh:
+        return pickle.load(fh)
+
+
+#: Environment variable that marks every process a run starts: children
+#: inherit it, also those that leave the run's process group.
+RUN_TAG = "PERFBENCH_RUN"
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def tag_processes() -> None:
+    """Tags the processes this one starts from now on, and makes this
+    process the subreaper of its descendants: one whose parent exits
+    (Python workers, the shell that launches the JVM) is handed to this
+    process, which reaps it, rather than to init."""
+    os.environ[RUN_TAG] = f"{os.getpid()}.{time.time_ns()}"
+    prctl = ctypes.CDLL(None, use_errno=True).prctl
+    prctl.argtypes = [ctypes.c_int] + [ctypes.c_ulong] * 4
+    prctl.restype = ctypes.c_int
+    if prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER) failed")
+
+
+def _tagged() -> list[int]:
+    needle = f"{RUN_TAG}={os.environ[RUN_TAG]}".encode()
+    found = []
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit() or int(entry) == os.getpid():
+            continue
+        try:
+            with open(f"/proc/{entry}/environ", "rb") as fh:
+                if needle in fh.read().split(b"\0"):
+                    found.append(int(entry))
+        except OSError:
+            pass
+    return found
+
+
+def _reap() -> None:
+    with contextlib.suppress(ChildProcessError):
+        while os.waitpid(-1, os.WNOHANG)[0]:
+            pass
+
+
+def stop_tagged(grace_s: float = 10.0) -> int:
+    """Waits up to ``grace_s`` for the processes this run started to end
+    on their own, then stops those still alive (TERM, then KILL) and
+    waits until each has ended. Returns how many had to be stopped; a
+    run that cleaned up after itself returns 0."""
+    left = None
+    for sig in (None, signal.SIGTERM, signal.SIGKILL):
+        if sig is not None:
+            pids = _tagged()
+            left = len(pids) if left is None else left
+            for pid in pids:
+                with contextlib.suppress(ProcessLookupError):
+                    os.kill(pid, sig)
+        deadline = time.monotonic() + grace_s
+        while True:
+            _reap()
+            if not _tagged() or time.monotonic() > deadline:
+                break
+            time.sleep(0.05)
+    return left or 0
 
 
 def latency_metrics(latencies: list[float], cpu: list[float], tail_q: float) -> dict[str, float]:
@@ -192,3 +261,11 @@ class Bench:
 
 def elapsed(t0: float) -> float:
     return time.perf_counter() - t0
+
+
+if __name__ == "__main__":
+    # The child process of in_child: run the pickled call, pickle its result.
+    with open(sys.argv[1], "rb") as fh:
+        fn, args = pickle.load(fh)
+    with open(sys.argv[1] + ".out", "wb") as fh:
+        pickle.dump(fn(*args), fh)

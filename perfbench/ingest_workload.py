@@ -155,7 +155,9 @@ def run(bench: Bench, n_history: int, plan: list[tuple[str, int]], round_s: floa
     tracer = bench.tracer
     # A traced run alternates untraced and traced rounds, as many of each.
     n_rounds = work_units(bench.seconds, round_s) * (2 if tracer.enabled else 1)
-    inputs = in_child(prepare, bench.work, n_history, bench.seed, WARM_UP + plan * n_rounds)
+    inputs = in_child(
+        bench.path("tmp"), prepare, bench.work, n_history, bench.seed, WARM_UP + plan * n_rounds
+    )
     warm_up, timed = inputs["deliveries"][: len(WARM_UP)], inputs["deliveries"][len(WARM_UP) :]
     store_dir, inbox = bench.path("store"), bench.path("inbox")
 

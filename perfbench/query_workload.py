@@ -2,8 +2,8 @@
 
 One client runs passes over a fixed query set, each pass in a seeded
 order; an op is ``Query.fn(spark, sf_dir)`` plus ``collect()``. The
-first two passes are the warm-up (part of set-up): they pay code
-generation and file footers, and let the JIT settle. A fixed number of
+first pass is the warm-up (part of set-up): it pays code generation
+and file footers, and the bulk of the JIT's work. A fixed number of
 timed passes follows. A child process writes the tables and computes
 the DuckDB oracle answers before the session starts; after the timed
 passes the first pass's results are checked against them, and every
@@ -110,7 +110,9 @@ def run(bench: Bench, names: tuple[str, ...], sf: float, warm_passes: int, pass_
     from dbm_nca_ph_etl_spark.plans.queries import QUERIES
 
     sf_dir = bench.path("sf")
-    answers = in_child(prepare, sf_dir, sf, bench.path("tmp", "duckdb"), names)
+    answers = in_child(
+        bench.path("tmp"), prepare, sf_dir, sf, bench.path("tmp", "duckdb"), names
+    )
     rng = random.Random(bench.seed)
     tracer = bench.tracer
     # A traced run alternates untraced and traced passes, as many of each.
@@ -119,8 +121,10 @@ def run(bench: Bench, names: tuple[str, ...], sf: float, warm_passes: int, pass_
     def order() -> list[str]:
         return rng.sample(names, len(names))
 
-    # Set-up ends after ``warm_passes`` passes: the JIT keeps speeding
-    # queries up over the first two passes, not only the first.
+    # Set-up ends after ``warm_passes`` passes. One pays the first-run
+    # costs; the JIT keeps settling a little over the timed passes, but
+    # a second warm-up pass would add 8 s to every run of a series that
+    # has a fixed time budget.
     t_setup, c_setup = time.perf_counter(), tree_cpu_s()
     spark = bench.start_spark()
     warm, failed_names, warm_lat = {}, {}, {}

@@ -50,6 +50,8 @@ def test_every_metric_emitted_and_nothing_fails(workload, trace):
     assert result["attempted"] >= 1
     assert result["failed"] == 0 and result["correct"] is True
     assert info["failed_ratio"] == 0
+    # Every process the run started ended on its own before it exited.
+    assert info["leftover_processes"] == 0
     wanted = SPEC["per_layer"] if trace else SPEC["end_to_end"]
     assert set(result["metrics"]) == {m["name"] for m in wanted}
     for m in wanted:
