@@ -37,17 +37,23 @@ def entry(spark: SparkSession) -> DataFrame:
 #: re-confirms what actually changed first; rewrite this set each
 #: round as part of closing the round.
 TOUCHED_THIS_ROUND = {
-    "kll_matview_quantiles",  # new (r11): q-sketch matview measure
-    "order_value_quartile_bands",  # r11: unbounded quantile route
-    # rewritten as exact octave multi-select; localCheckpoint removed
-    "repeat_purchase_intervals",  # r11: oracle empty-edge coalesce
-    "spatial_neighbor_segments",  # new (r11): grid-cell distance join
-    "spatial_nearest_customer",  # new (r11): bounded-radius NN join
-    "dsir_importance_resample",  # new (r11): DSIR Gumbel top-k
-    "ewma_user_value",  # new (r11): exact integer EWMA
-    "bootstrap_ci_order_value",  # new (r11): Poisson bootstrap CI
-    "spatial_hotspot_cells",  # new (r11): cell-stencil density top-k
-    "nation_monthly_trend",  # new (r11): exact-int grouped OLS slope
+    # memoized artifact moved onto session.session_memo
+    "ann_pq_topk",  # PQ codebooks
+    "ann_ivfpq_topk",  # PQ codebooks + IVF-PQ encode checkpoint
+    "ann_pca_topk",  # PCA model
+    "embedding_near_dup_lsh",  # LSH signature index
+    "incremental_dedup_probe",  # band index: persist -> localCheckpoint
+    "nca_clean_records",  # prepared NCA plan
+    "nca_clean_allocations",  # prepared NCA plan
+    "doc_fingerprints",  # LSH signature index
+    # scale_guard memo now keyed on the plan's input files
+    "ann_cosine_topk",
+    "embedding_near_dup_pairs",
+    "semantic_dedup_keep",
+    # rewritten in r12; no CORRECTNESS row since
+    "ann_lsh_topk",
+    "mmr_diverse_topk",
+    "fuzzy_name_pairs",
 }
 
 

@@ -55,6 +55,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbm_nca_ph_etl_spark.session import session_memo
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] in double precision (sequential left-to-right fold,
@@ -118,47 +120,31 @@ EXACT_PAIRS_MAX_ROWS = 20_000  # 20k → ≤2e8 pair comparisons
 EXACT_TOPK_MAX_QUERIES = 1_000  # broadcast set × full corpus scan
 
 
-#: Session-scoped memo of PASSED guard checks, keyed on
-#: (applicationId, op, bound, analyzed-plan semanticHash). The guard
-#: is a VALIDATION, not data: within one session the same input plan
-#: re-checked on every query construction re-runs an identical
-#: bounded count job (one full driver barrier each — the ANN audits
-#: construct their exact baseline 6× per bench query). A fresh
-#: session re-validates; no row ever flows from this memo into a
-#: result.
-_GUARD_MEMO: dict[tuple, bool] = {}
-
-
 def scale_guard(df: DataFrame, max_rows: int, op_name: str) -> DataFrame:
     """Refuse to build an exact-baseline plan over more than
     ``max_rows`` input rows. Runs a bounded count at call time
     (``limit(max+1).count()`` — stops scanning as soon as the bound
     is exceeded, prunes to zero columns); pass ``max_rows=None``
     from call sites that must opt out knowingly. A check that PASSED
-    is memoized per (session, plan) — see ``_GUARD_MEMO``."""
+    is memoized for the session, keyed on the plan and its input
+    files, so grown or rewritten input is counted again."""
     if max_rows is None:
         return df
-    try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            op_name,
-            int(max_rows),
-            df._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # noqa: BLE001 — memo is an optimization only
-        key = None
-    if key is not None and _GUARD_MEMO.get(key):
-        return df
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
-        raise ValueError(
-            f"{op_name} is a labeled exact baseline (quadratic/brute "
-            f"force by design) and refuses >{max_rows} input rows "
-            f"(got at least {n}); use its LSH/IVF scale-path sibling, "
-            f"or pass max_rows=None to override knowingly"
-        )
-    if key is not None:
-        _GUARD_MEMO[key] = True
+
+    def count_within_bound() -> bool:
+        n = df.limit(max_rows + 1).count()
+        if n > max_rows:
+            raise ValueError(
+                f"{op_name} is a labeled exact baseline (quadratic/brute "
+                f"force by design) and refuses >{max_rows} input rows "
+                f"(got at least {n}); use its LSH/IVF scale-path sibling, "
+                f"or pass max_rows=None to override knowingly"
+            )
+        return True
+
+    plan = df._jdf.queryExecution().analyzed().semanticHash()
+    key = ("scale_guard", op_name, max_rows, plan)
+    session_memo(df.sparkSession, key, df.inputFiles(), count_within_bound)
     return df
 
 

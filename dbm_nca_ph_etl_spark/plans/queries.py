@@ -34,6 +34,7 @@ from dbm_nca_ph_etl_spark.operators import similarity as S
 from dbm_nca_ph_etl_spark.operators import text_analysis as T
 from dbm_nca_ph_etl_spark.operators import integrity as IG
 from dbm_nca_ph_etl_spark.operators import windows as W
+from dbm_nca_ph_etl_spark.session import session_memo
 from dbm_nca_ph_etl_spark.sources.catalog import load_table
 
 
@@ -1584,22 +1585,14 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.cosine_near_dup_pairs(_t(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
-# Session-scoped LSH signature index (the "build once, query many"
-# pattern build_lsh_index persists to the lake; keyed by applicationId
-# like the NCA plan memo, plans/nca_queries.py:148). Re-signing the
-# corpus per invocation measures index build, not query — at 100 TB
-# the signature table is written once per corpus snapshot and every
-# dedup/ANN pass reads it.
-_SIGNED_MEMO: dict = {}
-
-
 def _signed_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (sf_dir, spark.sparkContext.applicationId)
-    if key not in _SIGNED_MEMO:
-        _SIGNED_MEMO[key] = S._signed(
-            _t(spark, sf_dir, "embeddings"), "vec_id", "embedding", 6, 6, 64, 42
-        )
-    return _SIGNED_MEMO[key]
+    """Session-memoized LSH signature index — at 100 TB written once
+    per corpus snapshot (build_lsh_index) and read by every pass."""
+    emb = _t(spark, sf_dir, "embeddings")
+    return session_memo(
+        spark, ("signed_index", sf_dir), emb.inputFiles(),
+        lambda: S._signed(emb, "vec_id", "embedding", 6, 6, 64, 42),
+    )
 
 
 @register(
@@ -6092,16 +6085,13 @@ def ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _band_index(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> DataFrame:
     """Session-memoized corpus band index (dedup.band_buckets) — the
-    build-once artifact of the incremental-dedup story, keyed like
-    _signed_index / the NCA plan memo. The bench then measures what
-    production runs per delivery: sign the BATCH, probe the index —
-    not an index rebuild per invocation."""
-    key = ("band_index", sf_dir, spark.sparkContext.applicationId)
-    if key not in _SIGNED_MEMO:
-        idx = D.band_buckets(corpus).persist()
-        idx.count()  # materialize once; blocks are corpus-index-sized
-        _SIGNED_MEMO[key] = idx
-    return _SIGNED_MEMO[key]
+    build-once artifact of the incremental-dedup story. The bench then
+    measures what production runs per delivery: sign the BATCH, probe
+    the index — not an index rebuild per invocation."""
+    return session_memo(
+        spark, ("band_index", sf_dir), corpus.inputFiles(),
+        lambda: D.band_buckets(corpus).localCheckpoint(eager=True),
+    )
 
 
 @register(
@@ -7585,19 +7575,14 @@ def keyed_merge_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_PQ_MEMO: dict = {}
-
-
 def _pq_books(spark: SparkSession, sf_dir: str, emb) -> list:
     """Session-memoized PQ codebooks (similarity.pq_train) — the
-    train-once model artifact, keyed like _band_index/_signed_index.
-    Training itself is one bounded TakeOrdered sample + driver-side
-    numpy Lloyd (sub-second), so the memo mostly keeps repeat
-    invocations from re-collecting the sample."""
-    key = ("pq_books", sf_dir, spark.sparkContext.applicationId)
-    if key not in _PQ_MEMO:
-        _PQ_MEMO[key] = S.pq_train(emb, m=32, k=16, iters=10)
-    return _PQ_MEMO[key]
+    train-once model artifact. Training is one bounded sample plus
+    driver-side Lloyd, so the memo mostly saves re-collecting it."""
+    return session_memo(
+        spark, ("pq_books", sf_dir), emb.inputFiles(),
+        lambda: S.pq_train(emb, m=32, k=16, iters=10),
+    )
 
 
 @register(
@@ -7656,24 +7641,16 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") < 10)
     books = _pq_books(spark, sf_dir, emb)
     cents = S._centroids(16, 64, 42)
-    key = ("ivfpq_enc", sf_dir, spark.sparkContext.applicationId)
-    if key not in _PQ_MEMO:
-        # the persisted index artifact — built once per corpus
-        # snapshot (the band/signed-index convention); the bench then
-        # measures the probe, which is what production repeats.
-        # localCheckpoint (r12) instead of persist+count: same
-        # materialized rows, but it TRUNCATES the encode lineage —
-        # persist kept the full m×k codebook/assignment expression
-        # tree in every downstream plan, and each probe-side
-        # DataFrame op re-walked it during analysis (~0.3 s of
-        # driver time per query construction, guide §7.3).
-        _PQ_MEMO[key] = S.ivfpq_encode(emb, books, cents).localCheckpoint(
-            eager=True
-        )
+    # the index artifact, built once per corpus snapshot; localCheckpoint
+    # cuts the m×k codebook lineage out of every probe plan
+    encoded = session_memo(
+        spark, ("ivfpq_enc", sf_dir), emb.inputFiles(),
+        lambda: S.ivfpq_encode(emb, books, cents).localCheckpoint(eager=True),
+    )
     return _ann_recall_audit(
         S.ivfpq_topk(
             emb, q, books, k=10, n_centroids=16, n_probe=8,
-            centroids=cents, encoded=_PQ_MEMO[key],
+            centroids=cents, encoded=encoded,
         ),
         S.cosine_topk(emb, q, k=10),
         floor_hits=20,
@@ -10712,11 +10689,12 @@ def embedding_moment_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ann_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-    key = ("pca_model", sf_dir, spark.sparkContext.applicationId)
-    if key not in _PQ_MEMO:
-        _PQ_MEMO[key] = S.pca_train(emb, "embedding", dim=64, p=16, center=False)
+    model = session_memo(
+        spark, ("pca_model", sf_dir), emb.inputFiles(),
+        lambda: S.pca_train(emb, "embedding", dim=64, p=16, center=False),
+    )
     return _ann_recall_audit(
-        S.pca_topk(emb, q, k=10, p=16, n_cand=100, model=_PQ_MEMO[key]),
+        S.pca_topk(emb, q, k=10, p=16, n_cand=100, model=model),
         S.cosine_topk(emb, q, k=10),
         floor_hits=20,
     )

@@ -80,3 +80,55 @@ def thread_target(spark: SparkSession, fn):
     if isinstance(wrapped, SparkSession) or not callable(wrapped):
         return fn
     return wrapped(fn)
+
+
+
+#: session_memo's store, ``{key: (fingerprint, value)}``, for the
+#: Spark application ``_memo_app`` only.
+_MEMO: dict[tuple, tuple] = {}
+_memo_app: str | None = None
+
+
+def session_memo(spark: SparkSession, key: tuple, paths, build):
+    """``build()``, memoized per ``key`` (``(kind, params…)``) for this
+    Spark application and rebuilt when the files under ``paths`` change.
+    A new fingerprint replaces the entry, a new application empties the
+    store, and a ``build`` that raises stores nothing. Two threads that
+    miss together both build; the later store wins."""
+    global _memo_app
+    if spark.sparkContext.applicationId != _memo_app:
+        _MEMO.clear()
+        _memo_app = spark.sparkContext.applicationId
+    fingerprint = _fingerprint(spark, paths)
+    hit = _MEMO.get(key)
+    if hit is None or hit[0] != fingerprint:
+        hit = _MEMO[key] = (fingerprint, build())
+    return hit[1]
+
+
+def _fingerprint(spark: SparkSession, paths) -> list:
+    """``(path, length, mtime)`` of each leaf file under ``paths``, from
+    one FileSystem status per path. A path that cannot be statted is
+    ``(path, None, None)``; its build then raises the real error."""
+    from py4j.protocol import Py4JJavaError
+
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
+    out = []
+    for p in paths:
+        path = Path(p)
+        fs = path.getFileSystem(conf)
+        try:
+            files = [fs.getFileStatus(path)]
+        except Py4JJavaError:
+            out.append((p, None, None))
+            continue
+        if files[0].isDirectory():
+            listing, files = fs.listFiles(path, True), []
+            while listing.hasNext():
+                files.append(listing.next())
+        out += [
+            (f.getPath().toString(), f.getLen(), f.getModificationTime())
+            for f in files
+        ]
+    return sorted(out, key=lambda entry: entry[0])

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
+from dbm_nca_ph_etl_spark.session import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -30,28 +32,9 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Session-scoped table-SCHEMA memo (StructType only — never rows, never
-# plans). A bare ``spark.read.parquet`` re-infers the schema from file
-# footers on EVERY call (~0.4-0.6 s per table on this box even with the
-# file listing cached), so each query construction paid footer reads
-# per table reference, per run. Real deployments declare schemas (a
-# metastore / Iceberg manifest is exactly this cache); passing the
-# known StructType via ``reader.schema(...)`` skips inference while
-# every byte of data is still read and computed per invocation. Keyed
-# by applicationId like the plan/index memos so a fresh session always
-# re-infers.
-_SCHEMA_MEMO: dict = {}
 
-
-def _table_schema(spark: SparkSession, path: str, name: str):
-    key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        if name == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_MEMO[key] = schema
-    return schema
+def table_path(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -68,11 +51,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``timestamp[us]`` (read natively as TIMESTAMP_NTZ; ``ts_us`` is a
     session-timezone-independent timestampdiff from the NTZ epoch).
     """
-    path = os.path.join(sf_dir, f"{name}.parquet")
+    path = table_path(sf_dir, name)
+    if name == "events":
+        # Set per read, not in get_spark: __spark_entry__ callers build
+        # their own vanilla session, where get_spark confs never apply
+        # and a TIMESTAMP(NANOS) read would throw.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # a known schema skips footer inference (a metastore's job)
+    infer = lambda: spark.read.parquet(path).schema  # noqa: E731
+    schema = session_memo(spark, ("table_schema", path), [path], infer)
+    raw = spark.read.schema(schema).parquet(path)
     if name != "events":
-        return spark.read.schema(_table_schema(spark, path, name)).parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.schema(_table_schema(spark, path, name)).parquet(path)
+        return raw
     if isinstance(raw.schema["ts"].dataType, LongType):
         # `ts div 1000`, NOT `ts / 1000`: the nanosecond epoch (~1.7e18)
         # exceeds double's 2^53 exact-integer range, so float division is

@@ -3,10 +3,18 @@ queries with the scale rationale pinned next to each. Run after any
 plan-shaping change:
 
     python tools/dump_plans.py
+
+With ``--out DIR q1 q2 …`` it instead writes each named query's
+``.explain("formatted")`` to ``DIR/<q>.txt`` (tables from
+``$SPARK_GRAFT_SF_DIR``, default sf0.1) — e.g. before/after plans
+for an optimization log:
+
+    python tools/dump_plans.py --out plans/r13/before ann_pq_topk
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
@@ -15,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dbm_nca_ph_etl_spark.plans.queries import QUERIES
 from dbm_nca_ph_etl_spark.session import get_spark
+from dbm_nca_ph_etl_spark.sources.catalog import DEFAULT_SF_DIR
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -437,9 +446,33 @@ at ≤1.6× distributed wall.
 """
 
 
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def dump_named(spark, out_dir: str, names: list[str]) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(_explain(QUERIES[name].fn(spark, DEFAULT_SF_DIR)))
+        print(f"wrote {os.path.join(out_dir, name)}.txt")
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--out", help="write the named queries' plans here")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if bool(args.out) != bool(args.queries):
+        ap.error("--out DIR and query names go together")
     spark = get_spark(app_name="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.out:
+        dump_named(spark, args.out, args.queries)
+        spark.stop()
+        return
     spark.conf.set("spark.sql.maxMetadataStringLength", "500")
 
     out = [
@@ -453,10 +486,7 @@ def main() -> None:
         "",
     ]
     for name, why in SHOWCASE.items():
-        df = QUERIES[name].fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = _explain(QUERIES[name].fn(spark, SF_DIR))
         # keep the operator tree + scan details, trim location noise
         plan = re.sub(r"Location: InMemoryFileIndex \[[^\]]*\]", "Location: …", plan)
         out.append(f"## {name}")
