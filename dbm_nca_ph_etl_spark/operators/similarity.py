@@ -55,6 +55,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbm_nca_ph_etl_spark.functions.scalars import let, quote_ident
 from dbm_nca_ph_etl_spark.session import session_memo
 
 
@@ -168,8 +169,6 @@ def cosine_topk(
     LSH/IVF operators are the scale path; this is their labeled
     recall oracle). The guard runs a bounded count at call time.
     """
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
     queries = scale_guard(queries, max_queries, "cosine_topk")
     # Projections and the pair cosine as parsed SQL (r12): the tree
     # is operator-identical to the Column form (same folds, casts,
@@ -239,8 +238,14 @@ def _json_lit_sql(obj: list, sql_type: str) -> str:
     """``from_json('<json>', '<sql_type>')`` SQL text for an
     arbitrarily nested constant list-of-doubles (see
     :func:`_array_lit_sql` for why). No quoting hazard: the JSON of
-    a numeric nest contains no quotes or backslashes."""
-    return f"from_json('{json.dumps(obj)}', '{sql_type}')"
+    a numeric nest contains no quotes or backslashes. NaN and ±Inf
+    raise ``ValueError``: ``from_json`` is PERMISSIVE, so a value its
+    parser rejected would fold to a silent NULL instead of failing."""
+    try:
+        text = json.dumps(obj, allow_nan=False)
+    except ValueError:
+        raise ValueError(f"{sql_type} literal has a NaN or infinite element") from None
+    return f"from_json('{text}', '{sql_type}')"
 
 
 def _plane_lit(vals: list[float]) -> Column:
@@ -680,8 +685,6 @@ def _scored_cells(vec: str, cents: list[list[float]]) -> Column:
     built (same casts, same sequential fold, same double literals via
     repr round-trip), so every emitted value is bit-identical.
     """
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
     vec_q = quote_ident(vec)
     cells = []
     for i, c in enumerate(cents):
@@ -737,18 +740,16 @@ def ivf_topk(
     # AND an exchange barrier so Catalyst's projection collapse can't
     # inline the 16-fold assignment into the join and re-evaluate it
     # per candidate row
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
-    vq = quote_ident(vec_col)
+    idq, vq = quote_ident(id_col), quote_ident(vec_col)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
+        F.col(idq).alias("neighbor_id"),
+        F.col(vq).alias("_cv"),
         F.expr(_l2_sql(vq)).alias("_cn"),
         assign_cluster(vec_col, cents).alias("cell"),
     ).repartition("cell")
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
+        F.col(idq).alias("query_id"),
+        F.col(vq).alias("_qv"),
         F.expr(_l2_sql(vq)).alias("_qn"),
         F.explode(probe_clusters(vec_col, cents, n_probe)).alias("cell"),
     )
@@ -1033,8 +1034,6 @@ def quantize_int8_audit(
     once per row, and all HOF folds run sequentially over the array
     (deterministic order — never a float sum across partitions).
     """
-    from dbm_nca_ph_etl_spark.functions.scalars import let
-
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
     def with_q(vd: Column, scale: Column, q: Column) -> Column:
@@ -1086,8 +1085,6 @@ def _int8_cols(df: DataFrame, id_alias: str, id_col: str, vec_col: str):
     """(id, int8 array, integer L2-squared) projection — the quantized
     probe representation. Scales cancel out of the cosine ratio, so
     ranking needs only integer dot products and integer norms."""
-    from dbm_nca_ph_etl_spark.functions.scalars import let
-
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
 
     def build(vd: Column) -> Column:
@@ -1195,8 +1192,6 @@ def _pq_argmin(
     struct-array predecessor built ~10k expression nodes: ~10 s of
     driver-side py4j+analysis per invocation and an interpreted-
     fallback eval — the exact trap the module header documents.)"""
-    from dbm_nca_ph_etl_spark.functions.scalars import let
-
     book = F.element_at(b3, s + 1)  # array<array<double>>[k]
     d2 = lambda j: F.aggregate(  # noqa: E731
         F.sequence(F.lit(0), F.lit(d_sub - 1)),
@@ -1310,12 +1305,10 @@ def pq_encode(
     running the :func:`_pq_argmin` fold — O(1) lambdas total, so the
     plan stays constant-size at any m×k (see _pq_argmin on why the
     unrolled alternative is 10-40× slower end-to-end)."""
-    from dbm_nca_ph_etl_spark.functions.scalars import let
-
     m = len(books)
     k = len(books[0])
     d_sub = len(books[0][0])
-    raw = F.col(vec_col)
+    raw = F.col(quote_ident(vec_col))
     b3 = _books_lit(books)
     n2 = _norms_lit(books)
     codes = F.transform(
@@ -1338,7 +1331,7 @@ def pq_encode(
         ),
     )
     return df.select(
-        F.col(id_col).alias(id_alias),
+        F.col(quote_ident(id_col)).alias(id_alias),
         packed.getField("codes").alias("_codes"),
         packed.getField("rn2").alias("_rn2"),
         *(extra_cols or []),
@@ -1393,11 +1386,9 @@ def pq_topk(
         # skips it entirely.
         .repartition(F.col("neighbor_id"))
     )
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
     vq = quote_ident(vec_col)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col(quote_ident(id_col)).alias("query_id"),
         F.expr(f"transform({vq}, x -> CAST(x AS DOUBLE))").alias("_qv"),
         F.expr(_l2_sql(vq)).alias("_qn"),
     )
@@ -1489,11 +1480,9 @@ def ivfpq_topk(
         if encoded is not None
         else ivfpq_encode(corpus, books, cents, id_col, vec_col)
     )
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
     vq = quote_ident(vec_col)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col(quote_ident(id_col)).alias("query_id"),
         F.expr(f"transform({vq}, x -> CAST(x AS DOUBLE))").alias("_qv"),
         F.expr(_l2_sql(vq)).alias("_qn"),
         F.explode(probe_clusters(vec_col, cents, n_probe)).alias("cell"),
@@ -1576,11 +1565,12 @@ def mmr_rerank(
     rel = cand.select(
         "query_id", "neighbor_id", e6(F.col("cos_sim")).alias("rel_e6")
     ).localCheckpoint(eager=True)
+    v = F.col(quote_ident(vec_col))
     cv = rel.join(
         corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_v"),
-            l2_norm(F.col(vec_col)).alias("_n"),
+            F.col(quote_ident(id_col)).alias("neighbor_id"),
+            v.alias("_v"),
+            l2_norm(v).alias("_n"),
         ),
         "neighbor_id",
     ).select("query_id", "neighbor_id", "_v", "_n")

@@ -506,3 +506,43 @@ class TestMarginTopk:
             emb, emb.where("vec_id = 0"), k=2, m=1, max_queries=None
         ).collect()
         assert got[0].neighbor_id == 1 and got[0].margin_ppm > 1_000_000
+
+
+@pytest.mark.parametrize("bad", [math.nan, math.inf, -math.inf])
+def test_non_finite_vector_literal_raises(vectors, bad):
+    """A caller's centroid or codebook is spliced into the plan as a
+    literal; a NaN or ±Inf element fails at construction, not as a
+    silent NULL in the results."""
+    from dbm_nca_ph_etl_spark.operators.similarity import ivf_topk, pq_topk
+
+    cents = [[1.0, 0.0, 0.0], [0.0, bad, 0.0]]
+    with pytest.raises(ValueError, match="NaN or infinite"):
+        ivf_topk(vectors, vectors, k=2, n_probe=2, dim=3, centroids=cents)
+    with pytest.raises(ValueError, match="NaN or infinite"):
+        pq_topk(vectors, vectors, [cents], k=2)
+
+
+def test_ann_family_takes_dotted_id_column(vectors):
+    """Column arguments are exact top-level names across the ANN
+    family: an id column literally named ``doc.id`` gives the same
+    neighbours as ``vec_id``."""
+    from dbm_nca_ph_etl_spark.operators.similarity import (
+        ivf_topk,
+        ivfpq_topk,
+        pq_topk,
+    )
+
+    dotted = vectors.withColumnRenamed("vec_id", "doc.id")
+    books = [[[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.7, 0.7, 0.0]]]
+    ops = {
+        "cosine": lambda df, **kw: cosine_topk(df, df, k=2, **kw),
+        "ivf": lambda df, **kw: ivf_topk(df, df, k=2, n_centroids=2, n_probe=2, dim=3, **kw),
+        "pq": lambda df, **kw: pq_topk(df, df, books, k=2, **kw),
+        "ivfpq": lambda df, **kw: ivfpq_topk(
+            df, df, books, k=2, n_centroids=2, n_probe=2, dim=3, **kw
+        ),
+    }
+    for name, op in ops.items():
+        want = sorted(tuple(r) for r in op(vectors).collect())
+        got = sorted(tuple(r) for r in op(dotted, id_col="doc.id").collect())
+        assert want and got == want, name

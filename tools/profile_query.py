@@ -13,6 +13,11 @@ the min over N runs of:
 - ``jobs``: how many Spark jobs the full run issued (status tracker
   delta) — each sequential job is a full cluster barrier at any
   scale, and ~0.1-0.3 s of fixed latency in local mode.
+- ``compiles``: generated classes the JVM compiled, as
+  ``{"warmup": n, "timed": n}`` — the warmup run's count and the sum
+  over the timed runs. A nonzero ``timed`` means the runs paid Janino
+  and JIT work again: plans that differ per run, or classes evicted
+  from Spark's generated-code cache.
 
 Usage::
 
@@ -50,6 +55,11 @@ def main() -> None:
         ids = tracker.getJobIdsForGroup(None) or []
         return len(ids)
 
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compile_count() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
     for name in names:
         q = QUERIES[name]
 
@@ -65,7 +75,9 @@ def main() -> None:
             return t1 - t0, t2 - t1
 
         sc.setJobDescription(f"profile:{name}")
+        k0 = compile_count()
         run()  # warmup (codegen, footers)
+        k1 = compile_count()
         best = None
         jobs = 0
         for _ in range(n_runs):
@@ -83,6 +95,7 @@ def main() -> None:
                     "action": round(best[1], 3),
                     "total": round(best[0] + best[1], 3),
                     "jobs": jobs,
+                    "compiles": {"warmup": k1 - k0, "timed": compile_count() - k1},
                 }
             ),
             flush=True,
