@@ -53,7 +53,13 @@ TOUCHED_THIS_ROUND = {
     # rewritten in r12; no CORRECTNESS row since
     "ann_lsh_topk",
     "mmr_diverse_topk",
+    # re-expressed on operators.asof.range_join (fuzzy_name_pairs was
+    # also rewritten in r12)
     "fuzzy_name_pairs",
+    "range_join_events",
+    "purchase_window_click_join",
+    "spatial_neighbor_segments",
+    "spatial_nearest_customer",
 }
 
 

@@ -120,16 +120,20 @@ def floor_div_sql(num_sql: str, den_sql: str) -> Column:
     plain ``div`` on the Spark side (nation_monthly_trend does the
     latter for its signed slope).
     """
-    return F.expr(
-        f"((({num_sql}) - pmod(({num_sql}), ({den_sql}))) div ({den_sql}))"
-    )
+    return F.expr(floor_div_text(num_sql, den_sql))
+
+
+def floor_div_text(num_sql: str, den_sql: str) -> str:
+    """SQL text of :func:`floor_div_sql`, for splicing into a larger
+    parsed expression."""
+    return f"((({num_sql}) - pmod(({num_sql}), ({den_sql}))) div ({den_sql}))"
 
 
 def quote_ident(name: str) -> str:
     """Backtick-quote a column name for splicing into a parsed SQL
     fragment, doubling embedded backticks (Spark's identifier escape)
     — so the F.expr fast paths (similarity._scored_cells,
-    spatial._with_neighbour_cells, windows' refinement sub-range)
+    asof.range_join, windows' refinement sub-range)
     resolve exactly the column the caller named even when the name
     itself contains a backtick."""
     return "`" + name.replace("`", "``") + "`"

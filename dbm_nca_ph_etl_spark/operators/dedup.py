@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbm_nca_ph_etl_spark.functions.scalars import hash48, hash64, let, round6
+from dbm_nca_ph_etl_spark.operators.asof import range_join
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4
@@ -1025,57 +1026,53 @@ def levenshtein_blocked_pairs(
     df: DataFrame,
     text_col: str,
     max_dist: int = 4,
-    band: int = 4,
 ) -> DataFrame:
-    """Edit-distance similarity self-join with length-band blocking —
-    the fuzzy-string near-dup pass (typo'd titles, OCR'd names,
-    product variants) that set-similarity joins miss because a
-    1-char edit inside a token changes the whole shingle.
+    """Edit-distance similarity self-join with length blocking — the
+    fuzzy-string near-dup pass (typo'd titles, OCR'd names, product
+    variants) that set-similarity joins miss because a 1-char edit
+    inside a token changes the whole shingle.
 
     Blocking: Levenshtein(a, b) ≥ |len(a) − len(b)|, so a pair within
     ``max_dist`` can only differ by at most ``max_dist`` in length.
-    With ``band ≥ max_dist``, strings bucketed by ``len div band``
-    can only pair inside the same band or adjacent bands — each left
-    row probes exactly 2 buckets (its own + the next), a standard
-    equi-join after a 2-element explode, never a cross join. Within
-    a block the exact DP distance runs JVM-side (``F.levenshtein``
-    with the threshold argument, which early-exits the DP at
-    ``max_dist + 1``). Dedup to distinct strings FIRST — dominance
-    only depends on the value, and the distinct shrinks the join
-    quadratically for catalogs full of repeated names.
+    Each string is a point on its length and also supplies the range
+    ``[len, len + max_dist]``; :func:`operators.asof.range_join` with
+    width ``max_dist`` pairs every string with each string at most
+    ``max_dist`` longer — each range covers 2 length bins, a standard
+    equi-join after a 2-element explode, never a cross join. Within a
+    block the exact DP distance runs JVM-side (``F.levenshtein`` with
+    the threshold argument, which early-exits the DP at ``max_dist +
+    1``). Dedup to distinct strings FIRST — dominance only depends on
+    the value, and the distinct shrinks the join quadratically for
+    catalogs full of repeated names.
 
     Output: (text_a, text_b, dist), text_a < text_b, 1 ≤ dist ≤
-    ``max_dist``. Scale: cost = Σ over blocks of |block|·|adjacent|;
-    block sizes are length-histogram-bounded. For pathological
+    ``max_dist``. Scale: cost = Σ over length bins of |bin|·|adjacent
+    bin|; bin sizes are length-histogram-bounded. For pathological
     same-length corpora, compose with a first-char or q-gram-count
     second blocking key.
     """
     if max_dist < 1:
         raise ValueError(f"max_dist must be >= 1, got {max_dist}")
-    if band < max_dist:
-        raise ValueError(
-            f"band ({band}) must be >= max_dist ({max_dist}) for the "
-            "adjacent-band probe to be complete"
-        )
     vals = df.select(F.col(text_col).alias("_s")).where(
         F.col("_s").isNotNull()
     ).distinct()
-    blk = F.floor(F.length("_s") / F.lit(band)).cast("long")
-    # Probe side explodes to (own band, next band); index side sits in
-    # its own band. A same-band pair meets twice (both orientations) —
-    # keep the l < r one; a cross-band pair meets exactly ONCE, with
-    # the shorter string as probe — keep it regardless of string
-    # order and canonicalize via least/greatest, because filtering
-    # cross-band meets on l < r would silently drop every pair whose
-    # lexical order opposes its length order.
-    left = vals.select(
-        F.col("_s").alias("_l"),
-        blk.alias("_oblk"),
-        F.explode(F.array(blk, blk + 1)).alias("_blk"),
+    n = F.length("_s").cast("long")
+    pairs = range_join(
+        vals.select(F.col("_s").alias("_r"), n.alias("_rn")),
+        vals.select(
+            F.col("_s").alias("_l"), n.alias("_lo"), (n + max_dist).alias("_hi")
+        ),
+        [],
+        [("_rn", "_lo", "_hi", max_dist)],
     )
-    right = vals.select(F.col("_s").alias("_r"), blk.alias("_blk"))
+    # A same-length pair meets twice (both orientations) — keep the
+    # l < r one; a pair of different lengths meets exactly ONCE, with
+    # the shorter string as the range — keep it regardless of string
+    # order and canonicalize via least/greatest, because filtering
+    # those meets on l < r would silently drop every pair whose
+    # lexical order opposes its length order.
     keep = (F.col("_l") != F.col("_r")) & (
-        (F.col("_oblk") != F.col("_blk")) | (F.col("_l") < F.col("_r"))
+        (F.col("_rn") > F.col("_lo")) | (F.col("_l") < F.col("_r"))
     )
     pair_a = F.least(F.col("_l"), F.col("_r"))
     pair_b = F.greatest(F.col("_l"), F.col("_r"))
@@ -1091,8 +1088,7 @@ def levenshtein_blocked_pairs(
     # range yield an empty array — row-identical to the old filter.
     dist = F.levenshtein(F.col("text_a"), F.col("text_b"), max_dist)
     return (
-        left.join(right, "_blk")
-        .where(keep)
+        pairs.where(keep)
         .select(pair_a.alias("text_a"), pair_b.alias("text_b"))
         .select(
             "text_a",

@@ -1,99 +1,73 @@
 """Grid-cell spatial joins — distance predicates without Cartesian
 products (100 TB mandate; the LSH discipline applied to geometry).
 
-A distance join (``all pairs within radius r``) is the spatial twin
-of near-dup detection: the naive plan is a quadratic cross join, the
-scale plan is *bucketed candidate generation*. Points are snapped to
-a square grid of side ``cell >= r``; any two points within ``r`` of
-each other must then lie in the same or in 8-adjacent cells, so the
-candidate set is exactly the equi-join of each point's HOME cell
-against its neighbours' 3x3 cell neighbourhood:
+A distance join (``all pairs within radius r``) is a 2-D range join:
+a point within ``r`` of another lies in that point's box
+``[x - r, x + r] x [y - r, y + r]``. Both joins here run
+:func:`operators.asof.range_join` over that box with bin width ``r``
+on each axis, so one side keeps its home grid cell and the other side
+is replicated to the 3x3 cells its box covers. Each candidate pair
+meets once, so no post-join dedup is needed, and the exact predicate
+``dx^2 + dy^2 <= r^2`` then filters candidates in integer arithmetic
+— no floating point anywhere, so the same rows survive on every
+engine.
 
-- one side keeps its home cell ``(cx, cy)``;
-- the other side explodes into the 9 cells of its neighbourhood;
-- a plain hash equi-join on the cell id yields every candidate pair
-  EXACTLY ONCE (the 9 exploded cells are distinct, and exactly one
-  of them equals the partner's home cell when the cells are
-  adjacent), so no post-join dedup is needed;
-- the exact predicate ``dx^2 + dy^2 <= r^2`` filters candidates in
-  integer arithmetic — no floating point anywhere, so the same rows
-  survive on every engine.
+Scale shape: both sides hash-partition on the cell — a corpus-sized
+distance self-join is one shuffle, with per-cell work bounded by
+local point density, never O(n^2) in the corpus. The join is pinned
+to ``shuffle_hash`` for self-joins (the build side grows with the
+corpus — the dup_ngram lesson from SCALING.md: Spark's static size
+estimate can promote a corpus-sized build to BroadcastHash, which
+serially materializes it on the driver at scale). Dense cells are the
+skew case and follow operators/skew.py's guidance.
 
-Scale shape: both sides hash-partition on the cell id — a corpus-
-sized distance self-join is one shuffle, with per-cell work bounded
-by local point density, never O(n^2) in the corpus. The join is
-pinned to ``shuffle_hash`` for self-joins (the build side grows with
-the corpus — the dup_ngram lesson from SCALING.md: Spark's static
-size estimate can promote a corpus-sized build to BroadcastHash,
-which serially materializes it on the driver at scale). Dense cells
-are the skew case and follow operators/skew.py's guidance.
-
-Coordinates are int64 (e.g. milli-degrees or metres). ``cell`` must
-be >= the query radius; larger cells trade candidate count for fewer
-groups. Coordinates must be non-negative (integer ``div`` is used
-for cell snapping; shift negative frames before calling).
+Coordinates are int64 (e.g. milli-degrees or metres) of either sign.
+Radius 0 finds coincident points (bin width 1); a negative radius is
+refused when the query is built.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Offsets of the 3x3 cell neighbourhood, exploded on the probe side.
-_NEIGHBOURHOOD = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+from dbm_nca_ph_etl_spark.operators.asof import range_join
 
 
-def cell_id(x: Column, y: Column, cell: int) -> Column:
-    """Pack the grid cell of ``(x, y)`` into one int64.
-
-    ``(x div cell) * 2^31 + (y div cell)``: collision-free while
-    ``y div cell < 2^31`` — 2.1e9 cells per axis, beyond any earthly
-    frame at metre resolution. ``x - pmod(x, cell)`` makes the
-    numerator an exact multiple of ``cell``, so the double division
-    is exact for coordinates < 2^53 (int64 milli-degree / metre
-    frames sit far below that). A pack collision (possible only at
-    frame edges where a neighbour offset goes to cell -1) merges two
-    unrelated cells into one join group — it can only ADD candidate
-    pairs, never drop one, and the exact ``d2`` predicate rejects
-    them, so correctness never depends on the pack being injective.
-    """
-    qx = ((x - F.pmod(x, F.lit(cell))) / F.lit(cell)).cast("bigint")
-    qy = ((y - F.pmod(y, F.lit(cell))) / F.lit(cell)).cast("bigint")
-    return qx * F.lit(1 << 31) + qy
-
-
-def _with_home_cell(df: DataFrame, x: str, y: str, cell: int) -> DataFrame:
-    return df.withColumn(
-        "_cell", cell_id(F.col(x), F.col(y), cell).cast("bigint")
+def _side(
+    df: DataFrame, key: str, x: str, y: str, s: str, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Key and coordinates renamed ``_k{s}, _x{s}, _y{s}``, plus each
+    ``carry`` column as ``_c_{c}_{s}``."""
+    return df.select(
+        F.col(key).alias(f"_k{s}"),
+        F.col(x).alias(f"_x{s}"),
+        F.col(y).alias(f"_y{s}"),
+        *[F.col(c).alias(f"_c_{c}_{s}") for c in carry],
     )
 
 
-def _with_neighbour_cells(df: DataFrame, x: str, y: str, cell: int) -> DataFrame:
-    """Explode each point into the cell ids of its 3x3 neighbourhood
-    (constant 9x amplification of the probe side only).
-
-    Built as ONE parsed SQL expression instead of ~130 Column-API
-    calls: every Column operator is a py4j round trip, and the 9
-    cell-id trees cost ~0.5 s of DRIVER time per query construction
-    (measured r11) — pure plan-building tax, paid before any task
-    runs, at any scale. The parsed tree is operator-for-operator the
-    tree the Column form built (same pmod/divide/cast/literal
-    coercions), so the analyzed plan — and every emitted value — is
-    unchanged."""
-
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
-    def _cid(xs: str, ys: str) -> str:
-        qx = f"CAST(({xs} - pmod({xs}, {cell})) / {cell} AS BIGINT)"
-        qy = f"CAST(({ys} - pmod({ys}, {cell})) / {cell} AS BIGINT)"
-        return f"{qx} * {1 << 31} + {qy}"
-
-    x_q, y_q = quote_ident(x), quote_ident(y)
-    ids = ", ".join(
-        _cid(f"({x_q} + {dx * cell})", f"({y_q} + {dy * cell})")
-        for dx, dy in _NEIGHBOURHOOD
+def _within(a: DataFrame, b: DataFrame, radius: int) -> DataFrame:
+    """Every (``a``, ``b``) pair of :func:`_side` frames within
+    ``radius``, with its exact squared distance ``d2``: ``a`` points
+    range-joined against each ``b`` point's radius box."""
+    if radius < 0:
+        raise ValueError(f"radius must be >= 0, got {radius}")
+    box = b.select(
+        "*",
+        *[
+            (F.col(f"_{v}b") + d).alias(f"_{v}{n}")
+            for v in "xy"
+            for n, d in (("lo", -radius), ("hi", radius))
+        ],
     )
-    return df.withColumn("_cell", F.expr(f"explode(array({ids}))"))
+    w = max(radius, 1)
+    d2 = F.expr("(_xa - _xb) * (_xa - _xb) + (_ya - _yb) * (_ya - _yb)")
+    return (
+        range_join(a, box, [], [("_xa", "_xlo", "_xhi", w), ("_ya", "_ylo", "_yhi", w)])
+        .where(d2 <= F.lit(radius * radius))
+        .withColumn("d2", d2.cast("bigint"))
+    )
 
 
 def self_pairs_within(
@@ -102,7 +76,6 @@ def self_pairs_within(
     x: str = "x",
     y: str = "y",
     radius: int = 1,
-    cell: int | None = None,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Every unordered pair of distinct points within ``radius``:
@@ -111,49 +84,21 @@ def self_pairs_within(
     column (attributes ride through the join instead of paying a
     corpus-sized re-join on the output).
 
-    One shuffle on the cell id; candidates are in-neighbourhood
-    pairs only. ``cell`` defaults to ``radius`` (the tightest grid
-    that keeps the 3x3 neighbourhood sufficient).
+    One shuffle on the grid cell; candidates are in-neighbourhood
+    pairs only.
     """
-    cell = cell or radius
-    if cell < radius:
-        raise ValueError(f"cell {cell} < radius {radius}: pairs would be missed")
-    a = _with_home_cell(
-        pts.select(
-            F.col(key).alias("_ka"),
-            F.col(x).alias("_xa"),
-            F.col(y).alias("_ya"),
-            *[F.col(c).alias(f"_c_{c}_a") for c in carry],
-        ),
-        "_xa",
-        "_ya",
-        cell,
-    )
-    b = _with_neighbour_cells(
-        pts.select(
-            F.col(key).alias("_kb"),
-            F.col(x).alias("_xb"),
-            F.col(y).alias("_yb"),
-            *[F.col(c).alias(f"_c_{c}_b") for c in carry],
-        ),
-        "_xb",
-        "_yb",
-        cell,
-    )
-    d2 = (F.col("_xa") - F.col("_xb")) * (F.col("_xa") - F.col("_xb")) + (
-        F.col("_ya") - F.col("_yb")
-    ) * (F.col("_ya") - F.col("_yb"))
+    a = _side(pts, key, x, y, "a", carry)
+    b = _side(pts, key, x, y, "b", carry)
+    # shuffle_hash: both sides are corpus-sized — never let a static
+    # size estimate promote one to a driver-built broadcast
+    # (SCALING.md dup_ngram finding).
     return (
-        # shuffle_hash: both sides are corpus-sized — never let a
-        # static size estimate promote one to a driver-built
-        # broadcast (SCALING.md dup_ngram finding).
-        a.hint("shuffle_hash")
-        .join(b, "_cell")
-        .where((F.col("_ka") < F.col("_kb")) & (d2 <= F.lit(radius * radius)))
+        _within(a.hint("shuffle_hash"), b, radius)
+        .where(F.col("_ka") < F.col("_kb"))
         .select(
             F.col("_ka").alias(f"{key}_a"),
             F.col("_kb").alias(f"{key}_b"),
-            d2.cast("bigint").alias("d2"),
+            "d2",
             *[
                 F.col(f"_c_{c}_{s}").alias(f"{c}_{s}")
                 for c in carry
@@ -171,38 +116,16 @@ def join_within(
     x: str = "x",
     y: str = "y",
     radius: int = 1,
-    cell: int | None = None,
     broadcast_probes: bool = False,
 ) -> DataFrame:
     """All (probe, target) pairs within ``radius``: columns
-    ``probe_key, target_key, d2``. The probe side pays the 9x
-    neighbourhood explosion; set ``broadcast_probes`` when it is a
+    ``probe_key, target_key, d2``. The probe side is replicated to the
+    9 cells of its radius box; set ``broadcast_probes`` when it is a
     bounded query set (a k-NN request batch), which turns the whole
     join into a map-only pass over the target corpus.
     """
-    cell = cell or radius
-    if cell < radius:
-        raise ValueError(f"cell {cell} < radius {radius}: pairs would be missed")
-    p = _with_neighbour_cells(
-        probes.select(
-            F.col(probe_key).alias("_pk"),
-            F.col(x).alias("_px"),
-            F.col(y).alias("_py"),
-        ),
-        "_px",
-        "_py",
-        cell,
-    )
-    t = _with_home_cell(
-        targets.select(
-            F.col(target_key).alias("_tk"),
-            F.col(x).alias("_tx"),
-            F.col(y).alias("_ty"),
-        ),
-        "_tx",
-        "_ty",
-        cell,
-    )
+    t = _side(targets, target_key, x, y, "a")
+    p = _side(probes, probe_key, x, y, "b")
     if broadcast_probes:
         p = F.broadcast(p)
     else:
@@ -210,15 +133,6 @@ def join_within(
         # static-size mis-estimate cannot promote either to a
         # driver-built broadcast (SCALING.md dup_ngram finding)
         t = t.hint("shuffle_hash")
-    d2 = (F.col("_px") - F.col("_tx")) * (F.col("_px") - F.col("_tx")) + (
-        F.col("_py") - F.col("_ty")
-    ) * (F.col("_py") - F.col("_ty"))
-    return (
-        t.join(p, "_cell")
-        .where(d2 <= F.lit(radius * radius))
-        .select(
-            F.col("_pk").alias(probe_key),
-            F.col("_tk").alias(target_key),
-            d2.cast("bigint").alias("d2"),
-        )
+    return _within(t, p, radius).select(
+        F.col("_kb").alias(probe_key), F.col("_ka").alias(target_key), "d2"
     )

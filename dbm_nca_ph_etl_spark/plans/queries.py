@@ -1817,8 +1817,10 @@ def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e.error_id, e.user_id
     """,
     doc="Interval join: clicks within 6 h after each error, "
-    "per user (operators/asof.py range_join_buckets — bucketed "
-    "equi-join prefilter, never |events|x|intervals| per key).",
+    "per user (operators/asof.range_join — clicks binned at 6 h, each "
+    "error window replicated to the 2 bins it covers, an equi-join "
+    "on (user, bin) before the exact BETWEEN, never "
+    "|events|x|intervals| per key).",
     tags=("join", "events"),
 )
 def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1830,14 +1832,8 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts_us") + F.lit(21_600_000_000)).alias("end_us"),
     )
     clk = ev.where(F.col("event_type") == "click").select("user_id", "ts_us", "value")
-    j = A.range_join_buckets(
-        clk,
-        err,
-        on=["user_id"],
-        ts_col="ts_us",
-        start_col="start_us",
-        end_col="end_us",
-        bucket_width=21_600_000_000,
+    j = A.range_join(
+        clk, err, ["user_id"], [("ts_us", "start_us", "end_us", 21_600_000_000)]
     )
     return j.groupBy("error_id", "user_id").agg(
         F.count(F.lit(1)).alias("n_clicks"),
@@ -12165,24 +12161,23 @@ def merkle_orders_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE levenshtein(a.s, b.s) BETWEEN 1 AND 4
     """,
     doc="Fuzzy string near-dup pairs over part names: edit distance "
-    "≤ 4 via the length-band-blocked Levenshtein self-join "
+    "≤ 4 via the length-blocked Levenshtein self-join "
     "(operators/dedup.levenshtein_blocked_pairs) — the typo/OCR/"
     "variant detector set-similarity joins miss because a 1-char "
     "edit inside a token changes the whole shingle. Blocking is "
-    "lossless: lev ≥ |len diff|, so ≤4-distance pairs live in the "
-    "same or adjacent len-div-4 band, and each string probes "
-    "exactly 2 buckets (an equi-join after a 2-element explode, "
-    "never a cross join); the DP itself runs JVM-side with the "
+    "lossless: lev ≥ |len diff|, so the binned range join "
+    "(operators/asof.range_join) pairs each string with every string "
+    "0-4 characters longer — each range [len, len + 4] covers 2 "
+    "length bins of width 4, an equi-join after a 2-element explode, "
+    "never a cross join; the DP itself runs JVM-side with the "
     "threshold argument early-exiting at 5. Distinct-first shrinks "
     "the join quadratically for catalogs of repeated names. The "
-    "oracle's length predicate admits a superset of the bands' "
-    "candidates; the distance filter equalizes both (band-missed "
-    "pairs have len diff ≥ 5 ⇒ dist ≥ 5).",
+    "oracle states the same length predicate as a theta join.",
     tags=("dedup", "text", "bench"),
 )
 def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
-    pairs = D.levenshtein_blocked_pairs(p, "p_name", max_dist=4, band=4)
+    pairs = D.levenshtein_blocked_pairs(p, "p_name", max_dist=4)
     return pairs.select("text_a", "text_b", F.col("dist").cast("int").alias("dist"))
 
 
@@ -12850,14 +12845,13 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(how many purchases had 0, 1, 2... supporting clicks — the "
     "multi-touch companion to attribution_last_touch). The oracle "
     "states it as a range join (DuckDB's IEJoin eats it); the Spark "
-    "plan uses the BUCKETED form every range join at scale reduces "
-    "to: an hour-long window spans at most 2 hour buckets, so each "
-    "purchase explodes to its 2 candidate (user, hour) keys and the "
-    "join is pure equi-join on (user_id, hour_bucket) — shuffle-"
-    "hashable, prunable, no range-predicate nested loop anywhere. "
-    "A click matches exactly one candidate bucket of a given "
-    "purchase (its own), so no dedup step is needed; unmatched "
-    "purchases rejoin with count 0 via the left spine.",
+    "plan is the binned range join (operators/asof.range_join): "
+    "clicks binned by hour, each purchase's window [t - 1 h, t] "
+    "replicated to the 2 hour bins it covers, a pure equi-join on "
+    "(user_id, bin) — shuffle-hashable, prunable, no range-predicate "
+    "nested loop anywhere — then the exact window filter. A click "
+    "has one bin, so no dedup step is needed; unmatched purchases "
+    "rejoin with count 0 via the left spine.",
     tags=("relational", "events", "bench"),
 )
 def purchase_window_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12869,25 +12863,14 @@ def purchase_window_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cents(F.col("value")).alias("cents"),
     )
     clk = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts_us").alias("ct"),
-        F.expr(f"ts_us div {_US_PER_HOUR}").alias("hb"),
+        "user_id", F.col("ts_us").alias("ct")
     )
-    cand = pur.withColumn(
-        "hb",
-        F.explode(
-            F.array(
-                F.expr(f"t div {_US_PER_HOUR} - 1"),
-                F.expr(f"t div {_US_PER_HOUR}"),
-            )
-        ),
+    windows = pur.select(
+        "event_id", "user_id", "t", (F.col("t") - _US_PER_HOUR).alias("t0")
     )
     hits = (
-        cand.join(clk, ["user_id", "hb"])
-        .where(
-            (F.col("ct") < F.col("t"))
-            & (F.col("ct") >= F.col("t") - _US_PER_HOUR)
-        )
+        A.range_join(clk, windows, ["user_id"], [("ct", "t0", "t", _US_PER_HOUR)])
+        .where(F.col("ct") < F.col("t"))
         .groupBy("event_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_clicks"))
     )
@@ -14398,14 +14381,15 @@ _SQL_COORD = (
     doc="Spatial distance self-join (operators/spatial."
     "self_pairs_within): all customer pairs within radius 500 on an "
     "md5-scattered 100k x 100k integer frame, rolled up by market-"
-    "segment pair. The Spark plan is the grid-cell candidate join — "
-    "home cell vs exploded 3x3 neighbourhood, each candidate pair "
-    "generated EXACTLY once, exact int64 d2 filter, shuffle_hash-"
-    "pinned (both sides corpus-sized) — while the DuckDB oracle runs "
-    "the naive quadratic join: the hash gate proves the bucketed "
-    "plan enumerates the identical pair set. One shuffle on the "
-    "cell id; per-cell work bounded by local density, never O(n^2) "
-    "in the corpus; dense cells are the skew.py case.",
+    "segment pair. The Spark plan is the 2-D binned range join "
+    "(operators/asof.range_join) — home cell vs each point's radius "
+    "box replicated to its 3x3 cells, each candidate pair generated "
+    "EXACTLY once, exact int64 d2 filter, shuffle_hash-pinned (both "
+    "sides corpus-sized) — while the DuckDB oracle runs the naive "
+    "quadratic join: the hash gate proves the binned plan enumerates "
+    "the identical pair set. One shuffle on the (x, y) cell; per-cell "
+    "work bounded by local density, never O(n^2) in the corpus; "
+    "dense cells are the skew.py case.",
     tags=("spatial", "join", "bench"),
 )
 def spatial_neighbor_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14471,13 +14455,14 @@ def spatial_neighbor_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Bounded-radius nearest-neighbour join (operators/spatial."
     "join_within): each supplier's closest customer within radius "
     "2000 on the shared md5-scattered frame, ties broken by "
-    "customer key. The probe side (suppliers) pays the 9x cell "
-    "explosion and is BROADCAST — the whole k-NN pass is map-only "
-    "over the customer corpus, zero shuffle before the per-probe "
-    "top-1 (a probe-count-sized window). Suppliers with no customer "
-    "in radius drop out (89/100 match at sf0.01), exactly like the "
-    "oracle's inequality join. The naive-quadratic DuckDB twin "
-    "hash-checks the candidate discipline.",
+    "customer key, via the 2-D binned range join (operators/asof."
+    "range_join). The probe side (suppliers) is replicated to the 9 "
+    "cells of its radius box and is BROADCAST — the whole k-NN pass "
+    "is map-only over the customer corpus, zero shuffle before the "
+    "per-probe top-1 (a probe-count-sized window). Suppliers with no "
+    "customer in radius drop out (89/100 match at sf0.01), exactly "
+    "like the oracle's inequality join. The naive-quadratic DuckDB "
+    "twin hash-checks the candidate discipline.",
     tags=("spatial", "join", "topk", "bench"),
 )
 def spatial_nearest_customer(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
-from dbm_nca_ph_etl_spark.operators.asof import asof_join, range_join_buckets
+from dbm_nca_ph_etl_spark.operators.asof import asof_join, range_join
 
 LEFT = [
     # (id, key, ts)
@@ -98,20 +101,71 @@ def test_asof_preserves_left_rows_and_columns(spark):
     assert df.columns == ["id", "key", "ts", "asof_ts", "asof_rid", "asof_val"]
 
 
+def _pairs(df, a="id", b="rid"):
+    """Sorted (a, b) pairs of a join result; fails on a duplicate."""
+    got = sorted((r[a], r[b]) for r in df.collect())
+    assert len(got) == len(set(got)), "duplicate pairs"
+    return got
+
+
 def test_range_join_matches_brute_force(spark):
     l, r = _frames(spark)
     iv = r.select(
         "rid", "key", F.col("ts").alias("start"), (F.col("ts") + 100).alias("end")
     )
-    fast = range_join_buckets(
-        l, iv, on=["key"], ts_col="ts", start_col="start", end_col="end",
-        bucket_width=100,
-    )
+    fast = range_join(l, iv, ["key"], [("ts", "start", "end", 100)])
     brute = l.join(iv, ["key"]).where(
         F.col("ts").between(F.col("start"), F.col("end"))
     )
-    key = lambda rows: sorted((r.id, r.rid) for r in rows)  # noqa: E731
-    fast_pairs, brute_pairs = key(fast.collect()), key(brute.collect())
-    assert fast_pairs == brute_pairs
-    assert len(fast_pairs) == len(set(fast_pairs)), "no duplicate pairs"
-    assert fast_pairs  # non-trivial fixture
+    assert _pairs(fast) == _pairs(brute)
+    assert _pairs(fast)  # non-trivial fixture
+
+
+@pytest.mark.parametrize(
+    "on, dims",
+    [
+        (["k"], [("v", "lo", "hi", 40)]),
+        ([], [("v", "lo", "hi", 30)]),
+        ([], [("x", "x0", "x1", 25), ("y", "y0", "y1", 60)]),
+    ],
+    ids=["1d-on-keys", "1d-no-keys", "2d"],
+)
+def test_range_join_matches_nested_loop(spark, on, dims):
+    # signed coordinates, ranges up to 3x the width (up to 5 bins)
+    rng = random.Random(len(on) + 10 * len(dims))
+
+    def row(name, i, cols):
+        return {name: i, **({"k": i % 3} if on else {}), **cols()}
+
+    points = [
+        row("id", i, lambda: {c: rng.randint(-300, 300) for c, *_ in dims})
+        for i in range(300)
+    ]
+
+    def bounds():
+        out = {}
+        for _, lo, hi, w in dims:
+            out[lo] = rng.randint(-300, 300)
+            out[hi] = out[lo] + rng.randint(0, 3 * w)
+        return out
+
+    ranges = [row("rid", i, bounds) for i in range(80)]
+    want = sorted(
+        (p["id"], r["rid"])
+        for p in points
+        for r in ranges
+        if all(p[k] == r[k] for k in on)
+        and all(r[lo] <= p[c] <= r[hi] for c, lo, hi, _ in dims)
+    )
+    assert want, "non-trivial fixture"
+    got = range_join(
+        spark.createDataFrame(points), spark.createDataFrame(ranges), on, dims
+    )
+    assert _pairs(got) == want
+
+
+def test_range_join_refuses_width_below_one(spark):
+    l, r = _frames(spark)
+    iv = r.select("rid", "key", F.col("ts").alias("lo"), F.col("ts").alias("hi"))
+    with pytest.raises(ValueError, match="width"):
+        range_join(l, iv, ["key"], [("ts", "lo", "hi", 0)])

@@ -77,6 +77,29 @@ def test_no_row_at_a_time_python_udfs(plans):
     assert not offenders, f"row-at-a-time Python UDFs: {sorted(offenders)}"
 
 
+#: Catalog queries built on operators.asof.range_join. A binned range
+#: join is one hash equi-join; a nested loop or cartesian product in
+#: one of these plans means the bins were lost. (Many other catalog
+#: queries plan nested loops on purpose, so this is not catalog-wide.)
+RANGE_JOIN_QUERIES = (
+    "range_join_events",
+    "purchase_window_click_join",
+    "fuzzy_name_pairs",
+    "spatial_neighbor_segments",
+    "spatial_nearest_customer",
+)
+
+
+def test_range_joins_stay_binned(plans):
+    offenders = {
+        name
+        for name in RANGE_JOIN_QUERIES
+        if "BroadcastNestedLoopJoin" in plans[name]
+        or "CartesianProduct" in plans[name]
+    }
+    assert not offenders, f"range joins planned as nested loops: {sorted(offenders)}"
+
+
 def test_allowed_cartesian_list_is_tight(plans):
     """The allowlist must not rot: every allowed name still exists
     and still actually plans a cartesian product (otherwise shrink

@@ -65,22 +65,44 @@ def test_self_pairs_exactly_once_no_dedup_needed(spark, pts_df):
     assert all(r.k_a < r.k_b for r in rows)
 
 
-def test_wider_cell_same_answer(spark, pts_df):
-    # cell > radius trades more candidates for fewer groups; the
-    # answer must not move
-    pts = _mk_points(300)
+def test_radius_zero_finds_coincident_points(spark):
+    # radius 0 bins at width 1; a width-0 grid divided by zero mid-job
+    pts = [(k, k % 4, (k // 4) % 3) for k in range(30)]
+    df = spark.createDataFrame([Row(k=k, x=x, y=y) for k, x, y in pts])
+    want = _brute_pairs(pts, 0)
+    assert want and all(d2 == 0 for _, _, d2 in want)
     got = {
         (r.k_a, r.k_b, r.d2)
-        for r in SP.self_pairs_within(pts_df, "k", radius=50, cell=170).collect()
+        for r in SP.self_pairs_within(df, "k", radius=0).collect()
     }
-    assert got == _brute_pairs(pts, 50)
+    assert got == want
+    got = {
+        (r.pk, r.k, r.d2)
+        for r in SP.join_within(
+            df.withColumnRenamed("k", "pk"), df, "pk", "k", radius=0
+        ).collect()
+    }
+    assert got == {
+        (ka, kb, 0) for ka, *pa in pts for kb, *pb in pts if pa == pb
+    }
 
 
-def test_cell_smaller_than_radius_refused(spark, pts_df):
-    with pytest.raises(ValueError, match="pairs would be missed"):
-        SP.self_pairs_within(pts_df, "k", radius=100, cell=60)
-    with pytest.raises(ValueError, match="pairs would be missed"):
-        SP.join_within(pts_df, pts_df, "k", "k", radius=100, cell=60)
+def test_negative_radius_refused(spark, pts_df):
+    with pytest.raises(ValueError, match="radius"):
+        SP.self_pairs_within(pts_df, "k", radius=-1)
+    with pytest.raises(ValueError, match="radius"):
+        SP.join_within(pts_df, pts_df, "k", "k", radius=-1)
+
+
+def test_negative_coordinates_match_brute_force(spark):
+    pts = [(k, x - 500, y - 500) for k, x, y in _mk_points(300)]
+    df = spark.createDataFrame([Row(k=k, x=x, y=y) for k, x, y in pts])
+    got = [
+        (r.k_a, r.k_b, r.d2)
+        for r in SP.self_pairs_within(df, "k", radius=50).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == _brute_pairs(pts, 50)
 
 
 def test_carry_columns_ride_through(spark, pts_df):

@@ -276,12 +276,13 @@ SHOWCASE = {
     ),
     "purchase_window_click_join": (
         "A range join ('clicks in the hour before each purchase') "
-        "planned as pure equi-joins: the hour-wide window spans ≤2 "
-        "hour buckets, so purchases explode to 2 candidate (user, "
-        "bucket) keys and the plan shows a ShuffledHashJoin/SMJ on "
-        "(user_id, hb) with the time predicate as a post-join filter "
-        "— no BroadcastNestedLoopJoin, no range-condition nested "
-        "loop anywhere. The left spine re-join on event_id fills "
+        "planned as pure equi-joins by operators/asof.range_join: "
+        "clicks get one hour bin, each purchase's window [t - 1 h, t] "
+        "explodes to the 2 hour bins it covers, and the plan shows a "
+        "hash join or SMJ on (user_id, _rj0) with the time predicate "
+        "as a post-join filter — no BroadcastNestedLoopJoin, no "
+        "range-condition nested loop anywhere. The left spine re-join "
+        "on event_id fills "
         "zero-click purchases. This is the shape EVERY point-in-"
         "window join at 100 TB reduces to; the oracle states the "
         "same query as a literal range join for DuckDB's IEJoin."
