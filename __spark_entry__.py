@@ -52,6 +52,8 @@ TOUCHED_THIS_ROUND = {
     "semantic_dedup_keep",
     # rewritten in r12; no CORRECTNESS row since
     "ann_lsh_topk",
+    # greedy loop moved from a k-step unrolled plan into one grouped
+    # aggregate expression
     "mmr_diverse_topk",
     # re-expressed on operators.asof.range_join (fuzzy_name_pairs was
     # also rewritten in r12)

@@ -1544,100 +1544,70 @@ def mmr_rerank(
     set trades pure relevance for coverage (near-duplicate passages
     stop crowding out distinct ones).
 
-    Distributed shape: the SEQUENTIAL part of MMR is over k
-    (literal, small); everything per-step is relational across all
-    queries at once — candidate top-N (:func:`cosine_topk` here;
-    swap in the LSH/IVF/PQ probes at scale), one N²-per-query
-    pairwise-sim table computed ONCE, then k-1 chained
-    (anti-join → max-sim aggregate → window argmax) steps build a
-    static k-deep plan. Driver never sees a row.
+    Distributed shape: candidate top-``n_cand`` per query
+    (:func:`cosine_topk` here; swap in the LSH/IVF/PQ probes at
+    scale), then ONE grouped pass — each query's candidates (id,
+    relevance, vector, norm) are collected into one row and a single
+    ``aggregate`` over ``1..min(k, n_cand)`` runs the greedy loop on
+    that row. The plan is the same for every k; the cost per query is
+    O(k²·n_cand) sim folds of ``dim`` terms each (every step
+    re-scores each remaining candidate against every pick) on at most
+    ``n_cand`` rows. Driver never sees a row.
 
     All scores are integer micro-units (round6 × 10⁶) and λ is the
-    rational ``lam_num/lam_den``, so selection compares integers —
-    deterministic, and the DuckDB oracle replays it exactly.
-    Output: ``(query_id, neighbor_id, pick)`` with pick = 1..k in
-    selection order.
+    rational ``lam_num/lam_den`` (``0 ≤ lam_num ≤ lam_den``,
+    ``lam_den > 0``), so selection compares integers — deterministic,
+    ties go to the lowest id, and the DuckDB oracle replays it
+    exactly. Output: ``(query_id, neighbor_id, pick)`` with pick =
+    1..k in selection order (fewer picks when a query has fewer than
+    k candidates).
     """
-    if not (0 < k <= 32):
-        raise ValueError(f"k must be in 1..32 (chained-plan depth), got {k}")
-    e6 = lambda c: F.round(c * 1_000_000).cast("long")  # noqa: E731
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    if not (lam_den > 0 and 0 <= lam_num <= lam_den):
+        raise ValueError(
+            "λ = lam_num/lam_den needs lam_den > 0 and "
+            f"0 <= lam_num <= lam_den, got {lam_num}/{lam_den}"
+        )
     cand = cosine_topk(corpus, queries, k=n_cand, id_col=id_col, vec_col=vec_col)
-    rel = cand.select(
-        "query_id", "neighbor_id", e6(F.col("cos_sim")).alias("rel_e6")
-    ).localCheckpoint(eager=True)
-    v = F.col(quote_ident(vec_col))
-    cv = rel.join(
-        corpus.select(
-            F.col(quote_ident(id_col)).alias("neighbor_id"),
-            v.alias("_v"),
-            l2_norm(v).alias("_n"),
-        ),
-        "neighbor_id",
-    ).select("query_id", "neighbor_id", "_v", "_n")
-    x, y = cv.alias("x"), cv.alias("y")
-    pair_sims = (
-        x.join(
-            y,
-            (F.col("x.query_id") == F.col("y.query_id"))
-            & (F.col("x.neighbor_id") != F.col("y.neighbor_id")),
-        )
-        .select(
-            F.col("x.query_id").alias("query_id"),
-            F.col("x.neighbor_id").alias("a"),
-            F.col("y.neighbor_id").alias("b"),
-            e6(
-                _paired_cosine(
-                    F.col("x._v"), F.col("y._v"), F.col("x._n"), F.col("y._n")
-                )
-            ).alias("sim_e6"),
-        )
-        .localCheckpoint(eager=True)
+    idc, vc = quote_ident(id_col), quote_ident(vec_col)
+    vecs = corpus.selectExpr(
+        f"{idc} AS neighbor_id", f"{vc} AS v", f"{_l2_sql(vc)} AS n"
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("rel_e6").desc(), F.col("neighbor_id").asc()
+    e6 = lambda s: f"CAST(round({s} * 1000000) AS BIGINT)"  # noqa: E731
+    # One greedy step over the collected candidates `_c`, with `sel`
+    # the ids picked so far: the argmax of (score, then lowest id) is
+    # the min of (-score, id).
+    max_sim = (
+        "array_max(transform(filter(_c, p -> array_contains(sel, p.id)), "
+        f"p -> {e6(_paired_cosine_sql('c.v', 'p.v', 'c.n', 'p.n'))}))"
     )
-    selected = (
-        rel.withColumn("_rn", F.row_number().over(w1))
-        .where(F.col("_rn") == 1)
-        .select("query_id", "neighbor_id", F.lit(1).alias("pick"))
+    score = (
+        f"IF(size(sel) = 0, c.rel, "
+        f"{lam_num} * c.rel - {lam_den - lam_num} * {max_sim})"
     )
-    for t in range(2, k + 1):
-        remaining = rel.join(
-            selected, ["query_id", "neighbor_id"], "left_anti"
+    argmax = (
+        "array_min(transform(filter(_c, c -> NOT array_contains(sel, c.id)), "
+        f"c -> named_struct('s', -({score}), 'id', c.id))).id"
+    )
+    id_type = cand.schema["neighbor_id"].dataType.simpleString()
+    picks = (
+        f"aggregate(sequence(1, least({k}, size(_c))), "
+        f"CAST(array() AS ARRAY<{id_type}>), "
+        f"(sel, i) -> concat(sel, array({argmax})))"
+    )
+    return (
+        cand.join(vecs, "neighbor_id")
+        .groupBy("query_id")
+        .agg(
+            F.expr(
+                f"collect_list(named_struct('id', neighbor_id, "
+                f"'rel', {e6('cos_sim')}, 'v', v, 'n', n))"
+            ).alias("_c")
         )
-        maxs = (
-            pair_sims.join(
-                selected.select(
-                    "query_id", F.col("neighbor_id").alias("b")
-                ),
-                ["query_id", "b"],
-            )
-            .groupBy("query_id", "a")
-            .agg(F.max("sim_e6").alias("_ms"))
-        )
-        scored = remaining.join(
-            maxs.select(
-                "query_id", F.col("a").alias("neighbor_id"), "_ms"
-            ),
-            ["query_id", "neighbor_id"],
-        ).select(
-            "query_id",
-            "neighbor_id",
-            (
-                F.lit(lam_num) * F.col("rel_e6")
-                - F.lit(lam_den - lam_num) * F.col("_ms")
-            ).alias("_mmr"),
-        )
-        wt = Window.partitionBy("query_id").orderBy(
-            F.col("_mmr").desc(), F.col("neighbor_id").asc()
-        )
-        pick_t = (
-            scored.withColumn("_rn", F.row_number().over(wt))
-            .where(F.col("_rn") == 1)
-            .select("query_id", "neighbor_id", F.lit(t).alias("pick"))
-        )
-        selected = selected.unionByName(pick_t)
-    return selected
+        .selectExpr("query_id", f"posexplode({picks}) AS (_pos, neighbor_id)")
+        .selectExpr("query_id", "neighbor_id", "_pos + 1 AS pick")
+    )
 
 
 def margin_topk(

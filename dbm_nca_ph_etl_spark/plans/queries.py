@@ -8335,15 +8335,14 @@ def video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "1998, λ=1/2): greedy top-5 from exact top-15 candidates where "
     "each pick maximizes rel − max-sim-to-already-picked — the "
     "standard RAG diversifier that stops near-duplicate passages "
-    "crowding a context window. The SEQUENTIAL part is over k (a "
-    "literal): per step everything is relational across all queries "
-    "at once (anti-join remaining → max-sim aggregate vs picked → "
-    "window argmax), one N²-per-query pairwise-sim table computed "
-    "once, k-deep static plan, zero driver rows. Integer micro-unit "
+    "crowding a context window. Each query's candidates are "
+    "collected into one row and a single aggregate expression runs "
+    "the k greedy steps on it, so the plan is the same for every k "
+    "(one grouped pass, zero driver rows). Integer micro-unit "
     "scores + id tiebreaks make selection exactly replayable — the "
     "oracle unrolls the same 5 steps in SQL. At scale the candidate "
-    "stage swaps to the LSH/IVF/PQ probes; MMR cost stays k·N² per "
-    "query regardless of corpus size.",
+    "stage swaps to the LSH/IVF/PQ probes; MMR cost stays "
+    "O(k²·N) sim folds per query regardless of corpus size.",
     tags=("similarity", "llm"),
 )
 def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -100,6 +100,21 @@ def test_range_joins_stay_binned(plans):
     assert not offenders, f"range joins planned as nested loops: {sorted(offenders)}"
 
 
+#: Plan-node budget: executed-plan lines per catalog query (as the
+#: ``plans`` fixture plans it; ``tools/profile_query.py`` reports the
+#: same count as ``plan_lines``). Measured when the budget was set:
+#: mmr_diverse_topk, whose greedy loop was then unrolled into the plan,
+#: had 1,877 lines; the next largest (embedding_near_dup_lsh) 125, and
+#: the catalog median 15.
+MAX_PLAN_LINES = 250
+
+
+def test_plans_within_line_budget(plans):
+    sizes = {name: len(plan.splitlines()) for name, plan in plans.items()}
+    offenders = {n: s for n, s in sizes.items() if s > MAX_PLAN_LINES}
+    assert not offenders, f"plans over {MAX_PLAN_LINES} lines: {offenders}"
+
+
 def test_allowed_cartesian_list_is_tight(plans):
     """The allowlist must not rot: every allowed name still exists
     and still actually plans a cartesian product (otherwise shrink

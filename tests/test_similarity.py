@@ -395,7 +395,119 @@ class TestMmrRerank:
         import pytest as _pt
 
         with _pt.raises(ValueError, match="k must be"):
-            mmr_rerank(emb, emb.where("vec_id < 2"), k=40)
+            mmr_rerank(emb, emb.where("vec_id < 2"), k=0)
+
+    @pytest.mark.parametrize("lam_num,lam_den", [(1, 0), (0, 0), (3, 2), (-1, 2)])
+    def test_lambda_guard(self, spark, sf_dir, lam_num, lam_den):
+        """λ outside [0, 1] (or a zero denominator) would flip or
+        zero the redundancy penalty — lam_den=0, lam_num=1 scores
+        rel + max_sim and picks the MOST redundant candidate."""
+        from dbm_nca_ph_etl_spark.operators.similarity import mmr_rerank
+
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        with pytest.raises(ValueError, match="lam_den"):
+            mmr_rerank(
+                emb, emb.where("vec_id < 2"), lam_num=lam_num, lam_den=lam_den
+            )
+
+    @pytest.mark.parametrize(
+        "k,n_cand,lam",
+        [(3, 6, (1, 2)), (6, 4, (1, 2)), (5, 8, (0, 1)), (4, 8, (2, 3))],
+        ids=["k3-n6-half", "k6-n4-half", "k5-n8-zero", "k4-n8-two-thirds"],
+    )
+    def test_matches_python_greedy(self, spark, k, n_cand, lam):
+        """Against a plain-Python greedy MMR with the operator's
+        integer micro-unit scores (HALF_UP rounding, as Spark's
+        ``round``) and lowest-id tie rule. Small integer coordinates
+        plus copied vectors make score ties common; the reference
+        counts the ties it broke by id, so the case provably covers
+        the tie rule."""
+        import random
+        from decimal import ROUND_HALF_UP, Decimal
+
+        from dbm_nca_ph_etl_spark.operators.similarity import mmr_rerank
+
+        def half_up(x, places):
+            q = Decimal(1).scaleb(-places)
+            return Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP)
+
+        def fold(a, b):  # left to right, as the operator's aggregate
+            acc = 0.0
+            for x, y in zip(a, b):
+                acc += x * y
+            return acc
+
+        def e6_cos(a, b):
+            cos = fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
+            return int(half_up(float(half_up(cos, 6)) * 1e6, 0))
+
+        rnd = random.Random(7)
+        vecs = {}
+        for i in range(16):
+            v = [0] * 4
+            while not any(v):
+                v = [rnd.randint(-3, 3) for _ in range(4)]
+            vecs[i] = [float(x) for x in v]
+        for j, src in enumerate([0, 0, 1, 3, 3, 5, 8]):  # duplicates
+            vecs[16 + j] = list(vecs[src])
+        lam_num, lam_den = lam
+
+        def greedy(qid):
+            rel = {
+                c: e6_cos(vecs[qid], v) for c, v in vecs.items() if c != qid
+            }
+            cands = sorted(rel, key=lambda c: (-rel[c], c))[:n_cand]
+            sel, ties = [], 0
+            while len(sel) < min(k, len(cands)):
+                def score(c):
+                    if not sel:
+                        return rel[c]
+                    ms = max(e6_cos(vecs[c], vecs[s]) for s in sel)
+                    return lam_num * rel[c] - (lam_den - lam_num) * ms
+                scores = {c: score(c) for c in cands if c not in sel}
+                best = max(scores.values())
+                top = [c for c, s in scores.items() if s == best]
+                ties += len(top) > 1
+                sel.append(min(top))
+            return sel, ties
+
+        df = spark.createDataFrame(
+            sorted(vecs.items()), "vec_id long, embedding array<double>"
+        )
+        qids = [0, 3, 9]
+        want, ties = {}, 0
+        for qid in qids:
+            sel, t = greedy(qid)
+            ties += t
+            want.update({(qid, p + 1): c for p, c in enumerate(sel)})
+        got = {
+            (r.query_id, r.pick): r.neighbor_id
+            for r in mmr_rerank(
+                df,
+                df.where(f"vec_id IN ({', '.join(map(str, qids))})"),
+                k=k,
+                n_cand=n_cand,
+                lam_num=lam_num,
+                lam_den=lam_den,
+            ).collect()
+        }
+        assert ties > 0
+        assert len(want) == len(qids) * min(k, n_cand)
+        assert got == want
+
+    def test_plan_size_independent_of_k(self, spark, sf_dir):
+        """The greedy loop runs inside one grouped expression, so a
+        deeper k adds no plan nodes."""
+        from dbm_nca_ph_etl_spark.operators.similarity import mmr_rerank
+
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        q = emb.where("vec_id < 4")
+
+        def plan_lines(k):
+            df = mmr_rerank(emb, q, k=k, n_cand=8)
+            return len(df._jdf.queryExecution().executedPlan().toString().splitlines())
+
+        assert plan_lines(2) == plan_lines(4)
 
     def test_picks_distinct_and_complete(self, spark, sf_dir):
         from dbm_nca_ph_etl_spark.operators.similarity import mmr_rerank

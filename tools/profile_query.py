@@ -18,6 +18,10 @@ the min over N runs of:
   over the timed runs. A nonzero ``timed`` means the runs paid Janino
   and JIT work again: plans that differ per run, or classes evicted
   from Spark's generated-code cache.
+- ``plan_lines``: line count of the executed plan as planned before
+  the action (``queryExecution().executedPlan().toString()``), the
+  measure ``tests/test_plan_lint.py`` budgets; taken on an extra,
+  untimed construction.
 
 Usage::
 
@@ -75,6 +79,8 @@ def main() -> None:
             return t1 - t0, t2 - t1
 
         sc.setJobDescription(f"profile:{name}")
+        plan = q.fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+        plan_lines = len(plan.toString().splitlines())
         k0 = compile_count()
         run()  # warmup (codegen, footers)
         k1 = compile_count()
@@ -95,6 +101,7 @@ def main() -> None:
                     "action": round(best[1], 3),
                     "total": round(best[0] + best[1], 3),
                     "jobs": jobs,
+                    "plan_lines": plan_lines,
                     "compiles": {"warmup": k1 - k0, "timed": compile_count() - k1},
                 }
             ),
