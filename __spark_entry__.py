@@ -62,6 +62,18 @@ TOUCHED_THIS_ROUND = {
     "purchase_window_click_join",
     "spatial_neighbor_segments",
     "spatial_nearest_customer",
+    # built on the similarity operators re-expressed on one shared
+    # vector side, probe and top-k tail (the others already listed)
+    "ann_rp_topk",
+    "ann_ivf_topk",
+    "ann_ivf_trained_topk",
+    "ann_int8_topk",
+    "hybrid_search_rrf",
+    "contrastive_negative_sample",
+    "knn_label_eval",
+    "margin_mined_pairs",
+    "retrieval_eval_int8",
+    "ann_filtered_topk",
 }
 
 

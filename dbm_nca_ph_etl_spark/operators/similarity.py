@@ -1,15 +1,33 @@
 """Similarity search over embedding columns (north-star extension).
 
-- :func:`cosine_topk` — brute-force exact top-k: broadcast the
-  (small) query set against the corpus, dot-product via array HOFs
-  (JVM-side), rank with a per-query window. The correctness baseline
-  and the right plan whenever |queries| is small: one broadcast, one
-  shuffle (the window's partitionBy query_id).
-- :func:`lsh_bucket_topk` — the scale path: random-hyperplane LSH
-  (sign-of-dot-product with deterministic seeded planes) buckets both
-  sides; candidates are only corpus vectors sharing a bucket, then
-  exact re-rank. Sub-linear candidate sets at 100 TB; recall tunable
-  by number of tables/planes.
+Every ANN top-k operator is the same three steps — its own candidate
+generator, its score expression, one shared tail:
+
+- **Vector side** (:func:`_side`): the id and vector columns read
+  through ``quote_ident`` plus the norm hoisted once per row; the
+  one place that quotes and norms. Roles ``q``/``c`` name the probe
+  sides ``(query_id, _qv, _qn)`` / ``(neighbor_id, _cv, _cn)``.
+- **Candidate generator**, per operator:
+
+  - every corpus row — :func:`cosine_topk` (the exact baseline),
+    :func:`int8_topk` (int8 codes), :func:`pq_topk` (PQ codes);
+  - the probed IVF cells, a hash join on the cell key —
+    :func:`ivf_topk`, :func:`ivfpq_topk`;
+  - a shared LSH bucket in any table (:func:`_lsh_candidates`) —
+    :func:`lsh_bucket_topk`, :func:`lsh_near_dup_pairs`;
+  - the top ``n_cand`` in a projected space
+    (:func:`_projected_topk`) — :func:`rp_topk` (seeded planes),
+    :func:`pca_topk` (trained basis).
+
+  :func:`_probe` runs the broadcast ones: broadcast the queries, join
+  on the cell key or cross join, drop self matches
+  (:func:`_drop_self`), select the score as one parsed expression.
+- **Score**: exact cosine (:func:`_paired_cosine_sql`), the integer
+  int8 cosine, or the PQ asymmetric-distance cosine, each rounded
+  to 6 dp.
+- **Tail** (:func:`_topk`): one ``row_number`` per query, score
+  descending, then lowest ``neighbor_id`` — every operator breaks
+  ties the same total-order way.
 
 All distance math is double-precision, left-to-right ``aggregate``
 folds, so the DuckDB oracle (list_dot_product) reproduces values
@@ -24,14 +42,18 @@ multi-second pathology at sf0.1):
   three folds; computing ``|v|`` once per *row* and carrying it
   through the join leaves one fold per pair — bit-identical output
   (same doubles, same division) at a third of the interpreted work.
+- **Expressions as parsed SQL text.** Building a fold through the
+  Column API is one py4j round trip per node; the same tree parsed
+  from text (:func:`_dot_sql`, :func:`_l2_sql`) is one call with
+  bit-identical values.
 - **Array literals in one py4j call.** ``F.array(*map(F.lit, vals))``
   is one Python↔JVM round-trip per element — ~4,600 round-trips
   (2-3 s of driver time) for a 6-table × 6-plane × 64-dim LSH plan.
-  ``F.lit(list)`` builds the same literal in one call
-  (:func:`_plane_lit`).
+  ``from_json`` of one string literal builds the same constant
+  (:func:`_array_lit_sql`).
 - **No distinct over candidate pairs.** Multi-table LSH dedups pairs
   by keeping a pair only in its *first* colliding table
-  (:func:`_first_collision`) — a scalar predicate on the bucket-join
+  (:func:`_lsh_candidates`) — a scalar predicate on the bucket-join
   output, replacing a dropDuplicates shuffle that hauled both 64-dim
   vectors per candidate row.
 - **posexplode_outer, not posexplode.** Non-outer generate plants a
@@ -49,6 +71,7 @@ multi-second pathology at sf0.1):
 from __future__ import annotations
 
 import json
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -59,37 +82,11 @@ from dbm_nca_ph_etl_spark.functions.scalars import let, quote_ident
 from dbm_nca_ph_etl_spark.session import session_memo
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Σ a[i]*b[i] in double precision (sequential left-to-right fold,
-    matching DuckDB's list fold bit-for-bit)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def _paired_cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
-    """cos(a,b) from vectors + hoisted norms: one fold per pair.
-    Bit-identical to :func:`cosine` — same dot fold, same ``/(na*nb)``."""
-    return F.round(dot(va, vb) / (na * nb), 6)
-
-
 def _dot_sql(a: str, b: str) -> str:
-    """SQL text of :func:`dot` over two column names/fragments —
-    parses to the operator-identical tree (same zip_with/aggregate
-    fold, same casts, same 0.0D seed), so every emitted value is
-    bit-identical; ONE expr parse instead of ~15 py4j round trips
+    """SQL text of Σ a[i]*b[i] over two column names/fragments, in
+    double precision: a sequential left-to-right fold matching
+    DuckDB's list fold bit-for-bit. ONE expr parse instead of ~15
+    py4j round trips for the same tree built through the Column API
     (r12 — the _scored_cells driver-tax treatment applied to the
     paired-cosine trees the ANN family builds per construction)."""
     return (
@@ -100,7 +97,7 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _l2_sql(a: str) -> str:
-    """SQL text of :func:`l2_norm` — same fold, same casts."""
+    """SQL text of the L2 norm — the same fold, same casts."""
     return (
         f"SQRT(aggregate({a}, 0.0D, "
         "(acc, x) -> acc + (CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
@@ -108,8 +105,59 @@ def _l2_sql(a: str) -> str:
 
 
 def _paired_cosine_sql(va: str, vb: str, na: str, nb: str) -> str:
-    """SQL text of :func:`_paired_cosine` over column names."""
+    """cos(a,b) from vectors + hoisted norms: one fold per pair,
+    rounded to 6 dp."""
     return f"round({_dot_sql(va, vb)} / ({na} * {nb}), 6)"
+
+
+#: the exact cosine of a probe row (see :func:`_side` for the names)
+_COS = _paired_cosine_sql("_qv", "_cv", "_qn", "_cn")
+
+#: the id column each :func:`_side` role carries
+_ID = {"q": "query_id", "c": "neighbor_id", "": "id"}
+
+
+def _side(df: DataFrame, id_col: str, vec_col: str, r: str, *extra) -> DataFrame:
+    """``(id, _v, _n)`` of one vector side, named for role ``r``:
+    ``q`` → (query_id, _qv, _qn), ``c`` → (neighbor_id, _cv, _cn),
+    ``""`` → (id, _v, _n). ``extra`` Columns ride in the same
+    projection. The id and vector are read through ``quote_ident``
+    (a column literally named ``doc.id`` is that column, not a struct
+    field) and the norm is computed once per row."""
+    idq, vq = quote_ident(id_col), quote_ident(vec_col)
+    cols = [f"{idq} AS {_ID[r]}", f"{vq} AS _{r}v", f"{_l2_sql(vq)} AS _{r}n"]
+    return df.select(*map(F.expr, cols), *extra)
+
+
+def _drop_self(cand: DataFrame, pair_rule: bool = False) -> DataFrame:
+    """Drop self matches from (query_id, neighbor_id) candidate rows;
+    ``pair_rule`` keeps each unordered pair once (lower id first)."""
+    return cand.where(f"query_id {'<' if pair_rule else '!='} neighbor_id")
+
+
+def _topk(df: DataFrame, k: int, by: str = "cos_sim") -> DataFrame:
+    """The shared tail: ``rank`` = row_number per query, ``by``
+    descending then lowest ``neighbor_id`` (total order, so results
+    are partition-invariant); rows ranked past ``k`` are dropped."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(by).desc(), F.col("neighbor_id").asc()
+    )
+    return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _probe(
+    q: DataFrame, c: DataFrame, on: str | None, score_sql: str, k: int, *keep: str
+) -> DataFrame:
+    """Broadcast query side ``q`` against corpus side ``c`` — a hash
+    join on column ``on``, or a cross join when it is None — drop
+    self matches, score each pair as ``cos_sim`` (one parsed
+    expression; ``keep`` columns ride along) and keep the top ``k``."""
+    q = F.broadcast(q)
+    cand = q.crossJoin(c) if on is None else q.join(c, on)
+    scored = _drop_self(cand).selectExpr(
+        "query_id", "neighbor_id", f"{score_sql} AS cos_sim", *keep
+    )
+    return _topk(scored, k)
 
 
 #: Fail-fast ceilings for the two labeled exact baselines. These are
@@ -159,9 +207,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
-    Output: (query_id, neighbor_id, cos_sim) — self-matches excluded,
-    similarity rounded to 6 dp, ties broken by neighbor id so results
-    are total-order deterministic.
+    Output: (query_id, neighbor_id, cos_sim, rank) — self-matches
+    excluded, similarity rounded to 6 dp, ties broken by neighbor id
+    so results are total-order deterministic.
 
     EXACT BASELINE: every query scans the whole corpus (broadcast
     q × c). The corpus side is linear and distributed, but the cost
@@ -170,37 +218,8 @@ def cosine_topk(
     recall oracle). The guard runs a bounded count at call time.
     """
     queries = scale_guard(queries, max_queries, "cosine_topk")
-    # Projections and the pair cosine as parsed SQL (r12): the tree
-    # is operator-identical to the Column form (same folds, casts,
-    # rounding), but one parse replaces the per-construction py4j
-    # round-trips — this operator is rebuilt 6×/bench-query as the
-    # exact baseline of every ANN audit.
-    idq, vq = quote_ident(id_col), quote_ident(vec_col)
-    q = queries.selectExpr(
-        f"{idq} AS query_id", f"{vq} AS _qv", f"{_l2_sql(vq)} AS _qn"
-    )
-    c = corpus.selectExpr(
-        f"{idq} AS neighbor_id", f"{vq} AS _cv", f"{_l2_sql(vq)} AS _cn"
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_paired_cosine_sql('_qv', '_cv', '_qn', '_cn')} AS cos_sim",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        "cos_sim",
-        F.row_number().over(w).alias("rank"),
-    ).where(F.col("rank") <= k)
+    q = _side(queries, id_col, vec_col, "q")
+    return _probe(q, _side(corpus, id_col, vec_col, "c"), None, _COS, k)
 
 
 def _hyperplane(dim: int, seed: int) -> list[float]:
@@ -246,31 +265,6 @@ def _json_lit_sql(obj: list, sql_type: str) -> str:
     except ValueError:
         raise ValueError(f"{sql_type} literal has a NaN or infinite element") from None
     return f"from_json('{text}', '{sql_type}')"
-
-
-def _plane_lit(vals: list[float]) -> Column:
-    """Array-of-doubles literal parsed JVM-side in ONE py4j call.
-    ``F.array(*map(F.lit, vals))`` is a py4j round-trip per element
-    and even ``F.lit(list)`` converts element-wise (~1.2 s of driver
-    time for a 36×64 plane set); an expr string is microseconds."""
-    return F.expr(_array_lit_sql(vals))
-
-
-def _plane_matrix_lit(planes: list[list[float]]) -> Column:
-    """array<array<double>> literal (all planes) in one py4j call."""
-    return F.expr(_json_lit_sql(planes, "array<array<double>>"))
-
-
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: one sign bit per plane, packed to
-    a bigint bucket key."""
-    bits = [
-        F.when(dot(vec, _plane_lit(plane)) >= 0, 1).otherwise(0) for plane in planes
-    ]
-    key = F.lit(0).cast("bigint")
-    for i, b in enumerate(bits):
-        key = key + (b.cast("bigint") * F.lit(2**i).cast("bigint"))
-    return key
 
 
 def _signed(
@@ -323,31 +317,32 @@ def _signed(
         keys = bits.reshape(len(v), -1, num_planes) @ packer  # batch × tables
         return pd.Series(list(keys.astype(np.int64)))
 
-    signed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
-        bucket_keys(F.col(vec_col)).alias("_keys"),
-    )
+    signed = _side(df, id_col, vec_col, "").withColumn("_keys", bucket_keys("_v"))
     keys = [
         F.element_at("_keys", t + 1).alias(f"_b{t}") for t in range(num_tables)
     ]
     return signed.select("id", "_v", "_n", *keys).localCheckpoint(eager=True)
 
 
-def _first_collision_cond(a: str, b: str, t: int) -> Column:
-    """Join condition for table ``t`` over two qualified aliases:
-    buckets agree on table t and DISAGREE on every earlier table —
-    each candidate pair survives in exactly one branch. Static column
-    predicates (the table index is known per branch), so pair dedup
-    costs no HOF evaluation and no distinct shuffle over
-    vector-carrying candidate rows. One parsed expression per branch:
-    the Column-API form was ~60 py4j round trips across the branch
-    set (driver plan-construction tax; the _scored_cells note)."""
-    parts = [f"`{a}`._b{t} = `{b}`._b{t}"] + [
-        f"`{a}`._b{s} != `{b}`._b{s}" for s in range(t)
-    ]
-    return F.expr(" AND ".join(parts))
+def _lsh_candidates(a: DataFrame, b: DataFrame, num_tables: int) -> DataFrame:
+    """Probe rows (query_id, neighbor_id, _qv, _cv, _qn, _cn) of every
+    pair of :func:`_signed` rows from ``a`` and ``b`` that share a
+    bucket in some table. Branch ``t`` joins on table t's key and
+    requires disagreement on every earlier table, so each pair
+    survives in exactly one branch: static column predicates, no HOF
+    evaluation and no distinct shuffle over vector-carrying rows.
+    One parsed join condition per branch (the Column-API form was ~60
+    py4j round trips across the branch set)."""
+    a, b = a.alias("a"), b.alias("b")
+
+    def branch(t: int) -> DataFrame:
+        cond = [f"a._b{t} = b._b{t}"] + [f"a._b{s} != b._b{s}" for s in range(t)]
+        return a.join(b, F.expr(" AND ".join(cond))).selectExpr(
+            "a.id AS query_id", "b.id AS neighbor_id",
+            "a._v AS _qv", "b._v AS _cv", "a._n AS _qn", "b._n AS _cn",
+        )
+
+    return reduce(DataFrame.unionByName, map(branch, range(num_tables)))
 
 
 def lsh_bucket_topk(
@@ -372,44 +367,12 @@ def lsh_bucket_topk(
     probes one bucket per table. Recall < 1.0 by design — exact
     :func:`cosine_topk` is the baseline.
     """
-    q = _signed(queries, id_col, vec_col, num_tables, num_planes, dim, seed).alias("q")
-    c = _signed(corpus, id_col, vec_col, num_tables, num_planes, dim, seed).alias("c")
-    branches = []
-    for t in range(num_tables):
-        branches.append(
-            F.broadcast(q)
-            .join(
-                c,
-                _first_collision_cond("q", "c", t)
-                & (F.col("q.id") != F.col("c.id")),
-            )
-            .select(
-                F.col("q.id").alias("query_id"),
-                F.col("c.id").alias("neighbor_id"),
-                F.col("q._v").alias("_qv"),
-                F.col("c._v").alias("_cv"),
-                F.col("q._n").alias("_qn"),
-                F.col("c._n").alias("_cn"),
-            )
-        )
-    cand = branches[0]
-    for b in branches[1:]:
-        cand = cand.unionByName(b)
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _paired_cosine(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")).alias(
-            "cos_sim"
-        ),
+    q, c = (
+        _signed(df, id_col, vec_col, num_tables, num_planes, dim, seed)
+        for df in (queries, corpus)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    cand = _drop_self(_lsh_candidates(F.broadcast(q), c, num_tables))
+    return _topk(cand.selectExpr("query_id", "neighbor_id", f"{_COS} AS cos_sim"), k)
 
 
 def rp_project(
@@ -423,35 +386,10 @@ def rp_project(
     """Johnson–Lindenstrauss random projection: (id, _v, _n, _p)
     where ``_p`` is the vector's image under a deterministic dim×r
     matrix (same LCG planes as LSH — no RNG, identical on any
-    cluster size or run).
-
-    Projection is Arrow-batched numpy — the same dense
-    vector×matrix case :func:`_signed` documents as the one place
-    Python beats the JVM fold (r folds/row would be thousands of
-    interpreted lambda steps). Unlike ``_signed``'s bucket keys
-    (partitioning metadata), these values RANK candidates, so they
-    must be partition-invariant: the kernel is a per-row GEMV of
-    fixed shape (1×dim @ dim×r) — identical BLAS path and summation
-    order for every row — NOT one batch GEMM, whose blocking (and
-    thus ULP rounding) varies with the batch's row count and could
-    flip a tie at the n_cand frontier. ``_n`` (the FULL-dim norm)
-    stays a JVM fold so downstream exact re-ranks bit-match
-    :func:`cosine_topk`.
-    """
+    cluster size or run): :func:`mat_project` over the seeded
+    planes, so values are partition-invariant the same way."""
     planes = [_hyperplane(dim, seed + 31 * j) for j in range(r)]
-    pmat = np.asarray(planes, dtype=np.float64).T  # dim × r
-
-    @F.pandas_udf("array<double>")
-    def _proj(vecs: pd.Series) -> pd.Series:
-        v = np.stack(vecs.to_numpy()).astype(np.float64)  # batch × dim
-        return pd.Series([row @ pmat for row in v])
-
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
-        _proj(F.col(vec_col)).alias("_p"),
-    )
+    return mat_project(df, planes, None, id_col, vec_col)
 
 
 def rp_topk(
@@ -492,48 +430,26 @@ def _projected_topk(q: DataFrame, c: DataFrame, k: int, n_cand: int) -> DataFram
     """The shared compressed-candidates probe behind rp_topk and
     pca_topk: score in the projected space (``_p``), keep ``n_cand``
     per query, exact full-dim cosine re-rank of that bounded set.
-    Inputs are (id, _v, _n, _p) frames from rp_project/mat_project;
-    tiebreaks on neighbor id at both stages — partition-invariant."""
-    q = q.alias("q")
-    c = c.alias("c")
-    proj_sim = dot(F.col("q._p"), F.col("c._p")) / (
-        l2_norm(F.col("q._p")) * l2_norm(F.col("c._p"))
-    )
-    cand = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("q.id") != F.col("c.id"))
-        .select(
-            F.col("q.id").alias("query_id"),
-            F.col("c.id").alias("neighbor_id"),
-            proj_sim.alias("_ps"),
-            F.col("q._v").alias("_qv"),
-            F.col("c._v").alias("_cv"),
-            F.col("q._n").alias("_qn"),
-            F.col("c._n").alias("_cn"),
+    Inputs are (id, _v, _n, _p) frames from :func:`mat_project`;
+    both stages rank through :func:`_topk` — partition-invariant."""
+
+    def side(df: DataFrame, r: str) -> DataFrame:
+        return df.selectExpr(
+            f"id AS {_ID[r]}", f"_v AS _{r}v", f"_n AS _{r}n", f"_p AS _{r}p"
         )
+
+    proj_sim = f"{_dot_sql('_qp', '_cp')} / ({_l2_sql('_qp')} * {_l2_sql('_cp')})"
+    cut = _probe(
+        side(q, "q"), side(c, "c"), None, proj_sim, n_cand, "_qv", "_cv", "_qn", "_cn"
     )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("_ps").desc(), F.col("neighbor_id").asc()
-    )
-    kept = cand.withColumn("_crk", F.row_number().over(wc)).where(
-        F.col("_crk") <= n_cand
-    )
-    scored = kept.select(
-        "query_id",
-        "neighbor_id",
-        _paired_cosine(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _topk(cut.selectExpr("query_id", "neighbor_id", f"{_COS} AS cos_sim"), k)
+
+
+def _near_dup_rows(cand: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, cos_sim) of probe rows scoring ≥ ``threshold``."""
+    return cand.selectExpr(
+        "query_id AS id_a", "neighbor_id AS id_b", f"{_COS} AS cos_sim"
+    ).where(F.col("cos_sim") >= threshold)
 
 
 def cosine_near_dup_pairs(
@@ -549,28 +465,8 @@ def cosine_near_dup_pairs(
     ``max_rows`` input rows (bounded count at call time) so the
     labeled baseline can't be pointed at a corpus by accident."""
     corpus = scale_guard(corpus, max_rows, "cosine_near_dup_pairs")
-    a = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        l2_norm(F.col(vec_col)).alias("_na"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        l2_norm(F.col(vec_col)).alias("_nb"),
-    )
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            _paired_cosine(
-                F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
-            ).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )
+    a, b = (_side(corpus, id_col, vec_col, r) for r in ("q", "c"))
+    return _near_dup_rows(_drop_self(a.crossJoin(b), pair_rule=True), threshold)
 
 
 def lsh_near_dup_pairs(
@@ -614,26 +510,7 @@ def lsh_near_dup_pairs(
         if signed is not None
         else _signed(corpus, id_col, vec_col, num_tables, num_planes, dim, seed)
     )
-    left, right = s.alias("a"), s.alias("b")
-    branches = []
-    for t in range(num_tables):
-        branches.append(
-            left.join(
-                right,
-                _first_collision_cond("a", "b", t)
-                & (F.col("a.id") < F.col("b.id")),
-            ).select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a._v").alias("_va"),
-                F.col("b._v").alias("_vb"),
-                F.col("a._n").alias("_na"),
-                F.col("b._n").alias("_nb"),
-            )
-        )
-    cand = branches[0]
-    for b in branches[1:]:
-        cand = cand.unionByName(b)
+    cand = _drop_self(_lsh_candidates(s, s, num_tables), pair_rule=True)
 
     @F.pandas_udf("double")
     def _pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
@@ -643,16 +520,9 @@ def lsh_near_dup_pairs(
 
     cut = float(threshold) - 1e-6
     sketched = cand.where(
-        _pair_dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
-        >= cut
+        _pair_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")) >= cut
     )
-    return sketched.select(
-        "id_a",
-        "id_b",
-        _paired_cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")).alias(
-            "cos_sim"
-        ),
-    ).where(F.col("cos_sim") >= threshold)
+    return _near_dup_rows(sketched, threshold)
 
 
 # -----------------------------------------------------------------------
@@ -685,15 +555,10 @@ def _scored_cells(vec: str, cents: list[list[float]]) -> Column:
     built (same casts, same sequential fold, same double literals via
     repr round-trip), so every emitted value is bit-identical.
     """
-    vec_q = quote_ident(vec)
     cells = []
     for i, c in enumerate(cents):
         norm = float(sum(x * x for x in c) ** 0.5)
-        d = (
-            f"aggregate(zip_with({vec_q}, {_array_lit_sql(c)}, "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
+        d = _dot_sql(quote_ident(vec), _array_lit_sql(c))
         cells.append(f"struct(-({d} / {float(norm)!r}D) AS neg, {i} AS i)")
     return F.expr("array(" + ", ".join(cells) + ")")
 
@@ -740,38 +605,14 @@ def ivf_topk(
     # AND an exchange barrier so Catalyst's projection collapse can't
     # inline the 16-fold assignment into the join and re-evaluate it
     # per candidate row
-    idq, vq = quote_ident(id_col), quote_ident(vec_col)
-    c = corpus.select(
-        F.col(idq).alias("neighbor_id"),
-        F.col(vq).alias("_cv"),
-        F.expr(_l2_sql(vq)).alias("_cn"),
-        assign_cluster(vec_col, cents).alias("cell"),
+    c = _side(
+        corpus, id_col, vec_col, "c", assign_cluster(vec_col, cents).alias("cell")
     ).repartition("cell")
-    q = queries.select(
-        F.col(idq).alias("query_id"),
-        F.col(vq).alias("_qv"),
-        F.expr(_l2_sql(vq)).alias("_qn"),
+    q = _side(
+        queries, id_col, vec_col, "q",
         F.explode(probe_clusters(vec_col, cents, n_probe)).alias("cell"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_paired_cosine_sql('_qv', '_cv', '_qn', '_cn')} AS cos_sim",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        "cos_sim",
-        F.row_number().over(w).alias("rank"),
-    ).where(F.col("rank") <= k)
+    return _probe(q, c, "cell", _COS, k)
 
 
 def build_lsh_index(
@@ -795,8 +636,6 @@ def build_lsh_index(
     ``lsh_near_dup_pairs(signed=...)``. Incremental corpora append
     newly-signed rows (same seed ⇒ same planes ⇒ compatible keys).
     """
-    import json
-
     from dbm_nca_ph_etl_spark.sources.lakefs import get_fs
     from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
 
@@ -818,11 +657,10 @@ def build_lsh_index(
 def load_lsh_index(spark, path: str) -> tuple[DataFrame, dict]:
     """Read a :func:`build_lsh_index` table + its parameter sidecar.
     Returns ``(signed_df, meta)``; feed the frame to the ``signed=``
-    parameter of the LSH operators and the meta values to their
-    matching parameters (mismatched planes would silently bucket with
-    the wrong geometry — always thread the stored meta through)."""
-    import json
-
+    parameter of :func:`lsh_near_dup_pairs` (the one LSH operator
+    that takes a prebuilt index) and the meta values to its matching
+    parameters (mismatched planes would silently bucket with the
+    wrong geometry — always thread the stored meta through)."""
     from dbm_nca_ph_etl_spark.sources.lakefs import get_fs
     from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
 
@@ -865,11 +703,11 @@ def probe_near_dup_pairs(
     Replaces a per-pair interpreted 3-fold cosine over |probe|·n pairs
     (measured 9.7 s at sf0.1) with BLAS + ~10² exact folds (~0.5 s).
     """
+    idq, vq = quote_ident(id_col), quote_ident(vec_col)
+    in_probe = lambda i: (i % probe_mod == 0) & (i < probe_cap)  # noqa: E731
     probe_rows = (
-        corpus.where(
-            (F.col(id_col) % probe_mod == 0) & (F.col(id_col) < probe_cap)
-        )
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        corpus.where(in_probe(F.col(idq)))
+        .select(F.col(idq).alias("_id"), F.col(vq).alias("_v"))
         .collect()
     )
     probe_ids = np.asarray([r._id for r in probe_rows], dtype=np.int64)
@@ -885,44 +723,21 @@ def probe_near_dup_pairs(
             cos = (v @ pmat.T) / np.outer(vnorm, pnorm)
             rows, cols = np.nonzero(cos >= cut)
             yield pd.DataFrame(
-                {"_id_o": ids[rows].astype("int64"), "_id_s": probe_ids[cols]}
+                {"neighbor_id": ids[rows].astype("int64"), "query_id": probe_ids[cols]}
             )
 
-    cand = corpus.select(id_col, vec_col).mapInPandas(
-        gen, schema="_id_o long, _id_s long"
-    ).where(F.col("_id_o") != F.col("_id_s"))
-
-    sides = corpus.select(
-        F.col(id_col).alias("_jid"),
-        F.col(vec_col).alias("_jv"),
-        l2_norm(F.col(vec_col)).alias("_jn"),
+    cand = corpus.select(F.col(idq), F.col(vq)).mapInPandas(
+        gen, schema="neighbor_id long, query_id long"
     )
-    probe_sides = sides.where(
-        (F.col("_jid") % probe_mod == 0) & (F.col("_jid") < probe_cap)
-    )
+    probes = _side(corpus, id_col, vec_col, "q").where(in_probe(F.col("query_id")))
     return (
-        cand.join(
-            F.broadcast(probe_sides.select(
-                F.col("_jid").alias("_id_s"),
-                F.col("_jv").alias("_vs"),
-                F.col("_jn").alias("_ns"),
-            )),
-            "_id_s",
-        )
-        .join(
-            sides.select(
-                F.col("_jid").alias("_id_o"),
-                F.col("_jv").alias("_vo"),
-                F.col("_jn").alias("_no"),
-            ),
-            "_id_o",
-        )
-        .select(
-            F.least("_id_s", "_id_o").alias("id_a"),
-            F.greatest("_id_s", "_id_o").alias("id_b"),
-            _paired_cosine(
-                F.col("_vs"), F.col("_vo"), F.col("_ns"), F.col("_no")
-            ).alias("cos_sim"),
+        _drop_self(cand)
+        .join(F.broadcast(probes), "query_id")
+        .join(_side(corpus, id_col, vec_col, "c"), "neighbor_id")
+        .selectExpr(
+            "least(query_id, neighbor_id) AS id_a",
+            "greatest(query_id, neighbor_id) AS id_b",
+            f"{_COS} AS cos_sim",
         )
         .where(F.col("cos_sim") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
@@ -959,13 +774,13 @@ def kmeans_train(
     """
     cents = _centroids(k, dim, seed)
     objectives: list[float] = []
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec_d = F.transform(F.col(quote_ident(vec_col)), lambda x: x.cast("double"))
     for _ in range(iters):
         best = F.element_at(F.array_sort(_scored_cells("_v", cents)), 1)
         assigned = corpus.select(vec_d.alias("_v")).select(
             "_v",
             best.getField("i").alias("cell"),
-            (-best.getField("neg") / l2_norm(F.col("_v"))).alias("_cos"),
+            (-best.getField("neg") / F.expr(_l2_sql("_v"))).alias("_cos"),
         )
         stats = assigned.groupBy("cell").agg(
             F.count(F.lit(1)).alias("n"),
@@ -1034,7 +849,7 @@ def quantize_int8_audit(
     once per row, and all HOF folds run sequentially over the array
     (deterministic order — never a float sum across partitions).
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col(quote_ident(vec_col)), lambda x: x.cast("double"))
 
     def with_q(vd: Column, scale: Column, q: Column) -> Column:
         idx = F.sequence(F.lit(1), F.size(vd))
@@ -1072,7 +887,7 @@ def quantize_int8_audit(
 
     s = let(v, build)
     return corpus.select(
-        F.col(id_col),
+        F.col(quote_ident(id_col)),
         s.getField("scale_e9").alias("scale_e9"),
         s.getField("q_l1").alias("q_l1"),
         s.getField("q_checksum").alias("q_checksum"),
@@ -1081,23 +896,21 @@ def quantize_int8_audit(
     )
 
 
-def _int8_cols(df: DataFrame, id_alias: str, id_col: str, vec_col: str):
-    """(id, int8 array, integer L2-squared) projection — the quantized
-    probe representation. Scales cancel out of the cosine ratio, so
-    ranking needs only integer dot products and integer norms."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+def _int8_side(df: DataFrame, id_col: str, vec_col: str, r: str) -> DataFrame:
+    """(id, int8 codes ``_{r}q``, integer L2² ``_{r}n2``) of one probe
+    side — the quantized probe representation. Scales cancel out of
+    the cosine ratio, so ranking needs only integer dot products and
+    integer norms."""
 
     def build(vd: Column) -> Column:
         scale = F.array_max(F.transform(vd, F.abs)) / F.lit(127.0)
         return let(scale, lambda sc: _quantized(vd, sc, "long"))
 
-    q = let(v, build)
-    return df.select(
-        F.col(id_col).alias(id_alias),
-        q.alias("_q"),
-        F.aggregate(
-            q, F.lit(0).cast("long"), lambda a, x: a + x * x
-        ).alias("_qn2"),
+    q = let(F.transform(F.col(f"_{r}v"), lambda x: x.cast("double")), build)
+    return _side(df, id_col, vec_col, r).select(
+        _ID[r],
+        q.alias(f"_{r}q"),
+        F.aggregate(q, F.lit(0).cast("long"), lambda a, x: a + x * x).alias(f"_{r}n2"),
     )
 
 
@@ -1121,41 +934,17 @@ def int8_topk(
     it ships as a recall-bound audit against the exact top-k
     (plans/queries.ann_int8_topk) like the LSH/IVF probes.
     """
-    q = _int8_cols(queries, "query_id", id_col, vec_col)
-    c = _int8_cols(corpus, "neighbor_id", id_col, vec_col)
-    dot = F.aggregate(
-        F.zip_with("_q", "_cq", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    q = _int8_side(queries, id_col, vec_col, "q")
+    c = _int8_side(corpus, id_col, vec_col, "c")
+    dot = (
+        "aggregate(zip_with(_qq, _cq, (a, b) -> a * b), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(
-            c.select(
-                "neighbor_id",
-                F.col("_q").alias("_cq"),
-                F.col("_qn2").alias("_cn2"),
-            )
-        )
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot.cast("double")
-                / F.sqrt(F.col("_qn2").cast("double") * F.col("_cn2").cast("double")),
-                6,
-            ).alias("cos_sim"),
-        )
+    score = (
+        f"round(CAST({dot} AS DOUBLE) / "
+        "SQRT(CAST(_qn2 AS DOUBLE) * CAST(_cn2 AS DOUBLE)), 6)"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _probe(q, c, None, score, k)
 
 
 # -----------------------------------------------------------------------
@@ -1252,15 +1041,15 @@ def pq_train(
     sample, numpy argmin first-index tiebreaks; empty cells keep
     their previous centroid.
     """
-    import numpy as np
-
     d_sub = dim // m
     if m * d_sub != dim:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     rows = (
         corpus.select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+            F.col(quote_ident(id_col)).alias("_id"),
+            F.transform(F.col(quote_ident(vec_col)), lambda x: x.cast("double")).alias(
+                "_v"
+            ),
         )
         .orderBy("_id")
         .limit(sample_cap)
@@ -1371,8 +1160,6 @@ def pq_topk(
     Approximate through quantization only → ships as a recall-bound
     audit (plans/queries.ann_pq_topk) like the int8/LSH/IVF probes.
     """
-    m = len(books)
-    d_sub = len(books[0][0])
     c = (
         encoded
         if encoded is not None
@@ -1386,30 +1173,19 @@ def pq_topk(
         # skips it entirely.
         .repartition(F.col("neighbor_id"))
     )
-    vq = quote_ident(vec_col)
-    q = queries.select(
-        F.col(quote_ident(id_col)).alias("query_id"),
-        F.expr(f"transform({vq}, x -> CAST(x AS DOUBLE))").alias("_qv"),
-        F.expr(_l2_sql(vq)).alias("_qn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pq_adc_cosine(books).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        "cos_sim",
-        F.row_number().over(w).alias("rank"),
-    ).where(F.col("rank") <= k)
+    q = _pq_query_side(queries, id_col, vec_col)
+    return _probe(q, c, None, _pq_adc_sql(books), k)
 
 
-def _pq_adc_cosine(books: list[list[list[float]]]) -> Column:
+def _pq_query_side(queries: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    """The raw-float query side ADC scores against: (query_id, _qv as
+    double[], _qn)."""
+    return _side(queries, id_col, vec_col, "q", *extra).withColumn(
+        "_qv", F.expr("transform(_qv, x -> CAST(x AS DOUBLE))")
+    )
+
+
+def _pq_adc_sql(books: list[list[list[float]]]) -> str:
     """Asymmetric-distance cosine over joined (query, coded-corpus)
     rows carrying ``_qv``/``_qn``/``_codes``/``_rn2``: one flat fold
     over the dim positions — per position p, query element × the
@@ -1438,10 +1214,7 @@ def _pq_adc_cosine(books: list[list[list[float]]]) -> Column:
         f"CAST(p % {d_sub} + 1 AS INT))), 1))"
     )
     denom = "(_qn * SQRT(_rn2))"
-    return F.expr(
-        f"CASE WHEN {denom} > 0 THEN round(({adc}) / {denom}, 6) "
-        "ELSE 0.0D END"
-    )
+    return f"CASE WHEN {denom} > 0 THEN round(({adc}) / {denom}, 6) ELSE 0.0D END"
 
 
 def ivfpq_topk(
@@ -1480,28 +1253,11 @@ def ivfpq_topk(
         if encoded is not None
         else ivfpq_encode(corpus, books, cents, id_col, vec_col)
     )
-    vq = quote_ident(vec_col)
-    q = queries.select(
-        F.col(quote_ident(id_col)).alias("query_id"),
-        F.expr(f"transform({vq}, x -> CAST(x AS DOUBLE))").alias("_qv"),
-        F.expr(_l2_sql(vq)).alias("_qn"),
+    q = _pq_query_side(
+        queries, id_col, vec_col,
         F.explode(probe_clusters(vec_col, cents, n_probe)).alias("cell"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pq_adc_cosine(books).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        "cos_sim",
-        F.row_number().over(w).alias("rank"),
-    ).where(F.col("rank") <= k)
+    return _probe(q, c, "cell", _pq_adc_sql(books), k)
 
 
 def ivfpq_encode(
@@ -1570,10 +1326,6 @@ def mmr_rerank(
             f"0 <= lam_num <= lam_den, got {lam_num}/{lam_den}"
         )
     cand = cosine_topk(corpus, queries, k=n_cand, id_col=id_col, vec_col=vec_col)
-    idc, vc = quote_ident(id_col), quote_ident(vec_col)
-    vecs = corpus.selectExpr(
-        f"{idc} AS neighbor_id", f"{vc} AS v", f"{_l2_sql(vc)} AS n"
-    )
     e6 = lambda s: f"CAST(round({s} * 1000000) AS BIGINT)"  # noqa: E731
     # One greedy step over the collected candidates `_c`, with `sel`
     # the ids picked so far: the argmax of (score, then lowest id) is
@@ -1597,12 +1349,12 @@ def mmr_rerank(
         f"(sel, i) -> concat(sel, array({argmax})))"
     )
     return (
-        cand.join(vecs, "neighbor_id")
+        cand.join(_side(corpus, id_col, vec_col, "c"), "neighbor_id")
         .groupBy("query_id")
         .agg(
             F.expr(
                 f"collect_list(named_struct('id', neighbor_id, "
-                f"'rel', {e6('cos_sim')}, 'v', v, 'n', n))"
+                f"'rel', {e6('cos_sim')}, 'v', _cv, 'n', _cn))"
             ).alias("_c")
         )
         .selectExpr("query_id", f"posexplode({picks}) AS (_pos, neighbor_id)")
@@ -1677,14 +1429,7 @@ def margin_topk(
         .join(F.broadcast(nsum), "neighbor_id")
         .select("query_id", "neighbor_id", margin.alias("margin_ppm"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("margin_ppm").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= m)
-        .select("query_id", "neighbor_id", "margin_ppm", "rank")
-    )
+    return _topk(scored, m, by="margin_ppm")
 
 
 # ---------------------------------------------------------------------------
@@ -1757,7 +1502,7 @@ def gram_sums(
             )
 
     return (
-        corpus.select(vec_col)
+        corpus.select(F.col(quote_ident(vec_col)))
         .mapInPandas(part, "i int, j int, s long")
         .groupBy("i", "j")
         .agg(F.sum(F.col("s").cast("decimal(38,0)")).alias("moment_sum"))
@@ -1832,28 +1577,31 @@ def mat_project(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Project vectors through a FIXED p×dim matrix with optional
-    centering — the trained-projection twin of :func:`rp_project`
-    (which is this kernel with seeded random planes). Same per-row
-    GEMV discipline: values are partition-invariant because the
-    kernel never batches rows into one GEMM whose blocking could move
-    a ULP at the candidate frontier; the full-dim norm stays a JVM
-    fold so exact re-ranks bit-match :func:`cosine_topk`."""
+    centering: (id, _v, _n, _p). The kernel behind :func:`rp_project`
+    (seeded random planes) and :func:`pca_topk` (trained basis).
+
+    Projection is Arrow-batched numpy — the same dense vector×matrix
+    case :func:`_signed` documents as the one place Python beats the
+    JVM fold (p folds/row would be thousands of interpreted lambda
+    steps). Unlike ``_signed``'s bucket keys (partitioning metadata),
+    these values RANK candidates, so they must be partition-invariant:
+    the kernel is a per-row GEMV of fixed shape (1×dim @ dim×p) —
+    identical BLAS path and summation order for every row — NOT one
+    batch GEMM, whose blocking (and thus ULP rounding) varies with the
+    batch's row count and could flip a tie at the n_cand frontier.
+    ``_n`` (the FULL-dim norm) stays a JVM fold so downstream exact
+    re-ranks bit-match :func:`cosine_topk`."""
     pmat = np.asarray(components, dtype=np.float64).T  # dim × p
     mvec = None if mean is None else np.asarray(mean, dtype=np.float64)
 
     @F.pandas_udf("array<double>")
     def _proj(vecs: pd.Series) -> pd.Series:
-        v = np.stack(vecs.to_numpy()).astype(np.float64)
+        v = np.stack(vecs.to_numpy()).astype(np.float64)  # batch × dim
         if mvec is not None:
             v = v - mvec
         return pd.Series([row @ pmat for row in v])
 
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
-        _proj(F.col(vec_col)).alias("_p"),
-    )
+    return _side(df, id_col, vec_col, "").withColumn("_p", _proj("_v"))
 
 
 def pca_topk(

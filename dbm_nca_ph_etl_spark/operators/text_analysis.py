@@ -62,18 +62,6 @@ def quality_score(text: Column) -> Column:
     return round6((length_score + punct_penalty + sw_score) / 3.0)
 
 
-def lang_scores(text: Column) -> list[Column]:
-    """Per-language stopword hit counts (the language-ID votes)."""
-    toks = tokens(text)
-    cols = []
-    for lang, words in STOPWORDS.items():
-        sw = F.array(*[F.lit(w) for w in words])
-        cols.append(
-            F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).alias(f"score_{lang}")
-        )
-    return cols
-
-
 def lang_id(text: Column, toks: Column | None = None) -> Column:
     """Heuristic language ID: argmax of stopword votes, 'und' when no
     stopword hits at all. Ties broken by fixed language order

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import Row
 
@@ -639,9 +640,14 @@ def test_ann_family_takes_dotted_id_column(vectors):
     family: an id column literally named ``doc.id`` gives the same
     neighbours as ``vec_id``."""
     from dbm_nca_ph_etl_spark.operators.similarity import (
+        cosine_near_dup_pairs,
+        int8_topk,
         ivf_topk,
         ivfpq_topk,
+        lsh_near_dup_pairs,
+        pca_topk,
         pq_topk,
+        rp_topk,
     )
 
     dotted = vectors.withColumnRenamed("vec_id", "doc.id")
@@ -653,8 +659,89 @@ def test_ann_family_takes_dotted_id_column(vectors):
         "ivfpq": lambda df, **kw: ivfpq_topk(
             df, df, books, k=2, n_centroids=2, n_probe=2, dim=3, **kw
         ),
+        "lsh": lambda df, **kw: lsh_bucket_topk(
+            df, df, k=2, num_planes=1, num_tables=2, dim=3, **kw
+        ),
+        "rp": lambda df, **kw: rp_topk(df, df, k=2, r=2, n_cand=4, dim=3, **kw),
+        "int8": lambda df, **kw: int8_topk(df, df, k=2, **kw),
+        "pca": lambda df, **kw: pca_topk(df, df, k=2, p=2, n_cand=4, dim=3, **kw),
+        "cosine_pairs": lambda df, **kw: cosine_near_dup_pairs(df, threshold=0.5, **kw),
+        "lsh_pairs": lambda df, **kw: lsh_near_dup_pairs(
+            df, threshold=0.5, num_tables=2, num_planes=1, dim=3, **kw
+        ),
     }
     for name, op in ops.items():
         want = sorted(tuple(r) for r in op(vectors).collect())
         got = sorted(tuple(r) for r in op(dotted, id_col="doc.id").collect())
         assert want and got == want, name
+
+
+def test_int8_topk_matches_cosine_on_exact_codes(spark):
+    """Integer vectors whose largest absolute element is 127 quantize
+    to themselves (scale 1), so int8_topk must return the exact
+    neighbours and ranks of cosine_topk, copies included."""
+    from dbm_nca_ph_etl_spark.operators.similarity import int8_topk
+
+    rng = np.random.default_rng(11)
+    vecs = rng.integers(-126, 127, size=(14, 8))
+    vecs[np.arange(14), rng.integers(0, 8, size=14)] = rng.choice([-127, 127], size=14)
+    rows = [Row(vec_id=i, embedding=[float(x) for x in v]) for i, v in enumerate(vecs)]
+    rows += [Row(vec_id=20 + i, embedding=rows[i % 3].embedding) for i in range(5)]
+    df = spark.createDataFrame(rows)
+    q = df.where("vec_id < 4")
+    got = sorted(tuple(r) for r in int8_topk(df, q, k=6).collect())
+    want = sorted(tuple(r) for r in cosine_topk(df, q, k=6).collect())
+    assert [(g[0], g[1], g[3]) for g in got] == [(w[0], w[1], w[3]) for w in want]
+    assert [g[2] for g in got] == pytest.approx([w[2] for w in want], abs=1e-6)
+
+
+# dim 4 as two 2-dim subspaces: every vector below is a concatenation
+# of one centroid per subspace, so PQ reconstructs it exactly
+_TIE_BOOKS = [
+    [[1.0, 0.0], [0.0, 2.0], [1.0, 1.0]],
+    [[3.0, 0.0], [0.0, 4.0], [2.0, 2.0]],
+]
+
+
+def _tie_ops():
+    from dbm_nca_ph_etl_spark.operators import similarity as S
+
+    return {
+        "cosine": lambda c, q: S.cosine_topk(c, q, k=6),
+        "ivf_full_probe": lambda c, q: S.ivf_topk(
+            c, q, k=6, n_centroids=3, n_probe=3, dim=4
+        ),
+        "rp_all_cand": lambda c, q: S.rp_topk(c, q, k=6, r=2, n_cand=20, dim=4),
+        "pca_all_cand": lambda c, q: S.pca_topk(c, q, k=6, p=2, n_cand=20, dim=4),
+        "int8": lambda c, q: S.int8_topk(c, q, k=6),
+        "pq": lambda c, q: S.pq_topk(c, q, _TIE_BOOKS, k=6),
+        "lsh": lambda c, q: S.lsh_bucket_topk(
+            c, q, k=6, num_planes=2, num_tables=2, dim=4
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", list(_tie_ops()))
+def test_topk_ties_rank_lowest_neighbor_first(spark, op):
+    """Every ANN top-k ranks equal scores by lowest neighbor_id: on a
+    corpus with copied vectors, rank order is (score desc, id asc)."""
+    a, b = _TIE_BOOKS
+    base = [x + y for x in a for y in b]  # ids 0..8
+    rows = [Row(vec_id=i, embedding=v) for i, v in enumerate(base)]
+    # copies of vectors 0 and 4, created out of id order
+    rows += [Row(vec_id=i, embedding=base[0]) for i in (12, 10, 14)]
+    rows += [Row(vec_id=i, embedding=base[4]) for i in (13, 11)]
+    df = spark.createDataFrame(rows)
+    out = _tie_ops()[op](df, df.where("vec_id IN (0, 4, 10)")).collect()
+    per_q: dict = {}
+    for r in out:
+        per_q.setdefault(r.query_id, []).append(r)
+    tied = 0
+    for rs in per_q.values():
+        by_rank = [r.neighbor_id for r in sorted(rs, key=lambda r: r.rank)]
+        rule = sorted(rs, key=lambda r: (-r.cos_sim, r.neighbor_id))
+        by_rule = [r.neighbor_id for r in rule]
+        assert by_rank == by_rule, (op, by_rank, by_rule)
+        assert sorted(r.rank for r in rs) == list(range(1, len(rs) + 1))
+        tied += len(rs) - len({r.cos_sim for r in rs})
+    assert tied > 0, "the corpus must produce tied scores"
