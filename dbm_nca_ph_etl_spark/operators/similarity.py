@@ -717,8 +717,8 @@ def probe_near_dup_pairs(
 
     def gen(batches):
         for b in batches:
-            ids = b[id_col].to_numpy()
-            v = np.stack(b[vec_col].to_numpy()).astype(np.float64)
+            ids = b["id"].to_numpy()
+            v = np.stack(b["_v"].to_numpy()).astype(np.float64)
             vnorm = np.sqrt((v * v).sum(axis=1))
             cos = (v @ pmat.T) / np.outer(vnorm, pnorm)
             rows, cols = np.nonzero(cos >= cut)
@@ -726,7 +726,9 @@ def probe_near_dup_pairs(
                 {"neighbor_id": ids[rows].astype("int64"), "query_id": probe_ids[cols]}
             )
 
-    cand = corpus.select(F.col(idq), F.col(vq)).mapInPandas(
+    # mapInPandas re-selects its input by unquoted name, so the
+    # columns it sees must be plain ones
+    cand = corpus.selectExpr(f"{idq} AS id", f"{vq} AS _v").mapInPandas(
         gen, schema="neighbor_id long, query_id long"
     )
     probes = _side(corpus, id_col, vec_col, "q").where(in_probe(F.col("query_id")))

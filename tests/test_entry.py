@@ -10,9 +10,12 @@ artifact files — no SparkSession needed.
 import json
 import sys
 
+import pytest
+
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as E  # noqa: E402
+from dbm_nca_ph_etl_spark.plans import fingerprint  # noqa: E402
 from dbm_nca_ph_etl_spark.plans.queries import QUERIES  # noqa: E402
 
 
@@ -45,3 +48,39 @@ def test_queries_and_oracle_share_the_rotation_order():
     # oracle keys appear in the same relative order
     qpos = {n: i for i, n in enumerate(qs)}
     assert ora == sorted(ora, key=qpos.__getitem__)
+
+
+NAMES = list(QUERIES)
+
+
+def _artifacts(root, monkeypatch, stamps=None):
+    """Synthetic driver artifacts under ``root``: round 3 confirmed the
+    first six catalog queries and round 5 the first three; ``stamps``
+    (query -> round, default 0) becomes the fingerprint file, if
+    given."""
+    monkeypatch.setattr(E, "_ROOT", str(root))
+    monkeypatch.setattr(fingerprint, "FINGERPRINTS", str(root / "fingerprints.json"))
+    (root / "CORRECTNESS_r03.json").write_text(json.dumps({n: {} for n in NAMES[:6]}))
+    (root / "CORRECTNESS_r05.json").write_text(json.dumps({n: {} for n in NAMES[:3]}))
+    if stamps is not None:
+        fp = {n: ["0" * 16, stamps.get(n, 0)] for n in NAMES}
+        (root / "fingerprints.json").write_text(json.dumps(fp))
+
+
+def test_stamp_newer_than_last_driver_round_goes_first(tmp_path, monkeypatch):
+    # confirmed in r5 and changed in r6; confirmed in r3, changed in r4
+    _artifacts(tmp_path, monkeypatch, {NAMES[0]: 6, NAMES[4]: 4})
+    assert E._rotation_order()[:2] == [NAMES[4], NAMES[0]]
+
+
+def test_stamp_equal_to_last_driver_round_does_not_go_first(tmp_path, monkeypatch):
+    _artifacts(tmp_path, monkeypatch, {NAMES[0]: 5, NAMES[4]: 3})
+    assert E._rotation_order() == NAMES[6:] + NAMES[3:6] + NAMES[:3]
+
+
+@pytest.mark.parametrize("text", [None, '{"q": ['], ids=["missing", "unreadable"])
+def test_missing_fingerprints_fall_back_to_staleness_order(tmp_path, monkeypatch, text):
+    _artifacts(tmp_path, monkeypatch)
+    if text is not None:
+        (tmp_path / "fingerprints.json").write_text(text)
+    assert E._rotation_order() == NAMES[6:] + NAMES[3:6] + NAMES[:3]

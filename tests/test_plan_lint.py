@@ -2,9 +2,8 @@
 as a standing gate rather than a review-time activity.
 
 Every catalog query (the whole registry, whatever its size) is
-planned (not executed) at
-sf0.001 and its physical plan is checked for the two patterns that
-kill distributed scale:
+planned (not executed) at sf0.001 with AQE off, and its physical plan
+is checked for the two patterns that kill distributed scale:
 
 - ``CartesianProduct`` — an unbroadcast cross join is O(n·m) shuffle
   work. Allowed ONLY for the explicitly-labeled exact correctness
@@ -18,16 +17,16 @@ Plan construction for a handful of queries triggers real (tiny) jobs
 at sf0.001 — k-means training iterations, LSH signature checkpoints,
 quantile boundary sampling — which is exactly what those operators
 do at any scale; the lint sees the plan that would run on the big
-cluster.
+cluster. The same build fingerprints every query, and
+``test_fingerprints_are_current`` holds ``plans/fingerprints.json`` to
+it.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from dbm_nca_ph_etl_spark.plans.queries import QUERIES
-
-SF_DIR = "/root/testdata/sf0.001"
+from dbm_nca_ph_etl_spark.plans.fingerprint import build_catalog, read_fingerprints
 
 # Exact O(n^2) correctness baselines, documented as such in their
 # registrations — the ONLY places a cartesian product may appear.
@@ -43,24 +42,16 @@ ALLOWED_CARTESIAN = {
 
 
 @pytest.fixture(scope="module")
-def plans(spark):
-    """Plans with auto-broadcast DISABLED: at sf0.001 everything is
-    broadcastable by size, which would hide scale hazards. With the
-    threshold off, only joins the query EXPLICITLY engineered (an
-    ``F.broadcast`` hint, an equi-key for SMJ) keep a distributed
-    shape — a query leaning on 'the side happens to be small today'
-    degrades to CartesianProduct right here, at plan time, instead of
-    at 100 TB."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        out = {}
-        for name, q in QUERIES.items():
-            df = q.fn(spark, SF_DIR)
-            out[name] = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    return out
+def built(spark):
+    """The one catalog build per run, with AQE and auto-broadcast off:
+    a query leaning on "the side happens to be small today" degrades
+    to CartesianProduct here, at plan time, instead of at 100 TB."""
+    return build_catalog(spark)
+
+
+@pytest.fixture(scope="module")
+def plans(built):
+    return {name: b.plan for name, b in built.items()}
 
 
 def test_no_unexpected_cartesian_products(plans):
@@ -153,3 +144,49 @@ def test_exact_baselines_carry_scale_guards(spark):
     assert cosine_near_dup_pairs(small, max_rows=10).count() >= 0
     assert cosine_topk(wide, small, k=3, max_queries=10).count() > 0
     assert cosine_near_dup_pairs(wide.limit(12), max_rows=None).count() >= 0
+
+
+#: Catalog queries that read the default parallelism: block counts
+#: (windows), a repartition width (text_analysis) and ``range`` splits.
+PARALLELISM_QUERIES = (
+    "gini_revenue_concentration",
+    "segment_dedup_docs",
+    "train_langid_classifier",
+)
+
+
+def test_fingerprints_do_not_depend_on_host_cores(spark, built, monkeypatch):
+    """The committed hashes hold on any host: built as on a host with
+    one core more, on both the Python and the JVM side, these queries
+    hash as in the session's own build."""
+    from pyspark import SparkContext
+
+    cores = spark.sparkContext.defaultParallelism + 1
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: cores))
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", str(cores))
+    try:
+        other = build_catalog(spark, PARALLELISM_QUERIES)
+    finally:
+        spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+    assert {n: b.digest for n, b in other.items()} == {
+        n: built[n].digest for n in PARALLELISM_QUERIES
+    }
+
+
+def test_fingerprints_are_current(built):
+    """``plans/fingerprints.json`` matches the code: a query whose
+    plan, eager jobs, UDF code or oracle changed must be re-stamped,
+    so the driver's next sample leads with it."""
+    committed = {n: h for n, (h, _) in read_fingerprints().items()}
+    now = {n: b.digest for n, b in built.items()}
+    both = now.keys() & committed.keys()
+    stale = {
+        "changed": sorted(n for n in both if now[n] != committed[n]),
+        "missing": sorted(now.keys() - committed.keys()),
+        "extra": sorted(committed.keys() - now.keys()),
+    }
+    assert not any(stale.values()), (
+        "plans/fingerprints.json is stale ("
+        + "; ".join(f"{k}: {' '.join(v)}" for k, v in stale.items() if v)
+        + "); regenerate it with `python tools/dump_plans.py`"
+    )

@@ -646,6 +646,7 @@ def test_ann_family_takes_dotted_id_column(vectors):
         ivfpq_topk,
         lsh_near_dup_pairs,
         pca_topk,
+        probe_near_dup_pairs,
         pq_topk,
         rp_topk,
     )
@@ -668,6 +669,9 @@ def test_ann_family_takes_dotted_id_column(vectors):
         "cosine_pairs": lambda df, **kw: cosine_near_dup_pairs(df, threshold=0.5, **kw),
         "lsh_pairs": lambda df, **kw: lsh_near_dup_pairs(
             df, threshold=0.5, num_tables=2, num_planes=1, dim=3, **kw
+        ),
+        "probe_pairs": lambda df, **kw: probe_near_dup_pairs(
+            df, threshold=0.5, probe_mod=1, **kw
         ),
     }
     for name, op in ops.items():

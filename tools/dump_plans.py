@@ -1,15 +1,28 @@
-"""Regenerate PLANS.md: formatted physical plans for the flagship
-queries with the scale rationale pinned next to each. Run after any
-plan-shaping change:
+"""Regenerate ``plans/fingerprints.json`` and ``PLANS.md``: formatted
+physical plans for the flagship queries with the scale rationale
+pinned next to each (rewritten only when it reads differently up to
+expression IDs). Run after any
+change to the engine or the catalog:
 
     python tools/dump_plans.py
+
+The run builds the whole catalog once
+(``dbm_nca_ph_etl_spark/plans/fingerprint.py``), writes each query's
+``[hash, round]`` and prints the names whose hash changed on one line,
+ready to pass to ``tools/oracle_check.py`` and
+``tools/determinism_check.py``. A changed query is stamped with the
+round after the newest ``CORRECTNESS_r*.json``, which puts it at the
+front of the driver's sample (``__spark_entry__._rotation_order``);
+an unchanged query keeps its stamp.
 
 With ``--out DIR q1 q2 …`` it instead writes each named query's
 ``.explain("formatted")`` to ``DIR/<q>.txt`` (tables from
 ``$SPARK_GRAFT_SF_DIR``, default sf0.1) — e.g. before/after plans
-for an optimization log:
+for an optimization log, kept out of the repo:
 
-    python tools/dump_plans.py --out plans/r13/before ann_pq_topk
+    python tools/dump_plans.py --out /tmp/plans/before ann_pq_topk
+
+An older plan is that commit's checkout plus the same command.
 """
 
 from __future__ import annotations
@@ -21,11 +34,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__
+from dbm_nca_ph_etl_spark.plans import fingerprint
 from dbm_nca_ph_etl_spark.plans.queries import QUERIES
 from dbm_nca_ph_etl_spark.session import get_spark
 from dbm_nca_ph_etl_spark.sources.catalog import DEFAULT_SF_DIR
-
-SF_DIR = "/root/testdata/sf0.001"
 
 # query -> why this physical plan is the one we want at 100 TB
 SHOWCASE = {
@@ -461,6 +474,52 @@ def dump_named(spark, out_dir: str, names: list[str]) -> None:
         print(f"wrote {os.path.join(out_dir, name)}.txt")
 
 
+def write_showcase(spark) -> None:
+    """Rewrite ``PLANS.md`` unless it already reads the same up to
+    expression IDs and other run-dependent tokens, so a regeneration
+    that changed nothing leaves no diff. The plans are built with the
+    catalog build's shuffle width and parallelism, so they read the
+    same on any host."""
+    out = [
+        "# PLANS — flagship physical plans (generated by tools/dump_plans.py)",
+        "",
+        "`.explain('formatted')` output at sf0.001 (plan shape is "
+        "scale-invariant; AQE may coalesce partitions at runtime but adds "
+        "no exchanges). Each plan is followed by the property that makes "
+        "it the right plan at 100 TB — these properties are pinned as "
+        "assertions in `tests/test_plans.py`.",
+        "",
+    ]
+    for name, why in SHOWCASE.items():
+        with fingerprint.pinned(spark, {"spark.sql.maxMetadataStringLength": "500"}):
+            plan = _explain(QUERIES[name].fn(spark, fingerprint.SF_DIR))
+        # keep the operator tree + scan details, trim location noise
+        plan = re.sub(r"Location: InMemoryFileIndex \[[^\]]*\]", "Location: …", plan)
+        out.append(f"## {name}")
+        out.append("")
+        out.append(why)
+        out.append("")
+        out.append("```")
+        out.append(plan.rstrip())
+        out.append("```")
+        out.append("")
+    out.append(DESIGN_NOTES.rstrip())
+    out.append("")
+    text = "\n".join(out)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.path.join(root, "PLANS.md")
+    try:
+        with open(path, encoding="utf-8") as f:
+            if fingerprint.normalize(f.read()) == fingerprint.normalize(text):
+                print("PLANS.md unchanged")
+                return
+    except FileNotFoundError:
+        pass
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(text)
+    print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", help="write the named queries' plans here")
@@ -474,47 +533,18 @@ def main() -> None:
         dump_named(spark, args.out, args.queries)
         spark.stop()
         return
-    spark.conf.set("spark.sql.maxMetadataStringLength", "500")
 
-    out = [
-        "# PLANS — flagship physical plans (generated by tools/dump_plans.py)",
-        "",
-        "`.explain('formatted')` output at sf0.001 (plan shape is "
-        "scale-invariant; AQE may coalesce partitions at runtime but adds "
-        "no exchanges). Each plan is followed by the property that makes "
-        "it the right plan at 100 TB — these properties are pinned as "
-        "assertions in `tests/test_plans.py`.",
-        "",
-    ]
-    for name, why in SHOWCASE.items():
-        plan = _explain(QUERIES[name].fn(spark, SF_DIR))
-        # keep the operator tree + scan details, trim location noise
-        plan = re.sub(r"Location: InMemoryFileIndex \[[^\]]*\]", "Location: …", plan)
-        out.append(f"## {name}")
-        out.append("")
-        out.append(why)
-        out.append("")
-        out.append("```")
-        out.append(plan.rstrip())
-        out.append("```")
-        out.append("")
-    out.append(DESIGN_NOTES.rstrip())
-    out.append("")
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    scaling = os.path.join(root, "SCALING.md")
-    if os.path.exists(scaling):
-        # tools/scale_check.py's sf-growth table rides along so the
-        # plan shapes and their measured scaling live in one document
-        with open(scaling, encoding="utf-8") as f:
-            out.append(f.read())
-    streambench = os.path.join(root, "STREAMBENCH.md")
-    if os.path.exists(streambench):
-        # tools/stream_bench.py's stateful-op throughput/state table
-        with open(streambench, encoding="utf-8") as f:
-            out.append(f.read())
-    with open(os.path.join(root, "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
+    old = fingerprint.read_fingerprints()
+    stamp = max(__spark_entry__._driver_rounds().values(), default=0) + 1
+    new = {}
+    for name, built in fingerprint.build_catalog(spark).items():
+        kept = old.get(name)
+        new[name] = kept if kept and kept[0] == built.digest else [built.digest, stamp]
+    fingerprint.write_fingerprints(new)
+    changed = [n for n in new if new[n] != old.get(n)]
+    print(f"wrote plans/fingerprints.json: {len(changed)} changed (round {stamp})")
+    print(" ".join(changed))
+    write_showcase(spark)
     spark.stop()
 
 

@@ -18,10 +18,10 @@ the min over N runs of:
   over the timed runs. A nonzero ``timed`` means the runs paid Janino
   and JIT work again: plans that differ per run, or classes evicted
   from Spark's generated-code cache.
-- ``plan_lines``: line count of the executed plan as planned before
-  the action (``queryExecution().executedPlan().toString()``), the
-  measure ``tests/test_plan_lint.py`` budgets; taken on an extra,
-  untimed construction.
+- ``plan_lines``: line count of the executed plan as
+  ``tests/test_plan_lint.py`` budgets it: the query's entry in the
+  lint's catalog build (``plans/fingerprint.build_catalog``: sf0.001,
+  AQE and auto-broadcast off), taken before the warmup, untimed.
 
 Usage::
 
@@ -40,6 +40,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from dbm_nca_ph_etl_spark.plans.fingerprint import build_catalog
 from dbm_nca_ph_etl_spark.plans.queries import QUERIES
 from dbm_nca_ph_etl_spark.session import get_spark
 
@@ -79,8 +80,7 @@ def main() -> None:
             return t1 - t0, t2 - t1
 
         sc.setJobDescription(f"profile:{name}")
-        plan = q.fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
-        plan_lines = len(plan.toString().splitlines())
+        plan_lines = len(build_catalog(spark, [name])[name].plan.splitlines())
         k0 = compile_count()
         run()  # warmup (codegen, footers)
         k1 = compile_count()

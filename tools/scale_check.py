@@ -1,5 +1,5 @@
 """Compute the SF-scaling table from bench.py JSON outputs and
-write SCALING.md (spliced into PLANS.md by tools/dump_plans.py).
+write SCALING.md.
 
     python tools/gen_scale_data.py /root/testdata/sf0.1 .scale/sf1 10
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python bench.py > /tmp/a.json

@@ -19,9 +19,6 @@ The correctness of every op here is pinned by batch-equivalence tests
 in tests/test_streaming.py; this tool adds the throughput/state
 evidence (round-9 VERDICT #4). Numbers are single-host local[N] —
 they rank ops and bound state shapes; they are not cluster absolutes.
-
-``tools/dump_plans.py`` splices the resulting STREAMBENCH.md into
-PLANS.md beside the plan shapes and the SF-scaling audit.
 """
 
 from __future__ import annotations
