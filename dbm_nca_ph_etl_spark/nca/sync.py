@@ -11,9 +11,11 @@ handles a million releases without a driver loop.
 Classification parity:
 - ``insert``  — id absent from the store (db lookup miss :101-106)
 - ``update``  — present but ``file_meta_created_at`` or
-  ``file_meta_modified_at`` drifted (:108-119); the old release is
-  deleted (cascade) before re-ingest, exactly the reference's
-  ``delete_release`` + re-save.
+  ``file_meta_modified_at`` drifted (:108-119); the old release's
+  records and allocations are deleted (cascade) and its row is
+  replaced by the upsert before re-ingest — the reference's
+  ``delete_release`` + re-save, with the ``release`` table published
+  once.
 - ``skip``    — present and metadata equal (:121-124)
 
 Scale: scraped manifests are small (thousands) → broadcast side;
@@ -26,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbm_nca_ph_etl_spark.sinks.merge import NCAStore, _exists
+from dbm_nca_ph_etl_spark.sinks.merge import NCAStore
 
 META_COLS = ("file_meta_created_at", "file_meta_modified_at")
 
@@ -59,20 +61,21 @@ def sync_releases(
     scraped: DataFrame,
     store: NCAStore,
 ) -> DataFrame:
-    """Apply the ladder against ``store``: cascade-delete updated
-    releases, upsert new+updated release rows, and return the
-    classified frame (callers ingest PDFs for action != 'skip').
+    """Apply the ladder against ``store``: cascade-delete the children
+    of updated releases, upsert new+updated release rows (the
+    ``release`` table is published once), and return the classified
+    frame (callers ingest PDFs for action != 'skip'). The returned
+    frame is cached; the caller unpersists it.
     """
-    if _exists(store.path("release")):
+    if store.exists("release"):
         classified = classify_releases(scraped, store.read("release"))
     else:
         classified = scraped.withColumn("action", F.lit("insert"))
     classified = classified.cache()
-
-    updated_ids = classified.where(F.col("action") == "update").select("id")
-    if not updated_ids.isEmpty():
-        store.delete_releases(updated_ids)
-    touched = classified.where(F.col("action") != "skip").drop("action")
-    if not touched.isEmpty():
-        store.upsert_releases(touched)
+    actions = {r.action for r in classified.select("action").distinct().collect()}
+    action = F.col("action")
+    if "update" in actions:
+        store.delete_children(classified.where(action == "update").select("id"))
+    if actions - {"skip"}:
+        store.upsert_releases(classified.where(action != "skip").drop("action"))
     return classified

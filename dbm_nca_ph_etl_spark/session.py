@@ -12,9 +12,9 @@ locally:
 - shuffle partitions sized by env so bench/tests pick a value that
   matches the core count; on a real cluster this would be
   ~2-3x total cores and AQE coalesces the rest.
-- broadcast threshold left at default (10 MB) — dimension tables
-  (region/nation/supplier and the NCA `release` table) broadcast;
-  fact-fact joins shuffle on their keys.
+- broadcast threshold 32 MB (Spark's default is 10 MB) — dimension
+  tables (region/nation/supplier and the NCA `release` table)
+  broadcast; fact-fact joins shuffle on their keys.
 - generated-code cache at 2048 entries, not Spark's 100. The cache is
   LRU, and one pass over the six benchmark catalog queries needs about
   160 generated classes, so at 100 every op compiled its classes again

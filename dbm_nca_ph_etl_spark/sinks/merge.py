@@ -1,19 +1,24 @@
 """Table sinks: upsert / append / delete / cascade over a parquet lake.
 
-Reference parity (SURVEY §2.1 S10-S14, §2.5 J3, §2.9 T6):
+Reference parity (SURVEY §2.1 S10-S14, §2.5 J3, §2.9 T6). Every
+keyed write is one step, :func:`_merge`: drop the base rows whose key
+is in a batch (broadcast left-anti join), union the batch, publish
+once.
 - S10 chunked upsert ``on_conflict=key``  (supabase_repository.py:59-65)
-  → :func:`upsert_parquet` — left-anti join + union overwrite; new
-  rows win on key conflict (the reference's last-write-wins).
+  → :func:`upsert_parquet` — new rows win on key conflict (the
+  reference's last-write-wins).
 - S11 chunked insert (supabase_repository.py:67-71)
-  → :func:`append_parquet` — ``mode("append")``.
+  → :func:`append_parquet` — ``mode("append")``; it serves only the
+  pipeline's dead-letter table, no store table appends.
 - S14 delete-by-key + J3 FK cascade (supabase_repository.py:41-43,
-  supabase_schema.sql:29,40) → :meth:`NCAStore.delete_releases` —
-  explicit multi-table delete by semi/anti join (no FK engine in a
+  supabase_schema.sql:29,40) → :func:`delete_by_keys`,
+  :meth:`NCAStore.delete_children` and :meth:`NCAStore.delete_releases`
+  — explicit multi-table delete by semi/anti join (no FK engine in a
   lake; the cascade is spelled out).
 - T6 at-least-once + idempotent load → :meth:`NCAStore.load_batch` —
-  records upsert on ``nca_number``; allocations are delete-then-insert
-  per incoming ``release_id``, which FIXES the reference's replay
-  hazard (plain-inserted allocations duplicate on redelivery,
+  records upsert on ``nca_number``; allocations are replaced per
+  incoming ``release_id`` in one publish, which FIXES the reference's
+  replay hazard (plain-inserted allocations duplicate on redelivery,
   supabase_repository.py:50-53) while converging to the same state on
   clean runs. Divergence documented in SURVEY §7.
 
@@ -230,10 +235,39 @@ def _rewrite(df: DataFrame, path: str, fs: LakeFS | None = None) -> None:
 
 def append_parquet(df: DataFrame, path: str, fs: LakeFS | None = None) -> None:
     """S11 — plain append (into the live version dir when the table
-    uses the pointer layout)."""
+    uses the pointer layout). Only the pipeline's dead-letter table
+    is written this way: every store table publishes through
+    :func:`_merge`."""
     df.write.mode("append").parquet(
         _data_dir(path, fs) if _exists(path, fs) else path
     )
+
+
+def _merge(
+    spark: SparkSession,
+    path: str,
+    keys: list[str],
+    drop: DataFrame,
+    add: DataFrame | None,
+    fs: LakeFS | None = None,
+    base: DataFrame | None = None,
+) -> None:
+    """The one anti-join-and-publish step behind every keyed write:
+    publish the table at ``path`` minus the rows whose ``keys`` appear
+    in ``drop``, plus ``add`` (``None`` only deletes), with ONE
+    ``_rewrite``. A missing table is created from ``add``. ``drop``
+    is the broadcast side and may repeat keys — a left-anti join keeps
+    the same rows either way, so it needs no dedup shuffle. ``base``
+    is the existing table as the caller already read it, which saves
+    a second read (and its schema-inference job)."""
+    if base is None:
+        if not _exists(path, fs):
+            if add is not None:
+                _rewrite(add, path, fs)
+            return
+        base = read_table(spark, path, fs)
+    kept = base.join(F.broadcast(drop.select(*keys)), on=keys, how="left_anti")
+    _rewrite(kept if add is None else kept.unionByName(add), path, fs)
 
 
 def upsert_parquet(
@@ -248,13 +282,7 @@ def upsert_parquet(
     ``df`` must be key-unique (callers dedup first; the NCA cleaner
     already emits one row per key). For batch-proportional write
     cost on huge tables use ``sinks.keyed.upsert_keyed``."""
-    incoming = df.dropDuplicates(keys)
-    if not _exists(path, fs):
-        _rewrite(incoming, path, fs)
-        return
-    base = read_table(spark, path, fs)
-    kept = base.join(F.broadcast(incoming.select(*keys)), on=keys, how="left_anti")
-    _rewrite(kept.unionByName(incoming), path, fs)
+    _merge(spark, path, keys, df, df.dropDuplicates(keys), fs)
 
 
 def upsert_parquet_cdf(
@@ -280,35 +308,33 @@ def upsert_parquet_cdf(
     the caller dangling lineage.
     """
     incoming = df.dropDuplicates(keys)
-    if not _exists(path, fs):
-        feed = incoming.withColumn("_change", F.lit("insert")).localCheckpoint()
-        _rewrite(incoming, path, fs)
-        return feed
-    base = read_table(spark, path, fs)
-    val_cols = [c for c in incoming.columns if c not in keys]
-    b_vals = base.select(*keys, *[F.col(c).alias(f"_old_{c}") for c in val_cols])
-    changed = F.lit(False)
-    for c in val_cols:
-        changed = changed | ~F.col(c).eqNullSafe(F.col(f"_old_{c}"))
-    # presence marker (not null-checking _old_ columns: an existing row
-    # whose values are all NULL must still classify as update)
-    presence = base.select(*keys).withColumn("_present", F.lit(True))
-    tagged = (
-        incoming.join(F.broadcast(presence), on=keys, how="left")
-        .join(F.broadcast(b_vals), on=keys, how="left")
-        .withColumn(
-            "_change",
-            F.when(F.col("_present").isNull(), F.lit("insert")).otherwise(
-                F.lit("update")
-            ),
+    base = read_table(spark, path, fs) if _exists(path, fs) else None
+    if base is None:
+        feed = incoming.withColumn("_change", F.lit("insert"))
+    else:
+        val_cols = [c for c in incoming.columns if c not in keys]
+        b_vals = base.select(*keys, *[F.col(c).alias(f"_old_{c}") for c in val_cols])
+        changed = F.lit(False)
+        for c in val_cols:
+            changed = changed | ~F.col(c).eqNullSafe(F.col(f"_old_{c}"))
+        # presence marker (not null-checking _old_ columns: an existing
+        # row whose values are all NULL must still classify as update)
+        presence = base.select(*keys).withColumn("_present", F.lit(True))
+        feed = (
+            incoming.join(F.broadcast(presence), on=keys, how="left")
+            .join(F.broadcast(b_vals), on=keys, how="left")
+            .withColumn(
+                "_change",
+                F.when(F.col("_present").isNull(), F.lit("insert")).otherwise(
+                    F.lit("update")
+                ),
+            )
+            .where((F.col("_present").isNull()) | changed)
+            .select(*incoming.columns, "_change")
         )
-        .where((F.col("_present").isNull()) | changed)
-        .select(*incoming.columns, "_change")
-        .localCheckpoint()
-    )
-    kept = base.join(F.broadcast(incoming.select(*keys)), on=keys, how="left_anti")
-    _rewrite(kept.unionByName(incoming), path, fs)
-    return tagged
+    feed = feed.localCheckpoint()
+    _merge(spark, path, keys, df, incoming, fs, base)
+    return feed
 
 
 def scd2_apply(
@@ -394,20 +420,14 @@ def delete_by_keys(
     fs: LakeFS | None = None,
 ) -> None:
     """S14 — delete base rows whose key appears in ``keys_df``."""
-    if not _exists(path, fs):
-        return
-    base = read_table(spark, path, fs)
-    kept = base.join(
-        F.broadcast(keys_df.select(*key_cols).dropDuplicates()),
-        on=key_cols,
-        how="left_anti",
-    )
-    _rewrite(kept, path, fs)
+    _merge(spark, path, key_cols, keys_df, None, fs)
 
 
 class NCAStore:
     """The three-table NCA lake (release 1→N record 1→N allocation,
-    supabase_schema.sql:6-41) with explicit-cascade semantics."""
+    supabase_schema.sql:6-41) with explicit-cascade semantics. Each
+    step publishes each table it changes once, through
+    :func:`_merge`."""
 
     def __init__(
         self, spark: SparkSession, base_dir: str, fs: LakeFS | None = None
@@ -420,6 +440,9 @@ class NCAStore:
     def path(self, table: str) -> str:
         return _pjoin(self.base, table)
 
+    def exists(self, table: str) -> bool:
+        return _exists(self.path(table), self.fs)
+
     def read(self, table: str) -> DataFrame:
         return read_table(self.spark, self.path(table), self.fs)
 
@@ -429,50 +452,49 @@ class NCAStore:
 
     def load_batch(self, records: DataFrame, allocations: DataFrame) -> None:
         """T6 — idempotent batch load. Records upsert on nca_number
-        (reference parity); allocations delete-then-insert per
-        incoming release_id (replay-safe divergence, see module doc).
+        (reference parity); allocations are replaced per incoming
+        release_id in one publish (replay-safe divergence, see module
+        doc). ``records`` is cached for the call and released before
+        it returns.
         """
         records = records.cache()
-        if records.isEmpty():  # nca_db_loader.py:19-31 short-circuit
-            return
-        upsert_parquet(
-            self.spark, records, self.path("record"), ["nca_number"], self.fs
-        )
-        rids = allocations.select("release_id").dropDuplicates()
-        if _exists(self.path("allocation"), self.fs):
-            delete_by_keys(
-                self.spark, self.path("allocation"), rids, ["release_id"], self.fs
+        try:
+            if records.isEmpty():  # nca_db_loader.py:19-31 short-circuit
+                return
+            upsert_parquet(
+                self.spark, records, self.path("record"), ["nca_number"], self.fs
             )
-            append_parquet(allocations, self.path("allocation"), self.fs)
-        else:
-            _rewrite(allocations, self.path("allocation"), self.fs)
+            alloc = self.path("allocation")
+            _merge(self.spark, alloc, ["release_id"], allocations, allocations, self.fs)
+        finally:
+            records.unpersist()
+
+    def delete_children(self, release_ids: DataFrame) -> None:
+        """J3 — the cascade under releases (``release_ids`` has an
+        ``id`` column): allocations by the nca_numbers of the
+        releases' records, then the records by release_id (the FK
+        chain spelled out as joins). The release rows stay; an update
+        replaces them in its upsert."""
+        if not self.exists("record"):
+            return
+        rec = self.read("record")
+        ids = F.broadcast(release_ids)
+        doomed_ncas = rec.join(ids, rec["release_id"] == ids["id"], "left_semi")
+        delete_by_keys(
+            self.spark, self.path("allocation"), doomed_ncas, ["nca_number"], self.fs
+        )
+        rids = release_ids.withColumnRenamed("id", "release_id")
+        delete_by_keys(self.spark, self.path("record"), rids, ["release_id"], self.fs)
 
     def delete_releases(self, release_ids: DataFrame) -> None:
-        """S14+J3 — delete releases and cascade: records by
-        release_id, then allocations by the deleted records'
-        nca_numbers (the FK chain spelled out as joins)."""
-        ids = release_ids.select("id").dropDuplicates().cache()
-        if _exists(self.path("record"), self.fs):
-            rec = self.read("record")
-            doomed_ncas = rec.join(
-                F.broadcast(ids), rec["release_id"] == ids["id"], "left_semi"
-            ).select("nca_number")
-            if _exists(self.path("allocation"), self.fs):
-                delete_by_keys(
-                    self.spark,
-                    self.path("allocation"),
-                    doomed_ncas,
-                    ["nca_number"],
-                    self.fs,
-                )
-            delete_by_keys(
-                self.spark,
-                self.path("record"),
-                ids.withColumnRenamed("id", "release_id"),
-                ["release_id"],
-                self.fs,
-            )
-        delete_by_keys(self.spark, self.path("release"), ids, ["id"], self.fs)
+        """S14+J3 — delete releases and cascade to their children
+        (:meth:`delete_children`)."""
+        ids = release_ids.select("id").cache()
+        try:
+            self.delete_children(ids)
+            delete_by_keys(self.spark, self.path("release"), ids, ["id"], self.fs)
+        finally:
+            ids.unpersist()
 
 
 def table_diff(

@@ -244,6 +244,70 @@ class TestObjectStoreLayout:
         assert rows(store.read("allocation"), "nca_number") == [("N2",)]
         assert fs.puts, "commits must flow through the injected adapter"
 
+    def test_sync_probes_release_through_adapter(self, spark, tmp_path, monkeypatch):
+        """sync_releases asks the store's adapter whether ``release``
+        exists; nothing in it resolves the default filesystem, which
+        on an object store would look in the wrong place."""
+        from dbm_nca_ph_etl_spark.nca.sync import sync_releases
+        from dbm_nca_ph_etl_spark.sinks import merge
+
+        class _SpyFS(_ObjectStoreFS):
+            def __init__(self):
+                super().__init__()
+                self.probes: list[str] = []
+
+            def exists(self, path):
+                self.probes.append(path)
+                return super().exists(path)
+
+        def adapter_only(path, override=None):
+            if override is None:
+                pytest.fail(f"{path} resolved without the store's adapter")
+            return override
+
+        fs = _SpyFS()
+        store = NCAStore(spark, str(tmp_path / "lake"), fs)
+        monkeypatch.setattr(merge, "get_fs", adapter_only)
+        for modified in ("m1", "m2"):  # insert, then update
+            scraped = spark.createDataFrame(
+                [Row(id="r", file_meta_created_at="c", file_meta_modified_at=modified)]
+            )
+            fs.probes.clear()
+            sync_releases(spark, scraped, store).unpersist()
+            assert fs.probes[0].startswith(store.path("release"))
+        assert rows(store.read("release"), "file_meta_modified_at") == [("m2",)]
+
+    def test_allocation_reload_is_one_publish(self, spark, tmp_path):
+        """A release's allocations are replaced in a new version, so
+        no version a reader may have resolved gains files after its
+        ``_CURRENT`` PUT, and no reader sees the release without its
+        allocations."""
+        import os
+
+        class _SnapshotFS(_ObjectStoreFS):
+            def __init__(self):
+                super().__init__()
+                self.published: dict[str, list[str]] = {}
+
+            def write_bytes(self, path, data):
+                super().write_bytes(path, data)
+                if path.endswith("_CURRENT"):
+                    version = os.path.join(os.path.dirname(path), data.decode())
+                    self.published[version] = sorted(os.listdir(version))
+
+        fs = _SnapshotFS()
+        store, records, allocations = mk_store(spark, tmp_path, fs=fs)
+        store.load_batch(records, allocations)
+        grown = [
+            v
+            for v, files in fs.published.items()
+            if os.path.isdir(v) and sorted(os.listdir(v)) != files
+        ]
+        assert not grown, f"published versions gained files: {grown}"
+        assert rows(store.read("allocation"), "nca_number", "agency") == [
+            ("N1", "A1"), ("N1", "A2"), ("N2", "B1"),
+        ]
+
 
 def mk_store(spark, tmp_path, fs=None):
     store = NCAStore(spark, str(tmp_path / "lake"), fs)
@@ -307,6 +371,48 @@ class TestNCAStore:
         assert rows(store.read("release"), "id") == [("id_2025",)]
         assert rows(store.read("record"), "nca_number") == [("N2",)]
         assert rows(store.read("allocation"), "nca_number") == [("N2",)]
+
+    def test_nca_number_moves_between_releases(self, spark, tmp_path):
+        """A record upserts on nca_number, last write wins, so N1 ends
+        under the later release; the cascade follows nca_number, so
+        deleting that release also takes N1's allocations under the
+        earlier one."""
+        store = NCAStore(spark, str(tmp_path / "lake"))
+        store.upsert_releases(spark.createDataFrame([Row(id="A"), Row(id="B")]))
+        for rid, amount in (("A", 1.0), ("B", 2.0)):
+            store.load_batch(
+                spark.createDataFrame([Row(nca_number="N1", release_id=rid)]),
+                spark.createDataFrame(
+                    [Row(nca_number="N1", amount=amount, release_id=rid)]
+                ),
+            )
+        assert rows(store.read("record"), "nca_number", "release_id") == [("N1", "B")]
+        assert rows(store.read("allocation"), "release_id", "amount") == [
+            ("A", 1.0), ("B", 2.0),
+        ]
+        store.delete_releases(spark.createDataFrame([Row(id="B")]))
+        assert rows(store.read("release"), "id") == [("A",)]
+        assert store.read("record").count() == 0
+        assert store.read("allocation").count() == 0
+
+    def test_store_calls_release_their_caches(self, spark, tmp_path):
+        def persisted():
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        store, _, _ = mk_store(spark, tmp_path)
+        before = persisted()
+        store.load_batch(
+            spark.createDataFrame(
+                [Row(nca_number="N3", department="DOH", release_id="id_2025")]
+            ),
+            spark.createDataFrame(
+                [Row(nca_number="N3", agency="C1", amount=5.0, release_id="id_2025")]
+            ),
+        )
+        assert persisted() == before
+        store.delete_releases(spark.createDataFrame([Row(id="id_2024")]))
+        assert persisted() == before
+        assert rows(store.read("record"), "nca_number") == [("N2",), ("N3",)]
 
     def test_empty_batch_short_circuit(self, spark, tmp_path):
         store, _, _ = mk_store(spark, tmp_path)

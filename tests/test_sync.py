@@ -4,6 +4,7 @@ insert/update/skip classification and the cascade on update.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
 from dbm_nca_ph_etl_spark.nca.sync import classify_releases, sync_releases
@@ -76,3 +77,66 @@ def test_sync_fresh_store_all_insert(spark, tmp_path):
     out = sync_releases(spark, spark.createDataFrame([rel("x"), rel("y")]), store)
     assert {r.action for r in out.collect()} == {"insert"}
     assert store.read("release").count() == 2
+
+
+def _last_job(spark) -> int:
+    """Id of the newest job in the status store (streaming and
+    job-group jobs included)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return max(jobs.head().jobId(), jobs.last().jobId()) if jobs.nonEmpty() else -1
+
+
+def _seeded(spark, tmp_path):
+    store = NCAStore(spark, str(tmp_path / "lake"))
+    sync_releases(spark, spark.createDataFrame([rel("a")]), store).unpersist()
+    store.load_batch(
+        spark.createDataFrame([Row(nca_number="N1", release_id="a")]),
+        spark.createDataFrame([Row(nca_number="N1", amount=1.0, release_id="a")]),
+    )
+    return store
+
+
+def test_update_leaves_no_cache_once_unpersisted(spark, tmp_path):
+    store = _seeded(spark, tmp_path)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = sync_releases(spark, spark.createDataFrame([rel("a", modified="m9")]), store)
+    out.unpersist()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+#: Status-store jobs of one update (sync plus reload) on a one-release
+#: store: the count the one-pass sync and one-publish store steps run,
+#: so a step that grows back fails.
+UPDATE_JOB_BUDGET = 24
+
+
+@pytest.mark.parametrize("cores", [2, 32])
+def test_update_job_budget(spark, tmp_path, monkeypatch, cores):
+    """Holds on any host: the default parallelism is faked to ``cores``
+    on both the Python and the JVM side, so the inputs' slicing and
+    the reads' splits follow the parameter, not the host's core count
+    (a probe such as ``isEmpty`` may run one job per batch of
+    partitions it scans)."""
+    from pyspark import SparkContext
+
+    store = _seeded(spark, tmp_path)
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: cores))
+    spark.conf.set("spark.sql.leafNodeDefaultParallelism", str(cores))
+    try:
+        before = _last_job(spark)
+        sync_releases(
+            spark, spark.createDataFrame([rel("a", modified="m9")]), store
+        ).unpersist()
+        store.load_batch(
+            spark.createDataFrame([Row(nca_number="N2", release_id="a")]),
+            spark.createDataFrame([Row(nca_number="N2", amount=2.0, release_id="a")]),
+        )
+        jobs = _last_job(spark) - before
+    finally:
+        spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+    assert jobs <= UPDATE_JOB_BUDGET
+    assert [(r.nca_number, r.amount) for r in store.read("allocation").collect()] == [
+        ("N2", 2.0)
+    ]

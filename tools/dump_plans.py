@@ -337,12 +337,12 @@ DESIGN_NOTES = """## Exactly-once join-view maintenance: the commit protocol (r6
 Not a physical plan but the OTHER half of design-for-scale: what happens when
 the cluster dies mid-write. `sinks/joinview.MaterializedJoin` maintains an
 equi-join view from per-batch signed deltas with work proportional to the
-delta (`ÎR â S_pre` bucket-pruned to ÎR's key buckets). r5 published batches
+delta (`ΔR ⋈ S_pre` bucket-pruned to ΔR's key buckets). r5 published batches
 by dynamic partition overwrite alone, with an own-batch-exclusion read as the
 replay guard. That guard has an unfixable hole under TWO independent writers
 (one CDC stream per side): if the left writer crashes after its partitions
 land but before its checkpoint commits, the right stream meanwhile joins
-those visible rows, and the left replay â excluding only its own batch â
+those visible rows, and the left replay — excluding only its own batch —
 recomputes against the right batch too: the (L, R) pairs are counted twice,
 permanently.
 
@@ -351,7 +351,7 @@ decision is one PUT or one conditional PUT; no renames):
 
 1. **Marker commit.** A refresh writes its `_b=<id>` partitions, then PUTs
    `_commits/b<id>.json` as the LAST step. Readers and delta joins filter to
-   marker-bearing partitions, so a half-written refresh is invisible â to
+   marker-bearing partitions, so a half-written refresh is invisible — to
    queries AND to the other side's delta joins. A replayed committed batch is
    skipped outright (no recompute, no dependence on current state).
 2. **Lease serialization.** Refreshes hold the table's `txlog.WriterLease`
@@ -359,7 +359,7 @@ decision is one PUT or one conditional PUT; no renames):
    each joined pair is owned by exactly one batch: whichever side committed
    later saw the other's partition as committed; the earlier side could not
    have. (Without serialization, two concurrent refreshes can each miss the
-   other â an undercount no marker scheme fixes.)
+   other — an undercount no marker scheme fixes.)
 3. **Horizon-swap compaction.** Folding the batch history into one netted
    partition must not overwrite a source in place: a rerun after a crash
    between the netted write and source deletion would re-derive from
@@ -374,7 +374,7 @@ Crash-injection tests (`tests/test_joinview.py::TestExactlyOnceCommitProtocol`)
 pin each window: crashed refresh invisible + replay counts once, committed
 replay skipped with zero IO, compaction crash before/after the swap, lease
 fencing. The dual-stream helper (`streaming/agg_stream.stream_into_joinview`)
-inherits all of it â epochÂ·2/epochÂ·2+1 ids keep the two writers' batch ids
+inherits all of it — epoch·2/epoch·2+1 ids keep the two writers' batch ids
 disjoint, and the checkpoint replays into marker skips.
 
 ## A true CAS under the commit protocols (r8 design note)
