@@ -18,9 +18,10 @@ Classification parity:
   once.
 - ``skip``    — present and metadata equal (:121-124)
 
-Scale: scraped manifests are small (thousands) → broadcast side;
-the store's release table is the probe side. No shuffle of record/
-allocation data happens until a release actually changes.
+Scale: the store's release table (one row per release, thousands) is
+the broadcast side and the scraped manifest streams past it, so no
+side of the classification shuffles. No shuffle of record/allocation
+data happens until a release actually changes.
 """
 
 from __future__ import annotations
@@ -65,10 +66,12 @@ def sync_releases(
     of updated releases, upsert new+updated release rows (the
     ``release`` table is published once), and return the classified
     frame (callers ingest PDFs for action != 'skip'). The returned
-    frame is cached; the caller unpersists it.
+    frame is cached; the caller unpersists it. The ``release`` table is
+    read once: the classification's read is the upsert's base.
     """
-    if store.exists("release"):
-        classified = classify_releases(scraped, store.read("release"))
+    existing = store.read("release") if store.exists("release") else None
+    if existing is not None:
+        classified = classify_releases(scraped, existing)
     else:
         classified = scraped.withColumn("action", F.lit("insert"))
     classified = classified.cache()
@@ -77,5 +80,7 @@ def sync_releases(
     if "update" in actions:
         store.delete_children(classified.where(action == "update").select("id"))
     if actions - {"skip"}:
-        store.upsert_releases(classified.where(action != "skip").drop("action"))
+        store.upsert_releases(
+            classified.where(action != "skip").drop("action"), existing
+        )
     return classified

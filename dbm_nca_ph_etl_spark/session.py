@@ -23,11 +23,34 @@ locally:
   classes (1,411 compiles at 100) and the largest query alone needs
   101; 2048 holds that working set. After that pass metaspace was
   +8.5 MB over the default and the JIT code heap unchanged (4 vCPU).
+- Python workers import pyspark from the installed package, on local
+  masters whose workers can import this package (``daemon.py`` is their
+  ``spark.python.daemon.module``). Spark puts ``pyspark.zip``,
+  ``py4j-*-src.zip`` and the spark-core jar at the head of each
+  worker's ``sys.path``, and ``pyspark.worker_util.setup_spark_files``
+  calls ``importlib.invalidate_caches()`` on every task. On Python 3.11
+  that makes every ``zipimporter`` in ``sys.path_importer_cache``
+  re-read its archive's whole central directory: a worker held 16 of
+  them (12 over ``pyspark.zip`` at 1,328 entries, 2 over the jar at
+  5,359, 2 over py4j's zip), 26,672 entries decoded per task before the
+  task's own function ran. The daemon drops the jar (it holds no
+  ``.py`` file) and, where the installed pyspark and py4j have the
+  archives' versions, the two zips, with their cached importers; the
+  workers fork from it with the shorter path. CPU of the whole process
+  tree per call, median of 15 after 10 warm-up calls (4 vCPU): a
+  4-partition ``parallelize(...).map(identity).collect()`` 1.21 → 0.40 s,
+  ``createDataFrame([one row]).collect()`` 1.29 → 0.32 s, a 4-partition
+  ``mapInPandas(identity).collect()`` 1.45 → 0.39 s; after 60 warm-up
+  calls the map costs 1.24 → 0.19 s, of which the Python workers
+  1.13 → 0.09 s. A cluster keeps Spark's own daemon: executors may get
+  this package only through pyFiles, which arrive after the daemon
+  starts.
 """
 
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -66,9 +89,22 @@ def get_spark(
     )
     if master:
         builder = builder.master(master)
+    if (master == "local" or master.startswith("local[")) and _workers_import_package():
+        builder = builder.config(
+            "spark.python.daemon.module", "dbm_nca_ph_etl_spark.daemon"
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _workers_import_package() -> bool:
+    """True when a local worker finds this package: Spark starts it with
+    ``python -m`` in the driver's working directory and passes
+    ``PYTHONPATH`` on; an installed package is on every path."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return root in {os.path.abspath(d) for d in dirs if d} | set(site.getsitepackages())
 
 
 def thread_target(spark: SparkSession, fn):

@@ -86,6 +86,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
 from dbm_nca_ph_etl_spark.sources.lakefs import LakeFS, get_fs
 from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
 
@@ -259,7 +260,8 @@ def _merge(
     is the broadcast side and may repeat keys — a left-anti join keeps
     the same rows either way, so it needs no dedup shuffle. ``base``
     is the existing table as the caller already read it, which saves
-    a second read (and its schema-inference job)."""
+    a second read (and its schema-inference job). The table keeps its
+    column order (the anti join's output puts ``keys`` first)."""
     if base is None:
         if not _exists(path, fs):
             if add is not None:
@@ -267,7 +269,8 @@ def _merge(
             return
         base = read_table(spark, path, fs)
     kept = base.join(F.broadcast(drop.select(*keys)), on=keys, how="left_anti")
-    _rewrite(kept if add is None else kept.unionByName(add), path, fs)
+    out = kept if add is None else kept.unionByName(add)
+    _rewrite(out.select(*[F.col(quote_ident(c)) for c in base.columns]), path, fs)
 
 
 def upsert_parquet(
@@ -276,13 +279,16 @@ def upsert_parquet(
     path: str,
     keys: list[str],
     fs: LakeFS | None = None,
+    base: DataFrame | None = None,
 ) -> None:
     """S10/T6 — merge ``df`` into the parquet table at ``path`` on
     ``keys``: matching base rows are replaced, new rows inserted.
-    ``df`` must be key-unique (callers dedup first; the NCA cleaner
-    already emits one row per key). For batch-proportional write
-    cost on huge tables use ``sinks.keyed.upsert_keyed``."""
-    _merge(spark, path, keys, df, df.dropDuplicates(keys), fs)
+    ``df`` is deduplicated on ``keys`` here, and which of a key's
+    repeated rows wins is arbitrary (the NCA cleaner already emits one
+    row per key). ``base`` is the table as the caller already read it
+    (see :func:`_merge`). For batch-proportional write cost on huge
+    tables use ``sinks.keyed.upsert_keyed``."""
+    _merge(spark, path, keys, df, df.dropDuplicates(keys), fs, base)
 
 
 def upsert_parquet_cdf(
@@ -446,9 +452,14 @@ class NCAStore:
     def read(self, table: str) -> DataFrame:
         return read_table(self.spark, self.path(table), self.fs)
 
-    def upsert_releases(self, releases: DataFrame) -> None:
-        """supabase_repository.py:37-39 — upsert on ``id``."""
-        upsert_parquet(self.spark, releases, self.path("release"), ["id"], self.fs)
+    def upsert_releases(
+        self, releases: DataFrame, base: DataFrame | None = None
+    ) -> None:
+        """supabase_repository.py:37-39 — upsert on ``id``. ``base`` is
+        the ``release`` table as the caller already read it."""
+        upsert_parquet(
+            self.spark, releases, self.path("release"), ["id"], self.fs, base
+        )
 
     def load_batch(self, records: DataFrame, allocations: DataFrame) -> None:
         """T6 — idempotent batch load. Records upsert on nca_number
@@ -474,7 +485,8 @@ class NCAStore:
         ``id`` column): allocations by the nca_numbers of the
         releases' records, then the records by release_id (the FK
         chain spelled out as joins). The release rows stay; an update
-        replaces them in its upsert."""
+        replaces them in its upsert. ``record`` is read once, for both
+        deletes."""
         if not self.exists("record"):
             return
         rec = self.read("record")
@@ -484,7 +496,7 @@ class NCAStore:
             self.spark, self.path("allocation"), doomed_ncas, ["nca_number"], self.fs
         )
         rids = release_ids.withColumnRenamed("id", "release_id")
-        delete_by_keys(self.spark, self.path("record"), rids, ["release_id"], self.fs)
+        _merge(self.spark, self.path("record"), ["release_id"], rids, None, self.fs, rec)
 
     def delete_releases(self, release_ids: DataFrame) -> None:
         """S14+J3 — delete releases and cascade to their children

@@ -105,8 +105,8 @@ def run_nca_stream(
     trigger lifecycle — stop it to disable the trigger)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # no emptiness probe: every action on batch_df rescans the
+        # batch, and load_batch already returns on an empty batch
         if max_concurrency is not None:
             # coalesce, not repartition: narrows without a shuffle, and
             # can only REDUCE parallelism (a cap, never a fan-out)

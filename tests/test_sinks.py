@@ -39,6 +39,16 @@ class TestUpsertParquet:
         upsert_parquet(spark, df, p, ["k"])
         assert rows(spark.read.parquet(p), "k", "v") == [("a", 1)]
 
+    def test_dotted_column_survives_merge(self, spark, tmp_path):
+        """The merge republishes columns by their exact names, so a dot
+        in one is not read as a struct field."""
+        p = str(tmp_path / "t")
+        for v in (1, 2):
+            upsert_parquet(spark, spark.createDataFrame([("a", v)], "k string, `v.x` int"), p, ["k"])
+        out = spark.read.parquet(p)
+        assert out.columns == ["k", "v.x"]
+        assert [tuple(r) for r in out.collect()] == [("a", 2)]
+
 
 class _ObjectStoreFS:
     """Disk-backed fake with OBJECT-STORE semantics: no atomic
@@ -421,6 +431,22 @@ class TestNCAStore:
         store.load_batch(empty_r, empty_a)
         assert store.read("record").count() == 2
         assert store.read("allocation").count() == 3
+
+    def test_merge_keeps_column_order(self, spark, tmp_path):
+        """A table's second publish keeps its first one's column order
+        (the anti join's output puts the merge keys first)."""
+        store = NCAStore(spark, str(tmp_path / "lake"))
+        orders = []
+        for amount in (1.0, 2.0):
+            store.load_batch(
+                spark.createDataFrame([Row(nca_number="N1", release_id="A")]),
+                spark.createDataFrame(
+                    [Row(nca_number="N1", amount=amount, release_id="A")]
+                ),
+            )
+            orders.append(store.read("allocation").columns)
+        assert orders == [["nca_number", "amount", "release_id"]] * 2
+        assert rows(store.read("allocation"), "amount") == [(2.0,)]
 
 
 class TestCompaction:

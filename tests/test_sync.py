@@ -109,7 +109,7 @@ def test_update_leaves_no_cache_once_unpersisted(spark, tmp_path):
 #: Status-store jobs of one update (sync plus reload) on a one-release
 #: store: the count the one-pass sync and one-publish store steps run,
 #: so a step that grows back fails.
-UPDATE_JOB_BUDGET = 24
+UPDATE_JOB_BUDGET = 22
 
 
 @pytest.mark.parametrize("cores", [2, 32])
