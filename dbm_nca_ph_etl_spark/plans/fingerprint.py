@@ -17,7 +17,10 @@ lints it) and a hash over four parts:
 3. the source and captured values of every **Python UDF** the build
    applies (``pandas_udf``, ``mapInPandas``, ``applyInPandas``; all go
    through ``UserDefinedFunction.__call__``), with the package
-   functions they call. UDF bodies never appear in plan text;
+   functions they call, and the class body of every **Python UDTF**
+   it registers for SQL (``spark.udtf.register``; SQL calls it by
+   name, not through ``__call__``). UDF bodies never appear in plan
+   text;
 4. the query's **oracle SQL**, whitespace collapsed.
 
 Plan text is normalized first: expression IDs, ``plan_id``, RDD ids,
@@ -56,6 +59,7 @@ import numpy as np
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
 from pyspark.sql.udf import UserDefinedFunction
+from pyspark.sql.udtf import UDTFRegistration
 
 from dbm_nca_ph_etl_spark import session
 from dbm_nca_ph_etl_spark.plans.queries import QUERIES
@@ -198,19 +202,24 @@ def _executions_since(store, last: int) -> list[tuple[int, str]]:
 
 @contextmanager
 def _recording_udfs():
-    """Record a fingerprint of each Python UDF applied to a column."""
+    """Record a fingerprint of each Python UDF applied to a column and
+    of each Python UDTF registered for SQL."""
     seen: list[str] = []
-    real = UserDefinedFunction.__call__
+    real, real_register = UserDefinedFunction.__call__, UDTFRegistration.register
 
     def call(self, *args, **kwargs):
         seen.append(f"{self.evalType} {self.returnType} {_code(self.func, set())}")
         return real(self, *args, **kwargs)
 
-    UserDefinedFunction.__call__ = call
+    def register(self, name, f):
+        seen.append(f"{name} {f.evalType} {f.returnType} {_code(f.func, set())}")
+        return real_register(self, name, f)
+
+    UserDefinedFunction.__call__, UDTFRegistration.register = call, register
     try:
         yield seen
     finally:
-        UserDefinedFunction.__call__ = real
+        UserDefinedFunction.__call__, UDTFRegistration.register = real, real_register
 
 
 def _code(fn, seen: set) -> str:

@@ -129,7 +129,9 @@ class LakeFS:
 
 class PosixLakeFS(LakeFS):
     """Bare local paths — stdlib only, no pyarrow import cost. The
-    default for everything without a URI scheme (local mode, NFS)."""
+    default for everything without a URI scheme (local mode, NFS).
+    :meth:`read_bytes` also takes Spark's ``file:/…`` spelling, the
+    ``path`` column of a ``binaryFile`` scan."""
 
     atomic_cas = True  # O_CREAT|O_EXCL below
 
@@ -151,6 +153,11 @@ class PosixLakeFS(LakeFS):
         return os.path.isdir(path)
 
     def read_bytes(self, path):
+        # binaryFile's ``file:/…`` path: cut the scheme and decode
+        # nothing — Hadoop prints a local name as it is on disk (a
+        # space stays a space, ``a%20b.pdf`` is those characters)
+        if path.startswith("file:"):
+            path = path[len("file:") :]
         with open(path, "rb") as fh:
             return fh.read()
 
@@ -336,8 +343,9 @@ class ArrowLakeFS(LakeFS):
 def get_fs(path: str, override: LakeFS | None = None) -> LakeFS:
     """Resolve the filesystem for ``path``: an injected override wins
     (the test / custom-adapter seam, mirroring the reference's
-    storage-adapter injection), URIs go through pyarrow, bare paths
-    stay on the stdlib fast path."""
+    storage-adapter injection), ``scheme://`` URIs go through pyarrow
+    (which percent-decodes them), bare paths and Spark's ``file:/…``
+    spelling stay on the stdlib fast path."""
     if override is not None:
         return override
     if "://" in path:

@@ -178,7 +178,10 @@ def _parse_value(data: bytes, i: int) -> tuple[Any, int]:
 
 
 class MiniPdf:
-    """Parsed PDF document: pages, fonts, positioned words, tables."""
+    """Parsed PDF document: pages, fonts, positioned words, tables.
+    The engine's real parser (``pdf_source.get_parser("minipdf")``):
+    ``MiniPdf(content)`` is a ``pdf_source.PdfDoc``, with
+    ``page_count``, ``metadata()`` and ``extract_page(n)``."""
 
     def __init__(self, content: bytes):
         if not content.startswith(b"%PDF"):
@@ -188,6 +191,7 @@ class MiniPdf:
         self._scan_objects()
         self._pages = self._collect_pages()
         self._word_cache: dict[int, list[dict]] = {}
+        self._vert_lines: list[float] | None = None
 
     # -- document structure -------------------------------------------------
 
@@ -618,6 +622,22 @@ class MiniPdf:
             "top": min(c["top"] for c in chars),
         }
 
+    def extract_page(self, page_num: int) -> list[list[str | None]]:
+        """The page's table, cut at the columns this document's page 1
+        header defines (``detect_vert_lines``, the reference's
+        pdf_parser.py:79-96 strategy). The layout is detected on the
+        first call and kept on the document, so each file is cut at
+        its own columns and detected once, however many pages are
+        read (the reference re-detects per extract call,
+        pdf_parser.py:58-60)."""
+        if self._vert_lines is None:
+            from dbm_nca_ph_etl_spark.sources.pdf_source import detect_vert_lines
+
+            self._vert_lines = detect_vert_lines(
+                self.extract_words(1), self.page_size(1)[0]
+            )
+        return self.extract_table(page_num, self._vert_lines)
+
     def extract_table(
         self,
         page_num: int,
@@ -671,55 +691,6 @@ class MiniPdf:
                 out_row.append(text if text else None)
             table.append(out_row)
         return table
-
-
-# ---------------------------------------------------------------------------
-# TableParser adapter
-# ---------------------------------------------------------------------------
-
-
-class MiniPdfParser:
-    """``TableParser`` over :class:`MiniPdf` — THE engine's real PDF
-    parser (per-file adaptive layout via ``detect_vert_lines`` +
-    ``LayoutCache``, the reference's pdf_parser.py:79-96 strategy),
-    which makes the REAL extraction path (S5/S6/S8/S9) testable in
-    this container against the reference's own fixture PDF."""
-
-    def __init__(self) -> None:
-        from dbm_nca_ph_etl_spark.sources.pdf_source import LayoutCache
-
-        self._layout_cache = LayoutCache()
-        self._doc_cache: dict[bytes, MiniPdf] = {}
-
-    def _doc(self, content: bytes) -> MiniPdf:
-        import hashlib
-
-        key = hashlib.md5(content).digest()
-        if key not in self._doc_cache:
-            while len(self._doc_cache) >= 4:
-                self._doc_cache.pop(next(iter(self._doc_cache)))
-            self._doc_cache[key] = MiniPdf(content)
-        return self._doc_cache[key]
-
-    def page_count(self, content: bytes) -> int:
-        return self._doc(content).page_count
-
-    def metadata(self, content: bytes) -> tuple[str | None, str | None]:
-        return self._doc(content).metadata()
-
-    def extract_page(
-        self, content: bytes, page_num: int
-    ) -> list[list[str | None]]:
-        from dbm_nca_ph_etl_spark.sources.pdf_source import detect_vert_lines
-
-        doc = self._doc(content)
-        vert_lines = self._layout_cache.get(
-            content,
-            lambda: detect_vert_lines(
-                doc.extract_words(1), doc.page_size(1)[0]
-            ),
-        )
-        return doc.extract_table(page_num, vert_lines)
 
 
 # ---------------------------------------------------------------------------

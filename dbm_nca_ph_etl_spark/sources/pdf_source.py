@@ -9,37 +9,71 @@ Reference parity (the extraction stage of the pipeline):
 - S6 page count         — pdf_parser.py:34-36
 - S7 page split         — pdf_parser.py:38-50 (dead code in the
   reference; here subsumed by per-page extraction)
+- S17 blob memo         — file_stream_memo_loader.py:13-26 (one read
+  per file per warm worker; here one read and one parse per file per
+  task)
 - T2 page-batch fan-out — release_batcher.py:14-46 via
   ``sources.releases.plan_page_batches``
 
 Architecture (Spark-first, NOT the reference's Lambda topology):
-``spark.read.format("binaryFile")`` (or any DataFrame carrying
-``(release_id, content: binary)``) → a page-count pass → explode into
-(release_id, page-range) batch rows → ``mapInPandas`` extraction,
-Arrow-batched, emitting the engine's line-ordered RAW_CELLS_SCHEMA
-``(release_id, page_num, row_idx, cells)``. Each batch row is one
-task-sized unit of work — Spark's scheduler replaces SQS fan-out, and
-``repartition`` on the batch rows spreads a skewed 10k-page PDF
-across the cluster exactly like the reference's 10-page Lambda
-batches (BATCH_SIZE=10, constants.py:9).
 
-The parser itself is pluggable (the reference's ``ParserProvider``
-Protocol, src/core/interfaces/parser.py:7-27):
+1. :func:`read_pdf_binaries` scans a lake directory with
+   ``spark.read.format("binaryFile")``: ``(path, …, content,
+   release_id)``, the release id being the file name.
+2. :func:`with_pdf_info` opens each blob once and adds
+   ``page_count`` and the file metadata (:func:`with_parse_status`,
+   the triage pass, shares its per-blob ``mapInPandas`` builder).
+3. :func:`extract_raw_cells_from_paths` takes ``(release_id, path,
+   page_count)``, explodes it into (release_id, page-range) batch rows
+   and extracts each batch in a ``mapInPandas`` task, emitting the
+   engine's line-ordered RAW_CELLS_SCHEMA ``(release_id, page_num,
+   row_idx, cells)``.
 
-- :class:`~dbm_nca_ph_etl_spark.sources.minipdf.MiniPdfParser` — the
-  real parser: a dependency-free stdlib PDF reader implementing the
-  reference's exact geometry (explicit vertical cuts from header-word
-  x0s + text-derived rows, :func:`pdfplumber_table_settings`),
-  golden-tested on the reference's own ``UPDATED_NCA.PDF`` fixture.
-- :class:`FakeTableParser` — deterministic parser of the engine's own
-  trivial ``FAKEPDF`` byte format, used by tests to exercise ALL the
+Scale: only paths cross the batch exchange — a 10 GB PDF in 100
+batches would move 1 TB through the shuffle if the bytes rode along.
+Each task re-reads its blobs through the lake seam
+(``sources.lakefs.get_fs(path).read_bytes``, the reference's Storage
+Protocol, src/core/interfaces/storage.py) — the same trade the
+reference makes per Lambda (handlers/worker.py:60-62) — and keeps a
+few opened documents, so the ~⌈pages/batch_size⌉ batches of one file
+landing in one task read and parse it once. Each batch row is one
+task-sized unit of work: Spark's scheduler replaces SQS fan-out, and
+the ``repartition`` on the batch rows spreads a skewed 10k-page PDF
+across the cluster like the reference's 10-page Lambda batches
+(BATCH_SIZE=10, constants.py:9).
+
+Failures are loud: a blob that does not parse fails the extraction
+job. The batch twin of the reference's DLQ redrive (T1) is triage:
+run :func:`with_parse_status` (a blob passes when it opens and every
+page extracts), send the failed rows to a quarantine table and
+extract the rest.
+
+The parser is pluggable (the reference's ``ParserProvider``
+Protocol, src/core/interfaces/parser.py:7-27), reshaped so a blob is
+parsed once: a parser is a callable ``parser(content)`` that returns
+a document with ``page_count``, ``metadata()`` and
+``extract_page(n)`` (:class:`PdfDoc`). :func:`get_parser` names the
+three:
+
+- ``"minipdf"`` —
+  :class:`~dbm_nca_ph_etl_spark.sources.minipdf.MiniPdf`, the real
+  parser: a dependency-free stdlib PDF reader implementing the
+  reference's exact geometry (explicit vertical cuts from
+  header-word x0s + text-derived rows,
+  :func:`pdfplumber_table_settings`), which detects its page-1
+  layout on its first ``extract_page``, so every file is cut at its
+  own columns; golden-tested on the reference's own
+  ``UPDATED_NCA.PDF`` fixture.
+- ``"fake"`` — :class:`FakeDoc`, the engine's own trivial
+  ``FAKEPDF`` byte format, used by tests to exercise ALL the
   Spark-side plumbing (schemas, page batching, Arrow batch shapes,
   order preservation) with zero native deps.
+- ``"auto"`` — :func:`sniff`, which picks one of the two per blob.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Protocol
+from typing import Callable, Iterable, Iterator, Protocol
 
 import pandas as pd
 
@@ -47,6 +81,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbm_nca_ph_etl_spark.nca.schemas import RAW_CELLS_SCHEMA, TABLE_COLUMNS
+from dbm_nca_ph_etl_spark.sources.lakefs import get_fs
 from dbm_nca_ph_etl_spark.sources.releases import (
     DEFAULT_BATCH_SIZE,
     plan_page_batches,
@@ -57,18 +92,23 @@ from dbm_nca_ph_etl_spark.sources.releases import (
 # -----------------------------------------------------------------------
 
 
-class TableParser(Protocol):
-    """The engine's ParserProvider (reference parser.py:7-27)."""
+class PdfDoc(Protocol):
+    """One opened blob."""
 
-    def page_count(self, content: bytes) -> int: ...
+    page_count: int
 
-    def metadata(self, content: bytes) -> tuple[str | None, str | None]:
+    def metadata(self) -> tuple[str | None, str | None]:
         """(created_at, modified_at) strings, None when absent."""
         ...
 
-    def extract_page(self, content: bytes, page_num: int) -> list[list[str | None]]:
+    def extract_page(self, page_num: int) -> list[list[str | None]]:
         """1-based page -> rows of nullable cell strings."""
         ...
+
+
+# The engine's ParserProvider (reference parser.py:7-27): parse a blob
+# once, then read it through the returned document.
+Parser = Callable[[bytes], PdfDoc]
 
 
 # Reference constants.py:12-22 — measured column x-positions of the
@@ -125,36 +165,6 @@ def detect_vert_lines(
     return vert_lines
 
 
-class LayoutCache:
-    """Per-FILE layout memo for parser instances reused across a task.
-
-    A ``mapInPandas`` extract function closes over ONE parser
-    instance, which then sees every PDF its task processes; caching
-    detection in an instance attribute (the round-2 bug) silently
-    applied the first file's column x-positions to all later files.
-    The reference re-detects on page 0 of EVERY extract call
-    (pdf_parser.py:58-60) — this cache keys by content digest so we
-    keep that per-file semantics while still detecting once per file
-    instead of once per page.
-    """
-
-    def __init__(self, max_entries: int = 8):
-        self._max = max_entries
-        self._layouts: dict[bytes, list[float]] = {}
-        self.detect_calls = 0  # test observability
-
-    def get(self, content: bytes, compute) -> list[float]:
-        import hashlib
-
-        key = hashlib.md5(content).digest()
-        if key not in self._layouts:
-            self.detect_calls += 1
-            self._layouts[key] = compute()
-            while len(self._layouts) > self._max:
-                self._layouts.pop(next(iter(self._layouts)))
-        return self._layouts[key]
-
-
 def pdfplumber_table_settings(vert_lines: list[float]) -> dict:
     """The exact ``extract_table`` settings the reference feeds
     pdfplumber (pdf_parser.py:58-66), kept as the EXTRACTION CONTRACT
@@ -195,25 +205,23 @@ def make_fake_pdf(
     return FAKE_MAGIC + header.encode() + body.encode()
 
 
-class FakeTableParser:
-    """Deterministic TableParser over the FAKEPDF format."""
+class FakeDoc:
+    """An opened FAKEPDF blob."""
 
-    def _pages(self, content: bytes) -> list[str]:
+    def __init__(self, content: bytes):
         if not content.startswith(FAKE_MAGIC):
             raise ValueError("not a FAKEPDF blob")
-        body = content[len(FAKE_MAGIC) :].decode()
-        return body.split("\n", 1)[1].split(_PAGE_SEP) if "\n" in body else []
+        meta, sep, body = content[len(FAKE_MAGIC) :].decode().partition("\n")
+        created, _, modified = meta.removeprefix("meta:").partition(",")
+        self._meta = created or None, modified or None
+        self._pages = body.split(_PAGE_SEP) if sep else []
+        self.page_count = len(self._pages)
 
-    def page_count(self, content: bytes) -> int:
-        return len(self._pages(content))
+    def metadata(self) -> tuple[str | None, str | None]:
+        return self._meta
 
-    def metadata(self, content: bytes) -> tuple[str | None, str | None]:
-        meta_line = content[len(FAKE_MAGIC) :].decode().split("\n", 1)[0]
-        created, _, modified = meta_line.removeprefix("meta:").partition(",")
-        return created or None, modified or None
-
-    def extract_page(self, content: bytes, page_num: int) -> list[list[str | None]]:
-        page = self._pages(content)[page_num - 1]
+    def extract_page(self, page_num: int) -> list[list[str | None]]:
+        page = self._pages[page_num - 1]
         if not page:
             return []
         return [
@@ -222,46 +230,28 @@ class FakeTableParser:
         ]
 
 
-class SniffingParser:
-    """Per-blob dispatch: FAKEPDF blobs → :class:`FakeTableParser`,
-    real ``%PDF`` blobs → the dependency-free
-    :class:`~dbm_nca_ph_etl_spark.sources.minipdf.MiniPdfParser`.
-    Lets one ``extract_raw_cells`` pass handle a mixed lake and makes
-    ``auto`` mode actually parse real PDFs in this container."""
+def sniff(content: bytes) -> PdfDoc:
+    """Per-blob dispatch: FAKEPDF blobs → :class:`FakeDoc`, real
+    ``%PDF`` blobs → the dependency-free
+    :class:`~dbm_nca_ph_etl_spark.sources.minipdf.MiniPdf`. Lets one
+    extraction handle a mixed lake."""
+    if content.startswith(FAKE_MAGIC):
+        return FakeDoc(content)
+    from dbm_nca_ph_etl_spark.sources.minipdf import MiniPdf
 
-    def __init__(self) -> None:
-        self._fake = FakeTableParser()
-        self._real: TableParser | None = None
-
-    def _for(self, content: bytes) -> TableParser:
-        if content.startswith(FAKE_MAGIC):
-            return self._fake
-        if self._real is None:
-            from dbm_nca_ph_etl_spark.sources.minipdf import MiniPdfParser
-
-            self._real = MiniPdfParser()
-        return self._real
-
-    def page_count(self, content: bytes) -> int:
-        return self._for(content).page_count(content)
-
-    def metadata(self, content: bytes) -> tuple[str | None, str | None]:
-        return self._for(content).metadata(content)
-
-    def extract_page(self, content: bytes, page_num: int) -> list[list[str | None]]:
-        return self._for(content).extract_page(content, page_num)
+    return MiniPdf(content)
 
 
-def get_parser(name: str = "auto") -> TableParser:
-    """'minipdf' | 'fake' | 'auto' (per-blob sniffing: FAKEPDF →
+def get_parser(name: str = "auto") -> Parser:
+    """'minipdf' | 'fake' | 'auto' (:func:`sniff`, per blob: FAKEPDF →
     fake; real PDFs → the stdlib-only minipdf extractor)."""
     if name == "fake":
-        return FakeTableParser()
+        return FakeDoc
     if name == "minipdf":
-        from dbm_nca_ph_etl_spark.sources.minipdf import MiniPdfParser
+        from dbm_nca_ph_etl_spark.sources.minipdf import MiniPdf
 
-        return MiniPdfParser()
-    return SniffingParser()
+        return MiniPdf
+    return sniff
 
 
 # -----------------------------------------------------------------------
@@ -269,7 +259,7 @@ def get_parser(name: str = "auto") -> TableParser:
 # -----------------------------------------------------------------------
 
 
-def read_pdf_binaries(spark, path_glob: str, release_id_from_name: bool = True) -> DataFrame:
+def read_pdf_binaries(spark, path_glob: str) -> DataFrame:
     """S3/S4 — scan a lake directory of PDFs as binary rows.
 
     ``binaryFile`` gives (path, modificationTime, length, content);
@@ -280,232 +270,108 @@ def read_pdf_binaries(spark, path_glob: str, release_id_from_name: bool = True) 
     rid = F.regexp_replace(
         F.element_at(F.split(F.col("path"), "/"), -1), r"\.[^.]*$", ""
     )
-    if release_id_from_name:
-        df = df.withColumn("release_id", rid)
-    return df
+    return df.withColumn("release_id", rid)
 
 
-def with_pdf_info(files: DataFrame, parser: TableParser) -> DataFrame:
-    """S5/S6 — add page_count + file metadata via one Arrow-batched
-    pass over the binary column (pdf_parser.py:23-36)."""
+def _per_blob(
+    files: DataFrame, columns: list[str], fn: Callable[[bytes], tuple]
+) -> DataFrame:
+    """``files`` without ``content``, plus the ``columns`` (DDL, e.g.
+    ``"page_count int"``) that ``fn`` returns for each blob, in one
+    Arrow-batched pass."""
+    names = [c.split()[0] for c in columns]
 
-    def info(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             out = b.drop(columns=["content"])
-            out["page_count"] = [parser.page_count(c) for c in b["content"]]
-            metas = [parser.metadata(c) for c in b["content"]]
-            out["file_meta_created_at"] = [m[0] for m in metas]
-            out["file_meta_modified_at"] = [m[1] for m in metas]
+            values = [fn(c) for c in b["content"]]
+            for i, name in enumerate(names):
+                out[name] = [v[i] for v in values]
             yield out
 
-    base = [f for f in files.schema.fields if f.name != "content"]
-    schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in base)
-        + ", page_count int, file_meta_created_at string, file_meta_modified_at string"
+    base = [
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in files.schema.fields
+        if f.name != "content"
+    ]
+    return files.mapInPandas(run, schema=", ".join(base + columns))
+
+
+def with_pdf_info(files: DataFrame, parser: Parser) -> DataFrame:
+    """S5/S6 — add page_count + file metadata, opening each blob once
+    (pdf_parser.py:23-36)."""
+
+    def info(content: bytes) -> tuple:
+        doc = parser(content)
+        return (doc.page_count, *doc.metadata())
+
+    return _per_blob(
+        files,
+        ["page_count int", "file_meta_created_at string", "file_meta_modified_at string"],
+        info,
     )
-    return files.mapInPandas(info, schema=schema)
 
 
-def with_parse_status(files: DataFrame, parser: TableParser) -> DataFrame:
-    """Triage scan: (release_id, parse_ok, parse_error) per blob.
+def with_parse_status(files: DataFrame, parser: Parser) -> DataFrame:
+    """Triage scan: (parse_ok, parse_error) per blob, beside its
+    other columns.
 
     The reference's failure route is per-Lambda: a worker that throws
     sends its batch to the DLQ for redrive (worker.py + SQS redrive
-    policy). The batch-engine twin is this cheap classification pass —
-    run it first, send the failed rows to a quarantine table (the DLQ),
-    and extract the ok rows with the default strict mode.
+    policy). The batch-engine twin is this classification pass — run
+    it first, send the failed rows to a quarantine table (the DLQ),
+    and extract the ok rows. A blob is ok when it opens and every
+    page extracts, so a corrupt page stream is quarantined too; the
+    pass costs one extraction of each blob.
     """
 
-    def status(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ok, err = [], []
-            for c in b["content"]:
-                try:
-                    parser.page_count(bytes(c))
-                    ok.append(True)
-                    err.append(None)
-                except Exception as e:  # noqa: BLE001 - classification pass
-                    ok.append(False)
-                    err.append(f"{type(e).__name__}: {e}")
-            out = b.drop(columns=["content"])
-            out["parse_ok"] = ok
-            out["parse_error"] = err
-            yield out
+    def status(content: bytes) -> tuple:
+        try:
+            doc = parser(content)
+            for page_num in range(1, doc.page_count + 1):
+                doc.extract_page(page_num)
+        except Exception as e:  # noqa: BLE001 - classification pass
+            return False, f"{type(e).__name__}: {e}"
+        return True, None
 
-    base = [f for f in files.schema.fields if f.name != "content"]
-    schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in base)
-        + ", parse_ok boolean, parse_error string"
-    )
-    return files.mapInPandas(status, schema=schema)
-
-
-def extract_raw_cells(
-    files: DataFrame,
-    parser: TableParser,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    on_error: str = "fail",
-) -> DataFrame:
-    """S8/T2 — (release_id, content) → line-ordered RAW_CELLS_SCHEMA.
-
-    Two-stage plan: a page-count pass, then explode into page-range
-    batch rows (the reference's SQS fan-out unit), repartitioned so a
-    single huge PDF spreads across executors, then per-batch
-    ``mapInPandas`` extraction. row_idx is the 0-based line index
-    within its page; document order is (page_num, row_idx) — the
-    engine's explicit-order convention (SURVEY §2.6 O5).
-
-    Scale note: ``content`` is duplicated per batch row through the
-    explode (same bytes the reference re-downloads per Lambda) —
-    fine for small in-memory blobs (tests, streaming payloads). For
-    lake deployments use :func:`extract_raw_cells_from_paths`, which
-    ships only paths through the shuffle and re-reads blobs
-    task-side.
-
-    ``on_error``: ``"fail"`` (default) propagates parser exceptions —
-    one corrupt blob fails the job, correctness-first; ``"skip"``
-    drops unparseable files (and pages that throw) silently — pair it
-    with :func:`with_parse_status` to quarantine the bad blobs first
-    (the reference's DLQ redrive, T1).
-    """
-    _check_on_error(on_error)
-    if "page_count" in files.columns:
-        # caller already ran the metadata pass (with_pdf_info) — don't
-        # parse every blob a second time just to count pages
-        with_count = files.select("release_id", "content", "page_count")
-    else:
-        with_count = files.select("release_id", "content").mapInPandas(
-            _page_count_fn(parser, on_error),
-            schema="release_id string, content binary, page_count int",
-        )
-    if on_error == "skip":
-        with_count = with_count.where(F.col("page_count") >= 0)
-    batches = plan_page_batches(with_count, batch_size=batch_size)
-    skip = on_error == "skip"
-
-    def extract(batches_iter: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches_iter:
-            out: list[tuple[str, int, int, list[str | None]]] = []
-            for rid, content, start, end in zip(
-                b["release_id"], b["content"], b["start_page_num"], b["end_page_num"]
-            ):
-                try:
-                    for page_num in range(int(start), int(end) + 1):
-                        for row_idx, cells in enumerate(
-                            parser.extract_page(bytes(content), page_num)
-                        ):
-                            out.append((rid, page_num, row_idx, cells))
-                except Exception:  # noqa: BLE001
-                    if not skip:
-                        raise
-            yield pd.DataFrame(
-                out, columns=["release_id", "page_num", "row_idx", "cells"]
-            )
-
-    return (
-        batches.repartition("release_id", "batch_num")
-        .mapInPandas(extract, schema=RAW_CELLS_SCHEMA)
-    )
-
-
-def _check_on_error(on_error: str) -> None:
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-
-
-def _page_count_fn(parser: TableParser, on_error: str = "fail"):
-    def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            b = b.copy()
-            counts = []
-            for c in b["content"]:
-                try:
-                    counts.append(parser.page_count(bytes(c)))
-                except Exception:  # noqa: BLE001
-                    if on_error != "skip":
-                        raise
-                    counts.append(-1)  # sentinel: filtered out upstream
-            b["page_count"] = counts
-            yield b
-
-    return fn
-
-
-def local_file_loader(path: str) -> bytes:
-    """Default blob loader for :func:`extract_raw_cells_from_paths` —
-    handles the ``file:`` scheme ``binaryFile`` puts on local paths.
-    Swap in an object-store client for lake deployments (the
-    reference's Storage Protocol, src/core/interfaces/storage.py)."""
-    if path.startswith("file://"):
-        path = path[7:]
-    elif path.startswith("file:"):
-        path = path[5:]
-    with open(path, "rb") as f:
-        return f.read()
+    return _per_blob(files, ["parse_ok boolean", "parse_error string"], status)
 
 
 def extract_raw_cells_from_paths(
     files: DataFrame,
-    parser: TableParser,
+    parser: Parser,
     batch_size: int = DEFAULT_BATCH_SIZE,
-    loader=local_file_loader,
 ) -> DataFrame:
-    """S8/T2, path-loading variant — the 100 TB shape of
-    :func:`extract_raw_cells`.
+    """S8/T2 — ``(release_id, path, page_count)`` → line-ordered
+    RAW_CELLS_SCHEMA.
 
-    ``extract_raw_cells`` ships the PDF ``content`` bytes through the
-    batch explode + repartition exchange once per page-range row — a
-    10 GB PDF in 100 batches moves 1 TB through the shuffle. Here
-    batch rows carry only ``(release_id, path, page range)`` (bytes
-    per row, like the reference's SQS messages, release_batch.py:5-10)
-    and each task re-reads the blob from storage via ``loader`` — the
-    same trade the reference makes per Lambda (handlers/worker.py:
-    60-62). A per-task memo keeps the last few blobs so the ~⌈pages/
-    batch_size⌉ batches of one file landing in one task re-read it
-    once (the reference's FileBytesMemoLoader, S17,
-    file_stream_memo_loader.py:13-26).
-
-    Input needs (release_id, path) — ``read_pdf_binaries`` output
-    qualifies; ``content`` is pruned away (the plan test asserts no
-    binary column crosses the exchange).
+    The files explode into page-range batch rows (the reference's SQS
+    fan-out unit, release_batch.py:5-10), repartitioned so a single
+    huge PDF spreads across executors; each task reads a blob through
+    ``sources.lakefs`` and opens it with ``parser`` once, keeping the
+    last few documents it opened (S17). row_idx is the 0-based line
+    index within its page; document order is (page_num, row_idx) —
+    the engine's explicit-order convention (SURVEY §2.6 O5).
+    ``with_pdf_info`` output qualifies as input; its ``content`` is
+    pruned away, so no binary column crosses the exchange.
     """
-
-    def count_pages(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            b = b.copy()
-            b["page_count"] = [
-                parser.page_count(loader(p)) for p in b["path"]
-            ]
-            yield b
-
-    if "page_count" in files.columns:
-        with_count = files.select("release_id", "path", "page_count")
-    else:
-        with_count = files.select("release_id", "path").mapInPandas(
-            count_pages, schema="release_id string, path string, page_count int"
-        )
-    batches = plan_page_batches(with_count, batch_size=batch_size)
+    batches = plan_page_batches(
+        files.select("release_id", "path", "page_count"), batch_size=batch_size
+    )
 
     def extract(batches_iter: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, bytes] = {}
-
-        def blob(path: str) -> bytes:
-            if path not in memo:
-                while len(memo) >= 4:
-                    memo.pop(next(iter(memo)))
-                memo[path] = loader(path)
-            return memo[path]
-
+        docs: dict[str, PdfDoc] = {}
         for b in batches_iter:
             out: list[tuple[str, int, int, list[str | None]]] = []
             for rid, path, start, end in zip(
                 b["release_id"], b["path"], b["start_page_num"], b["end_page_num"]
             ):
-                content = blob(path)
+                if path not in docs:
+                    while len(docs) >= 4:
+                        docs.pop(next(iter(docs)))
+                    docs[path] = parser(get_fs(path).read_bytes(path))
                 for page_num in range(int(start), int(end) + 1):
-                    for row_idx, cells in enumerate(
-                        parser.extract_page(content, page_num)
-                    ):
+                    for row_idx, cells in enumerate(docs[path].extract_page(page_num)):
                         out.append((rid, page_num, row_idx, cells))
             yield pd.DataFrame(
                 out, columns=["release_id", "page_num", "row_idx", "cells"]

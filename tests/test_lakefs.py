@@ -56,6 +56,23 @@ class TestPosix:
         assert ArrowLakeFS().ls(uri, suffixes=(".pdf",)) == []
         assert ArrowLakeFS().ls(uri, suffixes=(".html",)) == [uri]
 
+    def test_file_scheme_spellings_read_the_same_bytes(self, tmp_path):
+        """A bare path, Spark's ``file:/…`` spelling (a binaryFile
+        scan's ``path`` column) and a ``file:///…`` URI read the same
+        bytes through get_fs. The ``file:/`` spelling stays on the
+        stdlib path, so a space or a ``%20`` in a name is read as it
+        is on disk."""
+        names = ("plain.pdf", "NCA 2024.pdf", "a%20b.pdf")
+        for name in names:
+            (tmp_path / name).write_bytes(name.encode())
+        for name in names:
+            bare = str(tmp_path / name)
+            for p in (bare, "file:" + bare):
+                assert isinstance(get_fs(p), PosixLakeFS)
+                assert get_fs(p).read_bytes(p) == name.encode()
+        uri = f"file://{tmp_path}/plain.pdf"
+        assert get_fs(uri).read_bytes(uri) == b"plain.pdf"
+
 
 class TestArrowUri:
     def test_roundtrip_over_file_uri(self, tmp_path):

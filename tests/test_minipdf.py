@@ -18,14 +18,15 @@ import os
 import pytest
 
 from dbm_nca_ph_etl_spark.nca.cleaner import clean_allocations, clean_records
-from dbm_nca_ph_etl_spark.sources.minipdf import MiniPdf, MiniPdfParser
+from dbm_nca_ph_etl_spark.sources.minipdf import MiniPdf
 from dbm_nca_ph_etl_spark.sources.pdf_source import (
     REFERENCE_VERT_LINES,
-    SniffingParser,
     detect_vert_lines,
-    extract_raw_cells,
+    extract_raw_cells_from_paths,
     get_parser,
     make_fake_pdf,
+    read_pdf_binaries,
+    sniff,
     with_pdf_info,
 )
 
@@ -40,6 +41,15 @@ pytestmark = pytest.mark.skipif(
 def pdf_bytes() -> bytes:
     with open(FIXTURE, "rb") as f:
         return f.read()
+
+
+def stage(spark, lake, blobs: dict, parser=None):
+    """Write ``{release_id: bytes}`` as ``<release_id>.pdf`` files into
+    ``lake`` and scan them as the extraction takes them."""
+    lake.mkdir(exist_ok=True)
+    for rid, blob in blobs.items():
+        (lake / f"{rid}.pdf").write_bytes(blob)
+    return with_pdf_info(read_pdf_binaries(spark, str(lake)), parser or sniff)
 
 
 # The full table of the fixture page, as pdfplumber's explicit-
@@ -95,7 +105,7 @@ class TestMiniPdfGolden:
         assert detected[8] == 1224.0 - 1
 
     def test_extract_table_golden(self, pdf_bytes):
-        assert MiniPdfParser().extract_page(pdf_bytes, 1) == GOLDEN_TABLE
+        assert MiniPdf(pdf_bytes).extract_page(1) == GOLDEN_TABLE
 
     def test_char_level_column_slicing(self, pdf_bytes):
         """The fixture kerns the purpose text directly after the
@@ -103,32 +113,38 @@ class TestMiniPdfGolden:
         char-level cell slicing separates '1,626,450.00' from 'To
         cover ...'. A word-level slicer glues them — this pins the
         regression."""
-        row = MiniPdfParser().extract_page(pdf_bytes, 1)[1]
+        row = MiniPdf(pdf_bytes).extract_page(1)[1]
         assert row[6] == "1,626,450.00"
         assert row[7].startswith("To cover")
 
-    def test_layout_detected_once_per_file(self, pdf_bytes):
-        p = MiniPdfParser()
-        p.extract_page(pdf_bytes, 1)
-        p.extract_page(pdf_bytes, 1)
-        assert p._layout_cache.detect_calls == 1
+    def test_layout_detected_once_per_file(self, pdf_bytes, monkeypatch):
+        from dbm_nca_ph_etl_spark.sources import pdf_source
+
+        calls = []
+
+        def counting(words, page_width):
+            calls.append(page_width)
+            return detect_vert_lines(words, page_width)
+
+        monkeypatch.setattr(pdf_source, "detect_vert_lines", counting)
+        doc = MiniPdf(pdf_bytes)
+        doc.extract_page(1)
+        doc.extract_page(1)
+        assert len(calls) == 1
 
 
 class TestRealPdfThroughSpark:
     """The real extraction path end-to-end on the cluster side:
-    binaryFile-shaped rows -> page-count pass -> batch fan-out ->
-    mapInPandas extract -> the cleaner."""
+    lake blob -> binaryFile scan -> page-count pass -> batch fan-out
+    -> mapInPandas extract -> the cleaner."""
 
-    def _files_df(self, spark, pdf_bytes):
-        return spark.createDataFrame(
-            [("UPDATED_NCA", bytearray(pdf_bytes))],
-            "release_id string, content binary",
-        )
+    def _files_df(self, spark, pdf_bytes, tmp_path):
+        return stage(spark, tmp_path / "lake", {"UPDATED_NCA": pdf_bytes})
 
-    def test_extract_raw_cells_real_pdf(self, spark, pdf_bytes):
+    def test_extract_raw_cells_real_pdf(self, spark, pdf_bytes, tmp_path):
         parser = get_parser("auto")
         rows = (
-            extract_raw_cells(self._files_df(spark, pdf_bytes), parser)
+            extract_raw_cells_from_paths(self._files_df(spark, pdf_bytes, tmp_path), parser)
             .orderBy("page_num", "row_idx")
             .collect()
         )
@@ -136,23 +152,18 @@ class TestRealPdfThroughSpark:
         assert [r.row_idx for r in rows] == [0, 1, 2, 3]
         assert all(r.release_id == "UPDATED_NCA" for r in rows)
 
-    def test_with_pdf_info_real_pdf(self, spark, pdf_bytes):
-        info = with_pdf_info(
-            self._files_df(spark, pdf_bytes), get_parser("auto")
-        ).collect()[0]
+    def test_with_pdf_info_real_pdf(self, spark, pdf_bytes, tmp_path):
+        info = self._files_df(spark, pdf_bytes, tmp_path).collect()[0]
         assert info.page_count == 1
         assert info.file_meta_created_at == "D:20260221090500+08'00'"
 
-    def test_mixed_lake_sniffing(self, spark, pdf_bytes):
+    def test_mixed_lake_sniffing(self, spark, pdf_bytes, tmp_path):
         """One extract pass over a lake holding both a real PDF and a
-        FAKEPDF blob — SniffingParser dispatches per blob."""
+        FAKEPDF blob — ``sniff`` dispatches per blob."""
         fake = make_fake_pdf([[["NCA-1", "x"], ["NCA-2", "y"]]])
-        files = spark.createDataFrame(
-            [("real", bytearray(pdf_bytes)), ("fake", bytearray(fake))],
-            "release_id string, content binary",
-        )
+        files = stage(spark, tmp_path / "lake", {"real": pdf_bytes, "fake": fake})
         rows = (
-            extract_raw_cells(files, SniffingParser())
+            extract_raw_cells_from_paths(files, sniff)
             .orderBy("release_id", "page_num", "row_idx")
             .collect()
         )
@@ -162,7 +173,7 @@ class TestRealPdfThroughSpark:
         assert by_rid["fake"] == [["NCA-1", "x"], ["NCA-2", "y"]]
         assert by_rid["real"] == GOLDEN_TABLE
 
-    def test_cleaner_on_real_release(self, spark, pdf_bytes):
+    def test_cleaner_on_real_release(self, spark, pdf_bytes, tmp_path):
         """Reference semantics on this fixture: the NCA NUMBER cell is
         empty on every row, forward-fill yields no key, and both
         cleaners drop keyless rows (pd_data_cleaner.py:31-33 dropna on
@@ -171,8 +182,8 @@ class TestRealPdfThroughSpark:
         is exactly SURVEY P5."""
         from dbm_nca_ph_etl_spark.nca.cleaner import promote_header
 
-        raw = extract_raw_cells(
-            self._files_df(spark, pdf_bytes), get_parser("auto")
+        raw = extract_raw_cells_from_paths(
+            self._files_df(spark, pdf_bytes, tmp_path), get_parser("auto")
         )
         named = promote_header(raw)
         assert clean_records(named).count() == 0
@@ -243,27 +254,21 @@ class TestWriterRoundTrip:
         assert by_text["B"]["x0"] == 130.0
         assert by_text["C"]["top"] < by_text["A"]["top"]  # 650 < 700 device-x
 
-    def test_spark_batching_over_real_format_pages(self, spark):
+    def test_spark_batching_over_real_format_pages(self, spark, tmp_path):
         """3-page real-format PDF through the page-batch fan-out
         (batch_size=2 -> batches [1-2], [3]) and mapInPandas extract."""
         from dbm_nca_ph_etl_spark.sources.releases import plan_page_batches
 
         pdf = self._three_page_pdf()
-        files = spark.createDataFrame(
-            [("R1", bytearray(pdf))], "release_id string, content binary"
-        )
         parser = get_parser("minipdf")
-        counted = spark.createDataFrame(
-            [("R1", bytearray(pdf), parser.page_count(pdf))],
-            "release_id string, content binary, page_count int",
-        )
-        batches = plan_page_batches(counted, batch_size=2).collect()
+        files = stage(spark, tmp_path / "lake", {"R1": pdf}, parser)
+        batches = plan_page_batches(files, batch_size=2).collect()
         assert [(b.batch_num, b.start_page_num, b.end_page_num) for b in batches] == [
             (1, 1, 2),
             (2, 3, 3),
         ]
         rows = (
-            extract_raw_cells(files, parser, batch_size=2)
+            extract_raw_cells_from_paths(files, parser, batch_size=2)
             .orderBy("page_num", "row_idx")
             .collect()
         )
@@ -323,62 +328,52 @@ class TestWriterParserProperty:
 
 
 class TestCorruptBlobs:
-    """One corrupt blob must not take down a lake-wide extract: the
-    triage pass classifies, skip mode extracts around it, and the
-    default strict mode still fails loudly."""
+    """One corrupt blob must not go unnoticed: the triage pass
+    classifies it, and any pass that opens it fails loudly."""
 
-    def _lake(self, spark, pdf_bytes):
-        good_fake = make_fake_pdf([[["NCA-7", "ok"]]])
-        corrupt = b"NOT A PDF AT ALL \x00\x01\x02"
-        return spark.createDataFrame(
-            [
-                ("real", bytearray(pdf_bytes)),
-                ("fake", bytearray(good_fake)),
-                ("bad", bytearray(corrupt)),
-            ],
-            "release_id string, content binary",
-        )
+    def _blobs(self, pdf_bytes):
+        return {
+            "real": pdf_bytes,
+            "fake": make_fake_pdf([[["NCA-7", "ok"]]]),
+            "bad": b"NOT A PDF AT ALL \x00\x01\x02",
+        }
 
     def test_parse_status_triage(self, spark, pdf_bytes):
         from dbm_nca_ph_etl_spark.sources.pdf_source import with_parse_status
 
+        lake = spark.createDataFrame(
+            [(rid, bytearray(blob)) for rid, blob in self._blobs(pdf_bytes).items()],
+            "release_id string, content binary",
+        )
         rows = {
             r.release_id: r
-            for r in with_parse_status(
-                self._lake(spark, pdf_bytes), SniffingParser()
-            ).collect()
+            for r in with_parse_status(lake, sniff).collect()
         }
         assert rows["real"].parse_ok and rows["real"].parse_error is None
         assert rows["fake"].parse_ok
         assert not rows["bad"].parse_ok
         assert "ValueError" in rows["bad"].parse_error
 
-    def test_skip_mode_extracts_around_corruption(self, spark, pdf_bytes):
-        got = (
-            extract_raw_cells(
-                self._lake(spark, pdf_bytes), SniffingParser(), on_error="skip"
-            )
-            .select("release_id")
-            .distinct()
-            .collect()
-        )
-        assert {r.release_id for r in got} == {"real", "fake"}
-
-    def test_strict_mode_fails_loudly(self, spark, pdf_bytes):
+    def test_strict_mode_fails_loudly(self, spark, pdf_bytes, tmp_path):
         from py4j.protocol import Py4JJavaError
 
-        with pytest.raises(Exception) as ei:
-            extract_raw_cells(
-                self._lake(spark, pdf_bytes), SniffingParser()
-            ).collect()
-        assert "not a PDF" in str(ei.value) or isinstance(
-            ei.value, Py4JJavaError
-        )
-
-    def test_bad_on_error_value(self, spark, pdf_bytes):
-        with pytest.raises(ValueError):
-            extract_raw_cells(
-                self._lake(spark, pdf_bytes), SniffingParser(), on_error="zap"
+        lake = tmp_path / "lake"
+        lake.mkdir()
+        files = []
+        for rid, blob in self._blobs(pdf_bytes).items():
+            (lake / f"{rid}.pdf").write_bytes(blob)
+            files.append((rid, str(lake / f"{rid}.pdf"), 1))
+        for run in (
+            lambda: stage(spark, tmp_path / "lake", {}).collect(),
+            lambda: extract_raw_cells_from_paths(
+                spark.createDataFrame(files, "release_id string, path string, page_count int"),
+                sniff,
+            ).collect(),
+        ):
+            with pytest.raises(Exception) as ei:
+                run()
+            assert "not a PDF" in str(ei.value) or isinstance(
+                ei.value, Py4JJavaError
             )
 
 
@@ -401,8 +396,8 @@ def test_paths_variant_on_real_format_pdfs(spark, tmp_path):
                 ]
             )
         )
-        paths.append((rid, str(p)))
-    files = spark.createDataFrame(paths, "release_id string, path string")
+        paths.append((rid, str(p), 2))
+    files = spark.createDataFrame(paths, "release_id string, path string, page_count int")
     rows = (
         extract_raw_cells_from_paths(files, get_parser("minipdf"))
         .orderBy("release_id", "page_num", "row_idx")
@@ -454,9 +449,7 @@ def test_real_pdf_scrape_to_store_end_to_end(spark, tmp_path):
     pdf_path = tmp_path / "NCA_2026.pdf"
     pdf_path.write_bytes(write_simple_pdf([page], media_box=(1200, 792)))
 
-    files = spark.createDataFrame(
-        [("NCA_2026", str(pdf_path))], "release_id string, path string"
-    )
+    files = with_pdf_info(read_pdf_binaries(spark, str(pdf_path)), get_parser("auto"))
     raw = extract_raw_cells_from_paths(files, get_parser("auto"))
     named = promote_header(raw)
 
@@ -479,7 +472,7 @@ def test_real_pdf_scrape_to_store_end_to_end(spark, tmp_path):
 
 # NOTE (r9): the optional PdfplumberParser branch was removed — the
 # container never ships the library, so its parity test skipped
-# forever (the gate's standing "1 skipped"). MiniPdfParser is THE
+# forever (the gate's standing "1 skipped"). MiniPdf is THE
 # real parser, golden-pinned above to the same fixture geometry the
 # reference measured with pdfplumber; pdfplumber_table_settings in
 # sources/pdf_source.py stays as the documented extraction contract.

@@ -190,3 +190,27 @@ def test_fingerprints_are_current(built):
         + "; ".join(f"{k}: {' '.join(v)}" for k, v in stale.items() if v)
         + "); regenerate it with `python tools/dump_plans.py`"
     )
+
+
+def test_registered_udtf_body_is_fingerprinted(spark, built, monkeypatch):
+    """SQL calls a registered Python UDTF by name, so its class body is
+    in no plan text: ``udtf_kv_explode`` must hash differently when
+    ``parse_kv`` is registered as a different class."""
+    from pyspark.sql.functions import udtf
+
+    from dbm_nca_ph_etl_spark.functions import table_functions
+
+    @udtf(returnType="key string, value string", useArrow=True)
+    class ParseKvFirstPairOnly:
+        def eval(self, s: str):
+            k, sep, v = (s or "").split(";")[0].partition("=")
+            if sep and k:
+                yield (k, v)
+
+    monkeypatch.setattr(table_functions, "ParseKv", ParseKvFirstPairOnly)
+    try:
+        other = build_catalog(spark, ["udtf_kv_explode"])
+    finally:
+        monkeypatch.undo()
+        table_functions.register_table_functions(spark)
+    assert other["udtf_kv_explode"].digest != built["udtf_kv_explode"].digest

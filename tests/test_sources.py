@@ -7,16 +7,17 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from dbm_nca_ph_etl_spark.nca import clean_raw_rows, promote_header
 from dbm_nca_ph_etl_spark.sources.pdf_source import (
     REFERENCE_VERT_LINES,
-    FakeTableParser,
-    LayoutCache,
+    FakeDoc,
     detect_vert_lines,
-    extract_raw_cells,
+    extract_raw_cells_from_paths,
     get_parser,
     make_fake_pdf,
+    read_pdf_binaries,
     with_pdf_info,
 )
 from dbm_nca_ph_etl_spark.sources.releases import (
@@ -33,6 +34,21 @@ LINKS = [
     ("not NCA", "https://dbm.gov.example/releases/budget_2024.pdf"),
     ("lowercase ok", "https://dbm.gov.example/r/nca_2025.pdf"),
 ]
+
+
+def stage_pdfs(spark, lake, blobs: dict, parser=None):
+    """Write ``{file name: bytes}`` into the directory ``lake`` and scan
+    it as the extraction takes it: read_pdf_binaries → with_pdf_info."""
+    lake.mkdir(exist_ok=True)
+    for name, blob in blobs.items():
+        (lake / name).write_bytes(blob)
+    return with_pdf_info(read_pdf_binaries(spark, str(lake)), parser or FakeDoc)
+
+
+def raw_rows(df):
+    return sorted(
+        (r.release_id, r.page_num, r.row_idx, list(r.cells)) for r in df.collect()
+    )
 
 
 def links_df(spark):
@@ -92,40 +108,41 @@ PAGE2 = [
 class TestFakePdf:
     def test_roundtrip(self):
         blob = make_fake_pdf([PAGE1, PAGE2], created_at="D:2024", modified_at="D:2025")
-        p = FakeTableParser()
-        assert p.page_count(blob) == 2
-        assert p.metadata(blob) == ("D:2024", "D:2025")
-        assert p.extract_page(blob, 1) == PAGE1
-        assert p.extract_page(blob, 2) == PAGE2
+        doc = FakeDoc(blob)
+        assert doc.page_count == 2
+        assert doc.metadata() == ("D:2024", "D:2025")
+        assert doc.extract_page(1) == PAGE1
+        assert doc.extract_page(2) == PAGE2
 
     def test_get_parser_sniffs_per_blob(self):
-        # auto dispatches per blob: FAKEPDF -> fake codec; real %PDF
-        # -> pdfplumber when installed, else the stdlib minipdf
-        from dbm_nca_ph_etl_spark.sources.minipdf import MiniPdfParser
-        from dbm_nca_ph_etl_spark.sources.pdf_source import SniffingParser
+        # auto dispatches per blob, once, when it opens it: FAKEPDF ->
+        # the fake codec; real %PDF -> the stdlib minipdf document
+        from dbm_nca_ph_etl_spark.sources.minipdf import MiniPdf, write_simple_pdf
 
         p = get_parser("auto")
-        assert isinstance(p, SniffingParser)
-        fake_blob = make_fake_pdf([[["a"]]])
-        assert isinstance(p._for(fake_blob), FakeTableParser)
-        assert p.page_count(fake_blob) == 1
-        assert isinstance(get_parser("minipdf"), MiniPdfParser)
+        fake = p(make_fake_pdf([[["a"]]]))
+        assert isinstance(fake, FakeDoc) and fake.page_count == 1
+        real = p(write_simple_pdf([[(50, 700, 12, "a")], [(50, 700, 12, "b")]]))
+        assert isinstance(real, MiniPdf) and real.page_count == 2
+        assert get_parser("minipdf") is MiniPdf and get_parser("fake") is FakeDoc
 
 
 class TestExtractRawCells:
-    def files(self, spark):
-        rows = [
-            Row(release_id="id_2024", content=make_fake_pdf([PAGE1, PAGE2])),
-            Row(release_id="id_2025", content=make_fake_pdf([[["only", "row"]]])),
-        ]
-        return spark.createDataFrame(rows, "release_id string, content binary")
-
-    def test_order_and_content(self, spark):
-        out = extract_raw_cells(self.files(spark), FakeTableParser(), batch_size=1)
-        got = sorted(
-            (r.release_id, r.page_num, r.row_idx, list(r.cells)) for r in out.collect()
+    def files(self, spark, tmp_path):
+        return stage_pdfs(
+            spark,
+            tmp_path / "lake",
+            {
+                "id_2024.pdf": make_fake_pdf([PAGE1, PAGE2]),
+                "id_2025.pdf": make_fake_pdf([[["only", "row"]]]),
+            },
         )
-        assert got == [
+
+    def test_order_and_content(self, spark, tmp_path):
+        out = extract_raw_cells_from_paths(
+            self.files(spark, tmp_path), FakeDoc, batch_size=1
+        )
+        assert raw_rows(out) == [
             ("id_2024", 1, 0, PAGE1[0]),
             ("id_2024", 1, 1, PAGE1[1]),
             ("id_2024", 1, 2, PAGE1[2]),
@@ -133,24 +150,24 @@ class TestExtractRawCells:
             ("id_2025", 1, 0, [["only", "row"]][0]),
         ]
 
-    def test_with_pdf_info(self, spark):
-        out = with_pdf_info(
-            spark.createDataFrame(
-                [Row(release_id="x", content=make_fake_pdf([PAGE1], "c", "m"))],
-                "release_id string, content binary",
-            ),
-            FakeTableParser(),
-        ).collect()[0]
-        assert (out.page_count, out.file_meta_created_at, out.file_meta_modified_at) == (
-            1,
-            "c",
-            "m",
+    def test_with_pdf_info(self, spark, tmp_path):
+        info = stage_pdfs(
+            spark, tmp_path / "lake", {"x.pdf": make_fake_pdf([PAGE1], "c", "m")}
         )
+        assert "content" not in info.columns
+        out = info.collect()[0]
+        assert (
+            out.release_id,
+            out.page_count,
+            out.file_meta_created_at,
+            out.file_meta_modified_at,
+        ) == ("x", 1, "c", "m")
+        assert out.path.startswith("file:") and out.path.endswith("/x.pdf")
 
 
 class TestEndToEndIngestion:
-    def test_pdf_to_clean(self, spark):
-        """binary → raw cells → promote_header → cleaner: the whole
+    def test_pdf_to_clean(self, spark, tmp_path):
+        """lake blob → raw cells → promote_header → cleaner: the whole
         reference worker path (handlers/worker.py:48-117) in one plan."""
         doc = [
             [
@@ -162,11 +179,8 @@ class TestEndToEndIngestion:
             [None, None, None, None, None, None, None, None],
             [None, None, None, None, "AG-2", "OU-2", "2000", None],
         ]
-        files = spark.createDataFrame(
-            [Row(release_id="id_2024", content=make_fake_pdf([doc]))],
-            "release_id string, content binary",
-        )
-        cells = extract_raw_cells(files, FakeTableParser())
+        files = stage_pdfs(spark, tmp_path / "lake", {"id_2024.pdf": make_fake_pdf([doc])})
+        cells = extract_raw_cells_from_paths(files, FakeDoc)
         records, allocations = clean_raw_rows(promote_header(cells))
         rec = records.collect()
         assert len(rec) == 1 and rec[0].nca_number == "NCA-7"
@@ -289,30 +303,64 @@ class TestListingDataSource:
 
 
 def _layout_sensitive_parser():
-    """Fake parser mimicking MiniPdfParser's per-file adaptive
-    layout: 'detected layout' = first cell of the file's page-1
-    header row, memoized through the same LayoutCache, and every
-    emitted cell is tagged with the layout that was applied — so a
-    cross-file cache leak (the round-2 bug) shows up as a wrong tag.
-    (Class is defined locally so cloudpickle ships it by value to
-    Spark workers, which cannot import the test module.)
+    """Fake parser mimicking MiniPdf's per-file adaptive layout: each
+    opened document detects its 'layout' (the first cell of its
+    page-1 header row) on its first page read and tags every emitted
+    cell with ``<cell>@<layout>#<detections so far>`` — so a
+    cross-file leak (the round-2 bug) shows up as a wrong layout and
+    a per-page re-detection as a count above 1. ``detect_calls``
+    counts detections across the instance's documents. (Classes are
+    defined locally so cloudpickle ships them by value to Spark
+    workers, which cannot import the test module.)
     """
 
-    class _LayoutSensitiveParser(FakeTableParser):
-        def __init__(self):
-            self.cache = LayoutCache()
+    class _LayoutSensitiveDoc(FakeDoc):
+        def __init__(self, content, parser):
+            super().__init__(content)
+            self._parser, self._layout, self._detections = parser, None, 0
 
-        def extract_page(self, content, page_num):
-            content = bytes(content)
-            layout = self.cache.get(
-                content, lambda: FakeTableParser.extract_page(self, content, 1)[0][0]
-            )
-            rows = FakeTableParser.extract_page(self, content, page_num)
+        def extract_page(self, page_num):
+            if self._layout is None:
+                self._parser.detect_calls += 1
+                self._detections += 1
+                self._layout = FakeDoc.extract_page(self, 1)[0][0]
+            tag = f"{self._layout}#{self._detections}"
             return [
-                [None if c is None else f"{c}@{layout}" for c in row] for row in rows
+                [None if c is None else f"{c}@{tag}" for c in row]
+                for row in FakeDoc.extract_page(self, page_num)
             ]
 
+    class _LayoutSensitiveParser:
+        def __init__(self):
+            self.detect_calls = 0
+
+        def __call__(self, content):
+            return _LayoutSensitiveDoc(content, self)
+
     return _LayoutSensitiveParser()
+
+
+def _two_layout_pdfs():
+    """Two real-format PDFs whose page-1 headers put their columns in
+    different places: cut at A's columns, B's data row would merge
+    its type and amount cells."""
+    from dbm_nca_ph_etl_spark.sources.minipdf import write_simple_pdf
+
+    pdf_a = write_simple_pdf(
+        [
+            [(50, 700, 12, "NCA Number"), (150, 700, 12, "Amount"),
+             (50, 680, 12, "NCA-1"), (150, 680, 12, "10.00")],
+            [(50, 700, 12, "NCA-2"), (150, 700, 12, "20.00")],
+        ]
+    )
+    pdf_b = write_simple_pdf(
+        [
+            [(50, 700, 12, "NCA Number"), (200, 700, 12, "NCA Type"),
+             (300, 700, 12, "Amount"),
+             (50, 680, 12, "NCA-3"), (200, 680, 12, "TR"), (300, 680, 12, "30.00")],
+        ]
+    )
+    return pdf_a, pdf_b
 
 
 class TestAdaptiveLayout:
@@ -357,49 +405,61 @@ class TestAdaptiveLayout:
             "snap_y_tolerance": 3,
         }
 
-    def test_layout_cache_keys_by_content(self):
-        cache = LayoutCache(max_entries=2)
-        a = cache.get(b"file-a", lambda: [1.0])
-        b = cache.get(b"file-b", lambda: [2.0])
-        again = cache.get(b"file-a", lambda: [99.0])
-        assert (a, b, again) == ([1.0], [2.0], [1.0])
-        assert cache.detect_calls == 2
-        cache.get(b"file-c", lambda: [3.0])  # evicts the oldest entry
-        assert cache.get(b"file-a", lambda: [4.0]) == [4.0]
-        assert cache.detect_calls == 4
+    def test_layout_cache_keys_by_content(self, monkeypatch):
+        """The layout belongs to the opened blob: a real MiniPdf
+        document detects its page-1 columns on its first page read,
+        keeps them for its later pages, and a second file detects its
+        own."""
+        from dbm_nca_ph_etl_spark.sources import pdf_source
+
+        calls = []
+
+        def counting(words, page_width):
+            calls.append(page_width)
+            return detect_vert_lines(words, page_width)
+
+        monkeypatch.setattr(pdf_source, "detect_vert_lines", counting)
+        pdf_a, pdf_b = _two_layout_pdfs()
+        p = get_parser("minipdf")
+        a, b = p(pdf_a), p(pdf_b)
+        assert a.extract_page(1) == [["NCA Number", "Amount"], ["NCA-1", "10.00"]]
+        assert b.extract_page(1) == [
+            ["NCA Number", "NCA Type", "Amount"],
+            ["NCA-3", "TR", "30.00"],
+        ]
+        assert a.extract_page(2) == [["NCA-2", "20.00"]]
+        assert len(calls) == 2
 
     def test_one_parser_instance_two_files(self):
         """One parser instance (as closed over by a mapInPandas task)
         must apply each file's OWN layout — the round-2 instance-attr
         cache applied file A's layout to file B."""
         p = _layout_sensitive_parser()
-        pdf_a = make_fake_pdf([[["HA", "r1"], ["a", "b"]], [["a2", None]]])
-        pdf_b = make_fake_pdf([[["HB", "r1"], ["c", "d"]]])
-        assert p.extract_page(pdf_a, 1)[1][0] == "a@HA"
-        assert p.extract_page(pdf_b, 1)[1][0] == "c@HB"
-        assert p.extract_page(pdf_a, 2)[0][0] == "a2@HA"  # cached, not re-detected
-        assert p.extract_page(pdf_a, 2)[0][1] is None  # nulls untouched
-        assert p.cache.detect_calls == 2
+        a = p(make_fake_pdf([[["HA", "r1"], ["a", "b"]], [["a2", None]]]))
+        b = p(make_fake_pdf([[["HB", "r1"], ["c", "d"]]]))
+        assert a.extract_page(1)[1][0] == "a@HA#1"
+        assert b.extract_page(1)[1][0] == "c@HB#1"
+        assert a.extract_page(2)[0][0] == "a2@HA#1"  # kept, not re-detected
+        assert a.extract_page(2)[0][1] is None  # nulls untouched
+        assert p.detect_calls == 2
 
-    def test_extract_raw_cells_per_file_layouts(self, spark):
-        files = spark.createDataFrame(
-            [
-                Row(
-                    release_id="id_a",
-                    content=make_fake_pdf([[["HA", "x"], ["1", "2"]], [["3", "4"]]]),
-                ),
-                Row(release_id="id_b", content=make_fake_pdf([[["HB", "y"], ["5", "6"]]])),
-            ],
-            "release_id string, content binary",
+    def test_extract_raw_cells_per_file_layouts(self, spark, tmp_path):
+        files = stage_pdfs(
+            spark,
+            tmp_path / "lake",
+            {
+                "id_a.pdf": make_fake_pdf([[["HA", "x"], ["1", "2"]], [["3", "4"]]]),
+                "id_b.pdf": make_fake_pdf([[["HB", "y"], ["5", "6"]]]),
+            },
         ).coalesce(1)
-        out = extract_raw_cells(files, _layout_sensitive_parser(), batch_size=1)
+        out = extract_raw_cells_from_paths(files, _layout_sensitive_parser(), batch_size=1)
         tags = {
             (r.release_id, r.page_num, r.row_idx): [c for c in r.cells]
             for r in out.collect()
         }
-        assert tags[("id_a", 1, 1)] == ["1@HA", "2@HA"]
-        assert tags[("id_a", 2, 0)] == ["3@HA", "4@HA"]
-        assert tags[("id_b", 1, 1)] == ["5@HB", "6@HB"]
+        assert tags[("id_a", 1, 1)] == ["1@HA#1", "2@HA#1"]
+        assert tags[("id_a", 2, 0)] == ["3@HA#1", "4@HA#1"]
+        assert tags[("id_b", 1, 1)] == ["5@HB#1", "6@HB#1"]
 
 
 class TestStageReleases:
@@ -434,7 +494,7 @@ class TestStageReleases:
 
         files = read_pdf_binaries(spark, dest)
         parsed = {
-            r.release_id: FakeTableParser().extract_page(bytes(r.content), 1)
+            r.release_id: FakeDoc(r.content).extract_page(1)
             for r in files.collect()
         }
         assert parsed == {
@@ -483,69 +543,142 @@ class TestExtractFromPaths:
     """Path-loading extract (the 100 TB shape): batch rows carry
     (release_id, path, page range); blobs re-read task-side."""
 
-    def _lake(self, spark, tmp_path):
-        lake = tmp_path / "pdf_lake"
-        lake.mkdir()
-        (lake / "id_2024.pdf").write_bytes(make_fake_pdf([PAGE1, PAGE2]))
-        (lake / "id_2025.pdf").write_bytes(make_fake_pdf([[["only", "row"]]]))
-        from dbm_nca_ph_etl_spark.sources.pdf_source import read_pdf_binaries
-
-        return read_pdf_binaries(spark, str(lake))
+    BLOBS = {
+        "id_2024.pdf": make_fake_pdf([PAGE1, PAGE2]),
+        "id_2025.pdf": make_fake_pdf([[["only", "row"]]]),
+    }
 
     def test_matches_bytes_variant(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sources.pdf_source import (
-            extract_raw_cells_from_paths,
-        )
-
-        files = self._lake(spark, tmp_path)
-        by_path = extract_raw_cells_from_paths(
-            files, FakeTableParser(), batch_size=1
-        )
-        by_bytes = extract_raw_cells(
-            files.select("release_id", "content"), FakeTableParser(), batch_size=1
-        )
-        key = lambda r: (r.release_id, r.page_num, r.row_idx, list(r.cells))
-        assert sorted(map(key, by_path.collect())) == sorted(
-            map(key, by_bytes.collect())
-        )
+        """The extraction equals a plain-Python loop of
+        ``doc.extract_page`` over the same files."""
+        files = stage_pdfs(spark, tmp_path / "lake", self.BLOBS)
+        by_spark = extract_raw_cells_from_paths(files, FakeDoc, batch_size=1)
+        by_loop = []
+        for name, blob in self.BLOBS.items():
+            doc = FakeDoc(blob)
+            for page_num in range(1, doc.page_count + 1):
+                for row_idx, cells in enumerate(doc.extract_page(page_num)):
+                    by_loop.append((name[: -len(".pdf")], page_num, row_idx, cells))
+        assert raw_rows(by_spark) == sorted(by_loop)
 
     def test_no_binary_crosses_the_exchange(self, spark, tmp_path):
         """The whole point: the executed plan must never carry the
         PDF content column — only (release_id, path, page range)
-        rows move through the shuffle."""
-        from dbm_nca_ph_etl_spark.sources.pdf_source import (
-            extract_raw_cells_from_paths,
+        rows move through the shuffle. The input is a binaryFile scan
+        that still has ``content``, so the extraction itself must
+        prune it out of the scan."""
+        info = stage_pdfs(spark, tmp_path / "lake", self.BLOBS)
+        files = read_pdf_binaries(spark, str(tmp_path / "lake")).withColumn(
+            "page_count", F.lit(1)
         )
-
-        out = extract_raw_cells_from_paths(
-            self._lake(spark, tmp_path), FakeTableParser(), batch_size=1
-        )
+        assert "content" in files.columns
+        out = extract_raw_cells_from_paths(files, FakeDoc, batch_size=1)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" in plan  # the batch repartition is there
         assert "content" not in plan  # ...but the binary column never is
+        first_pages = [r for r in raw_rows(extract_raw_cells_from_paths(info, FakeDoc))
+                       if r[1] == 1]
+        assert raw_rows(out) == first_pages
+
+    def test_odd_file_names_read_through_the_seam(self, spark, tmp_path):
+        """binaryFile prints a space as it is and keeps ``%20`` as three
+        characters; the task-side read must open exactly those files
+        (a URI parser rejects the space and decodes ``%20``)."""
+        blobs = {"a": make_fake_pdf([PAGE1, PAGE2], "c1", "m1"),
+                 "b": make_fake_pdf([[["only", "row"]]], "c2", None)}
+        names = {"a": ("NCA 2024", "plain_a"), "b": ("a%20b", "plain_b")}
+        odd = stage_pdfs(
+            spark, tmp_path / "odd", {f"{names[k][0]}.pdf": v for k, v in blobs.items()}
+        )
+        plain = stage_pdfs(
+            spark, tmp_path / "plain", {f"{names[k][1]}.pdf": v for k, v in blobs.items()}
+        )
+        to_plain = {o: p for o, p in names.values()}
+
+        def info(df, rename=lambda rid: rid):
+            return sorted(
+                (rename(r.release_id), r.page_count, r.file_meta_created_at,
+                 r.file_meta_modified_at)
+                for r in df.collect()
+            )
+
+        assert info(odd, to_plain.get) == info(plain)
+        got = [
+            (to_plain[rid], *rest)
+            for rid, *rest in raw_rows(extract_raw_cells_from_paths(odd, FakeDoc))
+        ]
+        want = raw_rows(extract_raw_cells_from_paths(plain, FakeDoc))
+        assert sorted(got) == want and len(want) == 5
 
 
 class TestPageCountReuse:
-    def test_precounted_files_skip_reparse(self, spark):
-        """A files frame that already carries page_count (with_pdf_info
-        output) must not be re-parsed for counting — the parser sees
-        each blob only during extraction."""
+    def test_precounted_files_skip_reparse(self, spark, tmp_path):
+        """Extraction takes the page count from its input (with_pdf_info
+        output) and never asks a document for it again — the parser
+        opens each blob only to read its pages."""
 
         def refusing_parser():
-            # raises if the count path runs at all — executor-side, so
-            # any re-parse fails the whole job, not just an assertion
-            class P(FakeTableParser):
-                def page_count(self, content):
-                    raise AssertionError("page_count re-parsed a pre-counted file")
+            # raises if anything reads page_count — executor-side, so
+            # any re-count fails the whole job, not just an assertion
+            class Doc(FakeDoc):
+                def __getattribute__(self, name):
+                    if name == "page_count":
+                        raise AssertionError("page_count re-read on a pre-counted file")
+                    return super().__getattribute__(name)
 
-            return P()
+            return Doc
 
+        lake = tmp_path / "lake"
+        lake.mkdir()
+        (lake / "id_1.pdf").write_bytes(make_fake_pdf([PAGE1, PAGE2]))
         files = spark.createDataFrame(
-            [Row(release_id="id_1", content=make_fake_pdf([PAGE1, PAGE2]), page_count=2)],
-            "release_id string, content binary, page_count int",
+            [Row(release_id="id_1", path=str(lake / "id_1.pdf"), page_count=2)]
         )
-        out = extract_raw_cells(files, refusing_parser(), batch_size=1)
+        out = extract_raw_cells_from_paths(files, refusing_parser(), batch_size=1)
         assert out.count() == 4  # 3 rows page1 + 1 row page2
+
+
+class TestParseStatus:
+    def test_page_failure_is_quarantined(self, spark, tmp_path):
+        """Triage passes a blob only when it opens AND every page
+        extracts: a real PDF whose page-2 content stream is corrupt
+        opens (its page count is read) but must be quarantined, so
+        extracting the ok rows succeeds."""
+        from dbm_nca_ph_etl_spark.sources.minipdf import write_simple_pdf
+        from dbm_nca_ph_etl_spark.sources.pdf_source import with_parse_status
+
+        good = write_simple_pdf([[(50, 700, 12, "a")], [(50, 700, 12, "b")]])
+        body = b"BT /F1 12 Tf 1 0 0 1 50 700 Tm (b) Tj ET"
+        broken = b"BT /F1 12 Tf 1 0 0 1 50 700 Tm <zz> Tj ET"
+        bad_page = good.replace(
+            b"<</Length %d>>\nstream\n%s" % (len(body), body),
+            b"<</Length %d>>\nstream\n%s" % (len(broken), broken),
+        )
+        assert bad_page != good and get_parser("minipdf")(bad_page).page_count == 2
+        lake = tmp_path / "lake"
+        lake.mkdir()
+        for name, blob in {
+            "good": good,
+            "bad_page": bad_page,
+            "fake": make_fake_pdf([PAGE1]),
+            "not_pdf": b"NOT A PDF",
+        }.items():
+            (lake / f"{name}.pdf").write_bytes(blob)
+        status = with_parse_status(read_pdf_binaries(spark, str(lake)), get_parser("auto"))
+        rows = {r.release_id: r for r in status.collect()}
+        assert {k for k, r in rows.items() if r.parse_ok} == {"good", "fake"}
+        assert rows["bad_page"].parse_error.startswith("ValueError")
+        assert rows["not_pdf"].parse_error.startswith("ValueError")
+        assert rows["good"].parse_error is None
+        ok = status.where("parse_ok").select("path").collect()
+        files = with_pdf_info(
+            read_pdf_binaries(spark, str(lake)).where(
+                F.col("path").isin([r.path for r in ok])
+            ),
+            get_parser("auto"),
+        )
+        got = raw_rows(extract_raw_cells_from_paths(files, get_parser("auto")))
+        assert [r[:2] for r in got] == [("fake", 1)] * 3 + [("good", 1), ("good", 2)]
 
 
 class TestQueueDataSink:

@@ -1,15 +1,17 @@
 """Pre-snapshot gate: run every verification layer, in order, and
 summarize. This is the one command to run before ending a round.
 
-    python tools/gate.py            # full: ~20 min
-    python tools/gate.py --quick    # skip sf0.1 + determinism: ~8 min
+    python tools/gate.py            # full: ~24 min
+    python tools/gate.py --quick    # skip sf0.1 + determinism: ~12 min
 
 Layers (each catches a class the others miss — SURVEY §5):
   1. pytest tests/                   unit/golden/property/topology
-  2. oracle_check @ sf0.01           driver-gate replica
-  3. oracle_check @ sf0.1            scale-dependent divergences
-  4. determinism_check @ sf0.01      partition-invariance
-  5. bench @ sf0.1                   one JSON line, sanity-parsed
+  2. pytest perfbench/tests          benchmark smoke: both workloads
+                                     end to end, store read-back
+  3. oracle_check @ sf0.01           driver-gate replica
+  4. oracle_check @ sf0.1            scale-dependent divergences
+  5. determinism_check @ sf0.01      partition-invariance
+  6. bench @ sf0.1                   one JSON line, sanity-parsed
 """
 
 from __future__ import annotations
@@ -40,6 +42,7 @@ def main() -> int:
     py = sys.executable
     steps = [
         ("pytest", [py, "-m", "pytest", "tests/", "-q", "--tb=line"]),
+        ("perfbench smoke", [py, "-m", "pytest", "perfbench/tests", "-q"]),
         ("oracle@sf0.01", [py, "tools/oracle_check.py", "/root/testdata/sf0.01"]),
     ]
     if not quick:
