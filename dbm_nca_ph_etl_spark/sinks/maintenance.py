@@ -13,17 +13,13 @@ from __future__ import annotations
 
 import math
 import os
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbm_nca_ph_etl_spark.sources.lakefs import local_path
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # one HDFS-ish block per file
-
-
-def _local_path(uri: str) -> str:
-    p = urlparse(uri)
-    return p.path if p.scheme in ("file", "") else uri
 
 
 def compact_parquet(
@@ -50,7 +46,7 @@ def compact_parquet(
     """
     df = spark.read.parquet(src_path)
     files = df.inputFiles()
-    total = sum(os.path.getsize(_local_path(f)) for f in files)
+    total = sum(os.path.getsize(local_path(f)) for f in files)
     n_out = max(1, math.ceil(total / target_file_bytes))
     df.repartition(n_out).write.mode("error").parquet(dst_path)
     return n_out

@@ -30,9 +30,12 @@ MERGE INTO on a real deployment.
 
 Persistence (:class:`MaterializedAgg`) uses versioned snapshot
 directories, ``v{n:06d}_b{batch_id}``: the merge writes the next
-version to a temp dir and renames it into place, so the data and the
-"batch applied" fact (encoded in the dirname) commit atomically —
-a replayed batch is detected from the directory listing and skipped,
+version under its final name and then PUTs a ``_COMMITTED`` marker
+into it, so the data and the "batch applied" fact (encoded in the
+dirname) commit atomically with one single-object write, on POSIX
+and object stores alike (every call goes through the
+``sources/lakefs`` seam) — a replayed batch is detected from the
+committed versions and skipped,
 giving exactly-once view state over an at-least-once feed (same T6
 contract as NCAStore.load_batch, sinks/merge.py).
 
@@ -45,10 +48,7 @@ direct one-shot aggregate.
 from __future__ import annotations
 
 import math
-import os
 import re
-import shutil
-import uuid
 from dataclasses import dataclass
 from typing import Sequence
 
@@ -664,6 +664,10 @@ def derived_distinct(hll_col: str) -> Column:
 _VERSION_RE = re.compile(r"^v(\d{6})_b(.+)$")
 
 
+def _version_match(d: str) -> re.Match | None:
+    return _VERSION_RE.match(d.rstrip("/").rsplit("/", 1)[-1])
+
+
 class MaterializedAgg:
     """A persisted incrementally-maintained aggregate table.
 
@@ -674,8 +678,15 @@ class MaterializedAgg:
     horizon (a queue's max redelivery window is typically minutes;
     two refresh cycles is already generous — raise it if not).
 
+    One commit protocol on every adapter, POSIX included: a version
+    dir counts once its ``_COMMITTED`` marker exists, and every
+    listing, marker PUT and GC goes through the ``sources/lakefs``
+    seam, so a bare path and its ``file:/…`` spelling are one view.
+    A refresh that dies before its marker leaves an invisible
+    version dir, which a later refresh's prune deletes.
+
     Refreshes serialize on the table's ``sinks/txlog.WriterLease``
-    with a fencing check before the commit point (the rename / the
+    with a fencing check before the commit point (the
     ``_COMMITTED`` marker PUT), so two concurrent refreshers cannot
     both read the same ``_versions()`` and commit two same-numbered
     versions whose folds silently shadow each other — the same
@@ -710,27 +721,15 @@ class MaterializedAgg:
 
     # -- version bookkeeping ------------------------------------------------
     def _versions(self) -> list[tuple[int, str, str]]:
-        """Committed versions. Two commit protocols, chosen by the
-        filesystem (same split as merge._rewrite): with atomic
-        rename, directory PRESENCE is the commit (refresh renames a
-        tmp dir into its final name); without it (object stores),
-        the commit is a single-PUT ``_COMMITTED`` marker inside the
-        version dir, and an unmarked dir is an invisible orphan from
-        a crashed refresh — the batch replays into the same dirname
-        and converges."""
+        """Committed versions: a version dir is committed once its
+        single-PUT ``_COMMITTED`` marker exists. An unmarked dir is
+        an invisible orphan from a crashed or fenced refresh — the
+        batch replays into the same dirname and converges, and
+        ``_prune`` GCs the orphan once a later version commits."""
         f = get_fs(self.path, self.fs)
         out = []
-        if f.atomic_rename:
-            for d in os.listdir(self.path):
-                m = _VERSION_RE.match(d)
-                if m:
-                    out.append(
-                        (int(m.group(1)), m.group(2), os.path.join(self.path, d))
-                    )
-            return sorted(out)
         for d in f.ls_dirs(self.path):
-            name = d.rstrip("/").rsplit("/", 1)[-1]
-            m = _VERSION_RE.match(name)
+            m = _version_match(d)
             if m and f.exists(_pjoin(d, "_COMMITTED")):
                 out.append((int(m.group(1)), m.group(2), d))
         return sorted(out)
@@ -746,7 +745,7 @@ class MaterializedAgg:
     def refresh(self, batch: DataFrame, batch_id: str, retract: bool = False) -> bool:
         """Fold one batch into the view. Returns False (no-op) when
         ``batch_id`` was already applied — replay-idempotent because
-        the rename/marker below commits data + batch id atomically.
+        the marker PUT below commits data + batch id atomically.
         Lease-serialized and fenced (class docstring): raises
         :class:`CommitFenced`, committing nothing, when the lease is
         lost mid-fold."""
@@ -767,45 +766,24 @@ class MaterializedAgg:
             vs = self._versions()
             next_n = vs[-1][0] + 1 if vs else 0
             f = get_fs(self.path, self.fs)
-
-            def _fence() -> None:
+            final = _pjoin(self.path, f"v{next_n:06d}_b{batch_id}")
+            p.write.mode("overwrite").parquet(final)
+            if not lease.is_current():
                 # the fold above runs Spark jobs, easily longer than a
                 # lease TTL: a stolen lease means our base snapshot may
-                # already be shadowed — committing would fork history
-                if not lease.is_current():
-                    raise CommitFenced(
-                        f"lease on {self.path} lost mid-refresh of batch "
-                        f"{batch_id}; nothing committed, replay converges"
-                    )
-
-            if f.atomic_rename:
-                tmp = os.path.join(self.path, f".tmp-{uuid.uuid4().hex[:8]}")
-                p.write.mode("overwrite").parquet(tmp)
-                try:
-                    _fence()
-                except CommitFenced:
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    raise
-                os.rename(tmp, os.path.join(self.path, f"v{next_n:06d}_b{batch_id}"))
-            else:
-                # object store: write the final-named dir, then the
-                # single-PUT marker IS the data+batch_id commit (an
-                # unmarked dir is an invisible orphan)
-                final = _pjoin(self.path, f"v{next_n:06d}_b{batch_id}")
-                p.write.mode("overwrite").parquet(final)
-                try:
-                    _fence()
-                except CommitFenced:
-                    # delete the fully-written uncommitted dir (the
-                    # POSIX branch rmtree's its tmp the same way):
-                    # replay computes a NEW version number under the
-                    # thief's history, so this dirname is never
-                    # reused and would otherwise leak a full
-                    # snapshot per fencing — _prune's orphan GC
-                    # backstops a crash inside this very cleanup
-                    f.delete_dir(final)
-                    raise
-                f.write_bytes(_pjoin(final, "_COMMITTED"), b"")
+                # already be shadowed — committing would fork history.
+                # Replay computes a NEW version number under the
+                # thief's history, so this dirname is never reused:
+                # delete it rather than leak a full snapshot per
+                # fencing (_prune's orphan GC backstops a crash inside
+                # this very cleanup)
+                f.delete_dir(final)
+                raise CommitFenced(
+                    f"lease on {self.path} lost mid-refresh of batch "
+                    f"{batch_id}; nothing committed, replay converges"
+                )
+            # the single-PUT marker IS the data+batch_id commit
+            f.write_bytes(_pjoin(final, "_COMMITTED"), b"")
             self._prune(keep=2)
             return True
         finally:
@@ -815,25 +793,24 @@ class MaterializedAgg:
         f = get_fs(self.path, self.fs)
         vs = self._versions()
         for _, _, d in vs[:-keep]:
-            f.delete_dir(d) if not f.atomic_rename else shutil.rmtree(d)
-        if not f.atomic_rename and vs:
-            # orphan GC: unmarked dirs (fenced/crashed refreshers that
-            # died before their cleanup) whose version number is BELOW
-            # the latest committed one can never be completed — a live
-            # refresher under the lease always writes at >= latest+1 —
-            # so they are dead snapshots, safe to delete. An unmarked
-            # dir AT/ABOVE the latest version may be a refresher
-            # mid-commit and is left alone.
-            latest = vs[-1][0]
-            for d in f.ls_dirs(self.path):
-                name = os.path.basename(d.rstrip("/"))
-                m = _VERSION_RE.match(name)
-                if (
-                    m
-                    and int(m.group(1)) < latest
-                    and not f.exists(_pjoin(self.path, name, "_COMMITTED"))
-                ):
-                    f.delete_dir(_pjoin(self.path, name))
+            f.delete_dir(d)
+        if not vs:
+            return
+        # orphan GC: unmarked dirs (fenced/crashed refreshers that
+        # died before their marker or their cleanup) whose version
+        # number is BELOW the latest committed one can never be
+        # completed — a live refresher under the lease always writes
+        # at >= latest+1 — so they are dead snapshots, safe to delete.
+        # An unmarked dir AT/ABOVE the latest version may be a
+        # refresher mid-commit and is left alone.
+        for d in f.ls_dirs(self.path):
+            m = _version_match(d)
+            if (
+                m
+                and int(m.group(1)) < vs[-1][0]
+                and not f.exists(_pjoin(d, "_COMMITTED"))
+            ):
+                f.delete_dir(d)
 
     # -- read ---------------------------------------------------------------
     def read_partials(self, version: int | None = None) -> DataFrame:

@@ -28,7 +28,9 @@ unsafe (read-under-write). Rewrites are published through the lake
 filesystem seam (``sources/lakefs``), which picks the commit
 protocol the store can actually honor:
 
-- POSIX-like (``atomic_rename=True``, the default for bare paths):
+- POSIX-like (``atomic_rename=True``, the default for bare paths
+  and Spark's ``file:/…`` spelling, both resolved to the on-disk
+  name by ``sources/lakefs.local_path`` before any ``os`` call):
   write to a fresh ``.tmp`` directory, then swap via two renames
   (``path → .old``, ``.tmp → path``). Each rename is atomic, but the
   PAIR is not: a crash between them strands the table in ``.old-*``.
@@ -87,7 +89,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-from dbm_nca_ph_etl_spark.sources.lakefs import LakeFS, get_fs
+from dbm_nca_ph_etl_spark.sources.lakefs import LakeFS, get_fs, local_path
 from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
 
 #: pointer file naming the live version dir (object-store layout)
@@ -118,9 +120,10 @@ def _stranded_old(path: str, f: LakeFS) -> str | None:
     that scans the stranded dir. Recovery is write-through instead —
     see the POSIX branch of ``_rewrite``.
     """
-    if not f.atomic_rename or os.path.exists(path):
+    local = local_path(path)
+    if not f.atomic_rename or os.path.exists(local):
         return None
-    parent, base = os.path.split(os.path.abspath(path))
+    parent, base = os.path.split(os.path.abspath(local))
     olds = sorted(
         (
             os.path.join(parent, n)
@@ -181,19 +184,20 @@ def _rewrite(df: DataFrame, path: str, fs: LakeFS | None = None) -> None:
         # between the renames) — multi-reader deployments should
         # pre-create _CURRENT to opt into the pointer layout, whose
         # flip is reader-atomic.
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+        local = local_path(path)
+        tmp = f"{local}.tmp-{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(tmp)
-        old = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
+        old = f"{local}.old-{uuid.uuid4().hex[:8]}"
+        if os.path.exists(local):
+            os.rename(local, old)
+        os.rename(tmp, local)
         if os.path.exists(old):
             shutil.rmtree(old)
         # GC strays from crashed earlier swaps: a `.tmp-*` never
         # renamed in (pre-commit garbage) or a `.old-*` not yet
         # rmtree'd (post-commit garbage). Safe under the layout's
         # single-writer contract; never touches `path` itself.
-        parent, base = os.path.split(os.path.abspath(path))
+        parent, base = os.path.split(os.path.abspath(local))
         for n in os.listdir(parent):
             full = os.path.join(parent, n)
             if full != tmp and (

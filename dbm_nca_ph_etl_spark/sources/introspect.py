@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbm_nca_ph_etl_spark.sources.lakefs import local_path
+
 FOOTER_SCHEMA = (
     "file string, row_group int, col string, n_values bigint, "
     "n_nulls bigint, vmin double, vmax double, vmin_str string, "
@@ -44,23 +46,12 @@ FOOTER_SCHEMA = (
 )
 
 
-def _local_path(uri: str) -> str:
-    # inputFiles() yields file:///p or file:/p URIs on POSIX lakes;
-    # object-store URIs (s3a://…) would be handled by the fetcher
-    # abstraction in sources/staging.py — footers there come via
-    # ranged GETs, same shape.
-    for prefix in ("file://", "file:"):
-        if uri.startswith(prefix):
-            return uri[len(prefix):]
-    return uri
-
-
 def _footer_rows(files: Iterable[str], columns: Sequence[str] | None):
     import pyarrow.parquet as pq
 
     want = set(columns) if columns is not None else None
     for uri in files:
-        md = pq.ParquetFile(_local_path(uri)).metadata
+        md = pq.ParquetFile(local_path(uri)).metadata
         for rg_idx in range(md.num_row_groups):
             rg = md.row_group(rg_idx)
             for ci in range(rg.num_columns):

@@ -1,5 +1,5 @@
-"""Lake filesystem seam — object-store-capable IO for the non-Spark
-file paths (listing discovery, PDF staging).
+"""Lake filesystem seam — object-store-capable IO for every file
+path the engine touches itself, and the one resolver of local paths.
 
 Reference parity: the reference isolates storage behind an adapter
 pair (``s3_storage.py:25-38`` S3 put/get vs ``local_storage.py:19-26``
@@ -8,7 +8,18 @@ Spark engine's driver/executor-side byte IO. Spark's own reads and
 writes (parquet, binaryFile, the DataSource formats) already resolve
 URIs through Hadoop — this seam exists for the places the engine
 touches bytes *itself*: enumerating listing snapshots, staging
-fetched PDFs into the lake.
+fetched PDFs into the lake, reading PDF blobs in extraction tasks,
+and every commit step of the sinks (markers, pointers, leases,
+version listings and GC).
+
+Local paths: :func:`local_path` is the only code that maps a local
+spelling (bare, Spark's ``file:/…``, ``file:///…``) to its on-disk
+name. ``PosixLakeFS`` resolves every argument through it, and the
+sinks' POSIX-only steps (``sinks/merge``'s rename swap, footer and
+file-size reads in ``sources/introspect`` / ``sinks/maintenance``,
+checkpoint identity in ``streaming/agg_stream``) call it rather
+than strip a scheme themselves, so one spelling means one directory
+everywhere.
 
 Why ``pyarrow.fs`` and not ``spark._jvm`` Hadoop: the JVM gateway is
 driver-only — a ``mapInPandas`` task on an executor has no py4j
@@ -19,8 +30,9 @@ where libhdfs is present, ``file://``), and its filesystem handles
 are picklable. Resolution is per-call from the path string, so
 nothing stateful ships task-to-task.
 
-The protocol is deliberately tiny (ls / read / write / exists /
-size / mkdirs) — exactly what the two call sites need, and small
+The protocol is deliberately small (ls / read / write / exists /
+size / mkdirs, plus the delete, directory-listing and
+compare-and-swap steps the sinks' commit protocols need), and small
 enough that tests inject an in-memory fake to prove the cluster
 claims without a real bucket.
 
@@ -35,8 +47,21 @@ from __future__ import annotations
 
 import os
 import posixpath
+import shutil
 import uuid
 from typing import Sequence
+
+
+def local_path(path: str) -> str:
+    """The on-disk name of a local lake path — the one place a local
+    spelling is resolved: ``file:///x`` and Spark's ``file:/x`` map
+    to ``/x``, a bare path maps to itself. Nothing is
+    percent-decoded: Hadoop prints a local name as it is on disk (a
+    space stays a space, ``a%20b.pdf`` is those characters)."""
+    for scheme in ("file://", "file:"):
+        if path.startswith(scheme):
+            return path[len(scheme):]
+    return path
 
 
 class LakeFS:
@@ -128,40 +153,37 @@ class LakeFS:
 
 
 class PosixLakeFS(LakeFS):
-    """Bare local paths — stdlib only, no pyarrow import cost. The
-    default for everything without a URI scheme (local mode, NFS).
-    :meth:`read_bytes` also takes Spark's ``file:/…`` spelling, the
-    ``path`` column of a ``binaryFile`` scan."""
+    """Local paths — stdlib only, no pyarrow import cost. The default
+    for everything without ``://`` (local mode, NFS): a bare path or
+    Spark's ``file:/…`` spelling, which every method resolves through
+    :func:`local_path`. Listings keep the caller's spelling."""
 
     atomic_cas = True  # O_CREAT|O_EXCL below
 
     def ls(self, path, suffixes=None):
-        if not os.path.isdir(path):
-            if os.path.isfile(path) and (
-                suffixes is None or path.lower().endswith(tuple(suffixes))
+        p = local_path(path)
+        if not os.path.isdir(p):
+            if os.path.isfile(p) and (
+                suffixes is None or p.lower().endswith(tuple(suffixes))
             ):
                 return [path]
             return []  # absent (or filtered-out single file): no phantoms
-        out = [
+        return sorted(
             os.path.join(path, f)
-            for f in os.listdir(path)
-            if suffixes is None or f.lower().endswith(tuple(suffixes))
-        ]
-        return sorted(p for p in out if os.path.isfile(p))
+            for f in os.listdir(p)
+            if (suffixes is None or f.lower().endswith(tuple(suffixes)))
+            and os.path.isfile(os.path.join(p, f))
+        )
 
     def is_dir(self, path):
-        return os.path.isdir(path)
+        return os.path.isdir(local_path(path))
 
     def read_bytes(self, path):
-        # binaryFile's ``file:/…`` path: cut the scheme and decode
-        # nothing — Hadoop prints a local name as it is on disk (a
-        # space stays a space, ``a%20b.pdf`` is those characters)
-        if path.startswith("file:"):
-            path = path[len("file:") :]
-        with open(path, "rb") as fh:
+        with open(local_path(path), "rb") as fh:
             return fh.read()
 
     def write_bytes(self, path, data):
+        path = local_path(path)
         tmp = f"{path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
         with open(tmp, "wb") as fh:
             fh.write(data)
@@ -170,7 +192,7 @@ class PosixLakeFS(LakeFS):
     def put_if_absent(self, path, data):
         # O_CREAT|O_EXCL — the kernel arbitrates the race
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            fd = os.open(local_path(path), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         except FileExistsError:
             return False
         with os.fdopen(fd, "wb") as fh:
@@ -179,31 +201,30 @@ class PosixLakeFS(LakeFS):
 
     def delete_file(self, path):
         try:
-            os.remove(path)
+            os.remove(local_path(path))
         except FileNotFoundError:
             pass
 
     def exists(self, path):
-        return os.path.exists(path)
+        return os.path.exists(local_path(path))
 
     def size(self, path):
-        return os.path.getsize(path)
+        return os.path.getsize(local_path(path))
 
     def mkdirs(self, path):
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(local_path(path), exist_ok=True)
 
     def delete_dir(self, path):
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(local_path(path), ignore_errors=True)
 
     def ls_dirs(self, path):
-        if not os.path.isdir(path):
+        p = local_path(path)
+        if not os.path.isdir(p):
             return []
         return sorted(
             os.path.join(path, d)
-            for d in os.listdir(path)
-            if os.path.isdir(os.path.join(path, d))
+            for d in os.listdir(p)
+            if os.path.isdir(os.path.join(p, d))
         )
 
 
@@ -222,36 +243,31 @@ class ArrowLakeFS(LakeFS):
     def atomic_rename(self):  # type: ignore[override]
         return False  # be conservative: assume object-store semantics
 
-    def ls(self, path, suffixes=None):
+    def _children(self, fsys, path, p, kind, suffixes=None):
+        """``(uri, size)`` of the children of type ``kind`` in the
+        directory ``p`` (``path`` resolved), sorted. Child URIs are
+        rebuilt RELATIVE to the input URI, not by re-attaching
+        scheme://authority to fi.path: for bucket-in-path stores
+        (s3://, gs://) from_uri returns paths that already contain the
+        bucket, so a scheme+authority prefix would double it
+        (s3://bucket/bucket/dir/file) and every later read of the
+        listing would 404. The suffix of fi.path past the resolved
+        base is scheme-independent."""
         from pyarrow import fs as pafs
 
-        fsys, p = self._resolve(path)
-        info = fsys.get_file_info(p)
-        if info.type == pafs.FileType.NotFound:
-            return []
-        if info.type != pafs.FileType.Directory:
-            if suffixes is not None and not p.lower().endswith(tuple(suffixes)):
-                return []
-            return [path]
-        sel = pafs.FileSelector(p, recursive=False)
-        # Rebuild child URIs RELATIVE to the input URI, not by
-        # re-attaching scheme://authority to fi.path: for
-        # bucket-in-path stores (s3://, gs://) from_uri returns paths
-        # that already contain the bucket, so a scheme+authority
-        # prefix would double it (s3://bucket/bucket/dir/file) and
-        # every later read of the listing would 404. The suffix of
-        # fi.path past the resolved base is scheme-independent.
-        base_uri = path.rstrip("/")
-        base_p = p.rstrip("/")
+        base_uri, base_p = path.rstrip("/"), p.rstrip("/")
         out = []
-        for fi in fsys.get_file_info(sel):
-            if fi.type != pafs.FileType.File:
-                continue
-            if suffixes is not None and not fi.path.lower().endswith(tuple(suffixes)):
+        for fi in fsys.get_file_info(pafs.FileSelector(p, recursive=False)):
+            if fi.type != kind or (
+                suffixes is not None and not fi.path.lower().endswith(tuple(suffixes))
+            ):
                 continue
             child = fi.path[len(base_p):] if fi.path.startswith(base_p) else fi.path
-            out.append(base_uri + "/" + child.lstrip("/"))
+            out.append((base_uri + "/" + child.lstrip("/"), fi.size))
         return sorted(out)
+
+    def ls(self, path, suffixes=None):
+        return [p for p, _ in self.ls_with_sizes(path, suffixes)]
 
     def is_dir(self, path):
         from pyarrow import fs as pafs
@@ -293,17 +309,7 @@ class ArrowLakeFS(LakeFS):
             if suffixes is not None and not p.lower().endswith(tuple(suffixes)):
                 return []
             return [(path, info.size)]
-        sel = pafs.FileSelector(p, recursive=False)
-        base_uri, base_p = path.rstrip("/"), p.rstrip("/")
-        out = []
-        for fi in fsys.get_file_info(sel):
-            if fi.type != pafs.FileType.File:
-                continue
-            if suffixes is not None and not fi.path.lower().endswith(tuple(suffixes)):
-                continue
-            child = fi.path[len(base_p):] if fi.path.startswith(base_p) else fi.path
-            out.append((base_uri + "/" + child.lstrip("/"), fi.size))
-        return sorted(out)
+        return self._children(fsys, path, p, pafs.FileType.File, suffixes)
 
     def mkdirs(self, path):
         fsys, p = self._resolve(path)
@@ -329,15 +335,7 @@ class ArrowLakeFS(LakeFS):
         fsys, p = self._resolve(path)
         if fsys.get_file_info(p).type != pafs.FileType.Directory:
             return []
-        sel = pafs.FileSelector(p, recursive=False)
-        base_uri, base_p = path.rstrip("/"), p.rstrip("/")
-        out = []
-        for fi in fsys.get_file_info(sel):
-            if fi.type != pafs.FileType.Directory:
-                continue
-            child = fi.path[len(base_p):] if fi.path.startswith(base_p) else fi.path
-            out.append(base_uri + "/" + child.lstrip("/"))
-        return sorted(out)
+        return [u for u, _ in self._children(fsys, path, p, pafs.FileType.Directory)]
 
 
 def get_fs(path: str, override: LakeFS | None = None) -> LakeFS:

@@ -11,8 +11,8 @@ Exactly-once composition, two independent layers:
 - the checkpoint gives at-least-once epoch delivery with stable
   epoch ids across restarts;
 - ``MaterializedAgg.refresh`` is replay-idempotent on the epoch id
-  (the version rename commits data + "epoch applied" atomically),
-  so a re-delivered epoch is a no-op.
+  (the version's ``_COMMITTED`` marker commits data + "epoch
+  applied" atomically), so a re-delivered epoch is a no-op.
 
 Together: exactly-once view state with no distributed transaction —
 the same T6 at-least-once + idempotent-load contract the NCA store
@@ -25,26 +25,25 @@ maintainable as a dashboard table.
 
 from __future__ import annotations
 
+import os
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
-from dbm_nca_ph_etl_spark.sinks.matview import MaterializedAgg, Measure
+from dbm_nca_ph_etl_spark.sinks.matview import MaterializedAgg
+from dbm_nca_ph_etl_spark.sources.lakefs import local_path
+from dbm_nca_ph_etl_spark.streaming.nca_stream import _start
 
 
 def _norm_ckpt(p: str) -> str:
-    """Canonical checkpoint identity: strip a file: scheme, make
-    absolute, drop trailing slashes. Two spellings of one local
-    checkpoint must compare equal (see stream_into_keyed's guard);
-    non-file URIs (s3://, hdfs://) pass through scheme-intact with
-    only the trailing-slash strip."""
-    import os
-
-    s = p.strip()
-    if s.startswith("file://"):
-        s = s[len("file://"):]
-    elif s.startswith("file:"):
-        s = s[len("file:"):]
+    """Canonical checkpoint identity: the local spelling resolved
+    (``sources/lakefs.local_path``), made absolute, trailing slashes
+    dropped. Two spellings of one local checkpoint must compare
+    equal (see stream_into_keyed's guard); non-file URIs (s3://,
+    hdfs://) pass through scheme-intact with only the trailing-slash
+    strip."""
+    s = local_path(p.strip())
     if "://" in s:
         return s.rstrip("/")
     return os.path.abspath(s).rstrip("/")
@@ -56,34 +55,18 @@ def stream_into_matview(
     checkpoint_dir: str,
     *,
     available_now: bool = True,
-) -> None:
+) -> StreamingQuery | None:
     """Fold a streaming DataFrame into ``view``, one refresh per
-    micro-batch. Drains and returns under ``available_now``;
-    otherwise runs until ``query.stop()``."""
+    micro-batch. Drains and returns None under ``available_now``;
+    otherwise returns the started query, which runs until
+    ``query.stop()``."""
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         view.refresh(batch_df, f"epoch{epoch_id}")
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - long-running mode
-        writer.start()
-
-
-def matview_for_stream(
-    spark: SparkSession,
-    path: str,
-    keys: Sequence[str],
-    measures: Sequence[Measure],
-) -> MaterializedAgg:
-    """Convenience constructor mirroring NCAStore's shape."""
-    return MaterializedAgg(spark, path, keys, measures)
+    return _start(stream, fold, checkpoint_dir, available_now)
 
 
 def stream_into_keyed(
@@ -94,7 +77,7 @@ def stream_into_keyed(
     *,
     writer: str = "stream",
     available_now: bool = True,
-) -> None:
+) -> StreamingQuery | None:
     """Stream micro-batch upserts into a KEYED lake table through the
     multi-writer coordination layer (sinks/txlog): each epoch takes
     the writer lease, merges only the buckets its keys touch, and
@@ -122,7 +105,8 @@ def stream_into_keyed(
     paths (scheme stripped, absolute, no trailing slash) — raw string
     compare would false-positive when the same checkpoint is respelled
     across restarts ('./ckpt' vs '/data/ckpt' vs 'file:/data/ckpt/')
-    and permanently wedge a legitimate single stream."""
+    and permanently wedge a legitimate single stream. Returns as
+    :func:`stream_into_matview` does."""
     from dbm_nca_ph_etl_spark.sinks.txlog import CommitLog, upsert_keyed_serialized
 
     ckpt_norm = _norm_ckpt(checkpoint_dir)
@@ -151,14 +135,7 @@ def stream_into_keyed(
             extra={"epoch": epoch_id, "ckpt": checkpoint_dir},
         )
 
-    w = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = w.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - long-running mode
-        w.start()
+    return _start(stream, fold, checkpoint_dir, available_now)
 
 
 def stream_into_joinview(
@@ -169,7 +146,7 @@ def stream_into_joinview(
     *,
     sign_col: str | None = None,
     available_now: bool = True,
-) -> None:
+) -> StreamingQuery | None:
     """Fold a CDC stream into one side of a
     :class:`~dbm_nca_ph_etl_spark.sinks.joinview.MaterializedJoin` —
     the streaming leg of incremental join maintenance: each
@@ -188,7 +165,8 @@ def stream_into_joinview(
     against right batches that already joined its half-written data
     (the double-count an own-batch-exclusion scheme cannot prevent).
     One writer per side remains the contract (the checkpoint is what
-    makes each side's epoch ids unique and monotonic).
+    makes each side's epoch ids unique and monotonic). Returns as
+    :func:`stream_into_matview` does.
     """
     if side not in ("left", "right"):
         raise ValueError(f"side must be 'left' or 'right', got {side!r}")
@@ -204,11 +182,4 @@ def stream_into_joinview(
             sign_col=sign_col,
         )
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - long-running mode
-        writer.start()
+    return _start(stream, fold, checkpoint_dir, available_now)

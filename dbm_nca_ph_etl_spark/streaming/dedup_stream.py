@@ -47,6 +47,7 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from dbm_nca_ph_etl_spark.sources.lakefs import get_fs
 from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
@@ -60,6 +61,7 @@ from dbm_nca_ph_etl_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
+from dbm_nca_ph_etl_spark.streaming.nca_stream import _start
 
 VERDICT_SCHEMA = "doc_id long, matched_doc long, is_dup boolean, epoch long"
 
@@ -89,10 +91,12 @@ def stream_probe_dedup(
     shingle_n: int = 3,
     verify_threshold: float | None = 0.5,
     available_now: bool = True,
-) -> None:
+) -> StreamingQuery | None:
     """Run the dedup-at-ingest stream. ``index_path`` /
     ``corpus_path`` / ``verdicts_path`` are epoch-partitioned
-    parquet tables this function owns; they may start empty."""
+    parquet tables this function owns; they may start empty.
+    Drains and returns None under ``available_now``; otherwise
+    returns the started query."""
     meta_path = _pjoin(index_path, "_band_meta.json")
     fs = get_fs(index_path)
 
@@ -201,14 +205,7 @@ def stream_probe_dedup(
         )
         _write_epoch(novel, corpus_path, epoch_id)
 
-    writer = docs_stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - long-running mode
-        writer.start()
+    return _start(docs_stream, fold, checkpoint_dir, available_now)
 
 
 def read_verdicts(spark, verdicts_path: str) -> DataFrame:

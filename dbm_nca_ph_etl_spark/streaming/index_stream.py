@@ -32,9 +32,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from dbm_nca_ph_etl_spark.operators.dedup import tokens
 from dbm_nca_ph_etl_spark.sinks.matview import MaterializedAgg, Measure
+from dbm_nca_ph_etl_spark.streaming.nca_stream import _start
 
 
 def postings_view(spark: SparkSession, path: str) -> MaterializedAgg:
@@ -69,13 +71,14 @@ def stream_into_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     available_now: bool = True,
-) -> None:
+) -> StreamingQuery | None:
     """Maintain the inverted index from a stream of new documents.
 
     Assumes append-only document arrivals (each doc_id arrives once —
     re-ingesting a revised document would double its postings; route
     revisions through a retraction of the old version via
-    ``refresh(..., retract=True)`` first).
+    ``refresh(..., retract=True)`` first). Drains and returns None
+    under ``available_now``; otherwise returns the started query.
     """
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
@@ -87,14 +90,7 @@ def stream_into_index(
         postings.refresh(toks, f"epoch{epoch_id}")
         doc_lens.refresh(toks, f"epoch{epoch_id}")
 
-    writer = docs_stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:  # pragma: no cover - long-running mode
-        writer.start()
+    return _start(docs_stream, fold, checkpoint_dir, available_now)
 
 
 def index_postings(view: MaterializedAgg) -> DataFrame:

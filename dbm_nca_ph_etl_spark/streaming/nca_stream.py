@@ -25,8 +25,10 @@ no streaming aggregation state to size.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from dbm_nca_ph_etl_spark.nca.cleaner import clean_raw_rows
 from dbm_nca_ph_etl_spark.nca.schemas import RAW_ROWS_SCHEMA
@@ -42,11 +44,12 @@ def run_nca_pipeline(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     max_concurrency: int | None = None,
-) -> None:
+) -> StreamingQuery | None:
     """Stream raw-rows parquet drops from ``inbox_dir`` into the
-    three-table store. Returns after the inbox drains when
+    three-table store. Returns None after the inbox drains when
     ``available_now`` (the reference's teardown semantics); otherwise
-    runs until ``query.stop()`` (T5 trigger-disable).
+    returns the started query, which runs until ``query.stop()`` (T5
+    trigger-disable).
 
     ``max_concurrency`` is the T3 surface (reference: Lambda
     ``MaximumConcurrency: 40`` per event source,
@@ -90,7 +93,7 @@ def run_nca_stream(
     *,
     available_now: bool = True,
     max_concurrency: int | None = None,
-):
+) -> StreamingQuery | None:
     """The same topology over ANY streaming source of raw rows — the
     S16/T1 contract is source-agnostic: :func:`run_nca_pipeline`
     feeds it a watched file inbox, tests also drive it from a
@@ -125,11 +128,24 @@ def run_nca_stream(
             # dead-letter the raw rows (maxReceiveCount:1 semantics)
             append_parquet(batch_df, os.path.join(store.base, "dlq"))
 
-    writer = raw.writeStream.foreachBatch(process).option(
+    return _start(raw, process, checkpoint_dir, available_now)
+
+
+def _start(
+    stream: DataFrame,
+    fold: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    available_now: bool,
+) -> StreamingQuery | None:
+    """Run ``fold`` on each micro-batch of ``stream``, checkpointed at
+    ``checkpoint_dir`` — the one start path of every lake-sink stream
+    in this package. With ``available_now`` the call drains the source
+    and returns None; otherwise it returns the started query, which
+    runs until ``query.stop()``."""
+    writer = stream.writeStream.foreachBatch(fold).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-        return None
-    return writer.start()
+    if not available_now:
+        return writer.start()
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return None

@@ -56,12 +56,18 @@ class TestPosix:
         assert ArrowLakeFS().ls(uri, suffixes=(".pdf",)) == []
         assert ArrowLakeFS().ls(uri, suffixes=(".html",)) == [uri]
 
-    def test_file_scheme_spellings_read_the_same_bytes(self, tmp_path):
+    def test_file_scheme_spellings_read_the_same_bytes(self, tmp_path, monkeypatch):
         """A bare path, Spark's ``file:/…`` spelling (a binaryFile
-        scan's ``path`` column) and a ``file:///…`` URI read the same
-        bytes through get_fs. The ``file:/`` spelling stays on the
-        stdlib path, so a space or a ``%20`` in a name is read as it
-        is on disk."""
+        scan's ``path`` column) and a ``file:///…`` URI reach the same
+        file through get_fs, for reads and for ``mkdirs``,
+        ``write_bytes``, ``exists`` and ``ls``. The ``file:/`` spelling
+        stays on the stdlib path, so a space or a ``%20`` in a name is
+        read as it is on disk. Listings keep the caller's spelling, and
+        nothing lands in a literal ``file:`` directory under the
+        working directory."""
+        cwd = tmp_path / "cwd"
+        cwd.mkdir()
+        monkeypatch.chdir(cwd)
         names = ("plain.pdf", "NCA 2024.pdf", "a%20b.pdf")
         for name in names:
             (tmp_path / name).write_bytes(name.encode())
@@ -72,6 +78,21 @@ class TestPosix:
                 assert get_fs(p).read_bytes(p) == name.encode()
         uri = f"file://{tmp_path}/plain.pdf"
         assert get_fs(uri).read_bytes(uri) == b"plain.pdf"
+        # a URI cannot carry a raw space; the stdlib spellings can
+        for i, (scheme, name) in enumerate(
+            (("", "NCA 2024.pdf"), ("file:", "NCA 2024.pdf"), ("file://", "plain.pdf"))
+        ):
+            disk = tmp_path / f"lake{i}" / "sub"
+            d = f"{scheme}{disk}"
+            fs = get_fs(d)
+            fs.mkdirs(d)
+            fs.write_bytes(join(d, name), b"x")
+            assert (disk / name).read_bytes() == b"x"
+            assert fs.exists(join(d, name))
+            assert not fs.exists(join(d, "missing.pdf"))
+            assert fs.ls(d, suffixes=(".pdf",)) == [join(d, name)]
+            assert fs.ls_dirs(f"{scheme}{disk.parent}") == [d]
+        assert os.listdir(cwd) == []
 
 
 class TestArrowUri:
@@ -118,6 +139,14 @@ class TestArrowUri:
         # the listing round-trips: each URI is readable as returned
         assert fs.read_bytes(got[0]) == b"%PDF a"
         assert fs.size(got[1]) == 6
+        # the sized listing and the directory listing rebuild the same
+        # URIs, and each round-trips the same way
+        assert fs.ls_with_sizes("mock://bucket/dir", suffixes=(".pdf",)) == [
+            ("mock://bucket/dir/a.pdf", 6),
+            ("mock://bucket/dir/b.pdf", 6),
+        ]
+        assert fs.ls_dirs("mock://bucket") == ["mock://bucket/dir"]
+        assert fs.ls(fs.ls_dirs("mock://bucket")[0]) == got
 
     def test_resolution_and_join(self):
         assert isinstance(get_fs("/plain/path"), PosixLakeFS)

@@ -680,6 +680,43 @@ class TestMaterializedAgg:
         # batches; a re-send of the latest two is still refused
         assert mv.refresh(self._batch(spark, [("a", 0)]), "b3") is False
 
+    def test_crash_before_marker_leaves_an_orphan_that_is_gcd(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A bare-path view runs the marker protocol too: a refresh
+        that dies before its ``_COMMITTED`` PUT leaves an unmarked
+        version dir, which no read sees, and which the prune of a
+        later refresh deletes. No other directory is left behind."""
+        import os
+
+        from dbm_nca_ph_etl_spark.sources.lakefs import PosixLakeFS
+
+        mv = self._view(spark, tmp_path)
+        assert mv.refresh(self._batch(spark, [("a", 1)]), "b1")
+        real_write = PosixLakeFS.write_bytes
+
+        def crash_on_marker(self, path, data):
+            if path.endswith("_COMMITTED"):
+                raise RuntimeError("injected crash before the marker")
+            return real_write(self, path, data)
+
+        monkeypatch.setattr(PosixLakeFS, "write_bytes", crash_on_marker)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            mv.refresh(self._batch(spark, [("a", 100)]), "dead")
+        monkeypatch.undo()
+        orphan = os.path.join(mv.path, "v000001_bdead")
+        assert os.path.isdir(orphan)
+        assert "dead" not in mv.applied_batches()
+        assert rows(mv.read_partials(), "k", "s") == [("a", 1)]
+        # the next version takes the orphan's number and hides it ...
+        assert mv.refresh(self._batch(spark, [("a", 10)]), "b2")
+        assert os.path.isdir(orphan)
+        assert rows(mv.read_partials(), "k", "s") == [("a", 11)]
+        # ... and once a later version commits, the orphan is GC'd
+        assert mv.refresh(self._batch(spark, [("a", 20)]), "b3")
+        assert sorted(os.listdir(mv.path)) == ["v000001_bb2", "v000002_bb3"]
+        assert rows(mv.read_partials(), "k", "s") == [("a", 31)]
+
     def test_hll_measure_counts_distinct_across_batches(self, spark, tmp_path):
         from dbm_nca_ph_etl_spark.sinks.matview import (
             MaterializedAgg,

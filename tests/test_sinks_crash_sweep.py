@@ -1,7 +1,9 @@
 """Crash-point sweeps for the other mutable-lake commit protocols:
 the serialized keyed merge (txlog lease + commit log over
-bucket-pruned upserts) and the marker-committed matview, both on the
-object-store fake (atomic_rename=False). Same discipline as
+bucket-pruned upserts) and the marker-committed matview, on the
+counting fake (atomic_rename=False; the matview sweep also runs it
+reporting atomic_rename=True, since POSIX views use the same marker
+protocol). Same discipline as
 tests/test_joinview_crash_sweep.py: crash at every mutating
 filesystem call, replay the step, require the final state to equal
 the never-crashed run.
@@ -32,9 +34,8 @@ pytestmark = pytest.mark.slow
 
 
 class _CountingCrashFS:
-    atomic_rename = False
-
-    def __init__(self):
+    def __init__(self, atomic_rename: bool = False):
+        self.atomic_rename = atomic_rename
         self._inner = PosixLakeFS()
         self.mutations = 0
         self.crash_at: int | None = None
@@ -157,14 +158,21 @@ class TestMatviewSweep:
         return sorted(tuple(r) for r in out.collect())
 
     @pytest.mark.slow
-    def test_crash_at_every_mutation_converges(self, spark, tmp_path):
-        ref_fs = _CountingCrashFS()
+    @pytest.mark.parametrize("atomic_rename", [False, True])
+    def test_crash_at_every_mutation_converges(self, spark, tmp_path, atomic_rename):
+        """Every commit step goes through the adapter whatever its
+        ``atomic_rename`` says: a POSIX-like adapter counts the same
+        mutations and converges the same way."""
+        ref_fs = _CountingCrashFS(atomic_rename)
         want = self._scenario(spark, str(tmp_path / "ref"), ref_fs)
         assert want == [("a", 11), ("b", 0)]
         n_ops = ref_fs.mutations
         assert n_ops > 2
+        other_fs = _CountingCrashFS(not atomic_rename)
+        assert self._scenario(spark, str(tmp_path / "other"), other_fs) == want
+        assert other_fs.mutations == n_ops
         for crash_at in range(1, n_ops + 1):
-            fs = _CountingCrashFS()
+            fs = _CountingCrashFS(atomic_rename)
             fs.crash_at = crash_at
             got = self._scenario(spark, str(tmp_path / f"c{crash_at}"), fs)
             assert got == want, f"crash at {crash_at}/{n_ops}: {got} != {want}"

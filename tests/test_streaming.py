@@ -861,6 +861,27 @@ class TestStreamingMatview:
         got = {r["k"]: (r["n"], r["s"]) for r in view.read_partials().collect()}
         assert got == {"a": (2, 3), "b": (2, 15)}
 
+    def test_without_available_now_returns_a_stoppable_query(self, spark, tmp_path):
+        """A long-running stream hands back its query, so the
+        ``query.stop()`` the docstring promises can be reached."""
+        from dbm_nca_ph_etl_spark.sinks.matview import MaterializedAgg
+        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_matview
+
+        inbox = str(tmp_path / "inbox")
+        os.makedirs(inbox)
+        view = MaterializedAgg(spark, str(tmp_path / "mv"), ["k"], self._measures())
+        stream = spark.readStream.schema("k string, v long").parquet(inbox)
+        try:
+            q = stream_into_matview(
+                stream, view, str(tmp_path / "ckpt"), available_now=False
+            )
+            assert q is not None and q.isActive
+            q.stop()
+            assert not q.isActive
+        finally:
+            for active in spark.streams.active:
+                active.stop()
+
 
 class TestIncrementalIndex:
     """Streaming inverted-index maintenance: the maintained lake index
@@ -1132,14 +1153,12 @@ class TestStreamingHllMatview:
         import os
 
         from dbm_nca_ph_etl_spark.sinks.matview import (
+            MaterializedAgg,
             Measure,
             derived_distinct,
             partial_agg,
         )
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import (
-            matview_for_stream,
-            stream_into_matview,
-        )
+        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_matview
 
         schema = "k string, user_id long"
         src = str(tmp_path / "hll_src")
@@ -1156,7 +1175,7 @@ class TestStreamingHllMatview:
             Measure("n", "user_id", "count"),
             Measure("uh", "user_id", "hll"),
         ]
-        view = matview_for_stream(
+        view = MaterializedAgg(
             spark, str(tmp_path / "hll_mv"), ["k"], measures
         )
         stream = (
