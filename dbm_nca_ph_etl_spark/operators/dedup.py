@@ -181,88 +181,6 @@ def band_buckets(
     )
 
 
-def build_band_index(
-    corpus: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 3,
-) -> None:
-    """Materialize the banded MinHash index as parquet — the
-    "build once per corpus snapshot" artifact the incremental probe
-    consumes (mirrors ``similarity.build_lsh_index``). Partitioned by
-    ``band`` so a probe's (band, bucket) hash join prunes to the
-    touched band files; a ``_band_meta.json`` sidecar pins the
-    signature parameters, and :func:`load_band_index` refuses an
-    index whose parameters don't match the probe's (mismatched
-    hashes ⇒ silently-empty join, the worst failure mode). Daily
-    ingest appends the batch's own rows (same seed ⇒ compatible
-    buckets)."""
-    import json
-
-    from dbm_nca_ph_etl_spark.sources.lakefs import get_fs
-    from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
-
-    idx = band_buckets(corpus, text_col, id_col, num_hashes, bands, shingle_n)
-    idx.write.mode("overwrite").partitionBy("band").parquet(path)
-    meta = {
-        "id_col": id_col,
-        "num_hashes": num_hashes,
-        "bands": bands,
-        "shingle_n": shingle_n,
-        "layout": "band",
-    }
-    get_fs(path).write_bytes(
-        _pjoin(path, "_band_meta.json"), json.dumps(meta).encode("utf-8")
-    )
-
-
-def load_band_index(
-    spark,
-    path: str,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 3,
-    expected_layout: str | None = None,
-) -> DataFrame:
-    """Read a :func:`build_band_index` table, verifying the sidecar's
-    signature parameters match the caller's — feed the result to
-    ``lsh_probe_new(index=...)``.
-
-    ``expected_layout`` guards the two on-disk layouts that share
-    this sidecar: ``"band"`` (build_band_index, band=-partitioned)
-    vs ``"epoch"`` (streaming/dedup_stream, epoch=-partitioned).
-    Readers that depend on one layout's partition column pass it and
-    get a loud error instead of a silently-empty partition-pruned
-    scan; ``None`` (default) accepts either."""
-    import json
-
-    from dbm_nca_ph_etl_spark.sources.lakefs import get_fs
-    from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
-
-    meta = json.loads(
-        get_fs(path).read_bytes(_pjoin(path, "_band_meta.json")).decode("utf-8")
-    )
-    want = {"num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n}
-    got = {k: meta.get(k) for k in want}
-    if got != want:
-        raise ValueError(
-            f"band index at {path} was built with {got}, probe expects "
-            f"{want}; mismatched parameters would make every probe "
-            "silently miss — rebuild the index or match the params"
-        )
-    layout = meta.get("layout")
-    if expected_layout is not None and layout not in (None, expected_layout):
-        raise ValueError(
-            f"band index at {path} has layout={layout!r}, reader expects "
-            f"{expected_layout!r}; the two layouts partition on different "
-            "columns and cannot be mixed in one directory"
-        )
-    return spark.read.parquet(path)
-
-
 def lsh_probe_new(
     corpus: DataFrame,
     batch: DataFrame,

@@ -29,16 +29,15 @@ top of the batch-partitioned layout):
   dependence on the other side's state at replay time).
 - **Writer lease.** Refreshes serialize on the table's
   ``sinks/txlog.WriterLease`` with a fencing check before the marker
-  PUT. This is what makes TWO INDEPENDENT WRITERS (one CDC stream
-  per side — ``streaming/agg_stream.stream_into_joinview``) exactly-
-  once: each joined pair (L_a, R_b) is counted by exactly one batch —
-  whichever side committed LATER saw the other side's partition as
-  committed and owns the pair; the earlier side could not have seen
-  the later one. Serialization removes the race where both (or
-  neither) see each other, and markers remove the replay race where
-  a crashed left batch is recomputed AFTER a right batch already
-  joined its half-written data (the double-count that an
-  own-batch-exclusion scheme cannot prevent).
+  PUT. This is what makes TWO INDEPENDENT WRITERS (one CDC feed per
+  side) exactly-once: each joined pair (L_a, R_b) is counted by
+  exactly one batch — whichever side committed LATER saw the other
+  side's partition as committed and owns the pair; the earlier side
+  could not have seen the later one. Serialization removes the race
+  where both (or neither) see each other, and markers remove the
+  replay race where a crashed left batch is recomputed AFTER a right
+  batch already joined its half-written data (the double-count that
+  an own-batch-exclusion scheme cannot prevent).
 
 Updates and deletes are SIGNED deltas (differential-dataflow / CDF
 multiset algebra): a delta row carries weight +1 (insert) or −1

@@ -16,8 +16,7 @@ rows; the lake equivalent is a hash-bucket partition layout:
   bounded driver state), partition-PRUNES the base scan to exactly
   those directories, left-antis the batch keys within them, and
   rewrites ONLY those directories via dynamic partition overwrite
-  (``sinks.partitioned.overwrite_partitions`` — the same
-  atomicity pattern ``streaming/dedup_stream`` proves for epochs).
+  (``sinks.partitioned.overwrite_partitions``).
 
 Write amplification per batch = touched_buckets × bucket_size, not
 table_size. Sizing rule: pick ``num_buckets`` so one bucket ≈

@@ -1,55 +1,17 @@
-"""Lake maintenance: small-file compaction + sort-clustered layout.
+"""Lake maintenance: sort- and Z-order-clustered parquet layouts.
 
-Micro-batch loaders (streaming/nca_stream.py appends one directory of
-part files per batch) and fine-grained task parallelism both produce
-small-file sprawl; at 100 TB the scan's task count — and the
-NameNode/object-store listing cost — is driven by file count, so
-periodic compaction is part of the engine, not an ops afterthought
-(the reference's Postgres sink has no analog: supabase_repository.py
-chunks INSERTS, the database owns the layout).
+A clustered write range-partitions and sorts before it writes, so
+each part file covers a compact key range and its footer min/max are
+tight; a filtered scan then skips whole files from footer statistics
+alone (the reference's Postgres sink has no analog:
+supabase_repository.py chunks INSERTS, the database owns the layout).
+Small-file compaction of keyed tables is ``sinks/keyed.compact_keyed``.
 """
 
 from __future__ import annotations
 
-import math
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from dbm_nca_ph_etl_spark.sources.lakefs import local_path
-
-DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # one HDFS-ish block per file
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src_path: str,
-    dst_path: str,
-    target_file_bytes: int = DEFAULT_TARGET_BYTES,
-) -> int:
-    """Rewrite ``src_path`` into ``dst_path`` with ~target-sized files.
-
-    Returns the output file count. The write goes to a NEW directory —
-    Spark cannot overwrite a path it is lazily reading, and a
-    fresh-directory + rename swap is the atomic pattern on object
-    stores anyway (the caller owns the swap; a table format's commit
-    log would subsume this).
-
-    File count = ceil(current_bytes / target): compaction math uses
-    the real on-disk (compressed) size via the scan's file listing,
-    not row counts — row width varies, bytes are what the next scan
-    pays for. ``repartition`` (not ``coalesce``): coalesce chains
-    narrow dependencies and would make the WRITE tasks read many
-    source files each without rebalancing skew; a real shuffle gives
-    uniformly sized outputs, which is the point of compacting.
-    """
-    df = spark.read.parquet(src_path)
-    files = df.inputFiles()
-    total = sum(os.path.getsize(local_path(f)) for f in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df.repartition(n_out).write.mode("error").parquet(dst_path)
-    return n_out
 
 
 def zorder_key(

@@ -51,8 +51,7 @@ protocol the store can actually honor:
   writes a fresh VERSION directory (``_v-<id>/``) under the table
   path and publishes it by atomically PUTting its name into a
   ``_CURRENT`` pointer file — the single-object-PUT commit the
-  store does guarantee (the same manifest-commit idea as
-  ``sources/queue_sink``'s write-ahead manifest). Readers resolve
+  store does guarantee. Readers resolve
   ``_CURRENT`` first; superseded versions are GC'd with a ONE-FLIP
   grace window (keep current + pre-flip — matview's keep=2
   discipline), so an in-flight reader that resolved the pre-flip

@@ -1,7 +1,7 @@
 """Hive-partitioned parquet layout — partition pruning + surgical
 incremental overwrite.
 
-Bucketing (sinks/bucketed.py) co-locates JOIN keys; partitioning
+Key bucketing (sinks/keyed.py) bounds merge cost; partitioning
 handles the other axis of 100 TB layout: coarse, low-cardinality
 predicates (ingest date, language, source) become DIRECTORIES, so a
 filtered query never opens non-matching files at all — pruning

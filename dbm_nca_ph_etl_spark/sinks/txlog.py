@@ -261,11 +261,11 @@ def expire_log(
     half every table format ships). The log's correctness contract
     survives expiry: ``version()`` is the MAX entry number (dense
     numbering is append-side only — try_commit CASes version+1,
-    which never needs the expired tail), and replay gating
-    (stream_into_keyed) only needs entries younger than the feed's
-    redelivery horizon — size ``keep`` to that horizon, exactly
-    like MaterializedAgg's version pruning. Returns the number of
-    entries deleted."""
+    which never needs the expired tail), and a caller that gates
+    replays on logged entries only needs those younger than its
+    feed's redelivery horizon — size ``keep`` to that horizon,
+    exactly like MaterializedAgg's version pruning. Returns the
+    number of entries deleted."""
     log = CommitLog(table_path, fs=fs)
     f = get_fs(table_path, fs)
     entries = sorted(
@@ -304,8 +304,8 @@ def compact_keyed_serialized(
     compact_keyed` is therefore only safe single-writer (its
     docstring says so); this wrapper serializes it on the SAME lease
     the merges take, which is what makes running a maintenance
-    compactor beside a streaming ingester
-    (``streaming/agg_stream.stream_into_keyed``) correct: the lease
+    compactor beside an ingester that upserts through
+    :func:`upsert_keyed_serialized` correct: the lease
     orders them, and the log records ``op="compact"`` with the
     rewritten buckets — the table history distinguishes content
     changes (upserts) from layout maintenance.

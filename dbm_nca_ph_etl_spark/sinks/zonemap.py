@@ -22,7 +22,8 @@ Mechanics here:
   list Spark's own scan listing already pays.
 - :func:`write_zonemaps` persists the harvest as a parquet sidecar
   under ``<table>/_zonemaps`` with a JSON meta pinning the stat
-  columns (the fail-on-drift sidecar contract of keyed/_band_meta).
+  columns (the fail-on-drift contract of the keyed sink's
+  ``_keyed_meta.json``).
 - :func:`pruned_read` filters the sidecar to files whose range
   intersects the predicate's ``[lo, hi]``, reads exactly those files,
   and re-applies the predicate (zone pruning is conservative — a
@@ -164,7 +165,7 @@ def pruned_read(
     predicate is RE-APPLIED to the surviving files — pruning is
     conservative, correctness never depends on it. Fails loudly if
     the sidecar does not track ``column`` (stats drift — same
-    contract as the keyed/_band_meta sidecars)."""
+    contract as the keyed sink's ``_keyed_meta.json``)."""
     meta = json.loads(
         get_fs(path, fs).read_bytes(_pjoin(path, _ZM_META)).decode("utf-8")
     )

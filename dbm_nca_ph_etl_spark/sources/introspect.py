@@ -31,6 +31,7 @@ layout work.
 from __future__ import annotations
 
 from typing import Iterable, Iterator, Sequence
+from urllib.parse import unquote
 
 import pandas as pd
 
@@ -94,9 +95,11 @@ def parquet_footer_stats(
     ``columns=None`` returns every leaf column. Footer reads run on
     executors (``mapInPandas`` over the file list); only the listing
     — the same metadata walk every Spark scan performs — happens on
-    the driver.
+    the driver. ``inputFiles()`` percent-encodes each name as a URI
+    (a space is ``%20``, a ``%`` is ``%25``); it is decoded here, once,
+    so ``file`` holds the name as it is on disk.
     """
-    files = spark.read.parquet(path).inputFiles()
+    files = [unquote(f) for f in spark.read.parquet(path).inputFiles()]
     cols = list(columns) if columns is not None else None
     files_df = spark.createDataFrame(
         [(f,) for f in files], "file string"

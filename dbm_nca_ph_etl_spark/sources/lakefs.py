@@ -5,30 +5,26 @@ Reference parity: the reference isolates storage behind an adapter
 pair (``s3_storage.py:25-38`` S3 put/get vs ``local_storage.py:19-26``
 POSIX) chosen by environment; this module is the same seam for the
 Spark engine's driver/executor-side byte IO. Spark's own reads and
-writes (parquet, binaryFile, the DataSource formats) already resolve
-URIs through Hadoop — this seam exists for the places the engine
-touches bytes *itself*: enumerating listing snapshots, staging
-fetched PDFs into the lake, reading PDF blobs in extraction tasks,
-and every commit step of the sinks (markers, pointers, leases,
-version listings and GC).
+writes (parquet, binaryFile) already resolve URIs through Hadoop —
+this seam exists for the places the engine touches bytes *itself*:
+reading PDF blobs in extraction tasks, and every commit step of the
+sinks (markers, pointers, leases, version listings and GC).
 
 Local paths: :func:`local_path` is the only code that maps a local
 spelling (bare, Spark's ``file:/…``, ``file:///…``) to its on-disk
 name. ``PosixLakeFS`` resolves every argument through it, and the
-sinks' POSIX-only steps (``sinks/merge``'s rename swap, footer and
-file-size reads in ``sources/introspect`` / ``sinks/maintenance``,
-checkpoint identity in ``streaming/agg_stream``) call it rather
-than strip a scheme themselves, so one spelling means one directory
-everywhere.
+sinks' POSIX-only steps (``sinks/merge``'s rename swap, footer reads
+in ``sources/introspect``) call it rather than strip a scheme
+themselves, so one spelling means one directory everywhere.
 
 Why ``pyarrow.fs`` and not ``spark._jvm`` Hadoop: the JVM gateway is
 driver-only — a ``mapInPandas`` task on an executor has no py4j
-bridge, so Hadoop ``FileSystem`` calls cannot run where the staging
-writes happen. ``pyarrow.fs`` is in every executor's Python runtime,
-resolves the same URI schemes (``s3://``, ``gs://``, ``hdfs://``
-where libhdfs is present, ``file://``), and its filesystem handles
-are picklable. Resolution is per-call from the path string, so
-nothing stateful ships task-to-task.
+bridge, so Hadoop ``FileSystem`` calls cannot run where the
+extraction reads happen. ``pyarrow.fs`` is in every executor's
+Python runtime, resolves the same URI schemes (``s3://``, ``gs://``,
+``hdfs://`` where libhdfs is present, ``file://``), and its
+filesystem handles are picklable. Resolution is per-call from the
+path string, so nothing stateful ships task-to-task.
 
 The protocol is deliberately small (ls / read / write / exists /
 size / mkdirs, plus the delete, directory-listing and

@@ -25,7 +25,6 @@ no streaming aggregation state to size.
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -128,21 +127,7 @@ def run_nca_stream(
             # dead-letter the raw rows (maxReceiveCount:1 semantics)
             append_parquet(batch_df, os.path.join(store.base, "dlq"))
 
-    return _start(raw, process, checkpoint_dir, available_now)
-
-
-def _start(
-    stream: DataFrame,
-    fold: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    available_now: bool,
-) -> StreamingQuery | None:
-    """Run ``fold`` on each micro-batch of ``stream``, checkpointed at
-    ``checkpoint_dir`` — the one start path of every lake-sink stream
-    in this package. With ``available_now`` the call drains the source
-    and returns None; otherwise it returns the started query, which
-    runs until ``query.stop()``."""
-    writer = stream.writeStream.foreachBatch(fold).option(
+    writer = raw.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir
     )
     if not available_now:

@@ -191,30 +191,27 @@ class TestCompactKeyed:
     def test_streamed_epochs_then_compact_keeps_digest_baseline(
         self, spark, tmp_path
     ):
-        """The full maintenance cycle: stream epochs into the keyed
-        table, incrementally refresh the digest from the commit log's
-        touched buckets, compact in their wake — the refreshed digest
-        must STILL equal a full re-digest (compaction is content-free,
-        so it never invalidates a baseline)."""
+        """The full maintenance cycle: upsert an ingest batch into the
+        keyed table through the commit log, incrementally refresh the
+        digest from the log's touched buckets, compact in their wake —
+        the refreshed digest must STILL equal a full re-digest
+        (compaction is content-free, so it never invalidates a
+        baseline)."""
         from dbm_nca_ph_etl_spark.operators.integrity import refresh_digest
-        from dbm_nca_ph_etl_spark.sinks.txlog import CommitLog
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_keyed
+        from dbm_nca_ph_etl_spark.sinks.txlog import (
+            CommitLog,
+            upsert_keyed_serialized,
+        )
 
-        src = str(tmp_path / "src")
-        os.makedirs(src)
         path = str(tmp_path / "tbl")
-        ckpt = str(tmp_path / "ckpt")
         base = spark.createDataFrame(
             [(i, f"v{i}") for i in range(40)], "k long, v string"
         )
         write_keyed(base, path, ["k"], num_buckets=N_BUCKETS)
         stored = keyed_digest(spark, path, CANON()).localCheckpoint(eager=True)
 
-        spark.createDataFrame(
-            [(3, "E3"), (99, "v99")], "k long, v string"
-        ).coalesce(1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema("k long, v string").parquet(src)
-        stream_into_keyed(stream, path, ["k"], ckpt, writer="ingest")
+        batch = spark.createDataFrame([(3, "E3"), (99, "v99")], "k long, v string")
+        upsert_keyed_serialized(spark, batch, path, ["k"], writer="ingest")
 
         touched = sorted(
             {

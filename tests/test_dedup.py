@@ -303,44 +303,6 @@ class TestIncrementalProbe:
         assert inline == prebuilt and len(inline) == 1
 
 
-class TestPersistedBandIndex:
-    def test_build_load_probe_round_trip(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.operators.dedup import (
-            build_band_index,
-            load_band_index,
-            lsh_probe_new,
-        )
-
-        corpus = spark.createDataFrame(
-            [(i, f"shared prefix words here unique token{i} " * 4) for i in range(6)],
-            ["doc_id", "text"],
-        )
-        batch = spark.createDataFrame(
-            [(20, "shared prefix words here unique token3 " * 4 + "tail")],
-            ["doc_id", "text"],
-        )
-        path = str(tmp_path / "bandidx")
-        build_band_index(corpus, path)
-        idx = load_band_index(spark, path)
-        via_index = {
-            tuple(r) for r in lsh_probe_new(corpus, batch, index=idx).collect()
-        }
-        inline = {tuple(r) for r in lsh_probe_new(corpus, batch).collect()}
-        assert via_index == inline and len(inline) == 1
-
-    def test_parameter_mismatch_refused(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.operators.dedup import (
-            build_band_index,
-            load_band_index,
-        )
-
-        corpus = spark.createDataFrame([(1, "a b c d e")], ["doc_id", "text"])
-        path = str(tmp_path / "bandidx2")
-        build_band_index(corpus, path, num_hashes=16, bands=4)
-        with pytest.raises(ValueError, match="silently miss"):
-            load_band_index(spark, path, num_hashes=8, bands=4)
-
-
 class TestRepeatedSpans:
     """repeated_span_pairs: exact shared-token-run detection with
     known offsets, df-cap exclusion, tie determinism."""

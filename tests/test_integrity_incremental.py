@@ -249,21 +249,18 @@ class TestScd2IncrementalDigest:
 
 
 class TestStreamedEpochIncrementalDigest:
-    """stream_into_keyed logs each epoch's touched buckets in the
-    commit log (sinks/txlog) — after a streamed epoch the incremental
-    re-digest over the union of logged buckets must equal a full
-    re-digest, and the change must localize to those buckets."""
+    """``upsert_keyed_serialized`` logs each upsert's touched buckets
+    in the commit log (sinks/txlog) — after an ingest batch the
+    incremental re-digest over the union of logged buckets must equal
+    a full re-digest, and the change must localize to those buckets."""
 
     def test_streamed_epoch_incremental_equals_full(self, spark, tmp_path):
-        import os
+        from dbm_nca_ph_etl_spark.sinks.txlog import (
+            CommitLog,
+            upsert_keyed_serialized,
+        )
 
-        from dbm_nca_ph_etl_spark.sinks.txlog import CommitLog
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_keyed
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
         path = str(tmp_path / "tbl")
-        ckpt = str(tmp_path / "ckpt")
         base = spark.createDataFrame(
             [(i, f"v{i}") for i in range(40)], "k long, v string"
         )
@@ -273,9 +270,7 @@ class TestStreamedEpochIncrementalDigest:
         batch = spark.createDataFrame(
             [(3, "STREAMED3"), (99, "v99")], "k long, v string"
         )
-        batch.coalesce(1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema("k long, v string").parquet(src)
-        stream_into_keyed(stream, path, ["k"], ckpt, writer="ingest")
+        upsert_keyed_serialized(spark, batch, path, ["k"], writer="ingest")
 
         touched = sorted(
             {

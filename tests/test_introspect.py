@@ -83,3 +83,21 @@ class TestFooterStats:
             parquet_footer_stats(spark, lake)._jdf.queryExecution(), "simple"
         )
         assert "MapInPandas" in plan
+
+    @pytest.mark.parametrize("name", ["a b", "x%41y"], ids=["space", "literal-percent"])
+    def test_table_dir_name_is_read_as_on_disk(self, spark, tmp_path, name):
+        """``inputFiles()`` spells ``a b`` as ``a%20b`` and ``x%41y`` as
+        ``x%2541y``: the footer scan decodes each name exactly once, so
+        it opens the files on disk (a second decode would look for
+        ``xAy``)."""
+        import os
+
+        from dbm_nca_ph_etl_spark.sources.lakefs import local_path
+
+        dest = tmp_path / name
+        spark.range(5).coalesce(1).write.parquet(str(dest))
+        stats = parquet_footer_stats(spark, str(dest)).toPandas()
+        assert stats["n_values"].sum() == 5
+        assert all(
+            os.path.dirname(local_path(f)) == str(dest) for f in stats["file"]
+        )

@@ -1,21 +1,14 @@
-"""The lakefs seam: stdlib fast path, pyarrow URI path, and adapter
-injection through the staging/listing call sites.
+"""The lakefs seam: stdlib fast path and pyarrow URI path.
 
 The ArrowLakeFS tests run against ``file://`` URIs — same code path
 (`pyarrow.fs.FileSystem.from_uri` → FileInfo / streams) as
-``s3://``/``gs://``, no bucket required. The injection test proves
-every byte of staging IO flows through the injected adapter (the
-files land under the fake's root, not the advertised dest_dir) even
-across the mapInPandas pickle boundary.
+``s3://``/``gs://``, no bucket required.
 """
 
 import os
 
-import pytest
-
 from dbm_nca_ph_etl_spark.sources.lakefs import (
     ArrowLakeFS,
-    LakeFS,
     PosixLakeFS,
     get_fs,
     join,
@@ -154,99 +147,3 @@ class TestArrowUri:
         override = PosixLakeFS()
         assert get_fs("s3://bucket/key", override) is override
         assert join("s3://b/prefix", "f.pdf") == "s3://b/prefix/f.pdf"
-
-
-class _RerootedFS(LakeFS):
-    """Picklable fake adapter: maps every path under its own root —
-    if staging bytes appear there, every IO call went through the
-    injected seam, across the executor pickle boundary."""
-
-    def __init__(self, root: str):
-        self.root = root
-        self._inner = PosixLakeFS()
-
-    def _map(self, path: str) -> str:
-        return os.path.join(self.root, path.replace("/", "_"))
-
-    def ls(self, path, suffixes=None):
-        return self._inner.ls(self._map(path), suffixes)
-
-    def is_dir(self, path):
-        return True
-
-    def read_bytes(self, path):
-        return self._inner.read_bytes(self._map(path))
-
-    def write_bytes(self, path, data):
-        self._inner.write_bytes(self._map(path), data)
-
-    def exists(self, path):
-        return self._inner.exists(self._map(path))
-
-    def size(self, path):
-        return self._inner.size(self._map(path))
-
-    def mkdirs(self, path):
-        os.makedirs(self.root, exist_ok=True)
-
-
-class TestStagingInjection:
-    def test_staging_writes_flow_through_injected_adapter(self, spark, tmp_path):
-        import sys
-
-        from pyspark import cloudpickle
-        from dbm_nca_ph_etl_spark.sources.staging import stage_releases
-
-        # the fake class lives in this test module, which executor
-        # workers can't import — ship it by value instead
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-
-        fake_root = str(tmp_path / "fakefs")
-        fake = _RerootedFS(fake_root)
-        releases = spark.createDataFrame(
-            [("id_1", "mem://a.pdf", "a.pdf"), ("id_2", "mem://b.pdf", "b.pdf")],
-            "id string, url string, filename string",
-        )
-        status = stage_releases(
-            releases,
-            "s3://lake/pdfs",  # never touched: the adapter reroots it
-            fetcher=lambda url: b"PDF:" + url.encode(),
-            filesystem=fake,
-        ).collect()
-        assert {(r.release_id, r.staged) for r in status} == {
-            ("id_1", True),
-            ("id_2", True),
-        }
-        staged = sorted(os.listdir(fake_root))
-        assert staged == ["s3:__lake_pdfs_a.pdf", "s3:__lake_pdfs_b.pdf"]
-        # replay skips: adapter-reported size, no second write
-        again = stage_releases(
-            releases,
-            "s3://lake/pdfs",
-            fetcher=lambda url: (_ for _ in ()).throw(AssertionError("refetched")),
-            filesystem=fake,
-        ).collect()
-        assert all(not r.staged and r.error is None for r in again)
-        assert all(r.n_bytes > 0 for r in again)
-
-
-class TestListingOverUri:
-    def test_listing_source_reads_file_uri(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sources.listing_source import NCAListingDataSource
-
-        d = tmp_path / "listings"
-        d.mkdir()
-        (d / "page1.html").write_text(
-            '<a href="files/NCA_2024.pdf">NCA 2024</a>'
-        )
-        (d / "ignore.txt").write_text("not html")
-        spark.dataSource.register(NCAListingDataSource)
-        rows = (
-            spark.read.format("nca_listing")
-            .option("path", f"file://{d}")
-            .load()
-            .collect()
-        )
-        assert len(rows) == 1
-        assert rows[0].url == "files/NCA_2024.pdf"
-        assert rows[0].page_file.startswith("file://")

@@ -1,9 +1,9 @@
 """Partitioned-layout contract (sinks/partitioned.py): directory-level
 partition pruning must show up in the physical plan (PartitionFilters,
 matched file counts) and dynamic overwrite must touch only the
-partitions present in the incoming frame. Same plan-assertion
-discipline as test_bucketed.py — a silent pruning regression means a
-full-table scan per filtered query at 100 TB."""
+partitions present in the incoming frame. The asserts read the plan:
+a silent pruning regression means a full-table scan per filtered
+query at 100 TB."""
 
 from __future__ import annotations
 

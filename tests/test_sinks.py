@@ -449,39 +449,6 @@ class TestNCAStore:
         assert rows(store.read("allocation"), "amount") == [(2.0,)]
 
 
-class TestCompaction:
-    def test_compact_reduces_files_and_preserves_rows(self, spark, tmp_path, sf_dir):
-        from dbm_nca_ph_etl_spark.sinks.maintenance import compact_parquet
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        src = str(tmp_path / "sprawl")
-        docs.repartition(37).write.parquet(src)
-        assert len(spark.read.parquet(src).inputFiles()) >= 37
-
-        dst = str(tmp_path / "compacted")
-        n_out = compact_parquet(spark, src, dst, target_file_bytes=64 * 1024 * 1024)
-        got_files = spark.read.parquet(dst).inputFiles()
-        assert len(got_files) == n_out < 37
-
-        key = lambda r: r.doc_id
-        assert sorted(spark.read.parquet(dst).collect(), key=key) == sorted(
-            docs.collect(), key=key
-        )
-
-    def test_compact_refuses_overwrite(self, spark, tmp_path, sf_dir):
-        import pytest as _pytest
-
-        from dbm_nca_ph_etl_spark.sinks.maintenance import compact_parquet
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        src = str(tmp_path / "src2")
-        docs.write.parquet(src)
-        dst = str(tmp_path / "dst2")
-        compact_parquet(spark, src, dst)
-        with _pytest.raises(Exception):
-            compact_parquet(spark, src, dst)  # mode("error"): no clobber
-
-
 class TestSortedLayout:
     def test_disjoint_file_ranges_and_pruning(self, spark, sf_dir, tmp_path):
         """write_sorted_parquet must leave pairwise-disjoint per-file
@@ -528,27 +495,6 @@ class TestSortedLayout:
             "o_orderdate >= date'1995-06-01' AND o_orderdate < date'1995-07-01'"
         ).count()
         assert back.count() == exact
-
-
-class TestOrcFormat:
-    def test_orc_roundtrip_binary_and_ntz(self, spark, tmp_path):
-        from pyspark.sql import Row
-        from pyspark.sql import functions as F
-
-        from dbm_nca_ph_etl_spark.sources.formats import read_orc, write_orc
-
-        df = spark.createDataFrame(
-            [
-                Row(doc_id=1, payload=bytearray(b"\x00\xffbin"), tag="a"),
-                Row(doc_id=2, payload=None, tag=None),
-            ]
-        ).withColumn("ts", F.lit("2024-03-01 10:20:30.123456").cast("timestamp_ntz"))
-        path = str(tmp_path / "docs_orc")
-        write_orc(df, path)
-        back = read_orc(spark, path, schema=df.schema)
-        assert back.schema == df.schema
-        key = lambda r: r.doc_id
-        assert sorted(back.collect(), key=key) == sorted(df.collect(), key=key)
 
 
 class TestZorderLayout:
@@ -1287,6 +1233,37 @@ class TestDdMeasure:
             Measure("d", "v", "dd", lo=0.0, hi=10.0, bins=8)
         with pytest.raises(ValueError, match="dd needs"):
             Measure("d", "v", "dd", lo=5.0, hi=5.0, bins=8)
+
+    def test_view_refreshes_equal_one_shot_sketch(self, spark, tmp_path):
+        """A persisted view folded one refresh per batch holds the
+        one-shot sketch of all rows, and a replayed batch is a no-op."""
+        from dbm_nca_ph_etl_spark.sinks.matview import (
+            MaterializedAgg,
+            derived_dd_quantile,
+            partial_agg,
+        )
+
+        keys, ms = self._measures()
+        view = MaterializedAgg(spark, str(tmp_path / "mv"), keys, ms)
+        batches = [
+            [("a", float(1.7**i)) for i in range(1, 10)],
+            [("a", 5000.0), ("b", 3.0)],
+            [("b", 42.0), ("a", -1.0)],  # negative dropped
+        ]
+        for i, b in enumerate(batches):
+            assert view.refresh(spark.createDataFrame(b, "k string, v double"), f"b{i}")
+        last = spark.createDataFrame(batches[-1], "k string, v double")
+        assert view.refresh(last, f"b{len(batches) - 1}") is False
+        folded = {r.k: r.d for r in view.read_partials().collect()}
+        everything = spark.createDataFrame(
+            [r for b in batches for r in b], "k string, v double"
+        )
+        assert folded == {r.k: r.d for r in partial_agg(everything, keys, ms).collect()}
+        est = (
+            view.read_partials().where("k = 'a'")
+            .select(derived_dd_quantile(ms[0], 0.5)).collect()[0][0]
+        )
+        assert est is not None and 1.0 <= est <= 10000.0
 
 
 class TestQMeasure:

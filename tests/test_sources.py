@@ -5,7 +5,6 @@ deterministic FAKEPDF parser.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -191,117 +190,6 @@ class TestEndToEndIngestion:
         assert allocs == [("AG-1", "OU-1", 1000.5), ("AG-2", "OU-2", 2000.0)]
 
 
-class TestTextFormats:
-    """CSV/JSONL round trips preserve schema, values, and nulls —
-    the interchange contract for corpus pipelines."""
-
-    def _sample(self, spark):
-        from pyspark.sql import functions as F
-
-        return spark.createDataFrame(
-            [
-                Row(doc_id=1, text='say "hi",\nnewline', score=1.5, tag=None),
-                Row(doc_id=2, text=None, score=None, tag="ok"),
-                Row(doc_id=3, text="plain", score=-0.25, tag="x,y"),
-            ]
-        ).withColumn("ts", F.lit("2024-03-01 10:20:30.123456").cast("timestamp_ntz"))
-
-    def test_csv_roundtrip(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sources.formats import read_csv, write_csv
-
-        df = self._sample(spark)
-        path = str(tmp_path / "docs_csv")
-        write_csv(df, path)
-        back = read_csv(spark, path, schema=df.schema)
-        assert back.schema == df.schema
-        key = lambda r: r.doc_id
-        assert sorted(back.collect(), key=key) == sorted(df.collect(), key=key)
-
-    def test_jsonl_roundtrip(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sources.formats import read_jsonl, write_jsonl
-
-        df = self._sample(spark)
-        path = str(tmp_path / "docs_jsonl")
-        write_jsonl(df, path)
-        back = read_jsonl(spark, path, schema=df.schema)
-        assert back.schema == df.schema
-        key = lambda r: r.doc_id
-        assert sorted(back.collect(), key=key) == sorted(df.collect(), key=key)
-
-    def test_explicit_schema_required(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from dbm_nca_ph_etl_spark.sources.formats import read_csv, read_jsonl
-
-        with _pytest.raises(ValueError):
-            read_csv(spark, str(tmp_path))
-        with _pytest.raises(ValueError):
-            read_jsonl(spark, str(tmp_path))
-
-
-class TestListingDataSource:
-    """The scraper stage as a Spark 4 Python DataSource (S1 —
-    bs4_scraper.py:18-37): listing HTML files become a partition-
-    parallel relational source; derivation stays in derive_releases."""
-
-    FIXTURE_A = """
-    <html><body>
-      <ul>
-        <li><a href="https://dbm.example/files/NCA_2024.pdf">NCA <b>2024</b></a></li>
-        <li><a href='https://dbm.example/files/nca_2023.PDF'>nca 2023</a></li>
-        <li><a href="https://dbm.example/files/UPDATED_NCA.pdf">Updated   NCA</a></li>
-        <li><a href="https://dbm.example/files/budget_2024.pdf">not an NCA</a></li>
-        <li><a href="https://dbm.example/about">about page</a></li>
-      </ul>
-    </body></html>
-    """
-    FIXTURE_B = """
-    <p><a class="x" href="https://dbm.example/files/NCA_2025.pdf">NCA 2025</a></p>
-    """
-
-    @pytest.fixture()
-    def listing_dir(self, tmp_path):
-        d = tmp_path / "listings"
-        d.mkdir()
-        (d / "a.html").write_text(self.FIXTURE_A)
-        (d / "b.html").write_text(self.FIXTURE_B)
-        return str(d)
-
-    def test_reads_anchors_partition_per_file(self, spark, listing_dir):
-        from dbm_nca_ph_etl_spark.sources.listing_source import (
-            NCAListingDataSource,
-        )
-
-        spark.dataSource.register(NCAListingDataSource)
-        df = spark.read.format("nca_listing").option("path", listing_dir).load()
-        rows = df.collect()
-        assert len(rows) == 6  # every anchor, both files
-        assert df.rdd.getNumPartitions() == 2  # one per listing file
-        by_title = {r.title: r.url for r in rows}
-        assert by_title["NCA 2024"] == "https://dbm.example/files/NCA_2024.pdf"
-        assert by_title["Updated NCA"].endswith("UPDATED_NCA.pdf")  # ws collapsed
-
-    def test_composes_with_derive_releases(self, spark, listing_dir):
-        from dbm_nca_ph_etl_spark.sources.listing_source import (
-            NCAListingDataSource,
-        )
-        from dbm_nca_ph_etl_spark.sources.releases import derive_releases
-
-        spark.dataSource.register(NCAListingDataSource)
-        links = (
-            spark.read.format("nca_listing").option("path", listing_dir).load()
-        )
-        rel = derive_releases(links, current_year=2026, oldest_year=2024)
-        got = {r.filename: (r.year, r.id) for r in rel.collect()}
-        # nca_2023.PDF dropped by year filter; budget/about dropped by
-        # the NCA-pdf pattern; UPDATED stamped with current_year
-        assert got == {
-            "NCA_2024.pdf": (2024, "id_2024"),
-            "UPDATED_NCA.pdf": (2026, "id_2026"),
-            "NCA_2025.pdf": (2025, "id_2025"),
-        }
-
-
 def _layout_sensitive_parser():
     """Fake parser mimicking MiniPdf's per-file adaptive layout: each
     opened document detects its 'layout' (the first cell of its
@@ -462,83 +350,6 @@ class TestAdaptiveLayout:
         assert tags[("id_b", 1, 1)] == ["5@HB#1", "6@HB#1"]
 
 
-class TestStageReleases:
-    """S3/S4 — derive → stage (fake HTTP) → read_pdf_binaries round
-    trip (reference bs4_scraper.py:39-42 + s3_storage.py:25-38)."""
-
-    def _releases(self, spark):
-        links = spark.createDataFrame(
-            [
-                Row(title="NCA 2024", url="https://dbm.example/f/NCA_2024.pdf"),
-                Row(title="NCA 2025", url="https://dbm.example/f/NCA_2025.pdf"),
-            ],
-            "title string, url string",
-        )
-        return derive_releases(links, current_year=2026, oldest_year=2024)
-
-    def test_stage_then_scan_round_trip(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sources.pdf_source import read_pdf_binaries
-        from dbm_nca_ph_etl_spark.sources.staging import stage_releases
-
-        def fake_fetch(url):
-            # deterministic per-URL FAKEPDF payload
-            name = url.rsplit("/", 1)[-1]
-            return make_fake_pdf([[[name, "row"]]], created_at="D:2024")
-
-        dest = str(tmp_path / "lake" / "pdfs")
-        status = stage_releases(self._releases(spark), dest, fetcher=fake_fetch)
-        got = {r.filename: r for r in status.collect()}
-        assert set(got) == {"NCA_2024.pdf", "NCA_2025.pdf"}
-        assert all(r.staged and r.error is None and r.n_bytes > 0 for r in got.values())
-        assert got["NCA_2024.pdf"].release_id == "id_2024"
-
-        files = read_pdf_binaries(spark, dest)
-        parsed = {
-            r.release_id: FakeDoc(r.content).extract_page(1)
-            for r in files.collect()
-        }
-        assert parsed == {
-            "NCA_2024": [["NCA_2024.pdf", "row"]],
-            "NCA_2025": [["NCA_2025.pdf", "row"]],
-        }
-
-    def test_idempotent_replay_and_error_capture(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sources.staging import stage_releases
-
-        calls = []
-
-        def flaky_fetch(url):
-            calls.append(url)
-            if "2025" in url:
-                raise OSError("boom")
-            return make_fake_pdf([[["x"]]])
-
-        dest = str(tmp_path / "lake2")
-        first = {
-            r.filename: r
-            for r in stage_releases(
-                self._releases(spark), dest, fetcher=flaky_fetch
-            ).collect()
-        }
-        assert first["NCA_2024.pdf"].staged
-        assert not first["NCA_2025.pdf"].staged
-        assert "OSError" in first["NCA_2025.pdf"].error
-
-        # replay: staged file skipped (no refetch), failed one retried
-        def ok_fetch(url):
-            return make_fake_pdf([[["y"]]])
-
-        second = {
-            r.filename: r
-            for r in stage_releases(
-                self._releases(spark), dest, fetcher=ok_fetch
-            ).collect()
-        }
-        assert not second["NCA_2024.pdf"].staged  # skip, already present
-        assert second["NCA_2024.pdf"].n_bytes == first["NCA_2024.pdf"].n_bytes
-        assert second["NCA_2025.pdf"].staged and second["NCA_2025.pdf"].error is None
-
-
 class TestExtractFromPaths:
     """Path-loading extract (the 100 TB shape): batch rows carry
     (release_id, path, page range); blobs re-read task-side."""
@@ -610,6 +421,16 @@ class TestExtractFromPaths:
         want = raw_rows(extract_raw_cells_from_paths(plain, FakeDoc))
         assert sorted(got) == want and len(want) == 5
 
+    def test_file_uri_paths_read_on_executors(self, spark, tmp_path):
+        """Paths spelled as ``file:///…`` URIs resolve to the pyarrow
+        adapter inside the tasks (across the pickle boundary) and
+        extract the same rows as the scan's own ``file:/…`` paths."""
+        files = stage_pdfs(spark, tmp_path / "lake", self.BLOBS)
+        uris = files.withColumn("path", F.regexp_replace("path", "^file:/", "file:///"))
+        assert all(r.path.startswith("file:///") for r in uris.collect())
+        got = raw_rows(extract_raw_cells_from_paths(uris, FakeDoc, batch_size=1))
+        assert got == raw_rows(extract_raw_cells_from_paths(files, FakeDoc)) and got
+
 
 class TestPageCountReuse:
     def test_precounted_files_skip_reparse(self, spark, tmp_path):
@@ -679,185 +500,3 @@ class TestParseStatus:
         )
         got = raw_rows(extract_raw_cells_from_paths(files, get_parser("auto")))
         assert [r[:2] for r in got] == [("fake", 1)] * 3 + [("good", 1), ("good", 2)]
-
-
-class TestQueueDataSink:
-    """The queue sink as a Spark 4 Python DataSource writer (S15 —
-    sqs_queue.py:17-26): JSONL message files published by two-phase
-    commit (task temp files → atomic rename on driver commit)."""
-
-    def _register(self, spark):
-        from dbm_nca_ph_etl_spark.sources.queue_sink import NCAQueueDataSource
-
-        spark.dataSource.register(NCAQueueDataSource)
-
-    def test_round_trip_and_atomic_publish(self, spark, tmp_path):
-        import os
-
-        self._register(spark)
-        q = str(tmp_path / "queue")
-        df = spark.createDataFrame(
-            [(1, "id_2024", "NCA_2024.pdf"), (2, "id_2025", "UPDATED_NCA.pdf")],
-            "batch_num int, release_id string, filename string",
-        )
-        df.repartition(2).write.format("nca_queue").option("path", q).mode(
-            "append"
-        ).save()
-        files = sorted(os.listdir(q))
-        assert files and all(f.startswith("msg-") and f.endswith(".jsonl") for f in files)
-        back = spark.read.schema(
-            "batch_num int, release_id string, filename string"
-        ).json(q)
-        got = {tuple(r) for r in back.collect()}
-        assert got == {
-            (1, "id_2024", "NCA_2024.pdf"),
-            (2, "id_2025", "UPDATED_NCA.pdf"),
-        }
-
-    def test_second_batch_appends_new_messages(self, spark, tmp_path):
-        import os
-
-        self._register(spark)
-        q = str(tmp_path / "queue2")
-        one = spark.createDataFrame([(1, "a")], "n int, s string")
-        two = spark.createDataFrame([(2, "b")], "n int, s string")
-        one.write.format("nca_queue").option("path", q).mode("append").save()
-        first = set(os.listdir(q))
-        two.write.format("nca_queue").option("path", q).mode("append").save()
-        assert first < set(os.listdir(q)), "append must not clobber prior messages"
-        assert spark.read.schema("n int, s string").json(q).count() == 2
-
-    def test_empty_partitions_publish_nothing(self, spark, tmp_path):
-        import os
-
-        self._register(spark)
-        q = str(tmp_path / "queue3")
-        df = spark.createDataFrame([(1, "a")], "n int, s string").repartition(8)
-        df.write.format("nca_queue").option("path", q).mode("append").save()
-        files = os.listdir(q)
-        assert len(files) == 1, f"empty tasks must not emit message files: {files}"
-        assert not any(f.startswith(".tmp") for f in files)
-
-    def test_overwrite_mode_refused(self, spark, tmp_path):
-        self._register(spark)
-        df = spark.createDataFrame([(1, "a")], "n int, s string")
-        with pytest.raises(Exception, match="append-only"):
-            df.write.format("nca_queue").option(
-                "path", str(tmp_path / "queue4")
-            ).mode("overwrite").save()
-
-    def test_feeds_streaming_consumer(self, spark, tmp_path):
-        """A batch producer's messages drive a streaming consumer —
-        the release-queue topology (T1) with the DataFrame writer as
-        the producer."""
-        self._register(spark)
-        q = str(tmp_path / "queue5")
-        spark.createDataFrame(
-            [(1, "id_2024"), (2, "id_2025")], "batch_num int, release_id string"
-        ).write.format("nca_queue").option("path", q).mode("append").save()
-        stream = (
-            spark.readStream.schema("batch_num int, release_id string").json(q)
-        )
-        out = (
-            stream.groupBy("release_id").count()
-            .writeStream.format("memory").queryName("queue_consume")
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        out.awaitTermination()
-        got = {
-            (r.release_id, r["count"])
-            for r in spark.sql("SELECT * FROM queue_consume").collect()
-        }
-        assert got == {("id_2024", 1), ("id_2025", 1)}
-
-    def test_induced_task_failure_publishes_nothing_then_retry_once(
-        self, spark, tmp_path
-    ):
-        """Kill a task mid-write (exception after rows already hit the
-        temp file): no partial message may ever become visible, temps
-        are reaped by abort(), and the retry publishes exactly once."""
-        import os
-
-        from pyspark.sql import functions as F
-
-        self._register(spark)
-        q = str(tmp_path / "queue6")
-
-        @F.udf("int")
-        def boom(n):
-            if n == 3:
-                raise ValueError("induced task failure")
-            return n
-
-        poisoned = (
-            spark.createDataFrame([(1,), (2,), (3,)], "n int")
-            .coalesce(1)
-            .withColumn("n", boom("n"))
-        )
-        with pytest.raises(Exception):
-            poisoned.write.format("nca_queue").option("path", q).mode(
-                "append"
-            ).save()
-        leftovers = os.listdir(q)
-        assert not any(f.startswith("msg-") for f in leftovers), leftovers
-        assert not any(f.startswith(".tmp-") for f in leftovers), leftovers
-        assert not any(f.startswith(".manifest-") for f in leftovers), leftovers
-
-        spark.createDataFrame([(1,), (2,), (3,)], "n int").coalesce(1).write.format(
-            "nca_queue"
-        ).option("path", q).mode("append").save()
-        got = [r.n for r in spark.read.schema("n int").json(q).collect()]
-        assert sorted(got) == [1, 2, 3], "retry must publish exactly once"
-
-    def test_recover_rolls_interrupted_commit_forward(self, tmp_path):
-        """A driver crash between the manifest rename (the commit
-        decision) and the last temp rename leaves a half-published
-        batch; recover_queue_dir must finish the redo idempotently."""
-        import json
-        import os
-
-        from dbm_nca_ph_etl_spark.sources.queue_sink import recover_queue_dir
-
-        q = tmp_path / "queue7"
-        q.mkdir()
-        # rename [0] never ran; rename [1] already completed pre-crash
-        (q / ".tmp-deadjob-aaa.jsonl").write_text('{"n": 1}\n')
-        (q / "msg-c1-00001.jsonl").write_text('{"n": 2}\n')
-        # an orphan temp from a job that died BEFORE its commit
-        # decision: recovery must leave it alone
-        (q / ".tmp-otherjob-zzz.jsonl").write_text('{"n": 9}\n')
-        (q / ".manifest-c1.json").write_text(
-            json.dumps(
-                {
-                    "renames": [
-                        [".tmp-deadjob-aaa.jsonl", "msg-c1-00000.jsonl"],
-                        [".tmp-deadjob-bbb.jsonl", "msg-c1-00001.jsonl"],
-                    ]
-                }
-            )
-        )
-        assert recover_queue_dir(str(q)) == 1
-        assert sorted(os.listdir(q)) == [
-            ".tmp-otherjob-zzz.jsonl",
-            "msg-c1-00000.jsonl",
-            "msg-c1-00001.jsonl",
-        ]
-        assert (q / "msg-c1-00000.jsonl").read_text() == '{"n": 1}\n'
-        # second recovery pass is a no-op
-        assert recover_queue_dir(str(q)) == 0
-
-    def test_recover_raises_on_genuine_data_loss(self, tmp_path):
-        """Manifest promises a message whose temp vanished and whose
-        visible twin never appeared — that is data loss, not a state
-        to silently skip."""
-        import json
-
-        from dbm_nca_ph_etl_spark.sources.queue_sink import recover_queue_dir
-
-        q = tmp_path / "queue8"
-        q.mkdir()
-        (q / ".manifest-c2.json").write_text(
-            json.dumps({"renames": [[".tmp-gone.jsonl", "msg-c2-00000.jsonl"]]})
-        )
-        with pytest.raises(FileNotFoundError):
-            recover_queue_dir(str(q))

@@ -816,191 +816,6 @@ class TestSourceQuotaRestart:
         }
 
 
-class TestStreamingMatview:
-    """foreachBatch → MaterializedAgg: exactly-once lake aggregation."""
-
-    @staticmethod
-    def _measures():
-        from dbm_nca_ph_etl_spark.sinks.matview import Measure
-
-        return [Measure("n", "v", "count"), Measure("s", "v", "sum")]
-
-    def test_stream_folds_batches_and_survives_restart(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sinks.matview import MaterializedAgg
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_matview
-
-        inbox = str(tmp_path / "inbox")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(inbox)
-        view = MaterializedAgg(spark, str(tmp_path / "mv"), ["k"], self._measures())
-
-        def drop(rows):
-            spark.createDataFrame(rows, "k string, v long").coalesce(1).write.mode(
-                "append"
-            ).parquet(inbox)
-
-        def run():
-            stream = (
-                spark.readStream.schema("k string, v long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(inbox)
-            )
-            stream_into_matview(stream, view, ckpt)
-
-        drop([("a", 1), ("b", 5)])
-        drop([("a", 2)])
-        run()
-        got = {r["k"]: (r["n"], r["s"]) for r in view.read_partials().collect()}
-        assert got == {"a": (2, 3), "b": (1, 5)}
-
-        # new drop + restart from the same checkpoint: epoch ids
-        # continue, already-applied epochs replay as no-ops
-        drop([("b", 10)])
-        run()
-        run()
-        got = {r["k"]: (r["n"], r["s"]) for r in view.read_partials().collect()}
-        assert got == {"a": (2, 3), "b": (2, 15)}
-
-    def test_without_available_now_returns_a_stoppable_query(self, spark, tmp_path):
-        """A long-running stream hands back its query, so the
-        ``query.stop()`` the docstring promises can be reached."""
-        from dbm_nca_ph_etl_spark.sinks.matview import MaterializedAgg
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_matview
-
-        inbox = str(tmp_path / "inbox")
-        os.makedirs(inbox)
-        view = MaterializedAgg(spark, str(tmp_path / "mv"), ["k"], self._measures())
-        stream = spark.readStream.schema("k string, v long").parquet(inbox)
-        try:
-            q = stream_into_matview(
-                stream, view, str(tmp_path / "ckpt"), available_now=False
-            )
-            assert q is not None and q.isActive
-            q.stop()
-            assert not q.isActive
-        finally:
-            for active in spark.streams.active:
-                active.stop()
-
-
-class TestIncrementalIndex:
-    """Streaming inverted-index maintenance: the maintained lake index
-    must equal a batch build over the full corpus — postings, doc
-    lengths, and the BM25 ranking computed from them."""
-
-    DOCS = [
-        (1, "spark hash join hash"),
-        (2, "sort merge join"),
-        (3, "hash aggregate"),
-        (4, "join hash spark spark"),
-        (5, "window functions"),
-    ]
-
-    def _run(self, spark, tmp_path, docs_batches):
-        from dbm_nca_ph_etl_spark.streaming.index_stream import (
-            doc_lens_view,
-            postings_view,
-            stream_into_index,
-        )
-
-        src = str(tmp_path / "docs_src")
-        for i, batch in enumerate(docs_batches):
-            spark.createDataFrame(
-                batch, "doc_id long, text string"
-            ).coalesce(1).write.mode("append").parquet(src)
-        pv = postings_view(spark, str(tmp_path / "postings"))
-        lv = doc_lens_view(spark, str(tmp_path / "doclens"))
-        stream = spark.readStream.schema("doc_id long, text string").option(
-            "maxFilesPerTrigger", 1
-        ).parquet(src)
-        stream_into_index(
-            stream, pv, lv, str(tmp_path / "ckpt"), available_now=True
-        )
-        return pv, lv
-
-    def test_matches_batch_build(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.operators.inverted import build_postings
-        from dbm_nca_ph_etl_spark.streaming.index_stream import (
-            index_doc_lens,
-            index_postings,
-        )
-
-        pv, lv = self._run(
-            spark, tmp_path, [self.DOCS[:2], self.DOCS[2:4], self.DOCS[4:]]
-        )
-        all_docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        got = {
-            (r.token, r.doc_id): r.tf for r in index_postings(pv).collect()
-        }
-        want = {
-            (r.token, r.doc_id): r.tf for r in build_postings(all_docs).collect()
-        }
-        assert got == want
-        lens = {r.doc_id: r.doc_len for r in index_doc_lens(lv).collect()}
-        assert lens == {1: 4, 2: 3, 3: 2, 4: 4, 5: 2}
-
-    def test_bm25_over_maintained_index(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.operators.inverted import (
-            bm25_search,
-            build_postings,
-            doc_lengths,
-        )
-        from dbm_nca_ph_etl_spark.streaming.index_stream import (
-            index_doc_lens,
-            index_postings,
-        )
-
-        pv, lv = self._run(spark, tmp_path, [self.DOCS[:3], self.DOCS[3:]])
-        all_docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
-        terms = ["hash", "join"]
-        streamed = bm25_search(
-            index_postings(pv), index_doc_lens(lv), terms
-        ).collect()
-        batch = bm25_search(
-            build_postings(all_docs), doc_lengths(all_docs), terms
-        ).collect()
-        assert [tuple(r) for r in streamed] == [tuple(r) for r in batch]
-
-    def test_epoch_replay_is_noop(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.streaming.index_stream import (
-            index_postings,
-            postings_view,
-        )
-
-        pv = postings_view(spark, str(tmp_path / "p2"))
-        toks = spark.createDataFrame(
-            [(1, "a"), (1, "a"), (1, "b")], "doc_id long, token string"
-        )
-        assert pv.refresh(toks, "epoch0") is True
-        assert pv.refresh(toks, "epoch0") is False  # replayed delivery
-        got = {(r.token, r.doc_id): r.tf for r in index_postings(pv).collect()}
-        assert got == {("a", 1): 2, ("b", 1): 1}
-
-    def test_document_revision_via_retraction(self, spark, tmp_path):
-        """Revising a document: retract its old postings, apply the
-        new — the index converges to the revised corpus state."""
-        from dbm_nca_ph_etl_spark.streaming.index_stream import (
-            index_postings,
-            postings_view,
-        )
-
-        pv = postings_view(spark, str(tmp_path / "p3"))
-        v1 = spark.createDataFrame(
-            [(1, "a"), (1, "a"), (1, "b")], "doc_id long, token string"
-        )
-        v2 = spark.createDataFrame(
-            [(1, "a"), (1, "c")], "doc_id long, token string"
-        )
-        pv.refresh(v1, "ingest-v1")
-        pv.refresh(v1, "retract-v1", retract=True)
-        pv.refresh(v2, "ingest-v2")
-        got = {
-            (r.token, r.doc_id): r.tf
-            for r in index_postings(pv).where(F.col("tf") != 0).collect()
-        }
-        assert got == {("a", 1): 1, ("c", 1): 1}
-
-
 class TestDedupWithinWatermark:
     def test_cross_batch_dups_dropped_with_bounded_state(self, spark, tmp_path):
         """dropDuplicatesWithinWatermark: redeliveries of event_id 1
@@ -1143,261 +958,6 @@ class TestRocksDBStateStore:
                 spark.conf.set(provider_key, old)
 
 
-class TestStreamingHllMatview:
-    def test_streamed_distinct_sketch_equals_batch(self, spark, tmp_path):
-        """The hll matview measure through the streaming loop: user
-        sets overlap across micro-batches, so per-batch exact distinct
-        counts would over-count on merge — the streamed HLL union must
-        land on the same estimate as one batch sketch over all rows
-        (and within 2% of the true distinct count)."""
-        import os
-
-        from dbm_nca_ph_etl_spark.sinks.matview import (
-            MaterializedAgg,
-            Measure,
-            derived_distinct,
-            partial_agg,
-        )
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_matview
-
-        schema = "k string, user_id long"
-        src = str(tmp_path / "hll_src")
-        # batch 0: users 0..59; batch 1: users 30..89 (overlap 30..59)
-        spark.createDataFrame(
-            [("a", v) for v in range(60)], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        _age_files(src, 120)
-        spark.createDataFrame(
-            [("a", v) for v in range(30, 90)], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        measures = [
-            Measure("n", "user_id", "count"),
-            Measure("uh", "user_id", "hll"),
-        ]
-        view = MaterializedAgg(
-            spark, str(tmp_path / "hll_mv"), ["k"], measures
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        stream_into_matview(stream, view, str(tmp_path / "hll_ckpt"))
-
-        got = view.read_partials().select(
-            "k", "n", derived_distinct("uh").alias("d")
-        ).collect()[0]
-        assert got.n == 120  # events: exact, overlap double-counts by design
-        batch = (
-            partial_agg(
-                spark.read.parquet(src), ["k"], measures
-            )
-            .select(derived_distinct("uh").alias("d"))
-            .collect()[0]
-        )
-        # sketch is exact at this cardinality; streamed union == batch
-        assert got.d == 90 and batch.d == 90
-
-
-class TestStreamProbeDedup:
-    """Streaming dedup-at-ingest: probe the growing band index per
-    micro-batch, fold only novel docs forward, epoch-partition
-    overwrite for replay idempotence."""
-
-    def _run(self, spark, src, paths):
-        from dbm_nca_ph_etl_spark.streaming.dedup_stream import stream_probe_dedup
-
-        stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-        stream_probe_dedup(
-            stream,
-            paths["idx"],
-            paths["corpus"],
-            paths["verdicts"],
-            paths["ckpt"],
-        )
-
-    def test_three_batches_dedup_against_history(self, spark, tmp_path):
-        import os
-
-        from dbm_nca_ph_etl_spark.streaming.dedup_stream import read_verdicts
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        paths = {
-            "idx": str(tmp_path / "idx"),
-            "corpus": str(tmp_path / "corpus"),
-            "verdicts": str(tmp_path / "verdicts"),
-            "ckpt": str(tmp_path / "ckpt"),
-        }
-        base = "some shared words plus unique token{} " 
-
-        def write_batch(rows, name):
-            spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-
-        write_batch([(1, base.format(1) * 4), (2, base.format(2) * 4)], "b1")
-        self._run(spark, src, paths)
-        write_batch(
-            [(10, base.format(1) * 4 + "tail"), (11, base.format(9) * 4)], "b2"
-        )
-        self._run(spark, src, paths)
-        write_batch(
-            [(20, base.format(9) * 4 + "tail"), (21, base.format(2) * 4 + "x")],
-            "b3",
-        )
-        self._run(spark, src, paths)
-
-        got = {
-            r.doc_id: (r.matched_doc, r.is_dup)
-            for r in read_verdicts(spark, paths["verdicts"]).collect()
-        }
-        assert got[1] == (None, False) and got[2] == (None, False)
-        assert got[10] == (1, True), got
-        assert got[11] == (None, False)
-        # batch-3 dups match docs folded in by EARLIER batches
-        assert got[20] == (11, True), got
-        assert got[21] == (2, True), got
-        corpus_ids = {
-            r.doc_id for r in spark.read.parquet(paths["corpus"]).collect()
-        }
-        assert corpus_ids == {1, 2, 11}, "only novel docs join the corpus"
-
-    def test_epoch_write_is_replay_idempotent(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.streaming.dedup_stream import _write_epoch
-
-        p = str(tmp_path / "ep")
-        df = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
-        _write_epoch(df, p, 3)
-        _write_epoch(df, p, 3)  # replayed epoch: same partition rewritten
-        assert spark.read.parquet(p).count() == 2
-
-    def test_same_batch_dup_admits_one(self, spark, tmp_path):
-        import os
-
-        from dbm_nca_ph_etl_spark.streaming.dedup_stream import read_verdicts
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        paths = {
-            "idx": str(tmp_path / "idx"),
-            "corpus": str(tmp_path / "corpus"),
-            "verdicts": str(tmp_path / "verdicts"),
-            "ckpt": str(tmp_path / "ckpt"),
-        }
-        burst = "the very same document body repeated verbatim " * 4
-        other = "a completely different second document here now " * 4
-        spark.createDataFrame(
-            [(5, burst), (7, burst), (9, burst), (3, other)],
-            "doc_id long, text string",
-        ).coalesce(1).write.mode("append").parquet(src)
-        self._run(spark, src, paths)
-        got = {
-            r.doc_id: (r.matched_doc, r.is_dup)
-            for r in read_verdicts(spark, paths["verdicts"]).collect()
-        }
-        # lowest id of the burst survives; the rest point at it
-        assert got[5] == (None, False) and got[3] == (None, False)
-        assert got[7] == (5, True) and got[9] == (5, True), got
-        corpus_ids = {
-            r.doc_id for r in spark.read.parquet(paths["corpus"]).collect()
-        }
-        assert corpus_ids == {3, 5}, "one copy of the burst folds in"
-
-    def test_replay_after_partial_write_keeps_verdicts(self, spark, tmp_path):
-        """Crash window: index/corpus epoch partitions written but the
-        checkpoint commit lost. The replayed epoch must NOT probe its
-        own rows (self-collision would flip every doc to is_dup)."""
-        import os
-        import shutil
-
-        from dbm_nca_ph_etl_spark.streaming.dedup_stream import read_verdicts
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        paths = {
-            "idx": str(tmp_path / "idx"),
-            "corpus": str(tmp_path / "corpus"),
-            "verdicts": str(tmp_path / "verdicts"),
-            "ckpt": str(tmp_path / "ckpt"),
-        }
-        spark.createDataFrame(
-            [(1, "first unique document body words " * 4),
-             (2, "second unique document body words " * 4)],
-            "doc_id long, text string",
-        ).coalesce(1).write.mode("append").parquet(src)
-        self._run(spark, src, paths)
-        before = {
-            r.doc_id: (r.matched_doc, r.is_dup)
-            for r in read_verdicts(spark, paths["verdicts"]).collect()
-        }
-        assert before == {1: (None, False), 2: (None, False)}
-        # simulate the crash: data writes landed, commit did not
-        commits = os.path.join(paths["ckpt"], "commits")
-        batch_files = [n for n in os.listdir(commits) if n.isdigit()]
-        newest = max(batch_files, key=int)
-        os.remove(os.path.join(commits, newest))
-        crc = os.path.join(commits, f".{newest}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
-        shutil.rmtree(
-            os.path.join(paths["ckpt"], "__tmp_path_dir"), ignore_errors=True
-        )
-        self._run(spark, src, paths)  # replays the epoch
-        after = {
-            r.doc_id: (r.matched_doc, r.is_dup)
-            for r in read_verdicts(spark, paths["verdicts"]).collect()
-        }
-        assert after == before, "replayed epoch self-collided"
-        corpus_ids = {
-            r.doc_id for r in spark.read.parquet(paths["corpus"]).collect()
-        }
-        assert corpus_ids == {1, 2}
-
-    def test_rejects_band_partitioned_index(self, spark, tmp_path):
-        import os
-
-        import pytest
-
-        from dbm_nca_ph_etl_spark.operators.dedup import build_band_index
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        docs = spark.createDataFrame(
-            [(1, "corpus doc alpha beta gamma " * 3)], "doc_id long, text string"
-        )
-        idx_path = str(tmp_path / "bandidx")
-        build_band_index(docs, idx_path)
-        docs.coalesce(1).write.mode("append").parquet(src)
-        paths = {
-            "idx": idx_path,  # wrong layout: build_band_index artifact
-            "corpus": str(tmp_path / "corpus"),
-            "verdicts": str(tmp_path / "verdicts"),
-            "ckpt": str(tmp_path / "ckpt"),
-        }
-        with pytest.raises(Exception) as exc:
-            self._run(spark, src, paths)
-        assert "band=" in str(exc.value) or "band=" in str(exc.value.__cause__)
-
-    def test_load_band_index_layout_guard(self, spark, tmp_path):
-        import pytest
-
-        from dbm_nca_ph_etl_spark.operators.dedup import (
-            build_band_index,
-            load_band_index,
-        )
-
-        docs = spark.createDataFrame(
-            [(1, "doc alpha beta gamma " * 3)], "doc_id long, text string"
-        )
-        p = str(tmp_path / "bandidx")
-        build_band_index(docs, p)
-        assert load_band_index(spark, p, expected_layout="band").count() > 0
-        with pytest.raises(ValueError, match="layout"):
-            load_band_index(spark, p, expected_layout="epoch")
-
-
 class TestIntervalJoin:
     def test_stream_stream_equals_batch(self, spark, tmp_path, sf_dir):
         """interval_join as a GENUINE stream-stream join: two file
@@ -1460,314 +1020,6 @@ class TestIntervalJoin:
         assert [(r.user_id, r.l_event_id, r.r_event_id, r.lag_seconds) for r in got] == [
             (1, 100, 200, 1800)
         ]
-
-
-class TestStreamIntoKeyed:
-    def _run(self, spark, src, path, ckpt):
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_keyed
-
-        stream = spark.readStream.schema("k long, v string").parquet(src)
-        stream_into_keyed(stream, path, ["k"], ckpt, writer="ingest")
-
-    def test_streamed_upserts_serialize_through_txlog(self, spark, tmp_path):
-        import os
-
-        from dbm_nca_ph_etl_spark.sinks.keyed import read_keyed, write_keyed
-        from dbm_nca_ph_etl_spark.sinks.txlog import CommitLog
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        path = str(tmp_path / "tbl")
-        ckpt = str(tmp_path / "ckpt")
-        base = spark.createDataFrame(
-            [(i, f"v{i}") for i in range(10)], "k long, v string"
-        )
-        write_keyed(base, path, ["k"], num_buckets=4)
-
-        def feed(rows):
-            spark.createDataFrame(rows, "k long, v string").coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-
-        feed([(1, "a1"), (50, "new50")])
-        self._run(spark, src, path, ckpt)
-        feed([(1, "a2"), (2, "b1")])
-        self._run(spark, src, path, ckpt)
-
-        got = {r.k: r.v for r in read_keyed(spark, path).collect()}
-        assert got[1] == "a2"  # later epoch wins
-        assert got[2] == "b1" and got[50] == "new50"
-        assert got[5] == "v5"  # untouched
-        log = CommitLog(path)
-        entries = log.entries()
-        assert [e["epoch"] for e in entries] == [0, 1]
-        assert all(e["writer"] == "ingest" for e in entries)
-
-    def test_redelivered_epochs_are_skipped(self, spark, tmp_path):
-        import os
-        import shutil
-
-        from dbm_nca_ph_etl_spark.sinks.keyed import read_keyed, write_keyed
-        from dbm_nca_ph_etl_spark.sinks.txlog import CommitLog
-
-        src = str(tmp_path / "src")
-        os.makedirs(src)
-        path = str(tmp_path / "tbl")
-        ckpt = str(tmp_path / "ckpt")
-        write_keyed(
-            spark.createDataFrame([(1, "v1")], "k long, v string"),
-            path,
-            ["k"],
-            num_buckets=2,
-        )
-        spark.createDataFrame([(1, "new")], "k long, v string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-        self._run(spark, src, path, ckpt)
-        assert CommitLog(path).version() == 1
-
-        # simulate full redelivery: wipe the checkpoint, re-run —
-        # epoch 0 re-delivers, the log entry gates it, nothing new
-        shutil.rmtree(ckpt)
-        self._run(spark, src, path, ckpt)
-        assert CommitLog(path).version() == 1  # no duplicate entry
-        assert {r.k: r.v for r in read_keyed(spark, path).collect()}[1] == "new"
-
-    def test_shared_writer_name_across_checkpoints_fails_loudly(
-        self, spark, tmp_path
-    ):
-        """One stream per writer name is the contract: epoch ids are
-        only unique within one checkpoint, so a second stream reusing
-        the name would collide on (writer, epoch) and silently drop
-        its epochs. The guard raises instead."""
-        import os
-
-        from dbm_nca_ph_etl_spark.sinks.keyed import read_keyed, write_keyed
-
-        src_a = str(tmp_path / "src_a")
-        src_b = str(tmp_path / "src_b")
-        os.makedirs(src_a)
-        os.makedirs(src_b)
-        path = str(tmp_path / "tbl")
-        write_keyed(
-            spark.createDataFrame([(1, "v1")], "k long, v string"),
-            path,
-            ["k"],
-            num_buckets=2,
-        )
-        for src, row in ((src_a, (1, "a")), (src_b, (2, "b"))):
-            spark.createDataFrame([row], "k long, v string").coalesce(
-                1
-            ).write.mode("append").parquet(src)
-        self._run(spark, src_a, path, str(tmp_path / "ckpt_a"))
-        # second stream, DIFFERENT checkpoint, same writer name:
-        # its epoch 0 collides with stream A's logged epoch 0
-        import pytest
-
-        with pytest.raises(Exception, match="distinct writer name"):
-            self._run(spark, src_b, path, str(tmp_path / "ckpt_b"))
-        # nothing from stream B leaked into the table
-        got = {r.k: r.v for r in read_keyed(spark, path).collect()}
-        assert got == {1: "a"}
-        # with its own name, the same stream flows normally
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_keyed
-
-        stream = spark.readStream.schema("k long, v string").parquet(src_b)
-        stream_into_keyed(
-            stream, path, ["k"], str(tmp_path / "ckpt_b2"), writer="ingest2"
-        )
-        got = {r.k: r.v for r in read_keyed(spark, path).collect()}
-        assert got == {1: "a", 2: "b"}
-
-
-class TestStreamingDdMatview:
-    """kind='dd' composes through stream_into_matview unchanged: the
-    streamed sketch equals the one-shot batch sketch bit-for-bit."""
-
-    def test_streamed_equals_batch_sketch(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sinks.matview import (
-            MaterializedAgg,
-            Measure,
-            derived_dd_quantile,
-            partial_agg,
-        )
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_matview
-
-        m = Measure("d", "v", "dd", lo=1.0, hi=10000.0, bins=64)
-        inbox = str(tmp_path / "inbox")
-        os.makedirs(inbox)
-        view = MaterializedAgg(spark, str(tmp_path / "mv"), ["k"], [m])
-
-        batches = [
-            [("a", float(1.7**i)) for i in range(1, 10)],
-            [("a", 5000.0), ("b", 3.0)],
-            [("b", 42.0), ("a", -1.0)],  # negative dropped
-        ]
-        for rows in batches:
-            spark.createDataFrame(rows, "k string, v double").coalesce(1).write.mode(
-                "append"
-            ).parquet(inbox)
-        stream = (
-            spark.readStream.schema("k string, v double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(inbox)
-        )
-        stream_into_matview(stream, view, str(tmp_path / "ckpt"))
-
-        streamed = {r["k"]: r["d"] for r in view.read_partials().collect()}
-        allrows = [r for b in batches for r in b]
-        direct = {
-            r["k"]: r["d"]
-            for r in partial_agg(
-                spark.createDataFrame(allrows, "k string, v double"), ["k"], [m]
-            ).collect()
-        }
-        assert streamed == direct
-        # and the read-out answers off the streamed state
-        est = (
-            view.read_partials()
-            .where("k = 'a'")
-            .select(derived_dd_quantile(m, 0.5))
-            .collect()[0][0]
-        )
-        assert est is not None and 1.0 <= est <= 10000.0
-
-
-class TestStreamingJoinview:
-    """CDC stream → MaterializedJoin: the streamed view equals the
-    one-shot join of final state, including a retraction batch."""
-
-    def test_two_sided_stream_with_cdc(self, spark, tmp_path):
-        from dbm_nca_ph_etl_spark.sinks.joinview import MaterializedJoin
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_joinview
-
-        v = MaterializedJoin(spark, str(tmp_path / "v"), ["k"], num_buckets=4)
-        lin, rin = str(tmp_path / "lin"), str(tmp_path / "rin")
-        os.makedirs(lin)
-        os.makedirs(rin)
-
-        def drop(where, rows, ddl):
-            spark.createDataFrame(rows, ddl).coalesce(1).write.mode("append").parquet(
-                where
-            )
-
-        # right side: plain inserts
-        drop(rin, [(1, "c1"), (2, "c2")], "k long, c string")
-        stream_into_joinview(
-            spark.readStream.schema("k long, c string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(rin),
-            v,
-            "right",
-            str(tmp_path / "rckpt"),
-        )
-        # left side: insert batch then a CDC batch (update o2->o2x)
-        drop(lin, [(1, "o1", 1), (2, "o2", 1)], "k long, o string, w int")
-        drop(
-            lin,
-            [(2, "o2", -1), (2, "o2x", 1)],
-            "k long, o string, w int",
-        )
-        stream_into_joinview(
-            spark.readStream.schema("k long, o string, w int")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(lin),
-            v,
-            "left",
-            str(tmp_path / "lckpt"),
-            sign_col="w",
-        )
-        got = sorted((r.k, r.o, r.c) for r in v.read_view().collect())
-        assert got == [(1, "o1", "c1"), (2, "o2x", "c2")]
-        # restart from the same checkpoints: replays are no-ops
-        stream_into_joinview(
-            spark.readStream.schema("k long, o string, w int")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(lin),
-            v,
-            "left",
-            str(tmp_path / "lckpt"),
-            sign_col="w",
-        )
-        assert sorted((r.k, r.o, r.c) for r in v.read_view().collect()) == got
-
-    def test_side_guard(self, spark, tmp_path):
-        import pytest
-
-        from dbm_nca_ph_etl_spark.sinks.joinview import MaterializedJoin
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_joinview
-
-        v = MaterializedJoin(spark, str(tmp_path / "v"), ["k"])
-        with pytest.raises(ValueError, match="side"):
-            stream_into_joinview(None, v, "middle", "x")
-
-
-class TestCkptIdentityNormalized:
-    """The stream_into_keyed shared-writer guard keys on checkpoint
-    IDENTITY, not spelling (review finding r7): the same checkpoint
-    respelled across restarts (trailing slash, relative path, file:
-    scheme) must resume — skipping replayed epochs — not raise."""
-
-    def test_norm_ckpt_spellings(self):
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import _norm_ckpt
-
-        assert _norm_ckpt("/data/ckpt") == _norm_ckpt("/data/ckpt/")
-        assert _norm_ckpt("file:/data/ckpt") == _norm_ckpt("/data/ckpt")
-        assert _norm_ckpt("file:///data/ckpt/") == _norm_ckpt("/data/ckpt")
-        import os
-
-        assert _norm_ckpt(os.path.join(os.getcwd(), "x")) == _norm_ckpt("x")
-        # non-file URIs keep their scheme (never collapse s3 onto local)
-        assert _norm_ckpt("s3://b/ckpt/") == "s3://b/ckpt"
-        assert _norm_ckpt("s3://b/ckpt") != _norm_ckpt("/b/ckpt")
-
-    def test_replayed_epoch_with_respelled_ckpt_resumes(
-        self, spark, tmp_path, monkeypatch
-    ):
-        """A crashed first run logged epoch 0 under the file:-scheme
-        checkpoint spelling; the operator restarts the stream with
-        the bare absolute spelling of the same checkpoint. The
-        replayed epoch must be SKIPPED as already-applied (same
-        stream identity) — a raw string compare would instead raise
-        'shared by another stream' on every restart and wedge the
-        stream. (Spark's own checkpoint lock blocks respelling after
-        stale tmp files, so the crashed run is simulated by
-        pre-seeding the commit log.)"""
-        from dbm_nca_ph_etl_spark.sinks.keyed import read_keyed, write_keyed
-        from dbm_nca_ph_etl_spark.sinks.txlog import CommitLog
-        from dbm_nca_ph_etl_spark.streaming.agg_stream import stream_into_keyed
-
-        src = str(tmp_path / "src")
-        path = str(tmp_path / "table")
-        write_keyed(
-            spark.createDataFrame([(0, "seed")], "k long, v string"),
-            path,
-            ["k"],
-            num_buckets=2,
-        )
-        spark.createDataFrame([(1, "a")], "k long, v string").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-        # the crashed run: epoch 0 merged + logged (file:-scheme ckpt
-        # spelling), checkpoint never committed -> epoch 0 re-delivers
-        ckpt = str(tmp_path / "ckpt")
-        assert CommitLog(path).try_commit(
-            {
-                "writer": "ingest",
-                "epoch": 0,
-                "ckpt": "file:" + ckpt,
-                "buckets": [],
-            },
-            0,
-        )
-        stream = spark.readStream.schema("k long, v string").parquet(src)
-        stream_into_keyed(stream, path, ["k"], ckpt, writer="ingest")
-        # replayed epoch skipped (logged by the crashed run): the
-        # batch's row does NOT re-merge, and no 'shared by another
-        # stream' false positive fired
-        got = {r.k: r.v for r in read_keyed(spark, path).collect()}
-        assert got == {0: "seed"}
-        assert CommitLog(path).version() == 1  # no duplicate entry
 
 
 class TestStreamingLastTouch:

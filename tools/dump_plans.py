@@ -373,9 +373,8 @@ decision is one PUT or one conditional PUT; no renames):
 Crash-injection tests (`tests/test_joinview.py::TestExactlyOnceCommitProtocol`)
 pin each window: crashed refresh invisible + replay counts once, committed
 replay skipped with zero IO, compaction crash before/after the swap, lease
-fencing. The dual-stream helper (`streaming/agg_stream.stream_into_joinview`)
-inherits all of it — epoch·2/epoch·2+1 ids keep the two writers' batch ids
-disjoint, and the checkpoint replays into marker skips.
+fencing. Two writers, one per side, each give their refreshes batch ids
+no other writer uses; a replayed batch id meets its marker and is skipped.
 
 ## A true CAS under the commit protocols (r8 design note)
 
